@@ -73,8 +73,9 @@ object ScaleProfile {
     //    combined `dedup` section's detect arm leaves JIT + page cache
     //    warm, making any same-JVM total read falsely low) ──────────────
     if (sections("dedupfixed")) {
-      timed("dedupfixed.total(removeNearDuplicatesFixed)") {
-        Dedup.removeNearDuplicatesFixed(docs, "text", "doc_id", 0.5).count()
+      timed("dedupfixed.total(removeNearDuplicates, fixed detector)") {
+        Dedup.removeNearDuplicates(docs, "text", "doc_id", 0.5,
+          detector = Dedup.Detector.Fixed).count()
       }
     }
     // the round-12 DEFAULT: auto-selected detector (fixed vs tuned from
@@ -86,8 +87,9 @@ object ScaleProfile {
       }
     }
     if (sections("deduptuned")) {
-      timed("deduptuned.total(removeNearDuplicatesTuned)") {
-        Dedup.removeNearDuplicatesTuned(docs, "text", "doc_id", 0.5).count()
+      timed("deduptuned.total(removeNearDuplicates, tuned detector)") {
+        Dedup.removeNearDuplicates(docs, "text", "doc_id", 0.5,
+          detector = Dedup.Detector.Tuned).count()
       }
     }
 
@@ -143,7 +145,7 @@ object ScaleProfile {
         f"p90=${js.sorted.drop(js.size * 9 / 10).headOption.getOrElse(0.0)}%.4f n=$nDocs " +
         f"expCand=${Dedup.expectedCandidates(rr, b, nDocs, est)}%.3g " +
         s"(prefilter ${if (Dedup.expectedCandidates(rr, b, nDocs, est) >= 4e6) "ON" else "OFF"} at default gate)")
-      // same single-signature-pass decomposition as nearDupPairsMinHashTuned:
+      // same single-signature-pass decomposition as the Tuned detector:
       // sigM feeds bandProjection AND the prefilter head (shared helpers —
       // this section decomposes the production plan by construction)
       val sigM = Dedup.materialize(
@@ -617,9 +619,9 @@ object ScaleProfile {
     // ── round 15: STAGED image-Hamming A/B at guard-engaging scale —
     // the Hamming-family staging measured on ONE materialized hash
     // frame (decode excluded, so the A/B isolates the staging cost):
-    // `single` = hammingPairs64 with the guard bypassed, `staged` =
-    // hammingPairs64Staged at SPARK_GRAFT_IMAGES_K groups, `auto` =
-    // the public entry point (bandPlan prints its own decision). At the
+    // `single` = hammingPairs with the guard bypassed, `staged` =
+    // hammingPairs at SPARK_GRAFT_IMAGES_K groups, `auto` = the public
+    // entry point (bandPlan prints its own decision). At the
     // default 450k fixture images / h=6 the 9-bit chunks hold ~880
     // images per bucket — ~1.4e9 candidate rows carrying both hashes
     // through the bucket join, the measured-disk regime. Pairs equality
@@ -644,11 +646,11 @@ object ScaleProfile {
       timed(s"imagestaged.decode+hash(n=$n)") { hashed.count() }
       if (run == "all" || run == "single")
         timed(s"imagestaged.single(n=$n h=$h guard bypassed)") {
-          Dedup.hammingPairs64(hashed, h).count()
+          Dedup.hammingPairs(hashed, Seq("sh"), h).count()
         }
       if (run == "all" || run == "staged")
         timed(s"imagestaged.staged(n=$n h=$h k=$k)") {
-          Dedup.hammingPairs64Staged(hashed, h, k).count()
+          Dedup.hammingPairs(hashed, Seq("sh"), h, k).count()
         }
       if (run == "all" || run == "auto")
         timed(s"imagestaged.auto(n=$n h=$h bandPlan decides)") {

@@ -391,8 +391,9 @@ object SparkEntry {
     //    ground-truth oracle as the fixed form — tuning trades cost,
     //    never recall (every option meets the at-τ recall bound) ────────
     "q_minhash_near_dups_tuned" -> ((s, dir) =>
-      graft.operators.Dedup.nearDupPairsMinHashTuned(
-        t(s, dir, "documents"), "text", "doc_id", threshold = 0.5)
+      graft.operators.Dedup.nearDupPairsMinHash(
+        t(s, dir, "documents"), "text", "doc_id", threshold = 0.5,
+        detector = graft.operators.Dedup.Detector.Tuned)
         .orderBy(col("id_a"), col("id_b"))),
 
     // ── MULTILINGUAL near-dup dedup: the SAME MinHash+LSH detector over
@@ -743,8 +744,10 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
         .withColumn("prio",
           regexp_extract(col("source"), "([0-9]+)", 1).cast("int"))
-      val kept = graft.operators.Dedup.removeNearDuplicatesPrioritized(
-        docs, "text", "doc_id", "prio", threshold = 0.5)
+      val kept = graft.operators.Dedup.removeNearDuplicates(
+        docs, "text", "doc_id", threshold = 0.5,
+        detector = graft.operators.Dedup.Detector.Fixed,
+        priorityCol = Some("prio"))
       docs.agg(count(lit(1)).as("n_docs")).crossJoin(
         kept.agg(count(lit(1)).as("n_kept"),
           sum(col("doc_id")).cast("long").as("id_checksum")))
@@ -3025,7 +3028,7 @@ object SparkEntry {
     * by `p` so the chain composes into larger oracles. Both frozen grid
     * families ride as VALUES; the 128-bit concat = horizontal dHash
     * bits [0, 64) ∥ vertical bits [64, 128); chunk boundaries come from
-    * the SAME [[graft.operators.Dedup.hammingChunkLayout128]] the
+    * the SAME [[graft.operators.Dedup.hammingChunkLayout]] the
     * engine bands with (no drift). Ends with `${p}hm(id_a, id_b,
     * hamming)` — NOT bound-filtered (the consumer applies `<= h`). */
   private def imageHamming128Ctes(p: String, maxHamming: Int): String = {
@@ -3035,7 +3038,7 @@ object SparkEntry {
     val vRows = graft.operators.FrozenImageGrids.gridsV
       .map { case (id, g) => s"($id, ${g.mkString("[", ",", "]")})" }
       .mkString(", ")
-    val (_, offsets) = graft.operators.Dedup.hammingChunkLayout128(maxHamming)
+    val (_, offsets) = graft.operators.Dedup.hammingChunkLayout(128, maxHamming)
     val chunkCase = "CASE " + (1 to maxHamming).map(j =>
       s"WHEN b < ${offsets(j)} THEN ${j - 1}").mkString(" ") + s" ELSE $maxHamming END"
     val layRows = (0 to maxHamming).map(j => s"($j, ${offsets(j)})").mkString(", ")
@@ -3167,7 +3170,7 @@ object SparkEntry {
 
   private def audioHammingCtesFromRows(p: String, maxHamming: Int,
       rows: String): String = {
-    val (_, offsets) = graft.operators.Dedup.hammingChunkLayout(maxHamming)
+    val (_, offsets) = graft.operators.Dedup.hammingChunkLayout(64, maxHamming)
     val chunkCase = "CASE " + (1 to maxHamming).map(j =>
       s"WHEN b < ${offsets(j)} THEN ${j - 1}").mkString(" ") + s" ELSE $maxHamming END"
     val layRows = (0 to maxHamming).map(j => s"($j, ${offsets(j)})").mkString(", ")
@@ -5213,7 +5216,7 @@ object SparkEntry {
       val rows = graft.operators.FrozenImageGrids.grids
         .map { case (id, g) => s"($id, ${g.mkString("[", ",", "]")})" }
         .mkString(", ")
-      val (_, offsets) = graft.operators.Dedup.hammingChunkLayout(6)
+      val (_, offsets) = graft.operators.Dedup.hammingChunkLayout(64, 6)
       val chunkCase = "CASE " + (1 to 6).map(j =>
         s"WHEN b < ${offsets(j)} THEN ${j - 1}").mkString(" ") + " ELSE 6 END"
       val layRows = (0 to 6).map(j => s"($j, ${offsets(j)})").mkString(", ")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{GraftFunctions, TextAnalysis, Tok}
@@ -366,8 +366,8 @@ object Dedup {
   /** (rowsPerBand, nBands) for MinHash LSH, derived from the Jaccard
     * threshold: the LARGEST r (a divisor of k, for selectivity — false
     * candidates collide per band at ~jʳ) whose banding still catches a
-    * pair at exactly `threshold` with probability ≥ recallTarget,
-    * P[candidate] = 1 − (1 − τʳ)^(k/r). The default target (0.85 at
+    * pair at exactly `threshold` with probability ≥ [[RecallTarget]],
+    * P[candidate] = 1 − (1 − τʳ)^(k/r). The target (0.85 at
     * EXACTLY τ) sits on the S-curve's steep flank: at J = τ + 0.05 recall
     * is already ≳ 0.99, and real near-dup pairs live above the threshold
     * — while a higher at-τ target would force narrow bands (r ≤ 2) whose
@@ -376,15 +376,43 @@ object Dedup {
     * own band — maximal recall, minimal pruning) when even r=2 misses the
     * target: low thresholds inherently trade pruning for recall, exactly
     * like [[Similarity.signBands]] at moderate cosine. */
-  def minHashBands(threshold: Double, k: Int = 128,
-      recallTarget: Double = 0.85): (Int, Int) = {
+  def minHashBands(threshold: Double, k: Int = 128): (Int, Int) = {
     require(threshold > 0.0 && threshold < 1.0,
       s"minHashBands: threshold must be in (0,1), got $threshold")
     val feasible = (1 to k).filter(k % _ == 0).filter { r =>
-      1.0 - math.pow(1.0 - math.pow(threshold, r), (k / r).toDouble) >= recallTarget
+      1.0 - math.pow(1.0 - math.pow(threshold, r), (k / r).toDouble) >= RecallTarget
     }
     val r = if (feasible.nonEmpty) feasible.max else 1
     (r, k / r)
+  }
+
+  /** The detector constants no caller ever tuned: the at-threshold
+    * recall every banding meets ([[minHashBands]], [[minHashBandsTunedFor]]),
+    * the tuned banding's hash budget, the background sample size, the
+    * signature prefilter's head width, and the circuit breaker's cap on
+    * projected verify-join candidates ([[selectDetector]]). */
+  private[graft] val RecallTarget: Double = 0.85
+  private[graft] val MaxK: Int = 1024
+  private[graft] val SampleDocs: Int = 128
+  private[graft] val PrefilterHashes: Int = 64
+  private[graft] val MaxVerifyCandidates: Double = 4e9
+
+  /** Which plan a MinHash near-dup entry point runs. Every plan
+    * exact-verifies its candidates at the same threshold, so the
+    * detectors differ in cost, never in pairs.
+    *  - [[Detector.Fixed]]: threshold-only banding ([[minHashBands]]) in
+    *    one plan — no background sample, no spill guard, no circuit
+    *    breaker. Bounded inputs (a streaming micro-batch) rely on that.
+    *  - [[Detector.Tuned]]: per-corpus banding ([[minHashBandsTunedFor]])
+    *    plus the self-gated signature prefilter, behind the spill guard.
+    *  - [[Detector.Auto]]: [[selectDetector]] picks the fixed or the
+    *    tuned plan from the sampled background and fails loudly in the
+    *    near-all-pairs regime. */
+  sealed trait Detector
+  object Detector {
+    case object Fixed extends Detector
+    case object Tuned extends Detector
+    case object Auto extends Detector
   }
 
   /** MinHash + LSH near-duplicate pairs (shingle → minhash → band →
@@ -398,23 +426,37 @@ object Dedup {
     *
     * Banding derives from the threshold ([[minHashBands]]) so the S-curve
     * midpoint tracks the requested similarity instead of silently
-    * weakening the recall guarantee when a caller moves the threshold
-    * (round-2 fixed r=4/b=32 regardless). Pass `r > 0` to override.
+    * weakening the recall guarantee when a caller moves the threshold;
+    * `detector` picks the plan ([[Detector]]).
     * Returns (id_a, id_b, jaccard), exact-verified. */
   def nearDupPairsMinHash(df: DataFrame, textCol: String, idCol: String,
-      threshold: Double = 0.8, n: Int = 3, k: Int = 128, r: Int = 0,
-      tok: Tok = Tok.Latin): DataFrame = {
-    val rr = if (r > 0) r else minHashBands(threshold, k)._1
-    require(k % rr == 0, s"nearDupPairsMinHash: band width $rr must divide k=$k")
-    val b = k / rr
-    // Materialized once — reused by the signature/banding self-join (2×)
-    // and both verify join sides (2×); see exactJaccardPairs.
-    val sh = materialize(shingleSets(df, textCol, idCol, n, tok)
-      .select(col("id"), array_sort(col("shingles")).as("sh")))
-    // Bands carry ONLY (band, band_key, id): the shingle arrays never ride
-    // the candidate shuffle — they are re-joined per side for the verify.
-    val banded = minHashBandRows(sh, k, rr, b)
-    verifyJaccard(minHashCandidates(banded, threshold), hashShingles(sh), threshold)
+      threshold: Double = 0.8, n: Int = 3, detector: Detector = Detector.Fixed,
+      tok: Tok = Tok.Latin): DataFrame =
+    if (detector == Detector.Fixed) {
+      val (r, b) = minHashBands(threshold)
+      // Materialized once — reused by the signature/banding self-join (2×)
+      // and both verify join sides (2×); see exactJaccardPairs.
+      val sh = materialize(shingleIndex(df, textCol, idCol, n, tok))
+      detectOnShingles(sh, hashShingles(sh),
+        DetectorDecision(r, b, tuned = false, prefilterH = 0,
+          estCandidates = 0.0, estVerifyInput = 0.0), threshold)
+    } else {
+      val (sh, shH, nDocs, est) = profileShingles(df, textCol, idCol, n, tok)
+      runDetect(sh, shH, selectDetector(threshold, nDocs, est, detector),
+        threshold, est.meanShingles)
+    }
+
+  /** The corpus profile the Tuned and Auto detectors decide on: one
+    * shingle pass (sorted sets, materialized with the corpus count riding
+    * the checkpoint), its 64-bit-hashed form (materialized — the sample
+    * and every verify read it) and a bounded background sample
+    * ([[sampleBackgroundJaccard]] — `SampleDocs` docs to the driver). */
+  private[graft] def profileShingles(df: DataFrame, textCol: String,
+      idCol: String, n: Int, tok: Tok)
+      : (DataFrame, DataFrame, Long, BackgroundEstimate) = {
+    val (sh, nDocs) = materializeCounted(shingleIndex(df, textCol, idCol, n, tok))
+    val shH = materialize(hashShingles(sh))
+    (sh, shH, nDocs, sampleBackgroundJaccard(shH))
   }
 
   /** Band self-join candidate generation: docs sharing any band key, with
@@ -488,7 +530,8 @@ object Dedup {
     * sample feeds [[minHashBandsTunedFor]]'s cost model. */
   final case class BackgroundEstimate(pairJaccards: Seq[Double], meanShingles: Double)
 
-  def sampleBackgroundJaccard(shHashed: DataFrame, sampleDocs: Int = 128): BackgroundEstimate = {
+  def sampleBackgroundJaccard(shHashed: DataFrame,
+      sampleDocs: Int = SampleDocs): BackgroundEstimate = {
     val rows = shHashed
       .withColumn("_h", xxhash64(col("id")))
       .orderBy(col("_h"), col("id"))
@@ -515,11 +558,11 @@ object Dedup {
     * derivation.
     *
     * Candidate (r, b) options: for each band width r, the minimum b
-    * hitting `recallTarget` at exactly `threshold` (the same S-curve
+    * hitting [[RecallTarget]] at exactly `threshold` (the same S-curve
     * calculus as [[minHashBands]]), padded up to the standard 128-hash
     * budget (b = max(b_recall, 128/r)) — padding only RAISES recall, and
     * keeps small-corpus tunings at the proven default geometry; options
-    * whose r·b exceeds `maxK` are infeasible (hash budget).
+    * whose r·b exceeds [[MaxK]] are infeasible (hash budget).
     *
     * Cost model, in units of one minhash inner-loop op (constants
     * CALIBRATED from the measured 50k-doc detect_split profile — band
@@ -536,23 +579,22 @@ object Dedup {
     * on the scale corpora it keeps the default r=4 at 50k docs and picks
     * wider bands at 500k, holding candidate growth near-linear per
     * decade (measured: BASELINE.md round 7). Recall at the threshold is
-    * ≥ recallTarget for EVERY option by construction — tuning trades
+    * ≥ [[RecallTarget]] for EVERY option by construction — tuning trades
     * cost, never recall. */
   def minHashBandsTunedFor(threshold: Double, nDocs: Long,
-      background: BackgroundEstimate, recallTarget: Double = 0.85,
-      maxK: Int = 1024): (Int, Int) = {
+      background: BackgroundEstimate): (Int, Int) = {
     require(threshold > 0.0 && threshold < 1.0,
       s"minHashBandsTunedFor: threshold must be in (0,1), got $threshold")
     val options = (1 to 32).flatMap { r =>
       val pr = math.pow(threshold, r)
       val bRecall =
-        math.max(1L, math.ceil(math.log1p(-recallTarget) / math.log1p(-pr)).toLong)
+        math.max(1L, math.ceil(math.log1p(-RecallTarget) / math.log1p(-pr)).toLong)
       val b = math.max(bRecall, (128 / r).toLong)
-      if (r.toLong * b <= maxK) Some((r, b.toInt)) else None
+      if (r.toLong * b <= MaxK) Some((r, b.toInt)) else None
     }
     require(options.nonEmpty,
-      s"minHashBandsTunedFor: no (r,b) within the $maxK-hash budget reaches " +
-        s"recall $recallTarget at threshold $threshold")
+      s"minHashBandsTunedFor: no (r,b) within the $MaxK-hash budget reaches " +
+        s"recall $RecallTarget at threshold $threshold")
     val sBar = math.max(background.meanShingles, 1.0)
     val nPairs = nDocs.toDouble * math.max(nDocs - 1, 0).toDouble / 2.0
     def cost(r: Int, b: Int): Double = {
@@ -580,50 +622,6 @@ object Dedup {
         1.0 - math.pow(1.0 - math.pow(j, r), b.toDouble)).sum /
         background.pairJaccards.size
     nPairs * pBar
-  }
-
-  /** [[nearDupPairsMinHash]] with PER-CORPUS band tuning: samples the
-    * corpus's background pair similarity, derives (r, b) from corpus size
-    * + background profile ([[minHashBandsTunedFor]]), then runs the same
-    * shingle → minhash → band → candidate → exact-verify plan. Results
-    * are exact-verified like the fixed-banding form; recall at the
-    * threshold is ≥ recallTarget by the option construction. Use on
-    * corpora whose background similarity floods the default banding with
-    * candidates (the ×14.6-per-decade growth measured on the scale
-    * corpora); the fixed form stays the right default when hashing
-    * dominates. When the tuner's own candidate-volume estimate crosses
-    * `prefilterMinCandidates`, a signature-agreement prefilter
-    * ([[prefilterBySignature]]) additionally drops far-below-threshold
-    * candidates on a 64-component signature head before they reach the
-    * shingle-array verify join (500k: verify 12.4 → 1.6 s; 5M: 639 →
-    * 40 s — BASELINE.md round 7); survivors stay exact-verified either
-    * way. */
-  def nearDupPairsMinHashTuned(df: DataFrame, textCol: String, idCol: String,
-      threshold: Double = 0.8, n: Int = 3, recallTarget: Double = 0.85,
-      maxK: Int = 1024, sampleDocs: Int = 128,
-      prefilterHashes: Int = 64,
-      prefilterMinCandidates: Double = 4e6, tok: Tok = Tok.Latin,
-      spillSafetyMargin: Double = 0.5, maxSpillChunks: Int = 256): DataFrame = {
-    val (sh, nDocs) = materializeCounted(shingleSets(df, textCol, idCol, n, tok)
-      .select(col("id"), array_sort(col("shingles")).as("sh")))
-    val shH = materialize(hashShingles(sh))
-    val est = sampleBackgroundJaccard(shH, sampleDocs)
-    val (rr, b) = minHashBandsTunedFor(threshold, nDocs, est, recallTarget, maxK)
-    // The signature prefilter engages only when the SAME candidate-volume
-    // estimate the tuner prices (expectedCandidates) says the verify has
-    // enough input to dominate: at ≥ ~4M candidates the verify join costs
-    // seconds-to-minutes (~1–7 µs each, BASELINE.md round 7) while the
-    // prefilter's extra checkpoint + two head joins cost a fixed
-    // ~0.3–0.5 s — an order of magnitude under the savings. Below the
-    // gate the single-plan fixed path is already sub-5-s and the
-    // prefilter would only add its fixed cost.
-    val h = math.min(prefilterHashes, rr * b)
-    val ct = expectedCandidates(rr, b, nDocs, est)
-    val d = DetectorDecision(rr, b, tuned = true,
-      prefilterH = if (ct >= prefilterMinCandidates && h > 0) h else 0,
-      estCandidates = ct, estVerifyInput = ct)
-    runDetect(sh, shH, d, threshold, est.meanShingles,
-      spillSafetyMargin, maxSpillChunks)
   }
 
   /** The detector plan [[selectDetector]] chose for a corpus: banding
@@ -654,69 +652,68 @@ object Dedup {
     }.sum / est.pairJaccards.size
   }
 
-  /** AUTOMATIC detector selection for the near-dup rung — the component
-    * that closes the "the engine computes everything needed to decide,
-    * but the caller flips the switch" gap (round-11 verdict #1). Pure
-    * function of the corpus profile; the decision logic in one place so
-    * it can be unit-tested against synthetic backgrounds without running
-    * a 500k-doc corpus:
+  /** The detector DECISION for a corpus profile — pure, so specs pin it
+    * against synthetic backgrounds without running a 500k-doc corpus.
+    * `detector` is Tuned or Auto ([[Detector.Fixed]] needs no profile).
     *
-    *  1. price the threshold-only FIXED banding ([[minHashBands]]) on
-    *     the sampled background; below `escalateMinCandidates` band-join
-    *     candidates the fixed single-plan path wins (its candidate join
-    *     is already sub-dominant and the tuned path's fixed O(N)
-    *     overheads — extra checkpoints, the k≈hundreds signature pass —
-    *     would only add cost). Toy and typical-background corpora land
-    *     here, keeping the proven default geometry and plan;
-    *  2. above the gate, ESCALATE: per-corpus tuned banding
-    *     ([[minHashBandsTunedFor]]) with the signature prefilter under
-    *     its existing self-gate — exactly the configuration that
-    *     completes the high-background 500k corpora where fixed banding
-    *     floods (×29.6 c4 fixture) or OOMs (model fixture) — measured,
-    *     BASELINE.md rounds 7/11;
-    *  3. CIRCUIT BREAKER: if even the escalated plan's estimated
+    *  1. AUTO prices the threshold-only FIXED banding ([[minHashBands]])
+    *     on the sampled background; below `escalateMinCandidates`
+    *     band-join candidates the fixed single-plan path wins (its
+    *     candidate join is already sub-dominant and the tuned path's
+    *     fixed O(N) overheads — extra checkpoints, the k≈hundreds
+    *     signature pass — would only add cost). Toy and
+    *     typical-background corpora land here, keeping the proven default
+    *     geometry and plan;
+    *  2. above the gate (and always for TUNED): per-corpus tuned banding
+    *     ([[minHashBandsTunedFor]]) with the signature prefilter — exactly
+    *     the configuration that completes the high-background 500k
+    *     corpora where fixed banding floods (×29.6 c4 fixture) or OOMs
+    *     (model fixture) — measured, BASELINE.md rounds 7/11. The
+    *     prefilter engages only when the SAME candidate-volume estimate
+    *     the tuner prices ([[expectedCandidates]]) clears
+    *     `prefilterMinCandidates`: at ≥ ~4M candidates the verify join
+    *     costs seconds-to-minutes (~1–7 µs each) while the prefilter's
+    *     extra checkpoint + two head joins cost a fixed ~0.3–0.5 s;
+    *  3. AUTO's CIRCUIT BREAKER: if even the escalated plan's estimated
     *     verify-join input (post-prefilter, [[expectedVerifyInput]])
-    *     still exceeds `maxVerifyCandidates`, the corpus's background
-    *     similarity sits at/above the threshold — the near-all-pairs
-    *     regime no banding inside the hash budget can escape — and the
-    *     verify join would OOM or run for hours. Fail LOUDLY with the
-    *     remedies named instead of letting the join die mid-shuffle.
+    *     still exceeds [[MaxVerifyCandidates]] (4e9: at the measured
+    *     1–7 µs and ~KB payload per verified candidate, hours of
+    *     single-box compute and terabytes of shuffle), the corpus's
+    *     background similarity sits at/above the threshold — the
+    *     near-all-pairs regime no banding inside the hash budget can
+    *     escape — and the verify join would OOM or run for hours. Fail
+    *     LOUDLY with the remedies named instead of letting the join die
+    *     mid-shuffle.
     *
-    * `maxVerifyCandidates` defaults to 4e9 (at the measured 1–7 µs and
-    * ~KB payload per verified candidate: hours of single-box compute,
-    * terabytes of shuffle — far past the point a caller should have
-    * restructured the corpus). Size it to the cluster when a genuinely
-    * enormous verify is intended. */
+    * The two gates are spec seams: forcing them to 0 runs the escalated
+    * and prefiltered plans on fixture corpora. */
   private[graft] def selectDetector(threshold: Double, nDocs: Long,
-      est: BackgroundEstimate, recallTarget: Double = 0.85, maxK: Int = 1024,
-      prefilterHashes: Int = 64,
+      est: BackgroundEstimate, detector: Detector = Detector.Auto,
       escalateMinCandidates: Double = 4e6,
-      prefilterMinCandidates: Double = 4e6,
-      maxVerifyCandidates: Double = 4e9): DetectorDecision = {
+      prefilterMinCandidates: Double = 4e6): DetectorDecision = {
     val (r0, b0) = minHashBands(threshold)
     val c0 = expectedCandidates(r0, b0, nDocs, est)
-    if (c0 < escalateMinCandidates)
+    if (detector == Detector.Auto && c0 < escalateMinCandidates)
       DetectorDecision(r0, b0, tuned = false, prefilterH = 0,
         estCandidates = c0, estVerifyInput = c0)
     else {
-      val (rt, bt) = minHashBandsTunedFor(threshold, nDocs, est, recallTarget, maxK)
+      val (rt, bt) = minHashBandsTunedFor(threshold, nDocs, est)
       val ct = expectedCandidates(rt, bt, nDocs, est)
-      val h = math.min(prefilterHashes, rt * bt)
-      val pre = ct >= prefilterMinCandidates && h > 0
-      val vin = expectedVerifyInput(rt, bt, nDocs, est, threshold,
-        if (pre) h else 0)
-      if (vin >= maxVerifyCandidates) throw new IllegalStateException(
-        f"selectDetector: even the tuned banding (r=$rt, b=$bt) with the " +
-          f"signature prefilter projects ~$vin%.2g verify-join candidates " +
-          f"(cap $maxVerifyCandidates%.2g) - the sampled background " +
-          f"similarity sits at or above the threshold ($threshold), the " +
-          "near-all-pairs regime no banding in the hash budget escapes. " +
-          "Remedies: strip the shared boilerplate first (enable the " +
-          "line-level dedup rung - CorpusPipeline.Config.lineDedupMinDocs " +
-          "- or LineDedup.removeDuplicatedLines), raise the threshold, " +
-          "partition the corpus and dedup per group (source/domain), or " +
-          "raise maxVerifyCandidates if the cluster is sized for it.")
-      DetectorDecision(rt, bt, tuned = true, prefilterH = if (pre) h else 0,
+      val h = math.min(PrefilterHashes, rt * bt)
+      val pre = if (ct >= prefilterMinCandidates && h > 0) h else 0
+      val vin = expectedVerifyInput(rt, bt, nDocs, est, threshold, pre)
+      if (detector == Detector.Auto && vin >= MaxVerifyCandidates)
+        throw new IllegalStateException(
+          f"selectDetector: even the tuned banding (r=$rt, b=$bt) with the " +
+            f"signature prefilter projects ~$vin%.2g verify-join candidates " +
+            f"(cap $MaxVerifyCandidates%.2g) - the sampled background " +
+            f"similarity sits at or above the threshold ($threshold), the " +
+            "near-all-pairs regime no banding in the hash budget escapes. " +
+            "Remedies: strip the shared boilerplate first (enable the " +
+            "line-level dedup rung - CorpusPipeline.Config.lineDedupMinDocs " +
+            "- or LineDedup.removeDuplicatedLines), raise the threshold, or " +
+            "partition the corpus and dedup per group (source/domain).")
+      DetectorDecision(rt, bt, tuned = true, prefilterH = pre,
         estCandidates = ct, estVerifyInput = vin)
     }
   }
@@ -733,32 +730,63 @@ object Dedup {
   /** The disk guard the round-13 5M measurement bought: the detector's
     * cost model priced time and memory but not SPILL DISK, and the 5M
     * adversarial model-fixture corpus died at minute 77 with ENOSPC in
-    * the verify-stage shuffle. A WARNING, not a hard fail — shuffle
-    * storage is usually elastic on a real cluster and spark.local.dir
-    * is not authoritative on every deployment — but it fires UP FRONT,
-    * before hours of work, and names the same remedies as the
-    * verify-volume breaker. Returns the message so the spec pins the
-    * trigger arithmetic; [[nearDupPairsMinHashAuto]] prints it. */
-  private[graft] def spillWarning(d: DetectorDecision, meanShingles: Double,
-      usableBytes: Long): Option[String] = {
-    val est = spillEstimateBytes(d, meanShingles)
-    if (usableBytes > 0 && est > usableBytes.toDouble) Some(
-      f"[graft] WARN near-dup detect: the chosen plan (r=${d.r}, b=${d.b}, " +
-        f"prefilter=${d.prefilterH}) projects ~${est / 1e9}%.1f GB of " +
-        f"candidate/verify shuffle spill but the local shuffle dirs report " +
-        f"only ${usableBytes / 1e9}%.1f GB usable - the job is likely to " +
-        "die with ENOSPC deep into the verify stage. The BOUNDED plan: " +
-        "sequential band-chunk staging (nearDupPairsMinHashAuto engages " +
-        "it automatically unless maxSpillChunks caps it out - identical " +
-        "pairs, peak spill divided by the chunk count, only wall time " +
-        "trades). Other remedies: strip the shared boilerplate first " +
-        "(line-level dedup rung for whole lines, span-level dedup for " +
-        "mid-line runs), raise the threshold, dedup per group " +
-        "(source/domain), or point spark.local.dir at larger storage. " +
-        "(On YARN/K8s the cluster manager overrides spark.local.dir per " +
-        "executor - this usable-bytes read is an approximation there.)")
+    * the verify-stage shuffle. ONE warning for the minhash detect and the
+    * banded families — estimate vs usable local shuffle bytes, the
+    * `family`'s own `remedies` named. A WARNING, not a hard fail — shuffle storage is
+    * usually elastic on a real cluster and spark.local.dir is not
+    * authoritative on every deployment — but it fires UP FRONT, before
+    * hours of work. It prints only when the plan does not stage.
+    * Returned, not printed, so specs pin the trigger arithmetic. */
+  private[graft] def spillWarning(family: String, estBytes: Double,
+      usableBytes: Long, remedies: String): Option[String] =
+    if (usableBytes > 0 && estBytes > usableBytes.toDouble) Some(
+      f"[graft] WARN $family: the plan projects ~${estBytes / 1e9}%.1f GB " +
+        f"of candidate/verify shuffle spill but the local shuffle dirs " +
+        f"report only ${usableBytes / 1e9}%.1f GB usable - the job is " +
+        s"likely to die with ENOSPC in the verify stage. Remedies: " +
+        s"$remedies, or point spark.local.dir at larger storage. " +
+        UsableBytesCaveat)
     else None
+
+  /** The staging announcement every spill-guarded family prints when it
+    * runs its plan as `k` sequential `unit`s (band-chunks of the minhash
+    * detect, band-groups of the banded families, sub-batches of the
+    * incremental probes) — plus a residual warning naming the family's
+    * `remedies` when even the per-unit footprint exceeds usable space
+    * (the unit count is clamped: by the family's axis width or the
+    * runaway backstop). Returned, not printed, so specs pin the
+    * triggers. */
+  private[graft] def stagingNote(family: String, estBytes: Double,
+      usableBytes: Long, k: Int, unit: String, remedies: String): String = {
+    val per = estBytes / k
+    val clamped =
+      if (usableBytes > 0 && per > usableBytes.toDouble)
+        s" WARN: even the staged per-$unit footprint exceeds usable space " +
+          s"(the $unit count is clamped) - expect ENOSPC; remedies: " +
+          s"$remedies, or point spark.local.dir at larger storage."
+      else ""
+    f"[graft] INFO $family: staging the plan into $k sequential ${unit}s " +
+      f"- projected ~${estBytes / 1e9}%.1f GB of candidate/verify shuffle " +
+      f"spill vs ${usableBytes / 1e9}%.1f GB usable local shuffle " +
+      f"storage; peak per-$unit spill ~${per / 1e9}%.1f GB. Pairs and " +
+      s"recall are IDENTICAL to the single-pass plan (the $unit " +
+      s"partition is exact); only wall time trades. $UsableBytesCaveat" +
+      clamped
   }
+
+  private val UsableBytesCaveat =
+    "(On YARN/K8s the cluster manager overrides spark.local.dir per " +
+      "executor - the usable-bytes read is an approximation there.)"
+
+  /** The minhash detect's family label (its plan) and remedies for
+    * [[spillWarning]] / [[stagingNote]]. */
+  private[graft] def detectFamily(d: DetectorDecision): String =
+    s"near-dup detect (r=${d.r}, b=${d.b}, prefilter=${d.prefilterH})"
+
+  private[graft] val DetectRemedies: String =
+    "strip the shared boilerplate first (line-level dedup rung for whole " +
+      "lines, span-level dedup for mid-line runs), raise the threshold, " +
+      "dedup per group (source/domain)"
 
   /** Number of SEQUENTIAL band-chunks that keeps the detect plan's peak
     * shuffle-spill footprint under `usable × margin`:
@@ -779,31 +807,6 @@ object Dedup {
     if (usableBytes <= 0 || estBytes <= usableBytes * margin) 1
     else math.min(math.max(maxChunks, 1).toDouble,
       math.ceil(estBytes / (usableBytes * margin))).toInt
-  }
-
-  /** The staging announcement [[nearDupPairsMinHashAuto]] prints when
-    * band-chunk staging engages — and the residual warning when even the
-    * staged per-chunk footprint exceeds usable space (the maxSpillChunks
-    * clamp bit). Returned, not printed, so the spec pins the trigger. */
-  private[graft] def spillStagingNote(d: DetectorDecision, estBytes: Double,
-      usableBytes: Long, k: Int): String = {
-    val per = estBytes / k
-    val clamped =
-      if (usableBytes > 0 && per > usableBytes.toDouble)
-        " WARN: even the staged per-chunk footprint exceeds usable space " +
-          "(maxSpillChunks clamp) - expect ENOSPC; raise maxSpillChunks, " +
-          "strip shared boilerplate (line/span dedup rungs), raise the " +
-          "threshold, or point spark.local.dir at larger storage."
-      else ""
-    f"[graft] INFO near-dup detect: staging the banded plan (r=${d.r}, " +
-      f"b=${d.b}, prefilter=${d.prefilterH}) into $k sequential " +
-      f"band-chunks - projected ~${estBytes / 1e9}%.1f GB of " +
-      f"candidate/verify shuffle spill vs ${usableBytes / 1e9}%.1f GB " +
-      f"usable local shuffle storage; peak per-chunk spill " +
-      f"~${per / 1e9}%.1f GB. Pairs and recall are IDENTICAL to the " +
-      "single-pass plan (band partitioning is exact); only wall time " +
-      "trades. (On YARN/K8s spark.local.dir is overridden per executor " +
-      "- the usable-bytes read is an approximation there.)" + clamped
   }
 
   /** Best-effort release of a finished band-chunk's shuffle files before
@@ -1241,7 +1244,7 @@ object Dedup {
 
   /** The MEASURED heaviest-group note for the staged detect — priced in
     * absolute bytes once the exact (band, bucket-slice) mass table
-    * exists, which the decision-time [[spillStagingNote]] (uniform
+    * exists, which the decision-time [[stagingNote]] (uniform
     * est/k "peak per-chunk") cannot do. The round-15 5M attempt is the
     * motivating measurement: ONE irreducible bucket-slice unit held
     * 26.0% of the mass (~1.6 TB of the projection) and died ENOSPC. A
@@ -1368,7 +1371,7 @@ object Dedup {
       .groupBy(_._1).values.map(_.head._2).sum
 
   // ── The GENERALIZED disk guard (round 14): the minhash detector's
-  // spill pricing ([[spillEstimateBytes]]/[[spillWarning]]) extended to
+  // spill pricing ([[spillEstimateBytes]]) extended to
   // the OTHER banded families — embedding sign-LSH, SemDeDup's
   // within-list blocks, the media Hamming bands, the incremental media
   // probe. Same candidate-volume geometry, same failure mode (round-13's
@@ -1422,82 +1425,28 @@ object Dedup {
       payloadBytes: Double): Double =
     candidates * (32.0 + payloadBytes)
 
-  /** The generalized guard's warning — same trigger discipline as the
-    * minhash [[spillWarning]] (estimate vs usable local shuffle bytes,
-    * warn-not-fail, remedies NAMED per family, YARN/K8s caveat).
-    * Returned, not printed, so specs pin the trigger arithmetic. */
-  private[graft] def bandSpillWarning(family: String, candidates: Double,
-      payloadBytes: Double, usableBytes: Long,
-      remedies: String): Option[String] = {
-    val est = bandSpillEstimateBytes(candidates, payloadBytes)
-    if (usableBytes > 0 && est > usableBytes.toDouble) Some(
-      f"[graft] WARN $family: the banded plan projects ~${est / 1e9}%.1f GB " +
-        f"of candidate/verify shuffle spill (${candidates}%.3g candidate " +
-        f"pairs) but the local shuffle dirs report only " +
-        f"${usableBytes / 1e9}%.1f GB usable - the job is likely to die " +
-        s"with ENOSPC in the verify join. Remedies: $remedies, or point " +
-        "spark.local.dir at larger storage. (On YARN/K8s the cluster " +
-        "manager overrides spark.local.dir per executor - this " +
-        "usable-bytes read is an approximation there.)")
-    else None
-  }
-
-  /** The generalized staging announcement — [[spillStagingNote]]'s
-    * sibling for the banded families, which stage on their OWN group
-    * axis (Hamming chunk index, SemDeDup list hash, sign-LSH band) and
-    * may be clamped by that axis's width (a 64-bit dHash at maxHamming=6
-    * has only 7 chunks to stage over). Returned, not printed, so the
-    * spec pins the trigger and the residual-warning bit. */
-  private[graft] def bandStagingNote(family: String, estBytes: Double,
-      usableBytes: Long, k: Int): String = {
-    val per = estBytes / k
-    val clamped =
-      if (usableBytes > 0 && per > usableBytes.toDouble)
-        " WARN: even the staged per-group footprint exceeds usable space " +
-          "(the group count is clamped by the family's band geometry) - " +
-          "expect ENOSPC; apply the family's remedies or point " +
-          "spark.local.dir at larger storage."
-      else ""
-    f"[graft] INFO $family: staging the banded plan into $k sequential " +
-      f"band-groups - projected ~${estBytes / 1e9}%.1f GB of " +
-      f"candidate/verify shuffle spill vs ${usableBytes / 1e9}%.1f GB " +
-      f"usable local shuffle storage; peak per-group spill " +
-      f"~${per / 1e9}%.1f GB. Pairs and recall are IDENTICAL to the " +
-      "single-pass plan (group partitioning is exact); only wall time " +
-      "trades. (On YARN/K8s spark.local.dir is overridden per executor " +
-      "- the usable-bytes read is an approximation there.)" + clamped
-  }
-
   /** Price a MATERIALIZED banded frame and pick its execution plan (the
     * media/embedding guard's shared body): skip below the rows floor,
-    * else one key-only aggregate → group count. Returns the number of
-    * sequential groups to stage into — 1 = run the single pass — and
-    * prints the staging note (k > 1) or, when the family cannot stage
-    * (`maxGroups` = 1), the warn-only message. The caller materializes
-    * the frame first, so the count and the aggregate never re-execute
-    * the upstream decode/scan. */
+    * else one key-only aggregate → group count, clamped by the family's
+    * group axis (`maxGroups`: a 64-bit dHash at maxHamming=6 has only 7
+    * chunks to stage over). Returns (k, estBytes, usableBytes) — k = the
+    * number of sequential groups to stage into, 1 = run the single pass;
+    * the pricing feeds families that calibrate against a measured pilot
+    * group ([[pilotCalibratedChunks]]); (1, 0, 0) below the rows floor.
+    * Prints the staging note (k > 1) or, when the family cannot stage,
+    * the warn-only message. The caller materializes the frame first, so
+    * the count and the aggregate never re-execute the upstream
+    * decode/scan. */
   private[graft] def bandPlan(family: String, banded: => DataFrame,
-      keyCols: Seq[String], nRows: Long, payloadBytes: Double,
-      remedies: String, maxGroups: Int): Int =
-    bandPlanPriced(family, banded, keyCols, nRows, payloadBytes,
-      remedies, maxGroups)._1
-
-  /** [[bandPlan]] returning its pricing too — (k, estBytes, usableBytes)
-    * — for families that calibrate the estimate against a measured pilot
-    * group ([[pilotCalibratedChunks]]). (1, 0, 0) below the rows floor. */
-  private[graft] def bandPlanPriced(family: String, banded: => DataFrame,
       keyCols: Seq[String], nRows: Long, payloadBytes: Double,
       remedies: String, maxGroups: Int): (Int, Double, Long) = {
     if (nRows < BandGuardMinRows) return (1, 0.0, 0L)
     val spark = org.apache.spark.sql.SparkSession.active
     val usable = shuffleDirUsableBytes(spark)
-    val mass = bandCandidateMass(banded, keyCols)
-    val est = bandSpillEstimateBytes(mass, payloadBytes)
+    val est = bandSpillEstimateBytes(bandCandidateMass(banded, keyCols), payloadBytes)
     val k = spillChunkCount(est, usable, maxChunks = math.min(maxGroups, 256))
-    if (k <= 1)
-      bandSpillWarning(family, mass, payloadBytes, usable, remedies)
-        .foreach(System.err.println)
-    else System.err.println(bandStagingNote(family, est, usable, k))
+    if (k <= 1) spillWarning(family, est, usable, remedies).foreach(System.err.println)
+    else System.err.println(stagingNote(family, est, usable, k, "band-group", remedies))
     (k, est, usable)
   }
 
@@ -1558,10 +1507,9 @@ object Dedup {
 
   /** Run the ONE shared detect plan (band → candidates → [prefilter] →
     * exact verify) for a [[DetectorDecision]] over prepared shingle
-    * frames (`sh` sorted string shingles, `shH` 64-bit-hashed — both
-    * materialized by the caller). The tuned and auto entry points both
-    * come through here so the band/prefilter/verify construction cannot
-    * drift between them. */
+    * frames (`sh` sorted string shingles, `shH` 64-bit-hashed). Every
+    * [[Detector]] comes through here so the band/prefilter/verify
+    * construction cannot drift between them. */
   private def detectOnShingles(sh: DataFrame, shH: DataFrame,
       d: DetectorDecision, threshold: Double): DataFrame =
     if (d.prefilterH > 0) {
@@ -1578,52 +1526,24 @@ object Dedup {
       verifyJaccard(minHashCandidates(banded, threshold), shH, threshold)
     }
 
-  /** Near-dup pairs with AUTOMATIC fixed-vs-tuned detector selection
-    * ([[selectDetector]]): one shingle pass, a bounded background sample
-    * ([[sampleBackgroundJaccard]] — `sampleDocs` docs to the driver, the
-    * k-means-training shape) and a corpus count pick the plan; toy and
-    * typical-background corpora run the exact fixed-banding plan
-    * ([[nearDupPairsMinHash]]'s geometry, byte-identical candidates),
-    * high-background corpora escalate to tuned banding + the signature
-    * prefilter, and the near-all-pairs regime fails loudly with the
-    * remedy named (circuit breaker) instead of OOMing the verify join.
-    * Either plan exact-verifies every candidate — the threshold
-    * semantics never change, only the cost. This is the DEFAULT detector
-    * behind [[removeNearDuplicates]] and the pipeline's near-dup rung. */
-  def nearDupPairsMinHashAuto(df: DataFrame, textCol: String, idCol: String,
-      threshold: Double = 0.8, n: Int = 3, recallTarget: Double = 0.85,
-      maxK: Int = 1024, sampleDocs: Int = 128,
-      prefilterHashes: Int = 64,
-      escalateMinCandidates: Double = 4e6,
-      prefilterMinCandidates: Double = 4e6,
-      maxVerifyCandidates: Double = 4e9, tok: Tok = Tok.Latin,
+  /** Dispatch a Tuned/Auto detector decision to the single-pass plan or
+    * the spill-bounded band-chunk staging, from the spill estimate vs the
+    * session's usable shuffle storage. `spillSafetyMargin` and
+    * `maxSpillChunks` are spec seams: a ~zero margin forces staging on a
+    * fixture corpus; one chunk forces the warn-only path. */
+  private[graft] def runDetect(sh: DataFrame, shH: DataFrame,
+      d: DetectorDecision, threshold: Double, meanShingles: Double,
       spillSafetyMargin: Double = 0.5, maxSpillChunks: Int = 256): DataFrame = {
-    val (sh, nDocs) = materializeCounted(shingleSets(df, textCol, idCol, n, tok)
-      .select(col("id"), array_sort(col("shingles")).as("sh")))
-    val shH = materialize(hashShingles(sh))
-    val est = sampleBackgroundJaccard(shH, sampleDocs)
-    val d = selectDetector(threshold, nDocs, est, recallTarget, maxK,
-      prefilterHashes, escalateMinCandidates, prefilterMinCandidates,
-      maxVerifyCandidates)
-    runDetect(sh, shH, d, threshold, est.meanShingles,
-      spillSafetyMargin, maxSpillChunks)
-  }
-
-  /** Dispatch a detector decision to the single-pass plan or the
-    * spill-bounded band-chunk staging, from the spill estimate vs the
-    * session's usable shuffle storage. Shared by the tuned and auto
-    * entry points so the staging policy cannot drift between them. */
-  private def runDetect(sh: DataFrame, shH: DataFrame, d: DetectorDecision,
-      threshold: Double, meanShingles: Double, spillSafetyMargin: Double,
-      maxSpillChunks: Int): DataFrame = {
     val usable = shuffleDirUsableBytes(sh.sparkSession)
     val est = spillEstimateBytes(d, meanShingles)
     val k = spillChunkCount(est, usable, spillSafetyMargin, maxSpillChunks)
     if (k <= 1) {
-      spillWarning(d, meanShingles, usable).foreach(System.err.println)
+      spillWarning(detectFamily(d), est, usable, DetectRemedies)
+        .foreach(System.err.println)
       detectOnShingles(sh, shH, d, threshold)
     } else {
-      System.err.println(spillStagingNote(d, est, usable, k))
+      System.err.println(
+        stagingNote(detectFamily(d), est, usable, k, "band-chunk", DetectRemedies))
       detectOnShinglesChunked(sh, shH, d, threshold, k, est, usable)
     }
   }
@@ -1712,74 +1632,127 @@ object Dedup {
       .repartition(cpuParallelism(df), col("id"))
       .select(col("id"),
         GraftFunctions.simhash64(tok.tokens(col("_text"))).as("sh"))
-    hammingPairs64(hashed, maxHamming)
+    hammingPairs(hashed, Seq("sh"), maxHamming)
   }
 
-  /** Chunk layout of the Hamming-LSH banding over a 64-bit hash:
+  // ── The Hamming-LSH family over k-word hashes ─────────────────────────
+  // One family serves every Hamming rung: simhash, image dHash, audio
+  // envelope, video frames (one 64-bit word, `Seq("sh")`) and the 128-bit
+  // image signature (two words, `Seq("lo", "hi")`: bits [0, 64) in `lo`,
+  // [64, 128) in `hi`). Wider hashes buy wider chunks at the same bound —
+  // 64·k/(h+1) bits — and so exponentially fewer background collisions.
+
+  /** Chunk layout of the Hamming-LSH banding over a `bits`-wide hash:
     * (widths, bit offsets) for `maxHamming + 1` near-equal chunks — the
     * pigeonhole guarantee (≤ maxHamming differing bits ⇒ at least one
     * chunk identical). Shared by the band join and the oracle-SQL
-    * generator so the band boundaries cannot drift between engines. */
-  private[graft] def hammingChunkLayout(maxHamming: Int): (Array[Int], Array[Int]) = {
+    * generators so the band boundaries cannot drift between engines. */
+  private[graft] def hammingChunkLayout(bits: Int,
+      maxHamming: Int): (Array[Int], Array[Int]) = {
     val nChunks = maxHamming + 1
     val widths = Array.tabulate(nChunks)(j =>
-      64 / nChunks + (if (j < 64 % nChunks) 1 else 0))
+      bits / nChunks + (if (j < bits % nChunks) 1 else 0))
     (widths, widths.scanLeft(0)(_ + _))
   }
 
-  /** Hamming-LSH pair join over a pre-hashed (id, sh: long) frame — the
-    * banding core [[nearDupPairsSimHash]] and the image dHash family
-    * share: split the 64-bit hash into `maxHamming + 1` chunks, bucket-
-    * join on any identical chunk (complete recall for the bound, by
-    * pigeonhole), verify with the exact `bit_count` XOR distance. Only
-    * (chunk_key, id, sh) triples shuffle — never payloads. */
-  private[graft] def hammingPairs64(hashed: DataFrame, maxHamming: Int): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 15,
-      s"maxHamming must be in [0, 15], got $maxHamming (complete recall " +
-        "needs maxHamming+1 chunks; more than 16 chunks of a 64-bit hash " +
-        "would bucket on < 4 bits)")
-    hammingPairs64On(hammingChunks(hashed, maxHamming), maxHamming, None)
+  /** The (…, chunk, chunk_key) projection every Hamming pair join bands
+    * on — shared by the pair join, the disk guard, the incremental probe
+    * and the per-frame video banding, so all see the exact same layout.
+    * Carries EVERY input column (the video path adds its frame alignment
+    * key). Chunk j covers bits [s, e) of the word concatenation; its key
+    * ORs the slice of each word it touches, shifted to its place in the
+    * chunk, so a chunk may straddle a word boundary. A chunk wider than
+    * one long (two words at maxHamming 0) folds its words together (the
+    * shift wraps mod 64): equal hashes still share the key, so recall
+    * stays complete and the verify drops the extra collisions. */
+  private[graft] def hammingChunks(hashed: DataFrame, words: Seq[String],
+      maxHamming: Int): DataFrame = {
+    val bits = 64 * words.length
+    require(maxHamming >= 0 && maxHamming < bits / 4,
+      s"maxHamming must be in [0, ${bits / 4 - 1}], got $maxHamming " +
+        s"(complete recall needs maxHamming+1 chunks; more than ${bits / 4} " +
+        s"chunks of a $bits-bit hash would bucket on < 4 bits)")
+    val (widths, offsets) = hammingChunkLayout(bits, maxHamming)
+    def mask(w: Int): Long = if (w >= 64) -1L else (1L << w) - 1
+    def chunkKey(j: Int): Column = {
+      val s = offsets(j); val e = s + widths(j)
+      (s / 64 to (e - 1) / 64).map { i =>
+        val from = math.max(s, 64 * i); val to = math.min(e, 64 * i + 64)
+        val slice = shiftright(col(words(i)), from - 64 * i)
+          .bitwiseAND(lit(mask(to - from)))
+        if (from == s) slice else shiftleft(slice, from - s)
+      }.reduce(_.bitwiseOR(_))
+    }
+    hashed.select(col("*"),
+      posexplode(array((0 to maxHamming).map(chunkKey): _*)))
+      .withColumnRenamed("pos", "chunk")
+      .withColumnRenamed("col", "chunk_key")
   }
 
-  /** The ONE pair construction [[hammingPairs64]] and its staged form
-    * share, over an already-chunked (id, sh, chunk, chunk_key) frame:
-    * bucket join → candidate dedup → [cross-group anti-join] → exact
-    * bit_count verify. `prior` (staged groups only) holds pairs earlier
-    * groups already verified — anti-joined after the candidate dedup so
-    * the union over groups is pair-distinct (the verify itself is a
-    * row-local bit_count; unlike the minhash family there is no
-    * payload-join to save by anti-joining earlier). */
-  private def hammingPairs64On(chunked: DataFrame, maxHamming: Int,
-      prior: Option[DataFrame]): DataFrame = {
-    val left = chunked.select(col("chunk"), col("chunk_key"),
-      col("id").as("id_a"), col("sh").as("sh_a"))
-    val right = chunked.select(col("chunk"), col("chunk_key"),
-      col("id").as("id_b"), col("sh").as("sh_b"))
-    val cand0 = left.join(right, Seq("chunk", "chunk_key"))
+  /** Hamming-LSH pair join over a pre-hashed (id, words…) frame: bucket-
+    * join on any identical chunk (complete recall for the bound, by
+    * pigeonhole), verify with the exact distance Σ bit_count(w ⊕ w') over
+    * the words. Only (chunk_key, id, words) rows shuffle — never
+    * payloads. Returns (id_a, id_b, hamming). `kGroups > 1` stages the
+    * join into that many SEQUENTIAL chunk-groups — the bounded-disk plan
+    * on the [[detectOnShinglesChunked]] model: the chunk axis partitions
+    * the band join exactly (every chunk's bucket join runs once across
+    * the groups), so the union of per-group verified pairs IS the
+    * single-pass pair set and only wall time trades for the
+    * ~est/kGroups peak footprint. The group count is clamped by the axis
+    * width (maxHamming + 1 chunks). */
+  private[graft] def hammingPairs(hashed: DataFrame, words: Seq[String],
+      maxHamming: Int, kGroups: Int = 1): DataFrame = {
+    val chunked = hammingChunks(hashed, words, maxHamming)
+    if (kGroups <= 1) hammingPairsOn(chunked, words, maxHamming, None)
+    else {
+      val groups = stagingGroups(maxHamming + 1, kGroups)
+      stagedPairUnion(hashed.sparkSession, groups.length, Seq("id_a", "id_b"),
+        (g, prior) => hammingPairsOn(
+          chunked.where(col("chunk").isInCollection(groups(g))),
+          words, maxHamming, prior))
+    }
+  }
+
+  /** The ONE pair construction of [[hammingPairs]]'s single-pass and
+    * staged plans, over an already-chunked frame: bucket join →
+    * candidate dedup → [cross-group anti-join] → exact bit_count verify.
+    * `prior` (staged groups only) holds pairs earlier groups already
+    * verified — anti-joined after the candidate dedup so the union over
+    * groups is pair-distinct (the verify itself is row-local; unlike the
+    * minhash family there is no payload-join to save by anti-joining
+    * earlier). */
+  private def hammingPairsOn(chunked: DataFrame, words: Seq[String],
+      maxHamming: Int, prior: Option[DataFrame]): DataFrame = {
+    def side(s: String) = chunked.select(
+      Seq(col("chunk"), col("chunk_key"), col("id").as(s"id_$s")) ++
+        words.map(w => col(w).as(s"${w}_$s")): _*)
+    val cand0 = side("a").join(side("b"), Seq("chunk", "chunk_key"))
       .where(col("id_a") < col("id_b"))
       .dropDuplicates("id_a", "id_b")
     prior.fold(cand0)(p => cand0.join(p, Seq("id_a", "id_b"), "left_anti"))
-      .withColumn("hamming", bit_count(col("sh_a").bitwiseXOR(col("sh_b"))))
+      .withColumn("hamming", words.map(w =>
+        bit_count(col(s"${w}_a").bitwiseXOR(col(s"${w}_b")))).reduce(_ + _))
       .where(col("hamming") <= maxHamming)
       .select(col("id_a"), col("id_b"), col("hamming"))
   }
 
-  /** [[hammingPairs64]] staged into `kGroups` SEQUENTIAL chunk-groups —
-    * the bounded-disk plan for the 64-bit Hamming families (simhash /
-    * image dHash / audio envelope), on the [[detectOnShinglesChunked]]
-    * model: the chunk axis partitions the band join exactly (every
-    * chunk's bucket join runs exactly once across the groups), so the
-    * union of per-group verified pairs IS the single-pass pair set and
-    * only wall time trades for the ~est/kGroups peak footprint. The
-    * group count is clamped by the axis width (maxHamming + 1 chunks). */
-  private[graft] def hammingPairs64Staged(hashed: DataFrame, maxHamming: Int,
-      kGroups: Int): DataFrame = {
-    val groups = stagingGroups(maxHamming + 1, kGroups)
-    stagedPairUnion(hashed.sparkSession, groups.length, Seq("id_a", "id_b"),
-      (g, prior) => hammingPairs64On(
-        hammingChunks(hashed, maxHamming)
-          .where(col("chunk").isInCollection(groups(g))),
-        maxHamming, prior))
+  /** The shared body of the image, 128-bit image and audio pair
+    * detectors: decode once into a materialized hash frame (two or three
+    * longs per item — `hashes` = the caller's ALREADY-MATERIALIZED frame
+    * for the same payloads, the decode-once-across-rungs path), price the
+    * band join's spill before running it ([[bandPlan]]; the row
+    * count rides the decode checkpoint), then [[hammingPairs]] — staged
+    * when the guard says the single pass would not fit. */
+  private def mediaNearDupPairs(family: String, decode: => DataFrame,
+      hashes: Option[DataFrame], words: Seq[String], maxHamming: Int,
+      remedies: String): DataFrame = {
+    val (h, nDocs) = hashes.map(f => (f, f.count()))
+      .getOrElse(materializeCounted(decode))
+    val (k, _, _) = bandPlan(family, hammingChunks(h, words, maxHamming),
+      Seq("chunk", "chunk_key"), nDocs, payloadBytes = 16.0 * words.length,
+      remedies, maxGroups = maxHamming + 1)
+    hammingPairs(h, words, maxHamming, k)
   }
 
   /** PERCEPTUAL near-duplicate image pairs — the multimodal rung of the
@@ -1803,35 +1776,14 @@ object Dedup {
     * BASELINE.md (round 11). */
   def imageNearDupPairs(df: DataFrame, idCol: String, typeCol: String,
       binaryCol: String, maxHamming: Int = 6,
-      hashes: Option[DataFrame] = None): DataFrame = {
-    // repartition BEFORE the decode (inside imageHashFrame — the
-    // nearDupPairsSimHash discipline): the decode is the dominant CPU
-    // span and must not inherit source skew / AQE byte-size coalescing;
-    // the payload shuffle is the price of pinned decode parallelism
-    // (callers with well-partitioned media dirs can pre-partition and
-    // skip the cost upstream). Materialized: the hash frame is two longs
-    // per image, the decode must run once whatever the guard and the
-    // band join's two sides do, and the disk guard's count/aggregate
-    // read the checkpoint, never the decoder. `hashes` = the caller's
-    // ALREADY-MATERIALIZED (id, sh) frame for the same payloads — the
-    // decode-once-across-rungs path (CorpusPipeline shares one frame
-    // between the dedup rung and the decon probe).
-    // The guard's row count rides the decode checkpoint as an
-    // observation (round 17) — one driver action, not checkpoint+count;
-    // a caller-shared frame is already materialized, so its count is a
-    // cheap checkpoint scan as before.
-    val (h, nDocs) = hashes.map(f => (f, f.count())).getOrElse(
-      materializeCounted(imageHashFrame(df, idCol, typeCol, binaryCol)))
-    val k = bandPlan("imageNearDupPairs", hammingChunks(h, maxHamming),
-      Seq("chunk", "chunk_key"), nDocs, payloadBytes = 16.0,
+      hashes: Option[DataFrame] = None): DataFrame =
+    mediaNearDupPairs("imageNearDupPairs",
+      imageHashFrame(df, idCol, typeCol, binaryCol), hashes, Seq("sh"),
+      maxHamming,
       remedies = "lower maxHamming (wider chunks, fewer collisions), " +
         "shard by a cheap pre-key (dimensions, source) and dedup per " +
         "shard, or use the 128-bit form (imageNearDupPairs128 - twice " +
-        "the chunk width at the same bound)",
-      maxGroups = maxHamming + 1)
-    if (k <= 1) hammingPairs64(h, maxHamming)
-    else hammingPairs64Staged(h, maxHamming, k)
-  }
+        "the chunk width at the same bound)")
 
   /** PERCEPTUAL near-duplicate AUDIO pairs — the audio rung of the dedup
     * family: 64-bit envelope difference hash over the REAL PCM decode
@@ -1850,22 +1802,13 @@ object Dedup {
     * band join shuffles (chunk_key, id, hash) triples only, never PCM. */
   def audioNearDupPairs(df: DataFrame, idCol: String, typeCol: String,
       binaryCol: String, maxHamming: Int = 4,
-      hashes: Option[DataFrame] = None): DataFrame = {
-    // materialize + guard: the imageNearDupPairs discipline (decode once
-    // into a two-longs-per-clip checkpoint; price the band join's spill
-    // before running it); `hashes` = the caller's already-materialized
-    // frame (decode-once-across-rungs)
-    val (h, nDocs) = hashes.map(f => (f, f.count())).getOrElse(
-      materializeCounted(audioHashFrame(df, idCol, typeCol, binaryCol)))
-    val k = bandPlan("audioNearDupPairs", hammingChunks(h, maxHamming),
-      Seq("chunk", "chunk_key"), nDocs, payloadBytes = 16.0,
+      hashes: Option[DataFrame] = None): DataFrame =
+    mediaNearDupPairs("audioNearDupPairs",
+      audioHashFrame(df, idCol, typeCol, binaryCol), hashes, Seq("sh"),
+      maxHamming,
       remedies = "lower maxHamming (wider chunks, fewer collisions), or " +
         "shard by a cheap pre-key (duration, sample rate, source) and " +
-        "dedup per shard",
-      maxGroups = maxHamming + 1)
-    if (k <= 1) hammingPairs64(h, maxHamming)
-    else hammingPairs64Staged(h, maxHamming, k)
-  }
+        "dedup per shard")
 
   /** The persistable AUDIO perceptual-hash frame (id, sh): one 64-bit
     * envelope-delta fingerprint per decodable clip — what a
@@ -1875,22 +1818,33 @@ object Dedup {
     * instead). Decode behind an explicit repartition, exactly the
     * pair-detector's shape. */
   def audioHashFrame(df: DataFrame, idCol: String, typeCol: String,
-      binaryCol: String): DataFrame =
-    mediaHashFrame(df, idCol, typeCol, binaryCol, "audioNearDupPairs") { m =>
-      Multimodal.audioEnvelope(m).map(e => Multimodal.audioHash64(e))
-    }
+      binaryCol: String): DataFrame = {
+    import df.sparkSession.implicits._
+    mediaRecords(df, idCol, typeCol, binaryCol, "audioNearDupPairs")
+      .flatMap(m => Multimodal.audioEnvelope(m)
+        .map(e => (m.media_id, Multimodal.audioHash64(e))))
+      .toDF("id", "sh")
+  }
 
   /** The persistable IMAGE perceptual-hash frame (id, sh): the 64-bit
     * horizontal dHash per decodable image. */
   def imageHashFrame(df: DataFrame, idCol: String, typeCol: String,
-      binaryCol: String): DataFrame =
-    mediaHashFrame(df, idCol, typeCol, binaryCol, "imageNearDupPairs") { m =>
-      Multimodal.lumaGrid9x8(m).map(g => Multimodal.dHash64(g))
-    }
+      binaryCol: String): DataFrame = {
+    import df.sparkSession.implicits._
+    mediaRecords(df, idCol, typeCol, binaryCol, "imageNearDupPairs")
+      .flatMap(m => Multimodal.lumaGrid9x8(m)
+        .map(g => (m.media_id, Multimodal.dHash64(g))))
+      .toDF("id", "sh")
+  }
 
-  private def mediaHashFrame(df: DataFrame, idCol: String, typeCol: String,
-      binaryCol: String, caller: String)(
-      hash: Multimodal.MediaRecord => Option[Long]): DataFrame = {
+  /** The decode prelude every media hash frame shares: integral-id
+    * check, (media_id, media_type, content) projection, then an explicit
+    * repartition BEFORE the decode — the decode is the dominant CPU span
+    * and must not inherit source skew or AQE byte-size coalescing; the
+    * payload shuffle is the price of pinned decode parallelism (callers
+    * with well-partitioned media dirs can pre-partition upstream). */
+  private def mediaRecords(df: DataFrame, idCol: String, typeCol: String,
+      binaryCol: String, caller: String): Dataset[Multimodal.MediaRecord] = {
     import df.sparkSession.implicits._
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
     val idT = df.schema(idCol).dataType
@@ -1903,22 +1857,46 @@ object Dedup {
       col(binaryCol).as("content"))
       .repartition(cpuParallelism(df), col("media_id"))
       .as[Multimodal.MediaRecord]
-      .mapPartitions(_.flatMap(m => hash(m).map(h => (m.media_id, h))))
-      .toDF("id", "sh")
   }
+
+  /** The persistable hash frame of a media `kind`: (id, sh) for image
+    * and audio, the per-frame (id, fpos, sh, every_n) for video. */
+  private def mediaHashFrame(kind: String, df: DataFrame, idCol: String,
+      typeCol: String, binaryCol: String, everyN: Int): DataFrame = kind match {
+    case "image" => imageHashFrame(df, idCol, typeCol, binaryCol)
+    case "audio" => audioHashFrame(df, idCol, typeCol, binaryCol)
+    case _ => videoFrameHashFrame(df, idCol, typeCol, binaryCol, everyN)
+  }
+
+  /** Refuse to probe a persisted video hash index at another sampling
+    * rate: fpos semantics depend on the rate the index was built with,
+    * and probing an everyN=2 index with everyN=1 silently shifts every
+    * alignment slot ([[videoFrameHashFrame]] stamps every_n precisely so
+    * a persisted index carries its rate). An index WITHOUT the column
+    * predates the stamp — the caller owns the invariant then; a
+    * MIXED-VINTAGE partitioned index reads pre-stamp rows as NULL under
+    * the merged schema, and those rows are excluded, not crashed on. */
+  private def requireIndexRate(index: DataFrame, everyN: Int,
+      caller: String): Unit =
+    if (index.columns.contains("every_n")) {
+      val rates = index.select(col("every_n").cast("long").as("every_n"))
+        .where(col("every_n").isNotNull).distinct()
+        .limit(2).collect().map(_.getLong(0))
+      require(rates.length <= 1 && rates.forall(_ == everyN),
+        s"$caller: probe everyN=$everyN but the persisted video hash index " +
+          s"carries every_n=${rates.sorted.mkString(",")} — fpos alignment " +
+          "would silently shift; probe at the index's rate or rebuild " +
+          "the index at one rate")
+    }
 
   /** End-to-end perceptual audio dedup: [[audioNearDupPairs]] → CC →
     * keep each cluster's min id; undecodable payloads always survive. */
   def removeNearDuplicateAudio(df: DataFrame, idCol: String, typeCol: String,
       binaryCol: String, maxHamming: Int = 4, maxIter: Int = 20,
-      hashes: Option[DataFrame] = None): DataFrame = {
-    val losers = resolveClusters(
+      hashes: Option[DataFrame] = None): DataFrame =
+    removeByPairs(df, idCol,
       audioNearDupPairs(df, idCol, typeCol, binaryCol, maxHamming, hashes),
       maxIter)
-      .where(col("label") =!= col("id"))
-      .select(col("id").as(idCol))
-    df.join(losers, Seq(idCol), "left_anti")
-  }
 
   /** Incremental batch-vs-corpus PERCEPTUAL media dedup — the multimodal
     * sibling of [[removeNearDuplicatesIncrementalIndexed]] (text) and
@@ -1962,11 +1940,8 @@ object Dedup {
     val (inH0, nInRowsOpt) = incomingHashes match {
       case Some(f) => (f, None)
       case None =>
-        val (m, n) = materializeCounted(kind match {
-          case "image" => imageHashFrame(incoming, idCol, typeCol, binaryCol)
-          case "audio" => audioHashFrame(incoming, idCol, typeCol, binaryCol)
-          case _ => videoFrameHashFrame(incoming, idCol, typeCol, binaryCol, everyN)
-        })
+        val (m, n) = materializeCounted(
+          mediaHashFrame(kind, incoming, idCol, typeCol, binaryCol, everyN))
         (m, Some(n))
     }
     // video indexes the per-frame frame (id, fpos, sh); image/audio one
@@ -1975,32 +1950,8 @@ object Dedup {
     val inH =
       if (kind == "video") inH0.select(col("id"), col("fpos"), col("sh"))
       else inH0.select(col("id"), col("sh"))
-    if (kind == "video" && existingHashes.columns.contains("every_n")) {
-      // fpos semantics depend on the SAMPLING RATE the index was built
-      // with: probing an everyN=2 index with everyN=1 silently shifts
-      // every alignment slot. [[videoFrameHashFrame]] stamps every_n on
-      // the frame precisely so a persisted index carries its rate;
-      // validate it against this probe's rate (an index WITHOUT the
-      // column predates the stamp — the caller owns the invariant then,
-      // and a MIXED-VINTAGE partitioned index reads pre-stamp rows as
-      // NULL under the merged schema: those rows predate the stamp too,
-      // so they are excluded from the rate check, not crashed on).
-      val rates = existingHashes
-        .select(col("every_n").cast("long").as("every_n"))
-        .where(col("every_n").isNotNull).distinct()
-        .limit(2).collect().map(_.getLong(0))
-      require(rates.length <= 1,
-        "removeNearDuplicateMediaIncremental: persisted video hash index " +
-          s"mixes sampling rates every_n=${rates.sorted.mkString(",")} — " +
-          "rebuild it at one rate")
-      rates.headOption.foreach { r =>
-        require(r == everyN,
-          s"removeNearDuplicateMediaIncremental: probe everyN=$everyN but " +
-            s"the persisted video hash index was built with every_n=$r — " +
-            "fpos alignment would silently shift; probe at the index's " +
-            "rate or rebuild the index")
-      }
-    }
+    if (kind == "video")
+      requireIndexRate(existingHashes, everyN, "removeNearDuplicateMediaIncremental")
     val exH =
       if (kind == "video") existingHashes.select(col("id"), col("fpos"), col("sh"))
       else existingHashes.select(col("id"), col("sh"))
@@ -2013,8 +1964,8 @@ object Dedup {
     }
     // one-sided probe: incoming chunks × (incoming ∪ existing) chunks —
     // existing↔existing pairs are unrepresentable in this join's output
-    val inChunks = hammingChunks(inH, maxHamming)
-    val allChunks = inChunks.unionByName(hammingChunks(exH, maxHamming))
+    val inChunks = hammingChunks(inH, Seq("sh"), maxHamming)
+    val allChunks = inChunks.unionByName(hammingChunks(exH, Seq("sh"), maxHamming))
     // Disk guard, now with a BOUNDED plan instead of a warning (round
     // 15): probe mass = Σ_k in_k · all_k, estimated spill priced against
     // usable shuffle bytes exactly like the batch families — but the
@@ -2050,10 +2001,10 @@ object Dedup {
         val est = bandSpillEstimateBytes(
           bandProbeMass(inChunks, allChunks, keys), payload)
         val k = spillChunkCount(est, usable)
-        if (k > 1) System.err.println(bandStagingNote(
-          s"removeNearDuplicateMediaIncremental($kind) probe", est, usable, k) +
-          " Further remedies: lower maxHamming, or for video raise " +
-          "everyN / keep alignFrames=true.")
+        if (k > 1) System.err.println(stagingNote(
+          s"removeNearDuplicateMediaIncremental($kind) probe", est, usable, k,
+          "sub-batch", remedies = "lower maxHamming, or for video raise " +
+            "everyN / keep alignFrames=true"))
         k
       }
     }
@@ -2139,24 +2090,6 @@ object Dedup {
     incoming.join(losers, Seq(idCol), "left_anti")
   }
 
-  /** The (…, sh, chunk, chunk_key) projection [[hammingPairs64]] bands
-    * on — factored so the incremental probe and the per-frame video
-    * banding share the exact layout. Carries EVERY input column (the
-    * media frames pass bare (id, sh); the video path adds its frame
-    * alignment key). */
-  private[graft] def hammingChunks(hashed: DataFrame, maxHamming: Int): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 15,
-      s"maxHamming must be in [0, 15], got $maxHamming")
-    val (widths, offsets) = hammingChunkLayout(maxHamming)
-    val nChunks = maxHamming + 1
-    def mask(w: Int): Long = if (w >= 64) -1L else (1L << w) - 1
-    hashed.select(col("*"),
-      posexplode(array((0 until nChunks).map(j =>
-        shiftright(col("sh"), offsets(j)).bitwiseAND(lit(mask(widths(j))))): _*)))
-      .withColumnRenamed("pos", "chunk")
-      .withColumnRenamed("col", "chunk_key")
-  }
-
   /** Sampled-frame perceptual hash frame (id, fpos, sh, every_n) for
     * VIDEO payloads: every `everyN`-th frame REALLY decodes
     * ([[Multimodal.videoFrameHashes]] — AVI container walk, raw-DIB /
@@ -2172,18 +2105,8 @@ object Dedup {
   def videoFrameHashFrame(df: DataFrame, idCol: String, typeCol: String,
       binaryCol: String, everyN: Int = 2): DataFrame = {
     import df.sparkSession.implicits._
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    val idT = df.schema(idCol).dataType
-    require(Seq(LongType, IntegerType, ShortType, ByteType).contains(idT),
-      s"videoFrameHashFrame: idCol '$idCol' must be an integral type, got " +
-        s"$idT - remap or hash string ids first")
-    df.select(
-      col(idCol).cast("long").as("media_id"),
-      col(typeCol).cast("string").as("media_type"),
-      col(binaryCol).as("content"))
-      .repartition(cpuParallelism(df), col("media_id"))
-      .as[Multimodal.MediaRecord]
-      .mapPartitions(_.flatMap { m =>
+    mediaRecords(df, idCol, typeCol, binaryCol, "videoFrameHashFrame")
+      .flatMap { m =>
         // fpos = decoder-reported ordinal / everyN, NOT zipWithIndex over
         // the successfully decoded frames: if one sampled frame of a
         // partially corrupt clip fails to decode, the surviving frames
@@ -2192,7 +2115,7 @@ object Dedup {
         Multimodal.videoFrameHashes(m, everyN).toSeq.flatMap(_.map {
           case (i, h) => (m.media_id, i / everyN, h)
         })
-      })
+      }
       .toDF("id", "fpos", "sh")
       .withColumn("every_n", lit(everyN))
   }
@@ -2228,12 +2151,12 @@ object Dedup {
         videoFrameHashFrame(df, idCol, typeCol, binaryCol, everyN)
           .select(col("id"), col("fpos"), col("sh"))))
     val counts = hashes.groupBy(col("id")).agg(count(lit(1)).as("nf"))
-    val chunked = hammingChunks(hashes, maxHamming)
+    val chunked = hammingChunks(hashes, Seq("sh"), maxHamming)
     // disk guard over the FRAME rows (the band join's true input): the
     // SET variant drops the ordinal from the band key, multiplying the
     // collision mass by ~frames-per-clip — exactly the geometry the
     // pricing must see, so the key set follows alignFrames
-    val k = bandPlan("videoNearDupPairs",
+    val (k, _, _) = bandPlan("videoNearDupPairs",
       chunked,
       if (alignFrames) Seq("fpos", "chunk", "chunk_key")
       else Seq("chunk", "chunk_key"),
@@ -2295,7 +2218,7 @@ object Dedup {
       fp.join(p, Seq("id_a", "id_b", "fpos"), "left_anti"))
   }
 
-  /** The video family's chunk-axis staging ([[hammingPairs64Staged]]'s
+  /** The video family's chunk-axis staging ([[hammingPairs]]'s
     * shape at frame-pair granularity): each group runs the single-pass
     * construction over its chunk indices, the (id_a, id_b, fpos) union
     * is exact, and the caller's match-fraction aggregation sees the
@@ -2316,123 +2239,22 @@ object Dedup {
       binaryCol: String, everyN: Int = 2, maxHamming: Int = 4,
       minMatchFrac: Double = 0.6, maxIter: Int = 20,
       alignFrames: Boolean = true,
-      frameHashes: Option[DataFrame] = None): DataFrame = {
-    val losers = resolveClusters(
+      frameHashes: Option[DataFrame] = None): DataFrame =
+    removeByPairs(df, idCol,
       videoNearDupPairs(df, idCol, typeCol, binaryCol, everyN, maxHamming,
-        minMatchFrac, alignFrames, frameHashes)
-        .select(col("id_a"), col("id_b")), maxIter)
-      .where(col("label") =!= col("id"))
-      .select(col("id").as(idCol))
-    df.join(losers, Seq(idCol), "left_anti")
-  }
+        minMatchFrac, alignFrames, frameHashes),
+      maxIter)
 
   /** End-to-end perceptual image dedup: [[imageNearDupPairs]] → CC →
     * keep the minimum id per cluster; undecodable payloads always
     * survive (no hash ⇒ no duplicate evidence). */
   def removeNearDuplicateImages(df: DataFrame, idCol: String, typeCol: String,
       binaryCol: String, maxHamming: Int = 6, maxIter: Int = 20,
-      hashes: Option[DataFrame] = None): DataFrame = {
-    val losers = resolveClusters(
+      hashes: Option[DataFrame] = None): DataFrame =
+    removeByPairs(df, idCol,
       imageNearDupPairs(df, idCol, typeCol, binaryCol, maxHamming, hashes),
       maxIter)
-      .where(col("label") =!= col("id"))
-      .select(col("id").as(idCol))
-    df.join(losers, Seq(idCol), "left_anti")
-  }
 
-  /** Chunk layout over a 128-bit hash: `maxHamming + 1` near-equal chunk
-    * widths and their bit offsets (the [[hammingChunkLayout]] rule at
-    * width 128). */
-  private[graft] def hammingChunkLayout128(maxHamming: Int): (Array[Int], Array[Int]) = {
-    val nChunks = maxHamming + 1
-    val widths = Array.tabulate(nChunks)(j =>
-      128 / nChunks + (if (j < 128 % nChunks) 1 else 0))
-    (widths, widths.scanLeft(0)(_ + _))
-  }
-
-  /** Hamming-LSH pair join over a pre-hashed (id, lo: long, hi: long)
-    * frame — the 128-bit companion of [[hammingPairs64]]: bits [0, 64)
-    * live in `lo`, bits [64, 128) in `hi`; chunks may straddle the
-    * boundary (assembled from both words with plan-time-constant
-    * shifts). Complete recall for the bound by the same pigeonhole;
-    * verify = bit_count(lo⊕lo') + bit_count(hi⊕hi'). Wider chunks than
-    * the 64-bit layout at the same bound (128/(h+1) bits) ⇒
-    * exponentially fewer background bucket collisions — the precision
-    * win the 128-bit signature buys. */
-  /** The 128-bit sibling of [[hammingChunks]]: (id, lo, hi, chunk,
-    * chunk_key) — factored so the pair join and the disk guard band on
-    * the exact same projection. */
-  private[graft] def hammingChunks128(hashed: DataFrame, maxHamming: Int): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 31,
-      s"maxHamming must be in [0, 31], got $maxHamming (complete recall " +
-        "needs maxHamming+1 chunks; more than 32 chunks of a 128-bit hash " +
-        "would bucket on < 4 bits)")
-    val (widths, offsets) = hammingChunkLayout128(maxHamming)
-    val nChunks = maxHamming + 1
-    def mask(w: Int): Long = if (w >= 64) -1L else (1L << w) - 1
-    // chunk j covers bits [offsets(j), offsets(j) + widths(j)) of the
-    // 128-bit concat; extract from the word(s) it touches
-    def chunkKey(j: Int): Column = {
-      val s = offsets(j); val w = widths(j); val e = s + w
-      if (e <= 64)
-        shiftright(col("lo"), s).bitwiseAND(lit(mask(w)))
-      else if (s >= 64)
-        shiftright(col("hi"), s - 64).bitwiseAND(lit(mask(w)))
-      else {
-        val fromLo = 64 - s
-        shiftright(col("lo"), s).bitwiseAND(lit(mask(fromLo)))
-          .bitwiseOR(shiftleft(
-            col("hi").bitwiseAND(lit(mask(w - fromLo))), fromLo))
-      }
-    }
-    hashed.select(col("id"), col("lo"), col("hi"),
-      posexplode(array((0 until nChunks).map(chunkKey): _*)))
-      .withColumnRenamed("pos", "chunk")
-      .withColumnRenamed("col", "chunk_key")
-  }
-
-  private[graft] def hammingPairs128(hashed: DataFrame, maxHamming: Int): DataFrame =
-    hammingPairs128On(hammingChunks128(hashed, maxHamming), maxHamming, None)
-
-  /** The shared pair construction of [[hammingPairs128]] and its staged
-    * form (the [[hammingPairs64On]] shape over the two-word hash). */
-  private def hammingPairs128On(chunked: DataFrame, maxHamming: Int,
-      prior: Option[DataFrame]): DataFrame = {
-    val left = chunked.select(col("chunk"), col("chunk_key"),
-      col("id").as("id_a"), col("lo").as("lo_a"), col("hi").as("hi_a"))
-    val right = chunked.select(col("chunk"), col("chunk_key"),
-      col("id").as("id_b"), col("lo").as("lo_b"), col("hi").as("hi_b"))
-    val cand0 = left.join(right, Seq("chunk", "chunk_key"))
-      .where(col("id_a") < col("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    prior.fold(cand0)(p => cand0.join(p, Seq("id_a", "id_b"), "left_anti"))
-      .withColumn("hamming",
-        bit_count(col("lo_a").bitwiseXOR(col("lo_b"))) +
-          bit_count(col("hi_a").bitwiseXOR(col("hi_b"))))
-      .where(col("hamming") <= maxHamming)
-      .select(col("id_a"), col("id_b"), col("hamming"))
-  }
-
-  /** [[hammingPairs64Staged]]'s 128-bit sibling: the same exact
-    * chunk-axis staging over the (id, lo, hi) frame. */
-  private[graft] def hammingPairs128Staged(hashed: DataFrame, maxHamming: Int,
-      kGroups: Int): DataFrame = {
-    val groups = stagingGroups(maxHamming + 1, kGroups)
-    stagedPairUnion(hashed.sparkSession, groups.length, Seq("id_a", "id_b"),
-      (g, prior) => hammingPairs128On(
-        hammingChunks128(hashed, maxHamming)
-          .where(col("chunk").isInCollection(groups(g))),
-        maxHamming, prior))
-  }
-
-  /** [[imageNearDupPairs]] over the 128-BIT perceptual signature
-    * (horizontal dHash ∥ vertical dHash — [[Multimodal.dHash64]] over
-    * the 9×8 grid in `lo`, [[Multimodal.dHash64v]] over the 8×9 grid in
-    * `hi`): the same decode-once narrow stage emits both grids, the
-    * band join ships (chunk, id, lo, hi) only, and the chunks are twice
-    * as wide as the 64-bit layout at the same bound — tighter precision
-    * (vertical gradients catch what horizontal ones miss), same
-    * complete-recall pigeonhole. */
   /** The persistable 128-BIT image hash frame (id, lo, hi): horizontal
     * dHash in `lo` (bit-identical to [[imageHashFrame]]'s `sh` — a
     * 64-bit probe can read `lo` directly), vertical dHash in `hi` —
@@ -2442,54 +2264,40 @@ object Dedup {
   def imageHashFrame128(df: DataFrame, idCol: String, typeCol: String,
       binaryCol: String): DataFrame = {
     import df.sparkSession.implicits._
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    val idT = df.schema(idCol).dataType
-    require(Seq(LongType, IntegerType, ShortType, ByteType).contains(idT),
-      s"imageHashFrame128: idCol '$idCol' must be an integral type, got " +
-        s"$idT - remap or hash string ids first")
-    df.select(
-      col(idCol).cast("long").as("media_id"),
-      col(typeCol).cast("string").as("media_type"),
-      col(binaryCol).as("content"))
-      .repartition(cpuParallelism(df), col("media_id"))
-      .as[Multimodal.MediaRecord]
-      .mapPartitions { it =>
-        it.flatMap(m => Multimodal.lumaGrids128(m).map { case (gh, gv) =>
-          (m.media_id, Multimodal.dHash64(gh), Multimodal.dHash64v(gv))
-        })
-      }.toDF("id", "lo", "hi")
+    mediaRecords(df, idCol, typeCol, binaryCol, "imageHashFrame128")
+      .flatMap(m => Multimodal.lumaGrids128(m).map { case (gh, gv) =>
+        (m.media_id, Multimodal.dHash64(gh), Multimodal.dHash64v(gv))
+      })
+      .toDF("id", "lo", "hi")
   }
 
+  /** [[imageNearDupPairs]] over the 128-BIT perceptual signature
+    * (horizontal dHash ∥ vertical dHash — [[Multimodal.dHash64]] over
+    * the 9×8 grid in `lo`, [[Multimodal.dHash64v]] over the 8×9 grid in
+    * `hi`): the same decode-once narrow stage emits both grids, the
+    * band join ships (chunk, id, lo, hi) only, and the chunks are twice
+    * as wide as the 64-bit layout at the same bound — tighter precision
+    * (vertical gradients catch what horizontal ones miss), same
+    * complete-recall pigeonhole. `hashes` = the caller's
+    * already-materialized (id, lo, hi) frame. */
   def imageNearDupPairs128(df: DataFrame, idCol: String, typeCol: String,
       binaryCol: String, maxHamming: Int = 6,
-      hashes: Option[DataFrame] = None): DataFrame = {
-    // the 64-bit path's materialize + guard discipline (decode once into
-    // a three-longs-per-image checkpoint; price the band join up front);
-    // `hashes` = the caller's already-materialized (id, lo, hi) frame
-    val (h, nDocs) = hashes.map(f => (f, f.count())).getOrElse(
-      materializeCounted(imageHashFrame128(df, idCol, typeCol, binaryCol)))
-    val k = bandPlan("imageNearDupPairs128", hammingChunks128(h, maxHamming),
-      Seq("chunk", "chunk_key"), nDocs, payloadBytes = 32.0,
+      hashes: Option[DataFrame] = None): DataFrame =
+    mediaNearDupPairs("imageNearDupPairs128",
+      imageHashFrame128(df, idCol, typeCol, binaryCol), hashes,
+      Seq("lo", "hi"), maxHamming,
       remedies = "lower maxHamming (wider chunks, fewer collisions), or " +
         "shard by a cheap pre-key (dimensions, source) and dedup per " +
-        "shard",
-      maxGroups = maxHamming + 1)
-    if (k <= 1) hammingPairs128(h, maxHamming)
-    else hammingPairs128Staged(h, maxHamming, k)
-  }
+        "shard")
 
   /** End-to-end 128-bit perceptual image dedup ([[imageNearDupPairs128]]
     * → CC → min-id survivor); undecodable payloads always survive. */
   def removeNearDuplicateImages128(df: DataFrame, idCol: String, typeCol: String,
       binaryCol: String, maxHamming: Int = 6, maxIter: Int = 20,
-      hashes: Option[DataFrame] = None): DataFrame = {
-    val losers = resolveClusters(
+      hashes: Option[DataFrame] = None): DataFrame =
+    removeByPairs(df, idCol,
       imageNearDupPairs128(df, idCol, typeCol, binaryCol, maxHamming, hashes),
       maxIter)
-      .where(col("label") =!= col("id"))
-      .select(col("id").as(idCol))
-    df.join(losers, Seq(idCol), "left_anti")
-  }
 
   /** Embedding-cosine near-duplicate pairs — delegates candidate
     * generation + verification to [[Similarity.cosinePairs]] (banded
@@ -2626,101 +2434,56 @@ object Dedup {
   }
 
   /** End-to-end near-duplicate REMOVAL: detect pairs (MinHash+LSH,
-    * exact-verified), cluster them, and keep one survivor per cluster
-    * (minimum id). Everything the detection found goes; the rest of the
-    * corpus passes through untouched (left-anti on the loser ids).
+    * exact-verified), cluster them, and keep one survivor per cluster.
+    * Everything the detection found goes; the rest of the corpus passes
+    * through untouched (left-anti on the loser ids).
     *
-    * The detector is the AUTO-selected one ([[nearDupPairsMinHashAuto]]):
-    * toy/typical corpora run the fixed-banding plan (identical pairs to
-    * [[nearDupPairsMinHash]]), high-background corpora escalate to tuned
-    * banding + the signature prefilter by themselves, and the
-    * near-all-pairs regime fails loudly with the remedy named instead of
-    * OOMing — the DEFAULT configuration is scale-safe without a caller
-    * knowing to flip a switch. [[removeNearDuplicatesFixed]] pins the
-    * fixed detector (A/B isolation); [[removeNearDuplicatesTuned]] pins
-    * the tuned one. */
+    * The default detector is [[Detector.Auto]]: toy/typical corpora run
+    * the fixed-banding plan (identical pairs to [[Detector.Fixed]]),
+    * high-background corpora escalate to tuned banding + the signature
+    * prefilter by themselves, and the near-all-pairs regime fails loudly
+    * with the remedy named instead of OOMing — the DEFAULT configuration
+    * is scale-safe without a caller knowing to flip a switch. Fixed pins
+    * the no-sample plan (A/B isolation, bounded micro-batches); Tuned
+    * skips the decision for corpora already profiled as high-background
+    * (measured, BASELINE.md round 7: its fixed O(N) overheads only pay
+    * off in the millions of documents).
+    *
+    * The survivor is each cluster's min id, or with `priorityCol` its
+    * highest-priority member (ties broken by min id, so the order is
+    * total and deterministic) — the CROSS-SOURCE dedup shape: when a
+    * curated corpus and a web crawl both carry a document, the curated
+    * copy must survive regardless of which side got the smaller id. The
+    * rank window shuffles only CLUSTERED ids with their (priority, id)
+    * scalars — never corpus text. A null priority sorts LAST under
+    * Spark's and SQL's shared desc-nulls-last default, i.e. "no
+    * priority" = crawl-grade. */
   def removeNearDuplicates(df: DataFrame, textCol: String, idCol: String,
       threshold: Double = 0.8, n: Int = 3, maxIter: Int = 20,
-      tok: Tok = Tok.Latin): DataFrame =
+      tok: Tok = Tok.Latin, detector: Detector = Detector.Auto,
+      priorityCol: Option[String] = None): DataFrame =
     removeByPairs(df, idCol,
-      nearDupPairsMinHashAuto(df, textCol, idCol, threshold, n, tok = tok),
-      maxIter)
+      nearDupPairsMinHash(df, textCol, idCol, threshold, n, detector, tok),
+      maxIter, priorityCol)
 
-  /** [[removeNearDuplicates]] pinned to the FIXED-banding detector
-    * ([[nearDupPairsMinHash]] — no background sample, no escalation).
-    * Exists for A/B isolation (ScaleProfile's fixed-vs-tuned decades)
-    * and for callers who have measured that the sampling jobs are not
-    * worth it on their corpus shape; the auto form is the default. */
-  def removeNearDuplicatesFixed(df: DataFrame, textCol: String, idCol: String,
-      threshold: Double = 0.8, n: Int = 3, maxIter: Int = 20,
-      tok: Tok = Tok.Latin): DataFrame =
-    removeByPairs(df, idCol,
-      nearDupPairsMinHash(df, textCol, idCol, threshold, n, tok = tok),
-      maxIter)
-
-  /** [[removeNearDuplicates]] detecting with the PER-CORPUS TUNED path
-    * ([[nearDupPairsMinHashTuned]]: sampled-background band tuning +
-    * the self-gating signature prefilter) instead of fixed banding —
-    * the removal form for high-background corpora where the fixed
-    * detector floods (identical results: both detectors are exact-
-    * verified against the same threshold; they differ only in cost).
-    *
-    * WHEN TO USE (measured, BASELINE.md round 7): the tuned form pays
-    * fixed O(N) overheads — two checkpointed shingle materializations,
-    * a k≈300 signature checkpoint, the background sample — to buy down
-    * candidate volume, which under fixed banding grows ~×14.6 per ×10
-    * docs on high-background corpora. At 500k docs on one box those
-    * overheads still exceed the verify savings (fixed ~33 s vs tuned
-    * ~54–63 s isolated); the crossover is the next decade, where fixed
-    * banding's projected ~340M candidates re-enter verify saturation.
-    * Reach for this form when the corpus (per partition-group) is in
-    * the millions of documents or a background-similarity sample runs
-    * hot; below that, [[removeNearDuplicates]] is faster. */
-  def removeNearDuplicatesTuned(df: DataFrame, textCol: String, idCol: String,
-      threshold: Double = 0.8, n: Int = 3, maxIter: Int = 20,
-      tok: Tok = Tok.Latin): DataFrame =
-    removeByPairs(df, idCol,
-      nearDupPairsMinHashTuned(df, textCol, idCol, threshold, n, tok = tok),
-      maxIter)
-
-  /** Shared near-dup removal tail: cluster the verified pairs, keep each
-    * cluster's min-id survivor (the one resolution semantics every
-    * detector-flavored removal shares). */
+  /** Shared removal tail of every detector family: cluster the verified
+    * pairs ([[resolveClusters]]) and drop every member but each cluster's
+    * survivor — its min id, or its top (`priorityCol` desc, id asc) row. */
   private def removeByPairs(df: DataFrame, idCol: String, pairs: DataFrame,
-      maxIter: Int): DataFrame = {
-    val losers = resolveClusters(pairs, maxIter)
-      .where(col("label") =!= col("id"))
-      .select(col("id").as(idCol))
-    df.join(losers, Seq(idCol), "left_anti")
-  }
-
-  /** [[removeNearDuplicates]] with a PRIORITY-aware survivor rule: each
-    * cluster keeps its highest-`priorityCol` member (ties broken by min
-    * id, so the order is total and deterministic) instead of the plain
-    * min id — the CROSS-SOURCE dedup shape: when a curated corpus and a
-    * web crawl both carry a document, the curated copy must survive
-    * regardless of which side happened to get the smaller id. Detection
-    * and clustering are unchanged (the same exact-verified pairs + CC);
-    * only the survivor rank differs, and the rank window shuffles only
-    * CLUSTERED ids with their (priority, id) scalars — never corpus
-    * text. `priorityCol` must be non-null for clustered rows (a null
-    * priority sorts LAST under Spark's and SQL's shared desc-nulls-last
-    * default, i.e. "no priority" = crawl-grade). */
-  def removeNearDuplicatesPrioritized(df: DataFrame, textCol: String,
-      idCol: String, priorityCol: String, threshold: Double = 0.8,
-      n: Int = 3, maxIter: Int = 20, tok: Tok = Tok.Latin): DataFrame = {
-    val labels = resolveClusters(
-      nearDupPairsMinHash(df, textCol, idCol, threshold, n, tok = tok), maxIter)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("label"))
-      .orderBy(col("_prio").desc, col("id").asc)
-    val losers = labels
-      .join(df.select(col(idCol).as("id"), col(priorityCol).as("_prio")),
-        Seq("id"))
-      .withColumn("_rk", row_number().over(w))
-      .where(col("_rk") > 1)
-      .select(col("id").as(idCol))
-    df.join(losers, Seq(idCol), "left_anti")
+      maxIter: Int, priorityCol: Option[String] = None): DataFrame = {
+    val labels = resolveClusters(pairs, maxIter)
+    val losers = priorityCol match {
+      case None => labels.where(col("label") =!= col("id"))
+      case Some(p) =>
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("label"))
+          .orderBy(col("_prio").desc, col("id").asc)
+        labels
+          .join(df.select(col(idCol).as("id"), col(p).as("_prio")), Seq("id"))
+          .withColumn("_rk", row_number().over(w))
+          .where(col("_rk") > 1)
+    }
+    df.join(losers.select(col("id").as(idCol)), Seq(idCol), "left_anti")
   }
 
   /** Embedding-space near-duplicate REMOVAL — the same detect → cluster →
@@ -2757,13 +2520,10 @@ object Dedup {
             .drop("_jl_vec")
       }
     case None =>
-      val pairs =
+      removeByPairs(df, idCol,
         if (exact) Similarity.cosinePairsExact(df, vecCol, idCol, threshold)
-        else Similarity.cosinePairs(df, vecCol, idCol, threshold)
-      val losers = resolveClusters(pairs, maxIter)
-        .where(col("label") =!= col("id"))
-        .select(col("id").as(idCol))
-      df.join(losers, Seq(idCol), "left_anti")
+        else Similarity.cosinePairs(df, vecCol, idCol, threshold),
+        maxIter)
   }
 
   /** INCREMENTAL near-duplicate removal — the daily-increment shape: dedup
@@ -3005,11 +2765,11 @@ object Dedup {
             bandProbeMass(newBands, allBands, Seq("band", "band_key")),
             payloadBytes = 2.0 * meanSh * 8.0)
           val ks = spillChunkCount(est, usable)
-          if (ks > 1) System.err.println(bandStagingNote(
-            "incremental near-dup probe", est, usable, ks) +
-            " Further remedies: probe in smaller batches, raise the " +
-            "threshold, or strip shared boilerplate (line/span dedup) " +
-            "from the delta first.")
+          if (ks > 1) System.err.println(stagingNote(
+            "incremental near-dup probe", est, usable, ks, "sub-batch",
+            remedies = "probe in smaller batches, raise the threshold, or " +
+              "strip shared boilerplate (line/span dedup) from the delta " +
+              "first"))
           (ks, est, usable)
         }
     }
@@ -3341,32 +3101,18 @@ object Dedup {
     // which decodes once and probes dedup + decon with one frame) — may
     // cover a SUPERSET of the corpus ids (hits on absent ids are inert
     // in the caller's anti-join); when absent, decode here.
-    val cH0 = corpusHashes.getOrElse(materialize(kind match {
-      case "image" => imageHashFrame(corpus, idCol, typeCol, binaryCol)
-      case "audio" => audioHashFrame(corpus, idCol, typeCol, binaryCol)
-      case _ => videoFrameHashFrame(corpus, idCol, typeCol, binaryCol, everyN)
-    }))
-    if (kind == "video" && benchmarkHashes.columns.contains("every_n")) {
-      // NULL every_n rows predate the stamp (mixed-vintage partitioned
-      // index under a merged schema) — excluded, same contract as the
-      // incremental probe's validation above.
-      val rates = benchmarkHashes
-        .select(col("every_n").cast("long").as("every_n"))
-        .where(col("every_n").isNotNull).distinct()
-        .limit(2).collect().map(_.getLong(0))
-      require(rates.length <= 1 && rates.forall(_ == everyN),
-        s"mediaContaminationHits: probe everyN=$everyN but the benchmark " +
-          s"video index carries every_n=${rates.sorted.mkString(",")} — " +
-          "fpos alignment would silently shift; probe at the index's rate")
-    }
+    val cH0 = corpusHashes.getOrElse(materialize(
+      mediaHashFrame(kind, corpus, idCol, typeCol, binaryCol, everyN)))
+    if (kind == "video")
+      requireIndexRate(benchmarkHashes, everyN, "mediaContaminationHits")
     val (cH, bH) =
       if (kind == "video")
         (cH0.select(col("id"), col("fpos"), col("sh")),
           benchmarkHashes.select(col("id"), col("fpos"), col("sh")))
       else (cH0.select(col("id"), col("sh")),
         benchmarkHashes.select(col("id"), col("sh")))
-    val cChunks = hammingChunks(cH, maxHamming)
-    val bChunks = hammingChunks(bH, maxHamming)
+    val cChunks = hammingChunks(cH, Seq("sh"), maxHamming)
+    val bChunks = hammingChunks(bH, Seq("sh"), maxHamming)
     val pairs =
       if (kind == "video") {
         val fposKey =
@@ -3426,11 +3172,8 @@ object Dedup {
       idCol: String, typeCol: String, binaryCol: String, kind: String,
       maxHamming: Int, everyN: Int = 2, minMatchFrac: Double = 0.6,
       alignFrames: Boolean = true): DataFrame = {
-    val bH = materialize(kind match {
-      case "image" => imageHashFrame(benchmark, idCol, typeCol, binaryCol)
-      case "audio" => audioHashFrame(benchmark, idCol, typeCol, binaryCol)
-      case _ => videoFrameHashFrame(benchmark, idCol, typeCol, binaryCol, everyN)
-    })
+    val bH = materialize(
+      mediaHashFrame(kind, benchmark, idCol, typeCol, binaryCol, everyN))
     removeContaminatedMediaIndexed(corpus, bH, idCol, typeCol, binaryCol,
       kind, maxHamming, everyN, minMatchFrac, alignFrames)
   }
@@ -3487,7 +3230,7 @@ object Dedup {
     // observation (round 17) — one driver action, not checkpoint+count.
     val (assigned, nAssigned) = materializeCounted(assigned0)
     val dim = centroids.headOption.map(_._2.length).getOrElse(0)
-    val k = bandPlan("semanticDupPairs", assigned, Seq("list"),
+    val (k, _, _) = bandPlan("semanticDupPairs", assigned, Seq("list"),
       nAssigned,
       payloadBytes = 2.0 * dim * 8,
       remedies = "project the vectors first (projectTo / " +

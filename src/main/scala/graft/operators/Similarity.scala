@@ -277,7 +277,7 @@ object Similarity {
       case None =>
         val dim = vecs.limit(1).collect().headOption
           .map(_.getSeq[Any](1).length).getOrElse(0)
-        Dedup.bandPlanPriced("cosinePairs", bandedFor(0 until b),
+        Dedup.bandPlan("cosinePairs", bandedFor(0 until b),
           Seq("band", "band_key"), nVecs, payloadBytes = 2.0 * dim * 8,
           remedies = "project the vectors first (randomProject - the JL " +
             "rung cuts the verify payload by in-dim/out-dim), raise the " +

@@ -610,14 +610,11 @@ object CorpusPipeline {
     //    detectors (every candidate is exact-verified at the same
     //    threshold); only the cost moves.
     val nearDeduped = observed("near_dedup",
-      if (cfg.tunedNearDedup)
-        Dedup.removeNearDuplicatesTuned(
-          spanDeduped, cfg.textCol, cfg.idCol, cfg.dedupThreshold, cfg.shingleN,
-          tok = cfg.tokenizer)
-      else
-        Dedup.removeNearDuplicates(
-          spanDeduped, cfg.textCol, cfg.idCol, cfg.dedupThreshold, cfg.shingleN,
-          tok = cfg.tokenizer))
+      Dedup.removeNearDuplicates(
+        spanDeduped, cfg.textCol, cfg.idCol, cfg.dedupThreshold, cfg.shingleN,
+        tok = cfg.tokenizer,
+        detector =
+          if (cfg.tunedNearDedup) Dedup.Detector.Tuned else Dedup.Detector.Auto))
 
     // 3b. optional SEMANTIC dedup (SemDeDup) — the last dedup rung:
     //    paraphrase-level duplicates the shingle families cannot see,

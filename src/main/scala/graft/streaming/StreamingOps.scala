@@ -464,7 +464,8 @@ object StreamingOps {
               // and kill the StreamingQuery on a boilerplate-heavy first
               // batch (plus pay a sample + count per batch for a decision
               // the trigger bound already made)
-              Dedup.removeNearDuplicatesFixed(batch, textCol, idCol, threshold, n)
+              Dedup.removeNearDuplicates(batch, textCol, idCol, threshold, n,
+                detector = Dedup.Detector.Fixed)
           // optional per-batch FUZZY decontamination against a PERSISTED
           // benchmark index ($dir/bands + $dir/shingles, built once per
           // benchmark version with minHashBandIndex(shingles,

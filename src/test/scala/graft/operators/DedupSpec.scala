@@ -14,6 +14,20 @@ class DedupSpec extends AnyFunSuite {
   private val sfDir = "/root/testdata/sf0.001"
   private lazy val docs = spark.read.parquet(s"$sfDir/documents.parquet")
 
+  /** The Tuned/Auto detect over `docs` with the gates and spill knobs the
+    * public entry point fixes forced through its seams
+    * ([[Dedup.selectDetector]], [[Dedup.runDetect]]). */
+  private def forcedDetect(tau: Double, detector: Dedup.Detector,
+      escalateMinCandidates: Double = 4e6, prefilterMinCandidates: Double = 4e6,
+      spillSafetyMargin: Double = 0.5, maxSpillChunks: Int = 256): DataFrame = {
+    val (sh, shH, nDocs, est) = Dedup.profileShingles(docs, "text", "doc_id",
+      3, graft.functions.Tok.Latin)
+    Dedup.runDetect(sh, shH,
+      Dedup.selectDetector(tau, nDocs, est, detector, escalateMinCandidates,
+        prefilterMinCandidates),
+      tau, est.meanShingles, spillSafetyMargin, maxSpillChunks)
+  }
+
   test("exactByContent keeps one row per normalized text, lowest id") {
     val df = Seq(
       (1L, "Hello,  World!"),
@@ -126,14 +140,15 @@ class DedupSpec extends AnyFunSuite {
     Seq(0.5, 0.7, 0.9).foreach { tau =>
       val exact = Dedup.exactJaccardPairs(docs, "text", "doc_id", tau)
         .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-      val tuned = Dedup.nearDupPairsMinHashTuned(docs, "text", "doc_id", tau)
+      val tuned = Dedup.nearDupPairsMinHash(docs, "text", "doc_id", tau,
+          detector = Dedup.Detector.Tuned)
         .select("id_a", "id_b").as[(Long, Long)].collect().toSet
       assert(tuned == exact,
         s"tau=$tau missed=${exact -- tuned} spurious=${tuned -- exact}")
       // force the signature prefilter in-plan (gate at 0): results must
       // be identical — the scale path may not trade recall either
-      val prefiltered = Dedup.nearDupPairsMinHashTuned(docs, "text", "doc_id", tau,
-        prefilterMinCandidates = 0.0)
+      val prefiltered = forcedDetect(tau, Dedup.Detector.Tuned,
+          prefilterMinCandidates = 0.0)
         .select("id_a", "id_b").as[(Long, Long)].collect().toSet
       assert(prefiltered == exact,
         s"tau=$tau prefiltered missed=${exact -- prefiltered} spurious=${prefiltered -- exact}")
@@ -276,7 +291,8 @@ class DedupSpec extends AnyFunSuite {
     assert(residual == 0, s"$residual near-dup pairs survive resolution")
     // the tuned-detector removal form keeps the identical survivor set
     // (both detectors exact-verify the same threshold)
-    val keptTuned = Dedup.removeNearDuplicatesTuned(docs, "text", "doc_id", 0.5)
+    val keptTuned = Dedup.removeNearDuplicates(docs, "text", "doc_id", 0.5,
+        detector = Dedup.Detector.Tuned)
       .select("doc_id").as[Long].collect().toSet
     assert(keptTuned == kept.select("doc_id").as[Long].collect().toSet)
   }
@@ -636,8 +652,9 @@ class DedupSpec extends AnyFunSuite {
       (5L, "completely unrelated text about mountain hiking gear and maps " +
         "packed for the long trail season with heavy boots", 0))
       .toDF("doc_id", "text", "prio")
-    val kept = Dedup.removeNearDuplicatesPrioritized(
-      corpus, "text", "doc_id", "prio", threshold = 0.5)
+    val kept = Dedup.removeNearDuplicates(
+      corpus, "text", "doc_id", threshold = 0.5,
+      detector = Dedup.Detector.Fixed, priorityCol = Some("prio"))
       .select("doc_id").as[Long].collect().toSet
     assert(kept == Set(2L, 3L, 5L),
       s"curated 2 must beat crawl 1; tie 3/4 keeps min id 3: $kept")
@@ -646,8 +663,9 @@ class DedupSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.{col, lit, when}
     val withNull = corpus.select(col("doc_id"), col("text"),
       when(col("doc_id") === 1L, lit(null)).otherwise(col("prio")).as("prio"))
-    val keptNull = Dedup.removeNearDuplicatesPrioritized(
-      withNull, "text", "doc_id", "prio", threshold = 0.5)
+    val keptNull = Dedup.removeNearDuplicates(
+      withNull, "text", "doc_id", threshold = 0.5,
+      detector = Dedup.Detector.Fixed, priorityCol = Some("prio"))
       .select("doc_id").as[Long].collect().toSet
     assert(keptNull == Set(2L, 3L, 5L),
       s"null-prio 1 must lose to prio-9 2: $keptNull")
@@ -726,12 +744,14 @@ class DedupSpec extends AnyFunSuite {
   test("auto detector: pairs and survivors identical to the fixed path on a typical corpus") {
     val fixedPairs = Dedup.nearDupPairsMinHash(docs, "text", "doc_id", 0.5)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val autoPairs = Dedup.nearDupPairsMinHashAuto(docs, "text", "doc_id", 0.5)
+    val autoPairs = Dedup.nearDupPairsMinHash(docs, "text", "doc_id", 0.5,
+        detector = Dedup.Detector.Auto)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(autoPairs == fixedPairs,
       s"auto must pick the byte-identical fixed plan at toy scale: " +
         s"missed=${fixedPairs -- autoPairs} spurious=${autoPairs -- fixedPairs}")
-    val fixedKept = Dedup.removeNearDuplicatesFixed(docs, "text", "doc_id", 0.5)
+    val fixedKept = Dedup.removeNearDuplicates(docs, "text", "doc_id", 0.5,
+        detector = Dedup.Detector.Fixed)
       .select("doc_id").as[Long].collect().toSet
     val autoKept = Dedup.removeNearDuplicates(docs, "text", "doc_id", 0.5)
       .select("doc_id").as[Long].collect().toSet
@@ -741,7 +761,7 @@ class DedupSpec extends AnyFunSuite {
   test("auto detector: FORCED escalation (gate=0) runs the tuned+prefilter plan with identical verified pairs") {
     // escalate + engage the prefilter unconditionally: the plan-switch
     // path itself must be result-identical (everything is exact-verified)
-    val forced = Dedup.nearDupPairsMinHashAuto(docs, "text", "doc_id", 0.5,
+    val forced = forcedDetect(0.5, Dedup.Detector.Auto,
       escalateMinCandidates = 0.0, prefilterMinCandidates = 0.0)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     val exact = Dedup.exactJaccardPairs(docs, "text", "doc_id", 0.5)
@@ -785,16 +805,20 @@ class DedupSpec extends AnyFunSuite {
     val est = Dedup.spillEstimateBytes(d, meanShingles = 100.0)
     assert(math.abs(est - 192e9) / 192e9 < 1e-9, s"got $est")
     // fires when the estimate exceeds usable space, names the remedy
-    val warn = Dedup.spillWarning(d, 100.0, usableBytes = 80L * (1L << 30))
+    def detectWarning(dd: Dedup.DetectorDecision, meanShingles: Double,
+        usableBytes: Long) = Dedup.spillWarning(Dedup.detectFamily(dd),
+      Dedup.spillEstimateBytes(dd, meanShingles), usableBytes,
+      Dedup.DetectRemedies)
+    val warn = detectWarning(d, 100.0, usableBytes = 80L * (1L << 30))
     assert(warn.isDefined && warn.get.contains("ENOSPC") &&
       warn.get.contains("line-level dedup") && warn.get.contains("span-level"))
     // silent when disk fits, or when usable space is unknown (<= 0)
-    assert(Dedup.spillWarning(d, 100.0, usableBytes = 300L * (1L << 30)).isEmpty)
-    assert(Dedup.spillWarning(d, 100.0, usableBytes = 0L).isEmpty)
+    assert(detectWarning(d, 100.0, usableBytes = 300L * (1L << 30)).isEmpty)
+    assert(detectWarning(d, 100.0, usableBytes = 0L).isEmpty)
     // a toy corpus never warns on a real disk
     val toy = Dedup.DetectorDecision(4, 32, tuned = false, prefilterH = 0,
       estCandidates = 1e4, estVerifyInput = 1e4)
-    assert(Dedup.spillWarning(toy, 50.0, usableBytes = 1L << 30).isEmpty)
+    assert(detectWarning(toy, 50.0, usableBytes = 1L << 30).isEmpty)
   }
 
   test("band-chunk staging: chunk-count arithmetic and note triggers") {
@@ -812,13 +836,16 @@ class DedupSpec extends AnyFunSuite {
     assert(Dedup.spillChunkCount(885e9, 83L * 1000 * 1000 * 1000) == 22)
     val d = Dedup.DetectorDecision(8, 38, tuned = true, prefilterH = 64,
       estCandidates = 1e9, estVerifyInput = 1e8)
-    val note = Dedup.spillStagingNote(d, 200e9, 100L * (1L << 30), 4)
+    def detectNote(usableBytes: Long) = Dedup.stagingNote(
+      Dedup.detectFamily(d), 200e9, usableBytes, 4, "band-chunk",
+      Dedup.DetectRemedies)
+    val note = detectNote(100L * (1L << 30))
     assert(note.contains("4 sequential band-chunks") &&
       note.contains("IDENTICAL"), note)
     assert(!note.contains("clamp"))
-    // per-chunk footprint still over usable (maxSpillChunks clamp bit)
-    val clamped = Dedup.spillStagingNote(d, 200e9, 10L * (1L << 30), 4)
-    assert(clamped.contains("maxSpillChunks clamp"), clamped)
+    // per-chunk footprint still over usable (the chunk-count clamp bit)
+    val clamped = detectNote(10L * (1L << 30))
+    assert(clamped.contains("band-chunk count is clamped"), clamped)
     // measured heaviest-group pricing (round 15: the 5M attempt's 26%
     // single-unit group): since round 16 the over-usable branch
     // ANNOUNCES the sub-bucket escalation (the shape is now bounded)
@@ -968,20 +995,20 @@ class DedupSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1),
         math.round(r.getDouble(2) * 1e9))).toSet
     val single = pairs(
-      Dedup.nearDupPairsMinHashAuto(docs, "text", "doc_id", 0.5))
-    val chunked = pairs(
-      Dedup.nearDupPairsMinHashAuto(docs, "text", "doc_id", 0.5,
-        spillSafetyMargin = 1e-15, maxSpillChunks = 3))
+      Dedup.nearDupPairsMinHash(docs, "text", "doc_id", 0.5,
+        detector = Dedup.Detector.Auto))
+    val chunked = pairs(forcedDetect(0.5, Dedup.Detector.Auto,
+      spillSafetyMargin = 1e-15, maxSpillChunks = 3))
     assert(single.nonEmpty)
     assert(chunked == single,
       s"staged pairs diverge: only-single=${single -- chunked}, " +
         s"only-chunked=${chunked -- single}")
     // the tuned entry point shares the staging dispatch
     val tunedSingle = pairs(
-      Dedup.nearDupPairsMinHashTuned(docs, "text", "doc_id", 0.5))
-    val tunedChunked = pairs(
-      Dedup.nearDupPairsMinHashTuned(docs, "text", "doc_id", 0.5,
-        spillSafetyMargin = 1e-15, maxSpillChunks = 3))
+      Dedup.nearDupPairsMinHash(docs, "text", "doc_id", 0.5,
+        detector = Dedup.Detector.Tuned))
+    val tunedChunked = pairs(forcedDetect(0.5, Dedup.Detector.Tuned,
+      spillSafetyMargin = 1e-15, maxSpillChunks = 3))
     assert(tunedChunked == tunedSingle)
   }
 
@@ -1006,28 +1033,32 @@ class DedupSpec extends AnyFunSuite {
     assert(Dedup.bandSpillEstimateBytes(1e9, 16.0) == 1e9 * 48.0)
     // warn fires when the estimate exceeds usable space and carries the
     // family's own remedies verbatim; silent when disk fits or unknown
-    val warn = Dedup.bandSpillWarning("videoNearDupPairs", 1e10, 24.0,
+    val warn = Dedup.spillWarning("videoNearDupPairs",
+      Dedup.bandSpillEstimateBytes(1e10, 24.0),
       usableBytes = 80L * (1L << 30), remedies = "raise everyN")
     assert(warn.isDefined && warn.get.contains("ENOSPC") &&
       warn.get.contains("videoNearDupPairs") &&
       warn.get.contains("raise everyN"))
-    assert(Dedup.bandSpillWarning("x", 1e4, 16.0, 1L << 30, "r").isEmpty)
-    assert(Dedup.bandSpillWarning("x", 1e10, 16.0, 0L, "r").isEmpty)
+    assert(Dedup.spillWarning("x", Dedup.bandSpillEstimateBytes(1e4, 16.0),
+      1L << 30, "r").isEmpty)
+    assert(Dedup.spillWarning("x", Dedup.bandSpillEstimateBytes(1e10, 16.0),
+      0L, "r").isEmpty)
   }
 
   test("generalized staging: note triggers, group slicing, and the empty-group defense") {
-    // bandStagingNote: announces the group count, pins exactness, and
+    // stagingNote: announces the group count, pins exactness, and
     // carries the residual warning only when even the per-group
     // footprint exceeds usable space (the geometry-clamp bit)
-    val note = Dedup.bandStagingNote("imageNearDupPairs", 200e9,
-      100L * (1L << 30), 4)
+    val note = Dedup.stagingNote("imageNearDupPairs", 200e9,
+      100L * (1L << 30), 4, "band-group", "lower maxHamming")
     assert(note.contains("imageNearDupPairs") &&
       note.contains("4 sequential band-groups") &&
       note.contains("IDENTICAL"), note)
     assert(!note.contains("clamped"))
-    val clamped = Dedup.bandStagingNote("imageNearDupPairs", 200e9,
-      10L * (1L << 30), 4)
-    assert(clamped.contains("clamped by the family's band geometry"), clamped)
+    val clamped = Dedup.stagingNote("imageNearDupPairs", 200e9,
+      10L * (1L << 30), 4, "band-group", "lower maxHamming")
+    assert(clamped.contains("band-group count is clamped") &&
+      clamped.contains("lower maxHamming"), clamped)
     // stagingGroups: covers the axis exactly once, never more groups
     // than indices, contiguous slices (the detect loop's rule)
     assert(Dedup.stagingGroups(7, 3).map(_.toSet).reduce(_ ++ _) == (0 until 7).toSet)

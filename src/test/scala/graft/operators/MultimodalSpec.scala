@@ -362,17 +362,17 @@ class MultimodalSpec extends AnyFunSuite {
     val media = ImageFixture.frame(spark)
     val h = Dedup.materialize(
       Dedup.imageHashFrame(media, "media_id", "media_type", "content"))
-    val single64 = pairSet(Dedup.hammingPairs64(h, 6))
+    val single64 = pairSet(Dedup.hammingPairs(h, Seq("sh"), 6))
     assert(single64.nonEmpty)
-    assert(pairSet(Dedup.hammingPairs64Staged(h, 6, 3)) == single64)
+    assert(pairSet(Dedup.hammingPairs(h, Seq("sh"), 6, 3)) == single64)
     // a group count above the chunk-axis width degenerates to one group
     // per chunk (7 groups), still exact
-    assert(pairSet(Dedup.hammingPairs64Staged(h, 6, 50)) == single64)
+    assert(pairSet(Dedup.hammingPairs(h, Seq("sh"), 6, 50)) == single64)
     val h128 = Dedup.materialize(
       Dedup.imageHashFrame128(media, "media_id", "media_type", "content"))
-    val single128 = pairSet(Dedup.hammingPairs128(h128, 6))
+    val single128 = pairSet(Dedup.hammingPairs(h128, Seq("lo", "hi"), 6))
     assert(single128.nonEmpty)
-    assert(pairSet(Dedup.hammingPairs128Staged(h128, 6, 4)) == single128)
+    assert(pairSet(Dedup.hammingPairs(h128, Seq("lo", "hi"), 6, 4)) == single128)
 
     // video: the staged unit is the FRAME pair (id_a, id_b, fpos) —
     // both the aligned and SET band keys must survive staging unchanged
@@ -380,7 +380,7 @@ class MultimodalSpec extends AnyFunSuite {
     val hashes = Dedup.materialize(
       Dedup.videoFrameHashFrame(vm, "media_id", "media_type", "content", 2)
         .select($"id", $"fpos", $"sh"))
-    val chunked = Dedup.hammingChunks(hashes, 4)
+    val chunked = Dedup.hammingChunks(hashes, Seq("sh"), 4)
     def frameSet(df: org.apache.spark.sql.DataFrame) = df
       .select($"id_a", $"id_b", $"fpos".cast("long"), $"hamming".cast("long"))
       .as[(Long, Long, Long, Long)].collect().toSet

@@ -96,7 +96,8 @@ class CorpusPipelineSpec extends AnyFunSuite {
     // the tuned detector (sampled-background band tuning + self-gating
     // signature prefilter) exact-verifies the same threshold, so the
     // pipeline's survivor set cannot differ — this pins the Config wiring
-    // (Config → prepare → removeNearDuplicatesTuned) end to end
+    // (Config → prepare → removeNearDuplicates with Detector.Tuned) end
+    // to end
     val corpus = docs.select($"doc_id", $"text")
     val cfg = CorpusPipeline.Config(
       langs = Set("en"), minTokens = 10, dedupThreshold = 0.5,
