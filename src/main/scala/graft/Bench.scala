@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Benchmark main: per-query MEDIAN over `SPARK_GRAFT_BENCH_ITERS`
   * iterations (default 3) — a single-shot timing on a shared sandbox is
   * contention noise, not a measurement (round-1 lesson: the same 8 queries
@@ -9,17 +8,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     // Window comparability evidence (round-17; stderr only, outside the
     // timed regions and the stdout JSON contract): record the host load
     // at start and end so cross-window canary normalization stops being
@@ -30,11 +20,7 @@ object Bench {
           java.nio.file.Paths.get("/proc/loadavg"))).trim)
       catch { case _: Throwable => }
     logLoad("start")
-    // Untimed warmup: exercise codegen/JIT and the parquet reader once so
-    // the first timed query isn't charged for JVM warmup.
-    spark.range(0, 1000000L).selectExpr("sum(id)").collect()
-    try spark.read.parquet(s"$sfDir/nation.parquet").count()
-    catch { case _: Throwable => }
+    LocalSession.warmUp(spark, sfDir)
 
     // Optional args: bench only the named queries (dev tool; the driver
     // invokes with no args and gets the full set).

@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 /** Dev measurement tool (optimization rounds): run named queries exactly
   * the way graft.Bench does, but with a job listener that prints each
   * Spark job's wall time and call site, plus the gaps between jobs
@@ -15,20 +14,8 @@ object ProfileQuery {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ProfileQuery <queryName> [more...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warmup, as in Bench
-    spark.range(0, 1000000L).selectExpr("sum(id)").collect()
-    try spark.read.parquet(s"$sfDir/nation.parquet").count()
-    catch { case _: Throwable => }
+    val spark = LocalSession()
+    LocalSession.warmUp(spark, sfDir)
 
     case class JobRec(id: Int, t0: Long, var t1: Long = -1L,
         site: String = "", nTasks: Int = 0,

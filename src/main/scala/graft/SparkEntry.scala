@@ -23,28 +23,25 @@ import graft.sources.Sources
   */
 object SparkEntry {
 
-  /** Built incremental-dedup index per scale dir (see
-    * q_incremental_dedup_indexed) — an index is built once per corpus
-    * version, then probed per batch. The value carries (path, corpus doc
-    * count): a production index stores its row count alongside, so per-
-    * batch probes never re-count the corpus for the disk guard's rows
-    * floor. */
-  private val ndIndexDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
+  /** Persisted index artifacts, one per (kind, scale dir): an index is
+    * built once per corpus (or benchmark) version, then probed per batch,
+    * so repeated invocations (bench iterations) measure the production
+    * shape — the probe against the stored index — not a rebuild. Kinds:
+    * "nd" (q_incremental_dedup_indexed), "ann" (the IVF×PQ index),
+    * "media" / "video" (the perceptual hash indexes) and "fz" (the fuzzy
+    * decontamination benchmark index). */
+  private val indexMemo =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), Any]()
 
-  /** Same pattern for the persisted IVF×PQ ANN index
-    * (q_ann_ivfpq_indexed). */
-  private val annIndexDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Same pattern for the persisted perceptual media-hash index
-    * (q_media_dedup_incremental). */
-  private val mediaIdxDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** And for the per-frame VIDEO hash index (q_video_dedup_incremental). */
-  private val videoIdxDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** The memoized value of index `kind` for `dir`: on first use, creates
+    * a `graft_<kind>idx` temp directory (removed at JVM exit), runs
+    * `build` on its path and keeps the result. */
+  private[graft] def memoIndex[V](kind: String, dir: String)(build: String => V): V =
+    indexMemo.computeIfAbsent((kind, dir), { _ =>
+      val path = java.nio.file.Files.createTempDirectory(s"graft_${kind}idx").toFile
+      sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(path))
+      build(path.toString)
+    }).asInstanceOf[V]
 
   /** Build-and-memoize the IVF×PQ index artifact for a scale dir — ONE
     * builder shared by every registration that probes it
@@ -52,22 +49,15 @@ object SparkEntry {
     * artifact cannot depend on which query ran first and a build-param
     * change cannot silently fork the index the others probe. */
   private def ensureAnnIndex(s: SparkSession, dir: String): String =
-    annIndexDirs.computeIfAbsent(dir, { d =>
-      val path = java.nio.file.Files.createTempDirectory("graft_annidx").toString
+    memoIndex("ann", dir) { path =>
       graft.etl.Warehouse.stageParquet(
         graft.operators.Similarity.buildIvfPqIndex(
-          t(s, d, "embeddings"), "embedding", "vec_id",
+          t(s, dir, "embeddings"), "embedding", "vec_id",
           graft.operators.FrozenAnn.coarse, graft.operators.FrozenAnn.pqIndex,
           corpusSpill = 2),
         s"$path/ivfpq")
       path
-    })
-
-  /** Same pattern for the persisted benchmark decontamination index
-    * (q_contamination_fuzzy_indexed) — benchmark suites change rarely,
-    * so their band/shingle build is a once-per-benchmark-version cost. */
-  private val fuzzyIndexDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Sources.testTable(s, dir, name)
@@ -426,9 +416,7 @@ object SparkEntry {
       val ta = graft.functions.TextAnalysis
       val lang = graft.functions.GraftFunctions.langIdNative(col("text"))
       val f = ta.gopherFlagsMl(col("text"), lang)
-      val names = Seq("word_count_ok", "mean_word_len_ok", "symbol_ratio_ok",
-        "bullet_ratio_ok", "ellipsis_ratio_ok", "alpha_word_ratio_ok",
-        "stopword_ok")
+      val names = gopherFlagNames
       graft.operators.MlFixture.gateDocs.toDF("doc_id", "text")
         .select(col("doc_id") +: lang.as("lang") +:
           names.map(n => f.getField(n).as(n)) :+
@@ -862,15 +850,13 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
       val existing = docs.where(col("doc_id") < 300)
       val incoming = docs.where(col("doc_id") >= 300)
-      // The index is a per-corpus-version artifact: built ONCE, probed
-      // every batch. Memoizing the build per scale dir makes repeated
-      // invocations (bench iterations) measure the production shape —
-      // the probe against the stored index — not a rebuild.
-      val (idx, idxRows) = ndIndexDirs.computeIfAbsent(dir, { d =>
-        val path = java.nio.file.Files.createTempDirectory("graft_ndidx").toString
-        val ex = t(s, d, "documents").where(col("doc_id") < 300)
+      // The index is a per-corpus-version artifact (see memoIndex). Its
+      // value carries the corpus doc count: a production index stores
+      // its row count alongside, so per-batch probes never re-count the
+      // corpus for the disk guard's rows floor.
+      val (idx, idxRows) = memoIndex("nd", dir) { path =>
         graft.etl.Warehouse.stageParquet(
-          graft.operators.Dedup.shingleIndex(ex, "text", "doc_id"),
+          graft.operators.Dedup.shingleIndex(existing, "text", "doc_id"),
           s"$path/shingles")
         graft.etl.Warehouse.stageParquet(
           graft.operators.Dedup.minHashBandIndex(
@@ -882,7 +868,7 @@ object SparkEntry {
           s"$path/sigheads")
         // the count is a build-time artifact, like the index itself
         (path, s.read.parquet(s"$path/shingles").count())
-      })
+      }
       val shStored = readStored(s, s"$idx/shingles")
       val bandsStored = readStored(s, s"$idx/bands")
       val headsStored = readStored(s, s"$idx/sigheads")
@@ -1676,15 +1662,14 @@ object SparkEntry {
     //    odd ordinals are unrelated clips (survive) ────────────────────
     "q_media_dedup_incremental" -> ((s, dir) => {
       import s.implicits._
-      val idx = mediaIdxDirs.computeIfAbsent(dir, { _ =>
-        val path = java.nio.file.Files.createTempDirectory("graft_mediaidx").toString
+      val idx = memoIndex("media", dir) { path =>
         graft.etl.Warehouse.stageParquet(
           graft.operators.Dedup.audioHashFrame(
             graft.operators.AudioFixture.frame(s),
             "media_id", "media_type", "content"),
           s"$path/hashes")
         path
-      })
+      }
       val exHashes = readStored(s, s"$idx/hashes")
       val incoming = s.range(30).as[Long].mapPartitions(_.map { j =>
         val id = 1000L + j
@@ -1710,15 +1695,14 @@ object SparkEntry {
     //    fresh clips (survive). Oracle restates from the analytic grids ─
     "q_video_dedup_incremental" -> ((s, dir) => {
       import s.implicits._
-      val idx = videoIdxDirs.computeIfAbsent(dir, { _ =>
-        val path = java.nio.file.Files.createTempDirectory("graft_videoidx").toString
+      val idx = memoIndex("video", dir) { path =>
         graft.etl.Warehouse.stageParquet(
           graft.operators.Dedup.videoFrameHashFrame(
             graft.operators.VideoFixture.frame(s),
             "media_id", "media_type", "content"),
           s"$path/hashes")
         path
-      })
+      }
       val exHashes = readStored(s, s"$idx/hashes")
       val incoming = s.range(20).as[Long].mapPartitions(_.map { j =>
         val id = 1000L + j
@@ -1900,9 +1884,7 @@ object SparkEntry {
           lit(" it was the best of days and this is that for you with more time"))
           .otherwise(lit("")))
       val f = graft.functions.TextAnalysis.gopherFlags(aug)
-      val names = Seq("word_count_ok", "mean_word_len_ok", "symbol_ratio_ok",
-        "bullet_ratio_ok", "ellipsis_ratio_ok", "alpha_word_ratio_ok",
-        "stopword_ok")
+      val names = gopherFlagNames
       t(s, dir, "documents")
         .select(col("doc_id") +:
           names.map(n => f.getField(n).as(n)) :+
@@ -1988,11 +1970,7 @@ object SparkEntry {
     //    exact integer sum + one float division chain — bit-identical in
     //    DuckDB (QmOracle restates it from the same literals) ───────────
     "q_quality_model_score" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"),
-        when(col("doc_id") % 2 === 0,
-          concat(col("text"), lit(QmOracle.fillerSuffix)))
-          .otherwise(col("text")).as("text"))
-      graft.operators.QualityModel.score(docs, "text", "doc_id",
+      graft.operators.QualityModel.score(fillerCorpus(s, dir), "text", "doc_id",
         graft.operators.FrozenQualityModel.model)
         .withColumn("n_tokens", col("n_tokens").cast("long"))
         .orderBy(col("doc_id"))
@@ -2008,11 +1986,7 @@ object SparkEntry {
     //    The backoff decision restates in DuckDB as three LEFT JOINs +
     //    a COALESCE chain from the same literals (NgramLmOracle) ───────
     "q_ngram_lm_score" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"),
-        when(col("doc_id") % 2 === 0,
-          concat(col("text"), lit(QmOracle.fillerSuffix)))
-          .otherwise(col("text")).as("text"))
-      graft.operators.NgramLm.score(docs, "text", "doc_id",
+      graft.operators.NgramLm.score(fillerCorpus(s, dir), "text", "doc_id",
         graft.operators.FrozenNgramLm.model)
         .withColumn("n_tokens", col("n_tokens").cast("long"))
         .orderBy(col("doc_id"))
@@ -2038,11 +2012,7 @@ object SparkEntry {
     //    rediscovers the cuts from the same sample predicate + rank
     //    arithmetic and agrees on every per-doc bucket ────────────────
     "q_ppl_buckets" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"),
-        when(col("doc_id") % 2 === 0,
-          concat(col("text"), lit(QmOracle.fillerSuffix)))
-          .otherwise(col("text")).as("text"))
-      graft.operators.NgramLm.perplexityBuckets(docs, "text", "doc_id",
+      graft.operators.NgramLm.perplexityBuckets(fillerCorpus(s, dir), "text", "doc_id",
           graft.operators.FrozenNgramLm.model, nBuckets = 3,
           sampleFraction = 0.2)
         .withColumn("n_tokens", col("n_tokens").cast("long"))
@@ -2057,11 +2027,7 @@ object SparkEntry {
     //    mixToTokenShares as the strata column with n_tokens as mass;
     //    the oracle composes the two restatements verbatim ─────────────
     "q_bucket_mix" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"),
-        when(col("doc_id") % 2 === 0,
-          concat(col("text"), lit(QmOracle.fillerSuffix)))
-          .otherwise(col("text")).as("text"))
-      val buckets = graft.operators.NgramLm.perplexityBuckets(docs, "text",
+      val buckets = graft.operators.NgramLm.perplexityBuckets(fillerCorpus(s, dir), "text",
         "doc_id", graft.operators.FrozenNgramLm.model, nBuckets = 3,
         sampleFraction = 0.2)
       val mixed = graft.operators.Sampling.mixToTokenShares(
@@ -2082,11 +2048,7 @@ object SparkEntry {
     //    codegen'd projection folding scaled LONGS — exact integer sum,
     //    bit-identical in DuckDB (DsirOracle, same literals) ────────────
     "q_dsir_logweight" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"),
-        when(col("doc_id") % 2 === 0,
-          concat(col("text"), lit(QmOracle.fillerSuffix)))
-          .otherwise(col("text")).as("text"))
-      graft.operators.Dsir.logWeight(docs, "text", "doc_id",
+      graft.operators.Dsir.logWeight(fillerCorpus(s, dir), "text", "doc_id",
         graft.operators.FrozenDsir.model)
         .withColumn("n_features", col("n_features").cast("long"))
         .orderBy(col("doc_id"))
@@ -2098,11 +2060,7 @@ object SparkEntry {
     //    DECIMAL(25,9)-quantized for engine parity). Per-partition
     //    top-k heap + driver merge — no global sort ──────────────────────
     "q_dsir_resample" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"),
-        when(col("doc_id") % 2 === 0,
-          concat(col("text"), lit(QmOracle.fillerSuffix)))
-          .otherwise(col("text")).as("text"))
-      graft.operators.Dsir.resample(docs, "text", "doc_id",
+      graft.operators.Dsir.resample(fillerCorpus(s, dir), "text", "doc_id",
         graft.operators.FrozenDsir.model, k = 50)
     }),
 
@@ -2170,9 +2128,10 @@ object SparkEntry {
     //    result-identical to the recompute path ──────────────────────────
     "q_contamination_fuzzy_indexed" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val idx = fuzzyIndexDirs.computeIfAbsent(dir, { d =>
-        val path = java.nio.file.Files.createTempDirectory("graft_fzidx").toString
-        val bench = t(s, d, "documents").where(col("doc_id") % 50 === 0)
+      // benchmark suites change rarely, so their band/shingle build is a
+      // once-per-benchmark-version cost (see memoIndex)
+      val idx = memoIndex("fz", dir) { path =>
+        val bench = docs.where(col("doc_id") % 50 === 0)
         graft.etl.Warehouse.stageParquet(
           graft.operators.Dedup.shingleIndex(bench, "text", "doc_id"),
           s"$path/shingles")
@@ -2181,7 +2140,7 @@ object SparkEntry {
             s.read.parquet(s"$path/shingles"), threshold = 0.5),
           s"$path/bands")
         path
-      })
+      }
       val kept = graft.operators.Dedup.removeContaminatedFuzzyIndexed(
         docs, readStored(s, s"$idx/bands"), readStored(s, s"$idx/shingles"),
         "text", "doc_id", threshold = 0.5)
@@ -2366,6 +2325,60 @@ object SparkEntry {
       "ELSE scheme || '://' || host || (CASE WHEN p = '' THEN '/' ELSE p END) END AS curl FROM t3)"
   }
 
+  /** The config every q_corpus_pipeline* variant starts from: the
+    * en-only 10–100000-token gate at alpha ≥ 0.4, trigram near-dup at
+    * 0.5, 8-gram decontamination, 64/16 chunks, the 0.9/0.05/0.05 split
+    * and a materialized documents frame. Each variant `.copy`s only the
+    * rungs it turns on — the shared values are restated once, in the
+    * oracles' fragment builders. */
+  private val basePipelineConfig = graft.pipeline.CorpusPipeline.Config(
+    langs = Set("en"), minTokens = 10, maxTokens = 100000,
+    minAlphaRatio = 0.4, dedupThreshold = 0.5, shingleN = 3,
+    decontaminateN = 8, chunkTokens = 64, overlapTokens = 16,
+    splits = Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05),
+    materializeDocuments = true)
+
+  /** [[graft.pipeline.CorpusPipeline.prepare]] reduced to the one-row
+    * stats frame. */
+  private def pipelineStats(s: SparkSession, corpus: DataFrame,
+      bench: Option[DataFrame], cfg: graft.pipeline.CorpusPipeline.Config,
+      extraDocStats: Seq[Column] = Nil,
+      extraPackedStats: Seq[Column] = Nil): DataFrame =
+    pipelineStatsRow(s, graft.pipeline.CorpusPipeline.prepare(corpus, bench, cfg),
+      extraDocStats, extraPackedStats)
+
+  /** The raw doc_id % 50 = 0 (doc_id, text) slice: the benchmark side of
+    * the decontaminating pipeline variants. */
+  private def benchSlice(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "documents").where(col("doc_id") % 50 === 0)
+      .select(col("doc_id"), col("text"))
+
+  /** The filler-augmented documents fixture: even ids get
+    * QmOracle.fillerSuffix — the frozen quality model's positive class,
+    * the DSIR target class and the text FrozenNgramLm trained on. */
+  private def fillerCorpus(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "documents").select(col("doc_id"),
+      when(col("doc_id") % 2 === 0,
+        concat(col("text"), lit(QmOracle.fillerSuffix)))
+        .otherwise(col("text")).as("text"))
+
+  /** Count of even (filler-class) ids among the survivors. */
+  private def nTargetStat: Column =
+    sum(when(col("doc_id") % 2 === 0, 1L).otherwise(0L)).cast("long").as("n_target")
+
+  /** Documents carrying an opaque media payload on doc_id < `n` (NULLs
+    * elsewhere) — payloads draw INSIDE the typed map, nothing ships from
+    * the driver. */
+  private def mediaCorpus(s: SparkSession, dir: String, n: Int, mediaType: String,
+      payload: Long => Array[Byte]): DataFrame = {
+    import s.implicits._
+    t(s, dir, "documents").select(col("doc_id"), col("text"))
+      .as[(Long, String)].map { case (id, tx) =>
+        val has = id < n
+        (id, tx, if (has) mediaType else null, if (has) payload(id) else null)
+      }.toDF("doc_id", "text", "media_type", "content")
+  }
+
   /** The q_corpus_pipeline / q_corpus_pipeline_tuned body: planted-defect
     * fixture (boilerplate footer, Gopher stopword run, HTML shell, %50
     * benchmark leak) through the full CorpusPipeline, reduced to one row
@@ -2401,16 +2414,9 @@ object SparkEntry {
     val corpus = docs.select(col("doc_id"),
       concat(lit("<html><body><p class=\"d\">"), col("text"),
         lit("</p><!-- boilerplate --></body></html>")).as("text"))
-    val cfg = graft.pipeline.CorpusPipeline.Config(
-      stripHtml = true, gopherRules = true,
-      langs = Set("en"), minTokens = 10, maxTokens = 100000,
-      minAlphaRatio = 0.4, lineDedupMinDocs = Some(2),
-      dedupThreshold = 0.5, shingleN = 3, tunedNearDedup = tuned,
-      decontaminateN = 8, chunkTokens = 64, overlapTokens = 16,
-      splits = Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05),
-      materializeDocuments = true)
-    val p = graft.pipeline.CorpusPipeline.prepare(corpus, Some(bench), cfg)
-    pipelineStatsRow(s, p)
+    pipelineStats(s, corpus, Some(bench), basePipelineConfig.copy(
+      stripHtml = true, gopherRules = true, lineDedupMinDocs = Some(2),
+      tunedNearDedup = tuned))
   }
 
   /** q_corpus_pipeline_semantic: the pipeline with the SEMANTIC rung on.
@@ -2444,18 +2450,10 @@ object SparkEntry {
           lit(1.0)).otherwise(lit(-1.0))).as("embedding"))
       .select((col("doc_id") + lit(1000000L)).as("doc_id"), col("text"),
         col("embedding"))
-    val corpus = base.unionByName(twins)
-    val cfg = graft.pipeline.CorpusPipeline.Config(
-      langs = Set("en"), minTokens = 10, maxTokens = 100000,
-      minAlphaRatio = 0.4, dedupThreshold = 0.5, shingleN = 3,
+    pipelineStats(s, base.unionByName(twins), None, basePipelineConfig.copy(
       semanticDedup = Some(graft.pipeline.CorpusPipeline.SemanticDedupConfig(
         "embedding", graft.operators.FrozenAnn.coarse, threshold = 0.9,
-        projectTo = projectTo)),
-      chunkTokens = 64, overlapTokens = 16,
-      splits = Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05),
-      materializeDocuments = true)
-    val p = graft.pipeline.CorpusPipeline.prepare(corpus, None, cfg)
-    pipelineStatsRow(s, p)
+        projectTo = projectTo))))
   }
 
   /** q_corpus_pipeline_fuzzy: the pipeline with the FUZZY decontamination
@@ -2484,53 +2482,27 @@ object SparkEntry {
           array(concat(lit("qq"), col("doc_id").cast("string")))))), " ")
         .as("text"))
       .select((col("doc_id") + lit(2000000L)).as("doc_id"), col("text"))
-    val corpus = raw.unionByName(twins)
-    val bench = raw.where(col("doc_id") % 50 === 0)
-    val cfg = graft.pipeline.CorpusPipeline.Config(
-      langs = Set("en"), minTokens = 10, maxTokens = 100000,
-      minAlphaRatio = 0.4, dedupThreshold = 0.8, shingleN = 3,
-      decontaminateN = 8, fuzzyDecontaminate = Some(0.4),
-      chunkTokens = 64, overlapTokens = 16,
-      splits = Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05),
-      materializeDocuments = true)
-    val p = graft.pipeline.CorpusPipeline.prepare(corpus, Some(bench), cfg)
-    pipelineStatsRow(s, p)
+    pipelineStats(s, raw.unionByName(twins), Some(benchSlice(s, dir)),
+      basePipelineConfig.copy(dedupThreshold = 0.8, fuzzyDecontaminate = Some(0.4)))
   }
 
   /** q_corpus_pipeline_dsir: the pipeline with the DSIR SELECTION rung
-    * on. Corpus = documents with the q_dsir_* filler augmentation (even
-    * ids get QmOracle.fillerSuffix — the frozen model's target class),
-    * benchmark = the %50 slice of the same augmented frame. After the
+    * on. Corpus = [[fillerCorpus]] (the q_dsir_* fixture). After the
     * plain cleaning chain, the selection rung importance-resamples
     * k=150 documents with the FROZEN FrozenDsir weights: the n_target
     * column pins that the selected set is dominated by the target class
     * (the +12 vs −30 mean log-weight separation dwarfs the Gumbel
-    * noise), and the id checksum pins the exact selected set. Plain
-    * upstream config (html/gopher/line pinned by the other pipeline
-    * queries). */
-  private def corpusPipelineDsirQuery(s: SparkSession, dir: String): DataFrame = {
-    val corpus = t(s, dir, "documents").select(col("doc_id"),
-      when(col("doc_id") % 2 === 0,
-        concat(col("text"), lit(QmOracle.fillerSuffix)))
-        .otherwise(col("text")).as("text"))
-    // benchmark = the RAW %50 slice (no filler): an augmented benchmark
-    // would share the filler's 8-grams with EVERY target-class doc and
-    // decontaminate the whole target class away before selection
-    val bench = t(s, dir, "documents").where(col("doc_id") % 50 === 0)
-      .select(col("doc_id"), col("text"))
-    val cfg = graft.pipeline.CorpusPipeline.Config(
-      langs = Set("en"), minTokens = 10, maxTokens = 100000,
-      minAlphaRatio = 0.4, dedupThreshold = 0.5, shingleN = 3,
-      decontaminateN = 8,
-      dsirSelect = Some(graft.pipeline.CorpusPipeline.DsirSelectConfig(
-        graft.operators.FrozenDsir.model, k = 150)),
-      chunkTokens = 64, overlapTokens = 16,
-      splits = Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05),
-      materializeDocuments = true)
-    val p = graft.pipeline.CorpusPipeline.prepare(corpus, Some(bench), cfg)
-    pipelineStatsRow(s, p, extraDocStats = Seq(
-      sum(when(col("doc_id") % 2 === 0, 1L).otherwise(0L)).cast("long").as("n_target")))
-  }
+    * noise), and the id checksum pins the exact selected set. The
+    * benchmark is the RAW %50 slice (no filler): an augmented benchmark
+    * would share the filler's 8-grams with EVERY target-class doc and
+    * decontaminate the whole target class away before selection — the
+    * same holds for the model and ppl variants. */
+  private def corpusPipelineDsirQuery(s: SparkSession, dir: String): DataFrame =
+    pipelineStats(s, fillerCorpus(s, dir), Some(benchSlice(s, dir)),
+      basePipelineConfig.copy(
+        dsirSelect = Some(graft.pipeline.CorpusPipeline.DsirSelectConfig(
+          graft.operators.FrozenDsir.model, k = 150))),
+      extraDocStats = Seq(nTargetStat))
 
   /** q_corpus_pipeline_url: the pipeline with the URL-dedup rung FIRST.
     * Corpus = documents with the [[urlVariantCol]] URL fixture (pairs
@@ -2542,20 +2514,11 @@ object SparkEntry {
     * the oracle). Plain upstream config otherwise — the other optional
     * rungs are pinned by their own pipeline queries. */
   private def corpusPipelineUrlQuery(s: SparkSession, dir: String): DataFrame = {
-    val raw = t(s, dir, "documents").select(col("doc_id"), col("text"))
-    val corpus = raw.withColumn("url",
-      when(col("doc_id") % 7 === 3, lit(null).cast("string"))
+    val corpus = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      .withColumn("url", when(col("doc_id") % 7 === 3, lit(null).cast("string"))
         .otherwise(urlVariantCol))
-    val bench = raw.where(col("doc_id") % 50 === 0)
-    val cfg = graft.pipeline.CorpusPipeline.Config(
-      urlCol = Some("url"),
-      langs = Set("en"), minTokens = 10, maxTokens = 100000,
-      minAlphaRatio = 0.4, dedupThreshold = 0.5, shingleN = 3,
-      decontaminateN = 8, chunkTokens = 64, overlapTokens = 16,
-      splits = Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05),
-      materializeDocuments = true)
-    val p = graft.pipeline.CorpusPipeline.prepare(corpus, Some(bench), cfg)
-    pipelineStatsRow(s, p)
+    pipelineStats(s, corpus, Some(benchSlice(s, dir)),
+      basePipelineConfig.copy(urlCol = Some("url")))
   }
 
   /** q_corpus_pipeline_c4: the pipeline with the C4 rules folded into
@@ -2568,55 +2531,26 @@ object SparkEntry {
     * intro line carries the doc's own text verbatim, so surviving %50
     * docs still drop at decon). Plain config otherwise. */
   private def corpusPipelineC4Query(s: SparkSession, dir: String,
-      lineDedup: Boolean = false): DataFrame = {
-    val corpus = t(s, dir, "documents").select(col("doc_id"), c4AugCol.as("text"))
-    val bench = t(s, dir, "documents").where(col("doc_id") % 50 === 0)
-      .select(col("doc_id"), col("text"))
-    val cfg = graft.pipeline.CorpusPipeline.Config(
-      c4Rules = true,
-      langs = Set("en"), minTokens = 10, maxTokens = 100000,
-      minAlphaRatio = 0.4, dedupThreshold = 0.5, shingleN = 3,
-      lineDedupMinDocs = if (lineDedup) Some(2) else None,
-      decontaminateN = 8, chunkTokens = 64, overlapTokens = 16,
-      splits = Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05),
-      materializeDocuments = true)
-    val p = graft.pipeline.CorpusPipeline.prepare(corpus, Some(bench), cfg)
-    pipelineStatsRow(s, p)
-  }
+      lineDedup: Boolean = false): DataFrame =
+    pipelineStats(s, t(s, dir, "documents").select(col("doc_id"), c4AugCol.as("text")),
+      Some(benchSlice(s, dir)), basePipelineConfig.copy(c4Rules = true,
+        lineDedupMinDocs = if (lineDedup) Some(2) else None))
 
   /** q_corpus_pipeline_model: the pipeline with the MODEL quality gate
-    * on. Corpus = documents with the q_quality_model_score filler
-    * fixture (even ids get QmOracle.fillerSuffix — the frozen model's
-    * positive class; odd ids score negative), benchmark = the raw %50
-    * slice. The FrozenQualityModel logit folds into the quality-gate
-    * scan at minLogit=0, so the "quality" stage count collapses to
-    * (roughly) the even-id class — n_target pins it, and the logit's
-    * scaled-long fold is bit-identical cross-engine by construction
-    * (the QmOracle discipline). Plain config otherwise. */
-  private def corpusPipelineModelQuery(s: SparkSession, dir: String): DataFrame = {
-    val corpus = t(s, dir, "documents").select(col("doc_id"),
-      when(col("doc_id") % 2 === 0,
-        concat(col("text"), lit(QmOracle.fillerSuffix)))
-        .otherwise(col("text")).as("text"))
-    // benchmark = the RAW %50 slice (no filler) — an augmented benchmark
-    // would share the filler's 8-grams with every target-class doc and
-    // decontaminate the whole surviving class away (the dsir fixture's
-    // rationale)
-    val bench = t(s, dir, "documents").where(col("doc_id") % 50 === 0)
-      .select(col("doc_id"), col("text"))
-    val cfg = graft.pipeline.CorpusPipeline.Config(
-      langs = Set("en"), minTokens = 10, maxTokens = 100000,
-      minAlphaRatio = 0.4,
-      modelGate = Some(graft.pipeline.CorpusPipeline.ModelGateConfig(
-        graft.operators.FrozenQualityModel.model, minLogit = 0.0)),
-      dedupThreshold = 0.5, shingleN = 3,
-      decontaminateN = 8, chunkTokens = 64, overlapTokens = 16,
-      splits = Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05),
-      materializeDocuments = true)
-    val p = graft.pipeline.CorpusPipeline.prepare(corpus, Some(bench), cfg)
-    pipelineStatsRow(s, p, extraDocStats = Seq(
-      sum(when(col("doc_id") % 2 === 0, 1L).otherwise(0L)).cast("long").as("n_target")))
-  }
+    * on. Corpus = [[fillerCorpus]] (the q_quality_model_score fixture:
+    * even ids are the frozen model's positive class; odd ids score
+    * negative), benchmark = the raw %50 slice (see the dsir variant).
+    * The FrozenQualityModel logit folds into the quality-gate scan at
+    * minLogit=0, so the "quality" stage count collapses to (roughly) the
+    * even-id class — n_target pins it, and the logit's scaled-long fold
+    * is bit-identical cross-engine by construction (the QmOracle
+    * discipline). Plain config otherwise. */
+  private def corpusPipelineModelQuery(s: SparkSession, dir: String): DataFrame =
+    pipelineStats(s, fillerCorpus(s, dir), Some(benchSlice(s, dir)),
+      basePipelineConfig.copy(
+        modelGate = Some(graft.pipeline.CorpusPipeline.ModelGateConfig(
+          graft.operators.FrozenQualityModel.model, minLogit = 0.0))),
+      extraDocStats = Seq(nTargetStat))
 
   /** The q_corpus_pipeline_ppl / q_ngram_lm_score gate threshold: sits
     * between the frozen LM's reference-shaped (≈ −1.8 nat/token) and
@@ -2625,36 +2559,24 @@ object SparkEntry {
   private val PplMinMeanLog: Double = -3.0
 
   /** q_corpus_pipeline_ppl: the pipeline with the PERPLEXITY gate on.
-    * Corpus = the filler-augmented fixture (even ids carry
-    * QmOracle.fillerSuffix — the text FrozenNgramLm trained on; odd ids
-    * stay raw and score ≈ −4.3 nat/token), benchmark = the raw %50
-    * slice. The trigram Stupid-Backoff mean log-score gates the quality
-    * scan at minMeanLog = −3.0 as the exact integer comparison
+    * Corpus = [[fillerCorpus]] (even ids carry the text FrozenNgramLm
+    * trained on; odd ids stay raw and score ≈ −4.3 nat/token),
+    * benchmark = the raw %50 slice (see the dsir variant). The trigram
+    * Stupid-Backoff mean log-score gates the quality scan at
+    * minMeanLog = −3.0 as the exact integer comparison
     * score_scaled ≥ ⌊−3.0·1e9⌋·n_tokens, so the "quality" stage count
     * collapses to (roughly) the even-id class — n_target pins it.
     * Plain config otherwise. */
-  private def corpusPipelinePplQuery(s: SparkSession, dir: String): DataFrame = {
-    val corpus = t(s, dir, "documents").select(col("doc_id"),
-      when(col("doc_id") % 2 === 0,
-        concat(col("text"), lit(QmOracle.fillerSuffix)))
-        .otherwise(col("text")).as("text"))
-    // raw %50 benchmark — the model-variant rationale: an augmented
-    // benchmark would decontaminate the whole surviving class away
-    val bench = t(s, dir, "documents").where(col("doc_id") % 50 === 0)
-      .select(col("doc_id"), col("text"))
-    val cfg = graft.pipeline.CorpusPipeline.Config(
-      langs = Set("en"), minTokens = 10, maxTokens = 100000,
-      minAlphaRatio = 0.4,
-      perplexityGate = Some(graft.pipeline.CorpusPipeline.PerplexityGateConfig(
-        graft.operators.FrozenNgramLm.model, minMeanLog = PplMinMeanLog)),
-      dedupThreshold = 0.5, shingleN = 3,
-      decontaminateN = 8, chunkTokens = 64, overlapTokens = 16,
-      splits = Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05),
-      materializeDocuments = true)
-    val p = graft.pipeline.CorpusPipeline.prepare(corpus, Some(bench), cfg)
-    pipelineStatsRow(s, p, extraDocStats = Seq(
-      sum(when(col("doc_id") % 2 === 0, 1L).otherwise(0L)).cast("long").as("n_target")))
-  }
+  private def corpusPipelinePplQuery(s: SparkSession, dir: String): DataFrame =
+    pipelineStats(s, fillerCorpus(s, dir), Some(benchSlice(s, dir)),
+      basePipelineConfig.copy(
+        perplexityGate = Some(graft.pipeline.CorpusPipeline.PerplexityGateConfig(
+          graft.operators.FrozenNgramLm.model, minMeanLog = PplMinMeanLog))),
+      extraDocStats = Seq(nTargetStat))
+
+  /** The token-share mix both the mix and the full variants resample to. */
+  private val pipelineMix = Some(graft.pipeline.CorpusPipeline.MixConfig(
+    "source", Map("src0" -> 0.5, "src1" -> 0.3, "src2" -> 0.2)))
 
   /** q_corpus_pipeline_mix: the pipeline with the TRAINING-MIX TAIL on —
     * domainCap(source, k=15) right after the quality gate (best-first by
@@ -2666,62 +2588,30 @@ object SparkEntry {
     * `source` column is the native per-document domain); benchmark = the
     * %50 slice, so the decon rung stays live. Per-source kept counts pin
     * the mix; the packed totals pin the example assignment. */
-  private def corpusPipelineMixQuery(s: SparkSession, dir: String): DataFrame = {
-    val corpus = t(s, dir, "documents").select(col("doc_id"), col("text"),
-      col("source"))
-    val bench = t(s, dir, "documents").where(col("doc_id") % 50 === 0)
-      .select(col("doc_id"), col("text"))
-    val cfg = graft.pipeline.CorpusPipeline.Config(
-      langs = Set("en"), minTokens = 10, maxTokens = 100000,
-      minAlphaRatio = 0.4,
-      domainCap = Some(graft.pipeline.CorpusPipeline.DomainCapConfig(
-        "source", k = 15)),
-      dedupThreshold = 0.5, shingleN = 3, decontaminateN = 8,
-      mixToShares = Some(graft.pipeline.CorpusPipeline.MixConfig(
-        "source", Map("src0" -> 0.5, "src1" -> 0.3, "src2" -> 0.2))),
-      chunkTokens = 64, overlapTokens = 16,
-      packTokenBudget = Some(256L),
-      splits = Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05),
-      materializeDocuments = true)
-    val p = graft.pipeline.CorpusPipeline.prepare(corpus, Some(bench), cfg)
-    pipelineStatsRow(s, p, extraDocStats = Seq("src0", "src1", "src2").map(src =>
-      sum(when(col("source") === src, 1L).otherwise(0L)).cast("long").as(s"n_$src")))
-  }
+  private def corpusPipelineMixQuery(s: SparkSession, dir: String): DataFrame =
+    pipelineStats(s,
+      t(s, dir, "documents").select(col("doc_id"), col("text"), col("source")),
+      Some(benchSlice(s, dir)), basePipelineConfig.copy(
+        domainCap = Some(graft.pipeline.CorpusPipeline.DomainCapConfig(
+          "source", k = 15)),
+        mixToShares = pipelineMix, packTokenBudget = Some(256L)),
+      extraDocStats = Seq("src0", "src1", "src2").map(src =>
+        sum(when(col("source") === src, 1L).otherwise(0L)).cast("long").as(s"n_$src")))
 
-  /** q_corpus_pipeline_bpe: the plain pipeline with chunking AND packing
-    * on TRAINED-BPE pieces (`bpeChunking` + `packTokenBudget`): the
-    * chunk windows slice the FrozenBpe piece stream of the redacted
-    * text, and the greedy packing budget counts those pieces. Corpus =
-    * raw documents; benchmark = the %50 slice. chunk_token_sum /
-    * packed_token_sum pin the piece accounting end to end. */
+  private val pipelineImageDedup = Some(graft.pipeline.CorpusPipeline.ImageDedupConfig(
+    "media_type", "content", maxHamming = 6))
+
   /** q_corpus_pipeline_image: the plain chain over documents carrying an
-    * opaque image payload (the ImageFixture PNGs on doc_id < 60, NULLs
-    * elsewhere — payloads draw INSIDE the typed map, nothing ships from
-    * the driver), with the perceptual image-dedup rung on. Stage counts
+    * opaque image payload ([[mediaCorpus]]: the ImageFixture PNGs on
+    * doc_id < 60), with the perceptual image-dedup rung on. Stage counts
     * + id_checksum pin which members each image cluster lost. */
-  private def corpusPipelineImageQuery(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val base = t(s, dir, "documents").select(col("doc_id"), col("text"))
-    val corpus = base.as[(Long, String)].map { case (id, tx) =>
-      val img = id < graft.operators.ImageFixture.NumImages
-      (id, tx,
-        if (img) "image/png" else null,
-        if (img) graft.operators.ImageFixture.pngBytes(id) else null)
-    }.toDF("doc_id", "text", "media_type", "content")
-    val bench = t(s, dir, "documents").where(col("doc_id") % 50 === 0)
-      .select(col("doc_id"), col("text"))
-    val cfg = graft.pipeline.CorpusPipeline.Config(
-      langs = Set("en"), minTokens = 10, maxTokens = 100000,
-      minAlphaRatio = 0.4, dedupThreshold = 0.5, shingleN = 3,
-      decontaminateN = 8,
-      imageDedup = Some(graft.pipeline.CorpusPipeline.ImageDedupConfig(
-        "media_type", "content", maxHamming = 6)),
-      chunkTokens = 64, overlapTokens = 16,
-      splits = Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05),
-      materializeDocuments = true)
-    val p = graft.pipeline.CorpusPipeline.prepare(corpus, Some(bench), cfg)
-    pipelineStatsRow(s, p)
-  }
+  private def corpusPipelineImageQuery(s: SparkSession, dir: String): DataFrame =
+    pipelineStats(s, imageCorpus(s, dir), Some(benchSlice(s, dir)),
+      basePipelineConfig.copy(imageDedup = pipelineImageDedup))
+
+  private def imageCorpus(s: SparkSession, dir: String): DataFrame =
+    mediaCorpus(s, dir, graft.operators.ImageFixture.NumImages, "image/png",
+      graft.operators.ImageFixture.pngBytes)
 
   /** q_corpus_pipeline_media_decon: the q_corpus_pipeline_image shape
     * PLUS the media-decontamination rung — the corpus's image payloads
@@ -2732,90 +2622,59 @@ object SparkEntry {
     * rung's PLACEMENT in the composed chain: after image dedup (a
     * near-dup of a leaked image must collapse first so the survivor is
     * what probes), after text decon, before selection/redaction. */
-  private def corpusPipelineMediaDeconQuery(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val base = t(s, dir, "documents").select(col("doc_id"), col("text"))
-    val corpus = base.as[(Long, String)].map { case (id, tx) =>
-      val img = id < graft.operators.ImageFixture.NumImages
-      (id, tx,
-        if (img) "image/png" else null,
-        if (img) graft.operators.ImageFixture.pngBytes(id) else null)
-    }.toDF("doc_id", "text", "media_type", "content")
-    val bench = t(s, dir, "documents").where(col("doc_id") % 50 === 0)
-      .select(col("doc_id"), col("text"))
-    val benchHashes = graft.operators.Dedup.imageHashFrame(
-      graft.operators.ImageFixture.frame(s).where(col("media_id") % 5 === 0),
-      "media_id", "media_type", "content")
-    val cfg = graft.pipeline.CorpusPipeline.Config(
-      langs = Set("en"), minTokens = 10, maxTokens = 100000,
-      minAlphaRatio = 0.4, dedupThreshold = 0.5, shingleN = 3,
-      decontaminateN = 8,
-      imageDedup = Some(graft.pipeline.CorpusPipeline.ImageDedupConfig(
-        "media_type", "content", maxHamming = 6)),
-      mediaDecontaminate = Some(
-        graft.pipeline.CorpusPipeline.MediaDecontaminateConfig(
-          "media_type", "content", kind = "image",
-          benchmarkHashes = benchHashes, maxHamming = 6)),
-      chunkTokens = 64, overlapTokens = 16,
-      splits = Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05),
-      materializeDocuments = true)
-    val p = graft.pipeline.CorpusPipeline.prepare(corpus, Some(bench), cfg)
-    pipelineStatsRow(s, p)
-  }
+  private def corpusPipelineMediaDeconQuery(s: SparkSession, dir: String): DataFrame =
+    pipelineStats(s, imageCorpus(s, dir), Some(benchSlice(s, dir)),
+      basePipelineConfig.copy(imageDedup = pipelineImageDedup,
+        mediaDecontaminate = mediaDecon(s, col("media_id") % 5 === 0)))
+
+  /** Image media-decontamination against the ImageFixture images
+    * meeting `bench`, hashed as a persisted benchmark artifact would be. */
+  private def mediaDecon(s: SparkSession,
+      bench: Column): Option[graft.pipeline.CorpusPipeline.MediaDecontaminateConfig] =
+    Some(graft.pipeline.CorpusPipeline.MediaDecontaminateConfig(
+      "media_type", "content", kind = "image",
+      benchmarkHashes = graft.operators.Dedup.imageHashFrame(
+        graft.operators.ImageFixture.frame(s).where(bench),
+        "media_id", "media_type", "content"),
+      maxHamming = 6))
 
   /** q_corpus_pipeline_audio: the pipeline with the perceptual AUDIO
     * rung composed in — the image-variant fixture with WAV payloads
     * attached to doc_id < 60 (the AudioFixture triples: the 20 planted
     * twin pairs collapse to min-id at the audio stage; docs without a
     * payload pass). Plain config otherwise. */
-  private def corpusPipelineAudioQuery(s: SparkSession, dir: String): DataFrame = {
+  private def corpusPipelineAudioQuery(s: SparkSession, dir: String): DataFrame =
+    pipelineStats(s,
+      mediaCorpus(s, dir, graft.operators.AudioFixture.NumClips, "audio/wav",
+        graft.operators.AudioFixture.wavBytes),
+      Some(benchSlice(s, dir)), basePipelineConfig.copy(
+        audioDedup = Some(graft.pipeline.CorpusPipeline.AudioDedupConfig(
+          "media_type", "content", maxHamming = 4))))
+
+  /** q_corpus_pipeline_video: the same shape with AVI payloads on
+    * doc_id < 45 and the VIDEO rung (every 2nd frame, 4 bits, ≥ 0.6 of
+    * the aligned frames matched). */
+  private def corpusPipelineVideoQuery(s: SparkSession, dir: String): DataFrame =
+    pipelineStats(s,
+      mediaCorpus(s, dir, graft.operators.VideoFixture.NumClips, "video/avi",
+        id => graft.operators.VideoFixture.aviBytes(id)),
+      Some(benchSlice(s, dir)), basePipelineConfig.copy(
+        videoDedup = Some(graft.pipeline.CorpusPipeline.VideoDedupConfig(
+          "media_type", "content", everyN = 2, maxHamming = 4,
+          minMatchFrac = 0.6))))
+
+  /** The ml-variant benchmark: the clean unrelated zh and en docs. */
+  private def mlBench(s: SparkSession): DataFrame = {
     import s.implicits._
-    val base = t(s, dir, "documents").select(col("doc_id"), col("text"))
-    val corpus = base.as[(Long, String)].map { case (id, tx) =>
-      val aud = id < graft.operators.AudioFixture.NumClips
-      (id, tx,
-        if (aud) "audio/wav" else null,
-        if (aud) graft.operators.AudioFixture.wavBytes(id) else null)
-    }.toDF("doc_id", "text", "media_type", "content")
-    val bench = t(s, dir, "documents").where(col("doc_id") % 50 === 0)
-      .select(col("doc_id"), col("text"))
-    val cfg = graft.pipeline.CorpusPipeline.Config(
-      langs = Set("en"), minTokens = 10, maxTokens = 100000,
-      minAlphaRatio = 0.4, dedupThreshold = 0.5, shingleN = 3,
-      decontaminateN = 8,
-      audioDedup = Some(graft.pipeline.CorpusPipeline.AudioDedupConfig(
-        "media_type", "content", maxHamming = 4)),
-      chunkTokens = 64, overlapTokens = 16,
-      splits = Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05),
-      materializeDocuments = true)
-    val p = graft.pipeline.CorpusPipeline.prepare(corpus, Some(bench), cfg)
-    pipelineStatsRow(s, p)
+    graft.operators.MlFixture.docs
+      .collect { case (id, _, tx) if id == 2L || id == 42L => (id, tx) }
+      .toDF("doc_id", "text")
   }
 
-  private def corpusPipelineVideoQuery(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val base = t(s, dir, "documents").select(col("doc_id"), col("text"))
-    val corpus = base.as[(Long, String)].map { case (id, tx) =>
-      val vid = id < graft.operators.VideoFixture.NumClips
-      (id, tx,
-        if (vid) "video/avi" else null,
-        if (vid) graft.operators.VideoFixture.aviBytes(id) else null)
-    }.toDF("doc_id", "text", "media_type", "content")
-    val bench = t(s, dir, "documents").where(col("doc_id") % 50 === 0)
-      .select(col("doc_id"), col("text"))
-    val cfg = graft.pipeline.CorpusPipeline.Config(
-      langs = Set("en"), minTokens = 10, maxTokens = 100000,
-      minAlphaRatio = 0.4, dedupThreshold = 0.5, shingleN = 3,
-      decontaminateN = 8,
-      videoDedup = Some(graft.pipeline.CorpusPipeline.VideoDedupConfig(
-        "media_type", "content", everyN = 2, maxHamming = 4,
-        minMatchFrac = 0.6)),
-      chunkTokens = 64, overlapTokens = 16,
-      splits = Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05),
-      materializeDocuments = true)
-    val p = graft.pipeline.CorpusPipeline.prepare(corpus, Some(bench), cfg)
-    pipelineStatsRow(s, p)
-  }
+  /** The script-aware gate config of the ml and full variants. */
+  private val mlPipelineConfig = basePipelineConfig.copy(
+    tokenizer = graft.functions.Tok.Ml, gopherRules = true,
+    langs = Set("ar", "en", "ja", "ru", "zh"))
 
   /** q_corpus_pipeline_ml: the FULL chain under the script-aware
     * tokenizer over the composed multilingual fixture
@@ -2830,20 +2689,8 @@ object SparkEntry {
     * hardcoded. */
   private def corpusPipelineMlQuery(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val corpus = graft.operators.MlFixture.pipelineDocs.toDF("doc_id", "text")
-    val bench = graft.operators.MlFixture.docs
-      .collect { case (id, _, tx) if id == 2L || id == 42L => (id, tx) }
-      .toDF("doc_id", "text")
-    val cfg = graft.pipeline.CorpusPipeline.Config(
-      tokenizer = graft.functions.Tok.Ml, gopherRules = true,
-      langs = Set("ar", "en", "ja", "ru", "zh"),
-      minTokens = 10, maxTokens = 100000, minAlphaRatio = 0.4,
-      dedupThreshold = 0.5, shingleN = 3, decontaminateN = 8,
-      chunkTokens = 64, overlapTokens = 16,
-      splits = Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05),
-      materializeDocuments = true)
-    val p = graft.pipeline.CorpusPipeline.prepare(corpus, Some(bench), cfg)
-    pipelineStatsRow(s, p)
+    pipelineStats(s, graft.operators.MlFixture.pipelineDocs.toDF("doc_id", "text"),
+      Some(mlBench(s)), mlPipelineConfig)
   }
 
   /** q_corpus_pipeline_full: EVERY rung family in one config — the
@@ -2864,8 +2711,9 @@ object SparkEntry {
     * stage restated in DuckDB by [[corpusPipelineFullOracle]]. */
   private def corpusPipelineFullQuery(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val attach = graft.operators.MlFixture.fullMediaAttach.toMap
-    val corpus = graft.operators.MlFixture.fullDocs.toDF("doc_id", "text")
+    val fx = graft.operators.MlFixture
+    val attach = fx.fullMediaAttach.toMap
+    val corpus = fx.fullDocs.toDF("doc_id", "text")
       .as[(Long, String)].map { case (id, tx) =>
         val img = attach.get(id)
         (id, tx, s"src${id % 3}",
@@ -2873,88 +2721,50 @@ object SparkEntry {
           img.map(graft.operators.ImageFixture.pngBytes).orNull,
           graft.operators.MlFixture.fullEmbedding(id))
       }.toDF("doc_id", "text", "source", "media_type", "content", "embedding")
-    val fx = graft.operators.MlFixture
-    val bench = fx.docs
-      .collect { case (id, _, tx) if id == 2L || id == 42L => (id, tx) }
-      .toDF("doc_id", "text")
-    val benchHashes = graft.operators.Dedup.imageHashFrame(
-      graft.operators.ImageFixture.frame(s)
-        .where(col("media_id").isin(fx.fullBenchImageIds: _*)),
-      "media_id", "media_type", "content")
-    val cfg = graft.pipeline.CorpusPipeline.Config(
-      tokenizer = graft.functions.Tok.Ml, gopherRules = true,
-      langs = Set("ar", "en", "ja", "ru", "zh"),
-      minTokens = 10, maxTokens = 100000, minAlphaRatio = 0.4,
-      dedupThreshold = 0.5, shingleN = 3,
+    pipelineStats(s, corpus, Some(mlBench(s)), mlPipelineConfig.copy(
       semanticDedup = Some(graft.pipeline.CorpusPipeline.SemanticDedupConfig(
         "embedding", graft.operators.FrozenAnn.coarse, threshold = 0.9,
         projectTo = Some(16))),
-      imageDedup = Some(graft.pipeline.CorpusPipeline.ImageDedupConfig(
-        "media_type", "content", maxHamming = 6)),
-      decontaminateN = 8,
-      mediaDecontaminate = Some(
-        graft.pipeline.CorpusPipeline.MediaDecontaminateConfig(
-          "media_type", "content", kind = "image",
-          benchmarkHashes = benchHashes, maxHamming = 6)),
-      mixToShares = Some(graft.pipeline.CorpusPipeline.MixConfig(
-        "source", Map("src0" -> 0.5, "src1" -> 0.3, "src2" -> 0.2))),
-      chunkTokens = 64, overlapTokens = 16,
-      packTokenBudget = Some(256L),
-      splits = Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05),
-      materializeDocuments = true)
-    val p = graft.pipeline.CorpusPipeline.prepare(corpus, Some(bench), cfg)
-    pipelineStatsRow(s, p)
+      imageDedup = pipelineImageDedup,
+      mediaDecontaminate = mediaDecon(s, col("media_id").isin(fx.fullBenchImageIds: _*)),
+      mixToShares = pipelineMix, packTokenBudget = Some(256L)))
   }
 
-  private def corpusPipelineBpeQuery(s: SparkSession, dir: String): DataFrame = {
-    val corpus = t(s, dir, "documents").select(col("doc_id"), col("text"))
-    val bench = t(s, dir, "documents").where(col("doc_id") % 50 === 0)
-      .select(col("doc_id"), col("text"))
-    val cfg = graft.pipeline.CorpusPipeline.Config(
-      langs = Set("en"), minTokens = 10, maxTokens = 100000,
-      minAlphaRatio = 0.4, dedupThreshold = 0.5, shingleN = 3,
-      decontaminateN = 8, chunkTokens = 64, overlapTokens = 16,
-      bpeChunking = Some(graft.operators.FrozenBpe.model),
-      packTokenBudget = Some(256L),
-      splits = Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05),
-      materializeDocuments = true)
-    val p = graft.pipeline.CorpusPipeline.prepare(corpus, Some(bench), cfg)
-    // input_id_sum pins the pieces→ids mapping INSIDE the pipeline (the
-    // packed rollup's input_ids column, summed — id arithmetic restated
-    // in the oracle via bpePidExpr)
-    pipelineStatsRow(s, p, extraPackedStats = Seq(
-      coalesce(sum(aggregate(col("input_ids"), lit(0L),
-        (acc, x) => acc + x)), lit(0L)).cast("long").as("input_id_sum")))
-  }
+  /** q_corpus_pipeline_bpe: the plain pipeline with chunking AND packing
+    * on TRAINED-BPE pieces (`bpeChunking` + `packTokenBudget`): the
+    * chunk windows slice the FrozenBpe piece stream of the redacted
+    * text, and the greedy packing budget counts those pieces. Corpus =
+    * raw documents; benchmark = the %50 slice. chunk_token_sum /
+    * packed_token_sum pin the piece accounting end to end. */
+  private def corpusPipelineBpeQuery(s: SparkSession, dir: String): DataFrame =
+    pipelineStats(s, t(s, dir, "documents").select(col("doc_id"), col("text")),
+      Some(benchSlice(s, dir)), basePipelineConfig.copy(
+        bpeChunking = Some(graft.operators.FrozenBpe.model),
+        packTokenBudget = Some(256L)),
+      // input_id_sum pins the pieces→ids mapping INSIDE the pipeline (the
+      // packed rollup's input_ids column, summed — id arithmetic restated
+      // in the oracle via bpePidExpr)
+      extraPackedStats = Seq(
+        coalesce(sum(aggregate(col("input_ids"), lit(0L),
+          (acc, x) => acc + x)), lit(0L)).cast("long").as("input_id_sum")))
 
-  /** DuckDB CTE producing (doc_id, shingles): distinct 3-gram shingles of
-    * the normalized text — the oracle-side mirror of
-    * [[graft.operators.Dedup.shingleSets]], shared by every dedup oracle. */
+  /** Incremental dedup ground truth: exact pairs with an incoming
+    * (id >= 300) member, CC, then the taint rule. */
   private lazy val incrementalDedupOracle: String =
-    s"WITH RECURSIVE $shingleCte, " +
-      "j AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM sh a JOIN sh b ON a.doc_id < b.doc_id " +
-      "WHERE b.doc_id >= 300 AND " +
-      "len(list_intersect(a.shingles,b.shingles))*1.0/greatest(len(list_distinct(list_concat(a.shingles,b.shingles))),1) >= 0.5), " +
-      "e AS (SELECT id_a AS src, id_b AS dst FROM j UNION ALL SELECT id_b, id_a FROM j), " +
-      "r AS (SELECT src AS id, src AS label FROM e UNION SELECT e.dst AS id, r.label FROM r JOIN e ON e.src = r.id), " +
-      "lab AS (SELECT id, min(label) AS label FROM r GROUP BY id), " +
-      "tainted AS (SELECT DISTINCT label FROM lab WHERE id < 300), " +
-      "losers AS (SELECT id FROM lab WHERE id >= 300 AND " +
-      "(label IN (SELECT label FROM tainted) OR id <> label)), " +
+    shingleCcSql("b.doc_id >= 300 AND ") + taintLosersCtes(300) +
       "kept AS (SELECT doc_id FROM documents WHERE doc_id >= 300 " +
       "AND doc_id NOT IN (SELECT id FROM losers)) " +
       "SELECT (SELECT count(*) FROM documents WHERE doc_id >= 300) AS n_incoming, " +
       "count(*) AS n_kept, CAST(sum(doc_id) AS BIGINT) AS id_checksum FROM kept"
 
   // ── Shared DuckDB fragments of the composed corpus-pipeline oracles —
-  // ONE copy of each chain-invariant block (the language-vote CTE, the
-  // PII redaction fold, the 8-gram shingle CTE, and the redact → chunk →
-  // split tail), so a fix to the shared chain cannot silently miss one
-  // of the seven restatements. Byte-identity with the pre-refactor
-  // oracle strings was pinned by regenerating oracle_sql.json and
-  // diffing (round 10). ─────────────────────────────────────────────────
+  // ONE builder per pipeline stage (tokenize, quality/lang gate, exact,
+  // line and near dedup, decontamination, the semantic/media/mix rungs,
+  // the redact → chunk → split tail and the stats row), so each oracle is
+  // a short stage list and a fix to a stage cannot miss one of the
+  // restatements. Byte-identity with the hand-pasted oracle strings was
+  // pinned by diffing oracle_sql.json (`graft.Verify <sf> <out> none`). ──
 
-  /** The 4-language stopword-vote + Han-ratio language CTE over `tok`. */
   /** The per-language vote string (lpad(score)||code) greatest() argmax
     * over a token-array expression — GENERATED from
     * [[graft.functions.LangProfiles.stopwords]] (no-drift; the greatest
@@ -2976,12 +2786,17 @@ object SparkEntry {
         s"greatest(length($textExpr),1) > ${r.thresholdSql} THEN '${r.code}'"
     }.mkString(" ")
 
+  /** The routed language of a text expression from the script ratios
+    * and the stopword vote `b` (scored 'und' when no vote lands). */
+  private def langCaseSql(textExpr: String): String =
+    "CASE " + langScriptWhensSql(textExpr) +
+      " WHEN CAST(substr(b,1,8) AS INT) > 0 THEN substr(b,9,2) ELSE 'und' END AS lang"
+
   private lazy val pipelineLangCteSql: String =
     // the vote reads the SCRIPT-AWARE token array (the kernel's round-14
     // tokenizer — ml ≡ Latin on the ASCII corpus, restated for no-drift),
     // computed once as a column so the 26 per-language filters share it
-    "lang AS (SELECT doc_id, CASE " + langScriptWhensSql("text") +
-      " WHEN CAST(substr(b,1,8) AS INT) > 0 THEN substr(b,9,2) ELSE 'und' END AS lang FROM " +
+    "lang AS (SELECT doc_id, " + langCaseSql("text") + " FROM " +
       s"(SELECT doc_id, text, ${langVoteGreatestSql("mt")} AS b FROM " +
       s"(SELECT doc_id, text, ${graft.functions.Tok.Ml.sqlTokens("text")} AS mt FROM tok) y) x), "
 
@@ -3032,12 +2847,8 @@ object SparkEntry {
     * engine bands with (no drift). Ends with `${p}hm(id_a, id_b,
     * hamming)` — NOT bound-filtered (the consumer applies `<= h`). */
   private def imageHamming128Ctes(p: String, maxHamming: Int): String = {
-    val hRows = graft.operators.FrozenImageGrids.grids
-      .map { case (id, g) => s"($id, ${g.mkString("[", ",", "]")})" }
-      .mkString(", ")
-    val vRows = graft.operators.FrozenImageGrids.gridsV
-      .map { case (id, g) => s"($id, ${g.mkString("[", ",", "]")})" }
-      .mkString(", ")
+    val hRows = gridRowsSql(graft.operators.FrozenImageGrids.grids)
+    val vRows = gridRowsSql(graft.operators.FrozenImageGrids.gridsV)
     val (_, offsets) = graft.operators.Dedup.hammingChunkLayout(128, maxHamming)
     val chunkCase = "CASE " + (1 to maxHamming).map(j =>
       s"WHEN b < ${offsets(j)} THEN ${j - 1}").mkString(" ") + s" ELSE $maxHamming END"
@@ -3232,18 +3043,292 @@ object SparkEntry {
       "FROM ppk p JOIN pord o ON o.split = p.split AND o.shard = p.shard AND o.rn = p.rn + 1), " +
       "pex AS (SELECT split, shard, ex, count(*) AS nchunks, CAST(sum(n) AS BIGINT) AS ntok FROM ppk GROUP BY 1,2,3) "
 
-  /** The redact → re-tokenize → chunk(64/16) → split(0.9/0.05/0.05)
-    * tail over the final content stage `src`. */
-  private def pipelineTailSql(src: String): String =
+  /** `name AS [MATERIALIZED ](body), ` — one CTE of a composed chain. The
+    * hint matters: DuckDB otherwise inlines a CTE into every reference,
+    * and the recursive CCs reference their ancestors many times. */
+  private def cte(name: String, body: String, mat: Boolean = false): String =
+    s"$name AS ${if (mat) "MATERIALIZED " else ""}($body), "
+
+  /** The Latin normalization of a `text` column (normTokens' input). */
+  private val normTextSql = "trim(regexp_replace(lower(text),'[^a-z0-9]+',' ','g'))"
+
+  /** Distinct word trigrams of token-array expression `t`. */
+  private def trigramsSql(t: String): String =
+    s"list_distinct(list_transform(range(1, greatest(len($t)-1,1)), " +
+      s"i -> $t[i]||' '||$t[i+1]||' '||$t[i+2]))"
+
+  /** Set Jaccard of the list columns `a.col` and `b.col`. */
+  private def jaccardSql(a: String, b: String, col: String = "sh"): String =
+    s"len(list_intersect($a.$col,$b.$col))*1.0/" +
+      s"greatest(len(list_distinct(list_concat($a.$col,$b.$col))),1)"
+
+  /** `${p}e → ${p}r → ${p}lab`: connected components of the undirected
+    * pair table `pairs(id_a, id_b)` as a recursive CTE — every label
+    * propagates along the edges to fixpoint (UNION dedups), then each
+    * node takes its cluster's min label. */
+  private def ccCtes(p: String, pairs: String): String =
+    s"${p}e AS (SELECT id_a AS src, id_b AS dst FROM $pairs UNION ALL SELECT id_b, id_a FROM $pairs), " +
+      s"${p}r AS (SELECT src AS id, src AS label FROM ${p}e UNION SELECT ${p}e.dst AS id, ${p}r.label " +
+      s"FROM ${p}r JOIN ${p}e ON ${p}e.src = ${p}r.id), " +
+      s"${p}lab AS (SELECT id, min(label) AS label FROM ${p}r GROUP BY id), "
+
+  /** `out`: the rows of `src` that are their CC's min id in `lab`. */
+  private def minIdSurvivorsSql(out: String, src: String, lab: String,
+      mat: Boolean): String =
+    cte(out, s"SELECT * FROM $src WHERE doc_id NOT IN (SELECT id FROM $lab WHERE label <> id)", mat)
+
+  /** The incremental taint rule over `lab`: clusters holding an existing
+    * id (< cut) drop all their incoming members; pure-incoming clusters
+    * keep their min id. */
+  private def taintLosersCtes(cut: Int): String =
+    s"tainted AS (SELECT DISTINCT label FROM lab WHERE id < $cut), " +
+      s"losers AS (SELECT id FROM lab WHERE id >= $cut AND " +
+      "(label IN (SELECT label FROM tainted) OR id <> label)), "
+
+  /** base → tok: the Latin normalized text and token array of `src`
+    * (doc_id, text, carry…). */
+  private def tokCtes(src: String, carry: Seq[String] = Nil): String = {
+    val c = carry.map(_ + ", ").mkString
+    s"base AS (SELECT doc_id, text, $c$normTextSql AS norm FROM $src), " +
+      s"tok AS MATERIALIZED (SELECT doc_id, text, ${c}norm, regexp_split_to_array(norm,'\\s+') AS t FROM base), "
+  }
+
+  /** btok: the token arrays of the doc_id % 50 = 0 benchmark slice of `src`. */
+  private def benchTokCte(src: String = "documents"): String =
+    s"btok AS (SELECT doc_id, regexp_split_to_array($normTextSql,'\\s+') AS t " +
+      s"FROM $src WHERE doc_id % 50 = 0), "
+
+  /** lang → [pre] → q1: the config quality gate (10–100000 tokens, alpha
+    * ratio ≥ 0.4, lang 'en') over `tok`, with an optional joined gate CTE
+    * (emitted in `pre`) and an extra predicate. */
+  private def qualityGateSql(pre: String = "", join: String = "", pred: String = "",
+      carry: Seq[String] = Nil): String =
+    pipelineLangCteSql + pre +
+      "q1 AS MATERIALIZED (SELECT tok.doc_id AS doc_id, tok.text AS text, " +
+      carry.map(c => s"tok.$c AS $c, ").mkString + "tok.norm AS norm, tok.t AS t " +
+      "FROM tok JOIN lang ON tok.doc_id = lang.doc_id " +
+      (if (join.isEmpty) "" else s"JOIN $join ON tok.doc_id = $join.doc_id ") +
+      "WHERE len(tok.t) BETWEEN 10 AND 100000 " +
+      "AND length(regexp_replace(tok.text,'[^A-Za-z]','','g'))*1.0/greatest(length(tok.text),1) >= 0.4 " +
+      "AND lang.lang = 'en'" + (if (pred.isEmpty) "" else s" AND $pred") + "), "
+
+  /** q2: exact dedup of `src` — the min id per normalized `key`. */
+  private def exactDedupSql(src: String = "q1", key: String = "norm"): String =
+    s"q2 AS (SELECT * FROM $src WHERE doc_id IN (SELECT min(doc_id) FROM $src GROUP BY $key)), "
+
+  /** lls → … → q2l: line-level dedup of q2 (the q_line_dedup
+    * restatement): lines in ≥ 2 distinct docs are scrubbed from all docs,
+    * blank lines exempt, order-preserving reassembly; then the minTokens
+    * re-gate on the recomputed token stream (the rewrite can empty a
+    * document). */
+  private lazy val lineDedupSql: String =
+    "lls AS (SELECT doc_id, unnest(string_split(text, chr(10))) AS line, " +
+      "generate_subscripts(string_split(text, chr(10)), 1) AS lpos FROM q2), " +
+      "ldup AS (SELECT line FROM (SELECT DISTINCT doc_id, line FROM lls WHERE trim(line) <> '') " +
+      "GROUP BY line HAVING count(*) >= 2), " +
+      "lkept AS (SELECT doc_id, line, lpos FROM lls WHERE trim(line) = '' OR line NOT IN (SELECT line FROM ldup)), " +
+      "lreb AS (SELECT doc_id, string_agg(line, chr(10) ORDER BY lpos) AS t2 FROM lkept GROUP BY doc_id), " +
+      "q2l0 AS (SELECT q2.doc_id AS doc_id, COALESCE(lreb.t2, '') AS text FROM q2 LEFT JOIN lreb ON q2.doc_id = lreb.doc_id), " +
+      s"q2l AS MATERIALIZED (SELECT doc_id, text, $normTextSql AS norm, regexp_split_to_array($normTextSql,'\\s+') AS t " +
+      s"FROM q2l0 WHERE len(regexp_split_to_array($normTextSql,'\\s+')) >= 10), "
+
+  /** sh3 → j → e → r → lab → q3: trigram Jaccard ≥ `threshold` pairs
+    * over the `tokCol` arrays of `src`, recursive-CTE CC, min-id
+    * survivors. */
+  private def nearDupSql(src: String, threshold: Double = 0.5, tokCol: String = "t",
+      matSh3: Boolean = true, matQ3: Boolean = true): String =
+    cte("sh3", s"SELECT doc_id, ${trigramsSql(tokCol)} AS sh FROM $src", matSh3) +
+      "j AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM sh3 a JOIN sh3 b ON a.doc_id < b.doc_id " +
+      s"WHERE ${jaccardSql("a", "b")} >= $threshold), " +
+      ccCtes("", "j") + minIdSurvivorsSql("q3", src, "lab", matQ3)
+
+  /** The plain chain over `src`: tokenize → quality/lang gate → exact
+    * dedup → trigram near-dup CC (q3). */
+  private def plainChainSql(src: String, threshold: Double = 0.5): String =
+    tokCtes(src) + qualityGateSql() + exactDedupSql() + nearDupSql("q2", threshold)
+
+  /** sh8c/sh8b → cont → q4: exact 8-gram decontamination of `src`
+    * against `btok` (shingled from `gramSrc`, default `src`). */
+  private def deconSql(src: String, gramSrc: String = "", mat: Boolean = true): String =
+    s"sh8c AS (${gram8CteSql(if (gramSrc.isEmpty) src else gramSrc)}), " +
+      s"sh8b AS (${gram8CteSql("btok")}), " +
+      "cont AS (SELECT DISTINCT c.doc_id AS doc_id FROM sh8c c JOIN sh8b b ON len(list_intersect(c.sh,b.sh)) > 0), " +
+      cte("q4", s"SELECT * FROM $src WHERE doc_id NOT IN (SELECT doc_id FROM cont)", mat)
+
+  /** `${p}pair` → CC → `q3$p`: a media rung's min-id survivors of `src`
+    * under the pair table body `pairs`. */
+  private def mediaRungSql(p: String, pairs: String, src: String): String =
+    s"${p}pair AS ($pairs), " + ccCtes(p, s"${p}pair") +
+      minIdSurvivorsSql(s"q3$p", src, s"${p}lab", mat = true)
+
+  /** Pairs of `tbl` meeting `cond` whose both ids reach the stage in `src`. */
+  private def pairsAmongSql(tbl: String, cond: String, src: String): String =
+    s"SELECT id_a, id_b FROM $tbl WHERE $cond " +
+      s"AND id_a IN (SELECT doc_id FROM $src) AND id_b IN (SELECT doc_id FROM $src)"
+
+  /** aug: the filler-augmented documents fixture — even ids carry
+    * [[QmOracle.fillerSuffix]] (see [[fillerCorpus]]). */
+  private lazy val fillerAugCte: String = {
+    val filler = QmOracle.fillerSuffix
+    require(!filler.contains("'"), "filler must be quote-free")
+    s"aug AS MATERIALIZED (SELECT doc_id, CASE WHEN doc_id % 2 = 0 THEN text || '$filler' ELSE text END AS text FROM documents), "
+  }
+
+  /** The semantic fixture: documents ⨝ embeddings plus the paraphrase
+    * twins — reversed-token text, md5-jittered embedding; the jitter key
+    * is the ORIGINAL doc_id (inner select), the id offset applies
+    * outside, exactly as the Spark side's two-step select. */
+  private val semanticTwinCtes: String =
+    "dv AS (SELECT d.doc_id, d.text, list_transform(e.embedding, x -> CAST(x AS DOUBLE)) AS v " +
+      "FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id), " +
+      "tw AS (SELECT doc_id + 1000000 AS doc_id, text, v FROM (" +
+      s"SELECT doc_id, array_to_string(list_reverse(regexp_split_to_array($normTextSql,'\\s+')), ' ') AS text, " +
+      "list_transform(v, (x, i) -> x + 0.025 * (CASE WHEN " +
+      "substr(md5(CAST(doc_id AS VARCHAR) || '-' || CAST(i AS VARCHAR)), 1, 1) <= '7' " +
+      "THEN 1.0 ELSE -1.0 END)) AS v FROM dv WHERE doc_id % 10 = 0)), " +
+      "aug AS MATERIALIZED (SELECT doc_id, text, v FROM dv UNION ALL SELECT doc_id, text, v FROM tw), "
+
+  /** The JL-projected coarse codebook plus the ±1/0 matrix cells `w` —
+    * emitted from the engine's OWN generators
+    * ([[graft.operators.Similarity.randomProjectionMatrix]] /
+    * `projectCentroids`, no drift). */
+  private lazy val jlPreludeSql: String = {
+    val outDim = 16; val inDim = 64
+    val m = graft.operators.Similarity.randomProjectionMatrix(inDim, outDim)
+    // the list(o ORDER BY j) reassembly is dense only if every output
+    // row has ≥ 1 nonzero cell — deterministic property of the seeded
+    // matrix, asserted at SQL-generation time
+    (0 until outDim).foreach(j => require(
+      m.slice(j * inDim, (j + 1) * inDim).exists(_ != 0),
+      s"JL matrix row $j is all-zero; the oracle's list reassembly " +
+        "would drop a dimension"))
+    val cells = (for {
+      j <- 0 until outDim; d <- 0 until inDim
+      w = m(j * inDim + d) if w != 0
+    } yield s"($d, $j, $w)").mkString(", ")
+    AnnOracles.coarseCtesProjected(outDim) + ", " + s"w(d0, j, wt) AS (VALUES $cells), "
+  }
+
+  /** semp → sememb: the ±1/0 fold of the quantized `semq(id, d0, qv)`
+    * rows into 16-dim projected vectors. */
+  private val jlProjectSql: String =
+    "semp AS (SELECT semq.id AS id, w.j AS j, CAST(sum(qv * wt) AS DOUBLE) AS o " +
+      "FROM semq JOIN w ON semq.d0 = w.d0 GROUP BY semq.id, w.j), " +
+      "sememb AS MATERIALIZED (SELECT id, list(o ORDER BY j) AS v FROM semp GROUP BY id), "
+
+  /** sasg → sj → CC → sranked → q3s: the semantic rung over
+    * `sememb(id, v)` — primary assignment to the coarse centroids,
+    * within-cluster cosine ≥ 0.9 pairs, CC #2, keep-the-outlier (lowest
+    * centroid cosine, ties by id). */
+  private def semanticRungSql(q3sMat: Boolean): String =
+    "sasg AS MATERIALIZED (SELECT id, l, cc FROM (SELECT s2.id, ls.l, " +
+      "list_cosine_similarity(s2.v, cents[ls.l+1]) AS cc, " +
+      "ROW_NUMBER() OVER (PARTITION BY s2.id ORDER BY " +
+      "list_cosine_similarity(s2.v, cents[ls.l+1]) DESC, ls.l) AS rk " +
+      "FROM sememb s2, ls, co) WHERE rk = 1), " +
+      "sj AS MATERIALIZED (SELECT ax.id AS id_a, ay.id AS id_b " +
+      "FROM sasg ax JOIN sasg ay ON ax.l = ay.l AND ax.id < ay.id " +
+      "JOIN sememb x ON x.id = ax.id JOIN sememb y ON y.id = ay.id " +
+      "WHERE list_cosine_similarity(x.v, y.v) >= 0.9), " +
+      ccCtes("s", "sj") +
+      "sranked AS (SELECT slab.id, ROW_NUMBER() OVER (PARTITION BY slab.label " +
+      "ORDER BY sasg.cc ASC, slab.id ASC) AS rk FROM slab JOIN sasg ON sasg.id = slab.id), " +
+      cte("q3s", "SELECT * FROM q3 WHERE doc_id NOT IN (SELECT id FROM sranked WHERE rk > 1)", q3sMat)
+
+  /** mshares → … → q5: the q_token_mix derivation over the survivors'
+    * token mass in `src` (zero-mass strata excluded from min and rates:
+    * c = min(toks/w), round(·,4), thresholdHex as hex()). */
+  private def mixRungSql(src: String, tokCol: String): String =
+    "mshares(s, w) AS (VALUES ('src0', 0.5), ('src1', 0.3), ('src2', 0.2)), " +
+      s"mhist AS (SELECT source AS s, CAST(sum(len($tokCol)) AS BIGINT) AS toks " +
+      s"FROM $src WHERE source IN (SELECT s FROM mshares) GROUP BY source HAVING sum(len($tokCol)) > 0), " +
+      "mcst AS (SELECT min(toks / w) AS c FROM mhist JOIN mshares USING (s)), " +
+      "mrates AS (SELECT s, round(least(1.0, c * w / toks), 4) AS rr " +
+      "FROM mhist JOIN mshares USING (s) CROSS JOIN mcst), " +
+      "mth AS (SELECT s, CASE WHEN rr >= 1.0 THEN 'g' ELSE " +
+      "lpad(lower(hex(CAST(least(round(rr * 4294967296.0), 4294967295) AS BIGINT))),8,'0') END AS th FROM mrates), " +
+      s"q5 AS MATERIALIZED (SELECT $src.* FROM $src JOIN mth ON $src.source = mth.s " +
+      s"WHERE substr(md5(CAST($src.doc_id AS VARCHAR)),1,8) < mth.th), "
+
+  /** The frozen 9×8 grids as `(media_id, [cells])` VALUES rows. */
+  private def gridRowsSql(grids: Array[(Long, Array[Int])]): String =
+    grids.map { case (id, g) => s"($id, ${g.mkString("[", ",", "]")})" }.mkString(", ")
+
+  /** `${p}gr → ${p}bt`: 64-bit horizontal dHash bits of the frozen grids,
+    * then `${p}ham(corpus_id, bench_id, ${p}h)`: ALL-PAIRS Hamming against
+    * the benchmark subset `benchCond` — no banding at all (the oracle
+    * must not share the engine's candidate structure). No trailing
+    * separator. */
+  private def benchHammingCtes(p: String, benchCond: String): String =
+    s"${p}gr(media_id, g) AS (VALUES ${gridRowsSql(graft.operators.FrozenImageGrids.grids)}), " +
+      s"${p}bb AS (SELECT unnest(range(0, 64)) AS b), " +
+      s"${p}bt AS (SELECT media_id, b, CASE WHEN g[(b//8)*9 + (b%8) + 1] > g[(b//8)*9 + (b%8) + 2] " +
+      s"THEN 1 ELSE 0 END AS bit FROM ${p}gr, ${p}bb), " +
+      s"${p}bench AS (SELECT media_id, b, bit FROM ${p}bt WHERE $benchCond), " +
+      s"${p}ham AS (SELECT c.media_id AS corpus_id, ${p}bench.media_id AS bench_id, " +
+      s"sum(CASE WHEN c.bit <> ${p}bench.bit THEN 1 ELSE 0 END) AS ${p}h " +
+      s"FROM ${p}bt c JOIN ${p}bench ON c.b = ${p}bench.b GROUP BY 1, 2)"
+
+  private val latinRtToks =
+    "list_filter(regexp_split_to_array(trim(regexp_replace(lower(rt),'[^a-z0-9]+',' ','g')),'\\s+'), x -> x <> '')"
+
+  /** red → rtok: the piiClasses redaction of `src` and its token arrays
+    * (`toks` over `rt`; default the Latin normTokens). */
+  private def redactSql(src: String, toks: String = latinRtToks): String =
     s"red AS (SELECT doc_id, $piiRedactSql AS rt FROM $src), " +
-      "rtok AS (SELECT doc_id, list_filter(regexp_split_to_array(trim(regexp_replace(lower(rt),'[^a-z0-9]+',' ','g')),'\\s+'), x -> x <> '') AS t FROM red), " +
-      "st AS (SELECT doc_id, t, unnest(list_filter(range(0, len(t), 48), s -> s = 0 OR s + 16 < len(t))) AS s FROM rtok WHERE len(t) > 0), " +
+      s"rtok AS (SELECT doc_id, $toks AS t FROM red), "
+
+  /** st → ck: the 64/16 chunk windows over `src(doc_id, t)`. */
+  private def chunkCtes(src: String, chunkIdx: Boolean = true): String =
+    "st AS (SELECT doc_id, t, unnest(list_filter(range(0, len(t), 48), s -> s = 0 OR s + 16 < len(t))) AS s " +
+      s"FROM $src WHERE len(t) > 0), " +
       // chunk_idx = s // stride: the surviving start list is a PREFIX of
       // range (only tail starts drop), so position == s/stride — used by
       // the packing rollup, inert for the other pipeline oracles
-      "ck AS (SELECT doc_id, CAST(s // 48 AS BIGINT) AS chunk_idx, len(list_slice(t, s + 1, s + 64)) AS n FROM st), " +
-      "sp AS (SELECT doc_id, CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)),1,8) < 'e6666666' THEN 'train' " +
+      "ck AS (SELECT doc_id, " + (if (chunkIdx) "CAST(s // 48 AS BIGINT) AS chunk_idx, " else "") +
+      "len(list_slice(t, s + 1, s + 64)) AS n FROM st), "
+
+  /** sp: the md5 hash split (0.9/0.05/0.05) of `src`; ends comma-free. */
+  private def splitCte(src: String): String =
+    "sp AS (SELECT doc_id, CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)),1,8) < 'e6666666' THEN 'train' " +
       "WHEN substr(md5(CAST(doc_id AS VARCHAR)),1,8) < 'f3333333' THEN 'val' ELSE 'test' END AS split FROM " + src + ") "
+
+  /** The redact → re-tokenize → chunk(64/16) → split(0.9/0.05/0.05)
+    * tail over the final content stage `src`. */
+  private def pipelineTailSql(src: String, toks: String = latinRtToks,
+      chunkIdx: Boolean = true): String =
+    redactSql(src, toks) + chunkCtes("rtok", chunkIdx) + splitCte(src)
+
+  /** `(SELECT count of rows meeting cond in src) AS name`. */
+  private def countWhereSql(cond: String, src: String, name: String): String =
+    s"(SELECT CAST(sum(CASE WHEN $cond THEN 1 ELSE 0 END) AS BIGINT) FROM $src) AS $name"
+
+  /** The packing rollup's totals over [[packingCtes]]' `pex`. */
+  private val packedStatCols = Seq(
+    "(SELECT count(*) FROM pex) AS n_examples",
+    "(SELECT CAST(sum(nchunks) AS BIGINT) FROM pex) AS packed_chunk_sum",
+    "(SELECT CAST(sum(ntok) AS BIGINT) FROM pex) AS packed_token_sum")
+
+  /** The pipeline stats row ([[pipelineStatsRow]]'s column order):
+    * n_input over `input`, one n_<stage> count per (stage, CTE), the
+    * last stage's id checksum, the redacted length, `extra`, the split
+    * and chunk counts, then `packed`. */
+  private def pipelineStatsSql(input: String, stages: Seq[(String, String)],
+      extra: Seq[String] = Nil, packed: Seq[String] = Nil): String = {
+    val cols = Seq(s"(SELECT count(*) FROM $input) AS n_input") ++
+      stages.map { case (n, src) => s"(SELECT count(*) FROM $src) AS n_$n" } ++
+      Seq(s"(SELECT CAST(sum(doc_id) AS BIGINT) FROM ${stages.last._2}) AS id_checksum",
+        "(SELECT CAST(sum(length(rt)) AS BIGINT) FROM red) AS text_len_sum") ++
+      extra ++
+      Seq("train", "val", "test").map(sp => s"(SELECT count(*) FROM sp WHERE split='$sp') AS n_$sp") ++
+      Seq("(SELECT count(*) FROM ck) AS n_chunks",
+        "(SELECT CAST(sum(n) AS BIGINT) FROM ck) AS chunk_token_sum") ++
+      packed
+    "SELECT " + cols.mkString(", ")
+  }
+
+  private def nTargetSql(src: String): String =
+    countWhereSql("doc_id % 2 = 0", src, "n_target")
 
   /** Ground truth for q_corpus_pipeline: every stage's already-proven
     * DuckDB restatement (the q_html_strip chain + newline-preserving
@@ -3255,9 +3340,6 @@ object SparkEntry {
     * stopword-augmented documents fixture (benchmark = the un-wrapped
     * augmentation). */
   private lazy val corpusPipelineOracle: String = {
-    // redaction chain generated FROM piiClasses — patterns cannot drift
-    def gram8(src: String): String = gram8CteSql(src)
-    val renorm = "trim(regexp_replace(lower(text),'[^a-z0-9]+',' ','g'))"
     // quality gate = the config gate AND the seven generated Gopher rules
     val gopher = gopherRuleSqls("tok.text", "tok.t", "tok.norm")
       .map(r => s"($r)").mkString(" AND ")
@@ -3276,56 +3358,13 @@ object SparkEntry {
       "raw0 AS (SELECT doc_id, '<html><body><p class=\"d\">' || text || " +
       "'</p><!-- boilerplate --></body></html>' AS raw FROM aug1), " +
       s"doc0 AS MATERIALIZED (SELECT doc_id, ${collapseLineWsSql(htmlStripSql("raw"))} AS text FROM raw0), " +
-      "base AS (SELECT doc_id, text, trim(regexp_replace(lower(text),'[^a-z0-9]+',' ','g')) AS norm FROM doc0), " +
-      "tok AS MATERIALIZED (SELECT doc_id, text, norm, regexp_split_to_array(norm,'\\s+') AS t FROM base), " +
-      "btok AS (SELECT doc_id, regexp_split_to_array(trim(regexp_replace(lower(text),'[^a-z0-9]+',' ','g')),'\\s+') AS t " +
-      "FROM aug1 WHERE doc_id % 50 = 0), " +
-      pipelineLangCteSql +
-      "q1 AS MATERIALIZED (SELECT tok.doc_id AS doc_id, tok.text AS text, tok.norm AS norm, tok.t AS t " +
-      "FROM tok JOIN lang ON tok.doc_id = lang.doc_id " +
-      "WHERE len(tok.t) BETWEEN 10 AND 100000 " +
-      "AND length(regexp_replace(tok.text,'[^A-Za-z]','','g'))*1.0/greatest(length(tok.text),1) >= 0.4 " +
-      s"AND lang.lang = 'en' AND $gopher), " +
-      "q2 AS (SELECT * FROM q1 WHERE doc_id IN (SELECT min(doc_id) FROM q1 GROUP BY norm)), " +
-      // line-level dedup (the q_line_dedup restatement): lines in >= 2
-      // distinct docs are scrubbed from all docs, blank lines exempt,
-      // order-preserving reassembly; then the minTokens re-gate on the
-      // recomputed token stream (the rewrite can empty a document)
-      "lls AS (SELECT doc_id, unnest(string_split(text, chr(10))) AS line, " +
-      "generate_subscripts(string_split(text, chr(10)), 1) AS lpos FROM q2), " +
-      "ldup AS (SELECT line FROM (SELECT DISTINCT doc_id, line FROM lls WHERE trim(line) <> '') " +
-      "GROUP BY line HAVING count(*) >= 2), " +
-      "lkept AS (SELECT doc_id, line, lpos FROM lls WHERE trim(line) = '' OR line NOT IN (SELECT line FROM ldup)), " +
-      "lreb AS (SELECT doc_id, string_agg(line, chr(10) ORDER BY lpos) AS t2 FROM lkept GROUP BY doc_id), " +
-      "q2l0 AS (SELECT q2.doc_id AS doc_id, COALESCE(lreb.t2, '') AS text FROM q2 LEFT JOIN lreb ON q2.doc_id = lreb.doc_id), " +
-      s"q2l AS MATERIALIZED (SELECT doc_id, text, $renorm AS norm, regexp_split_to_array($renorm,'\\s+') AS t " +
-      s"FROM q2l0 WHERE len(regexp_split_to_array($renorm,'\\s+')) >= 10), " +
-      "sh3 AS (SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(t)-1,1)), " +
-      "i -> t[i]||' '||t[i+1]||' '||t[i+2])) AS sh FROM q2l), " +
-      "j AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM sh3 a JOIN sh3 b ON a.doc_id < b.doc_id " +
-      "WHERE len(list_intersect(a.sh,b.sh))*1.0/greatest(len(list_distinct(list_concat(a.sh,b.sh))),1) >= 0.5), " +
-      "e AS (SELECT id_a AS src, id_b AS dst FROM j UNION ALL SELECT id_b, id_a FROM j), " +
-      "r AS (SELECT src AS id, src AS label FROM e UNION SELECT e.dst AS id, r.label FROM r JOIN e ON e.src = r.id), " +
-      "lab AS (SELECT id, min(label) AS label FROM r GROUP BY id), " +
-      "q3 AS (SELECT * FROM q2l WHERE doc_id NOT IN (SELECT id FROM lab WHERE label <> id)), " +
-      s"sh8c AS (${gram8("q3")}), " +
-      s"sh8b AS (${gram8("btok")}), " +
-      "cont AS (SELECT DISTINCT c.doc_id AS doc_id FROM sh8c c JOIN sh8b b ON len(list_intersect(c.sh,b.sh)) > 0), " +
-      "q4 AS (SELECT * FROM q3 WHERE doc_id NOT IN (SELECT doc_id FROM cont)), " +
+      tokCtes("doc0") + benchTokCte("aug1") +
+      qualityGateSql(pred = gopher) + exactDedupSql() + lineDedupSql +
+      nearDupSql("q2l", matSh3 = false, matQ3 = false) +
+      deconSql("q3", mat = false) +
       pipelineTailSql("q4") +
-      "SELECT (SELECT count(*) FROM documents) AS n_input, " +
-      "(SELECT count(*) FROM q1) AS n_quality, " +
-      "(SELECT count(*) FROM q2) AS n_exact_dedup, " +
-      "(SELECT count(*) FROM q2l) AS n_line_dedup, " +
-      "(SELECT count(*) FROM q3) AS n_near_dedup, " +
-      "(SELECT count(*) FROM q4) AS n_decontaminated, " +
-      "(SELECT CAST(sum(doc_id) AS BIGINT) FROM q4) AS id_checksum, " +
-      "(SELECT CAST(sum(length(rt)) AS BIGINT) FROM red) AS text_len_sum, " +
-      "(SELECT count(*) FROM sp WHERE split='train') AS n_train, " +
-      "(SELECT count(*) FROM sp WHERE split='val') AS n_val, " +
-      "(SELECT count(*) FROM sp WHERE split='test') AS n_test, " +
-      "(SELECT count(*) FROM ck) AS n_chunks, " +
-      "(SELECT CAST(sum(n) AS BIGINT) FROM ck) AS chunk_token_sum"
+      pipelineStatsSql("documents", Seq("quality" -> "q1", "exact_dedup" -> "q2",
+        "line_dedup" -> "q2l", "near_dedup" -> "q3", "decontaminated" -> "q4"))
   }
 
   /** Ground truth for q_corpus_pipeline_semantic: the plain-config
@@ -3336,165 +3375,38 @@ object SparkEntry {
     * recursive-CTE CC, and the keep-the-outlier survivor rank — over the
     * documents ⨝ embeddings corpus plus the reversed-token/jittered-
     * embedding paraphrase twins. */
-  private lazy val corpusPipelineSemanticOracle: String = {
+  private lazy val corpusPipelineSemanticOracle: String =
     "WITH RECURSIVE " +
-      AnnOracles.coarseCtes + ", " +
-      "dv AS (SELECT d.doc_id, d.text, list_transform(e.embedding, x -> CAST(x AS DOUBLE)) AS v " +
-      "FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id), " +
-      // twins: reversed-token text, md5-jittered embedding — the jitter
-      // key is the ORIGINAL doc_id (inner select), the id offset applies
-      // outside, exactly as the Spark side's two-step select
-      "tw AS (SELECT doc_id + 1000000 AS doc_id, text, v FROM (" +
-      "SELECT doc_id, array_to_string(list_reverse(regexp_split_to_array(" +
-      "trim(regexp_replace(lower(text),'[^a-z0-9]+',' ','g')),'\\s+')), ' ') AS text, " +
-      "list_transform(v, (x, i) -> x + 0.025 * (CASE WHEN " +
-      "substr(md5(CAST(doc_id AS VARCHAR) || '-' || CAST(i AS VARCHAR)), 1, 1) <= '7' " +
-      "THEN 1.0 ELSE -1.0 END)) AS v FROM dv WHERE doc_id % 10 = 0)), " +
-      "aug AS MATERIALIZED (SELECT doc_id, text, v FROM dv UNION ALL SELECT doc_id, text, v FROM tw), " +
-      "base AS (SELECT doc_id, text, trim(regexp_replace(lower(text),'[^a-z0-9]+',' ','g')) AS norm FROM aug), " +
-      "tok AS MATERIALIZED (SELECT doc_id, text, norm, regexp_split_to_array(norm,'\\s+') AS t FROM base), " +
-      pipelineLangCteSql +
-      "q1 AS MATERIALIZED (SELECT tok.doc_id AS doc_id, tok.text AS text, tok.norm AS norm, tok.t AS t " +
-      "FROM tok JOIN lang ON tok.doc_id = lang.doc_id " +
-      "WHERE len(tok.t) BETWEEN 10 AND 100000 " +
-      "AND length(regexp_replace(tok.text,'[^A-Za-z]','','g'))*1.0/greatest(length(tok.text),1) >= 0.4 " +
-      "AND lang.lang = 'en'), " +
-      "q2 AS (SELECT * FROM q1 WHERE doc_id IN (SELECT min(doc_id) FROM q1 GROUP BY norm)), " +
-      "sh3 AS (SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(t)-1,1)), " +
-      "i -> t[i]||' '||t[i+1]||' '||t[i+2])) AS sh FROM q2), " +
-      "j AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM sh3 a JOIN sh3 b ON a.doc_id < b.doc_id " +
-      "WHERE len(list_intersect(a.sh,b.sh))*1.0/greatest(len(list_distinct(list_concat(a.sh,b.sh))),1) >= 0.5), " +
-      "e AS (SELECT id_a AS src, id_b AS dst FROM j UNION ALL SELECT id_b, id_a FROM j), " +
-      "r AS (SELECT src AS id, src AS label FROM e UNION SELECT e.dst AS id, r.label FROM r JOIN e ON e.src = r.id), " +
-      "lab AS (SELECT id, min(label) AS label FROM r GROUP BY id), " +
-      "q3 AS MATERIALIZED (SELECT * FROM q2 WHERE doc_id NOT IN (SELECT id FROM lab WHERE label <> id)), " +
-      // ── semantic rung: primary assignment → within-cluster pairs →
-      //    CC #2 → keep-the-outlier (lowest centroid cosine, ties by id)
+      AnnOracles.coarseCtes + ", " + semanticTwinCtes +
+      tokCtes("aug") + qualityGateSql() + exactDedupSql() + nearDupSql("q2", matSh3 = false) +
       "sememb AS MATERIALIZED (SELECT q3.doc_id AS id, a.v FROM q3 JOIN aug a ON a.doc_id = q3.doc_id), " +
-      "sasg AS MATERIALIZED (SELECT id, l, cc FROM (SELECT s2.id, ls.l, " +
-      "list_cosine_similarity(s2.v, cents[ls.l+1]) AS cc, " +
-      "ROW_NUMBER() OVER (PARTITION BY s2.id ORDER BY " +
-      "list_cosine_similarity(s2.v, cents[ls.l+1]) DESC, ls.l) AS rk " +
-      "FROM sememb s2, ls, co) WHERE rk = 1), " +
-      "sj AS MATERIALIZED (SELECT ax.id AS id_a, ay.id AS id_b " +
-      "FROM sasg ax JOIN sasg ay ON ax.l = ay.l AND ax.id < ay.id " +
-      "JOIN sememb x ON x.id = ax.id JOIN sememb y ON y.id = ay.id " +
-      "WHERE list_cosine_similarity(x.v, y.v) >= 0.9), " +
-      "se AS (SELECT id_a AS src, id_b AS dst FROM sj UNION ALL SELECT id_b, id_a FROM sj), " +
-      "sr AS (SELECT src AS id, src AS label FROM se " +
-      "UNION SELECT se.dst AS id, sr.label FROM sr JOIN se ON se.src = sr.id), " +
-      "slab AS (SELECT id, min(label) AS label FROM sr GROUP BY id), " +
-      "sranked AS (SELECT slab.id, ROW_NUMBER() OVER (PARTITION BY slab.label " +
-      "ORDER BY sasg.cc ASC, slab.id ASC) AS rk FROM slab JOIN sasg ON sasg.id = slab.id), " +
-      "q3s AS (SELECT * FROM q3 WHERE doc_id NOT IN (SELECT id FROM sranked WHERE rk > 1)), " +
+      semanticRungSql(q3sMat = false) +
       pipelineTailSql("q3s") +
-      "SELECT (SELECT count(*) FROM aug) AS n_input, " +
-      "(SELECT count(*) FROM q1) AS n_quality, " +
-      "(SELECT count(*) FROM q2) AS n_exact_dedup, " +
-      "(SELECT count(*) FROM q3) AS n_near_dedup, " +
-      "(SELECT count(*) FROM q3s) AS n_semantic_dedup, " +
-      "(SELECT count(*) FROM q3s) AS n_decontaminated, " +
-      "(SELECT CAST(sum(doc_id) AS BIGINT) FROM q3s) AS id_checksum, " +
-      "(SELECT CAST(sum(length(rt)) AS BIGINT) FROM red) AS text_len_sum, " +
-      "(SELECT count(*) FROM sp WHERE split='train') AS n_train, " +
-      "(SELECT count(*) FROM sp WHERE split='val') AS n_val, " +
-      "(SELECT count(*) FROM sp WHERE split='test') AS n_test, " +
-      "(SELECT count(*) FROM ck) AS n_chunks, " +
-      "(SELECT CAST(sum(n) AS BIGINT) FROM ck) AS chunk_token_sum"
-  }
+      pipelineStatsSql("aug", semanticStages)
+
+  private val semanticStages = Seq("quality" -> "q1", "exact_dedup" -> "q2",
+    "near_dedup" -> "q3", "semantic_dedup" -> "q3s", "decontaminated" -> "q3s")
 
   /** Ground truth for q_corpus_pipeline_semantic_jl: the semantic
-    * pipeline with the rung restated in JL-PROJECTED space — the ±1/0
-    * matrix cells and the projected-centroid codebook are emitted from
-    * the engine's OWN generators ([[graft.operators.Similarity
-    * .randomProjectionMatrix]] / `projectCentroids` — no drift), the
-    * per-document projection folds the same floor(x·1024 + 0.5)
-    * quantization in BIGINT, and assignment / within-cluster cosine /
-    * keep-the-outlier then run over the 16-dim vectors exactly as the
-    * engine's one-flag projectTo composition does. */
-  private lazy val corpusPipelineSemanticJlOracle: String = {
-    val outDim = 16; val inDim = 64
-    val m = graft.operators.Similarity.randomProjectionMatrix(inDim, outDim)
-    // the list(o ORDER BY j) reassembly below is dense only if every
-    // output row has ≥ 1 nonzero cell — deterministic property of the
-    // seeded matrix, asserted at SQL-generation time
-    (0 until outDim).foreach(j => require(
-      m.slice(j * inDim, (j + 1) * inDim).exists(_ != 0),
-      s"JL matrix row $j is all-zero; the oracle's list reassembly " +
-        "would drop a dimension"))
-    val cells = (for {
-      j <- 0 until outDim; d <- 0 until inDim
-      w = m(j * inDim + d) if w != 0
-    } yield s"($d, $j, $w)").mkString(", ")
+    * pipeline with the rung restated in JL-PROJECTED space
+    * ([[jlPreludeSql]]): the per-document projection folds the same
+    * floor(x·1024 + 0.5) quantization in BIGINT, and assignment /
+    * within-cluster cosine / keep-the-outlier then run over the 16-dim
+    * vectors exactly as the engine's one-flag projectTo composition
+    * does. */
+  private lazy val corpusPipelineSemanticJlOracle: String =
     "WITH RECURSIVE " +
-      AnnOracles.coarseCtesProjected(outDim) + ", " +
-      s"w(d0, j, wt) AS (VALUES $cells), " +
-      "dv AS (SELECT d.doc_id, d.text, list_transform(e.embedding, x -> CAST(x AS DOUBLE)) AS v " +
-      "FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id), " +
-      "tw AS (SELECT doc_id + 1000000 AS doc_id, text, v FROM (" +
-      "SELECT doc_id, array_to_string(list_reverse(regexp_split_to_array(" +
-      "trim(regexp_replace(lower(text),'[^a-z0-9]+',' ','g')),'\\s+')), ' ') AS text, " +
-      "list_transform(v, (x, i) -> x + 0.025 * (CASE WHEN " +
-      "substr(md5(CAST(doc_id AS VARCHAR) || '-' || CAST(i AS VARCHAR)), 1, 1) <= '7' " +
-      "THEN 1.0 ELSE -1.0 END)) AS v FROM dv WHERE doc_id % 10 = 0)), " +
-      "aug AS MATERIALIZED (SELECT doc_id, text, v FROM dv UNION ALL SELECT doc_id, text, v FROM tw), " +
-      "base AS (SELECT doc_id, text, trim(regexp_replace(lower(text),'[^a-z0-9]+',' ','g')) AS norm FROM aug), " +
-      "tok AS MATERIALIZED (SELECT doc_id, text, norm, regexp_split_to_array(norm,'\\s+') AS t FROM base), " +
-      pipelineLangCteSql +
-      "q1 AS MATERIALIZED (SELECT tok.doc_id AS doc_id, tok.text AS text, tok.norm AS norm, tok.t AS t " +
-      "FROM tok JOIN lang ON tok.doc_id = lang.doc_id " +
-      "WHERE len(tok.t) BETWEEN 10 AND 100000 " +
-      "AND length(regexp_replace(tok.text,'[^A-Za-z]','','g'))*1.0/greatest(length(tok.text),1) >= 0.4 " +
-      "AND lang.lang = 'en'), " +
-      "q2 AS (SELECT * FROM q1 WHERE doc_id IN (SELECT min(doc_id) FROM q1 GROUP BY norm)), " +
-      "sh3 AS (SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(t)-1,1)), " +
-      "i -> t[i]||' '||t[i+1]||' '||t[i+2])) AS sh FROM q2), " +
-      "j AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM sh3 a JOIN sh3 b ON a.doc_id < b.doc_id " +
-      "WHERE len(list_intersect(a.sh,b.sh))*1.0/greatest(len(list_distinct(list_concat(a.sh,b.sh))),1) >= 0.5), " +
-      "e AS (SELECT id_a AS src, id_b AS dst FROM j UNION ALL SELECT id_b, id_a FROM j), " +
-      "r AS (SELECT src AS id, src AS label FROM e UNION SELECT e.dst AS id, r.label FROM r JOIN e ON e.src = r.id), " +
-      "lab AS (SELECT id, min(label) AS label FROM r GROUP BY id), " +
-      "q3 AS MATERIALIZED (SELECT * FROM q2 WHERE doc_id NOT IN (SELECT id FROM lab WHERE label <> id)), " +
+      jlPreludeSql + semanticTwinCtes +
+      tokCtes("aug") + qualityGateSql() + exactDedupSql() + nearDupSql("q2", matSh3 = false) +
       // ── the PROJECTED semantic rung: quantize → ±1/0 fold → 16-dim
       //    lists; then assignment / pairs / CC / keep-the-outlier exactly
       //    as the unprojected oracle, over the projected space
       "sem0 AS (SELECT q3.doc_id AS id, a.v FROM q3 JOIN aug a ON a.doc_id = q3.doc_id), " +
       "semq AS (SELECT id, generate_subscripts(v, 1) - 1 AS d0, " +
       "CAST(floor(unnest(v) * 1024 + 0.5) AS BIGINT) AS qv FROM sem0), " +
-      "semp AS (SELECT semq.id AS id, w.j AS j, CAST(sum(qv * wt) AS DOUBLE) AS o " +
-      "FROM semq JOIN w ON semq.d0 = w.d0 GROUP BY semq.id, w.j), " +
-      "sememb AS MATERIALIZED (SELECT id, list(o ORDER BY j) AS v FROM semp GROUP BY id), " +
-      "sasg AS MATERIALIZED (SELECT id, l, cc FROM (SELECT s2.id, ls.l, " +
-      "list_cosine_similarity(s2.v, cents[ls.l+1]) AS cc, " +
-      "ROW_NUMBER() OVER (PARTITION BY s2.id ORDER BY " +
-      "list_cosine_similarity(s2.v, cents[ls.l+1]) DESC, ls.l) AS rk " +
-      "FROM sememb s2, ls, co) WHERE rk = 1), " +
-      "sj AS MATERIALIZED (SELECT ax.id AS id_a, ay.id AS id_b " +
-      "FROM sasg ax JOIN sasg ay ON ax.l = ay.l AND ax.id < ay.id " +
-      "JOIN sememb x ON x.id = ax.id JOIN sememb y ON y.id = ay.id " +
-      "WHERE list_cosine_similarity(x.v, y.v) >= 0.9), " +
-      "se AS (SELECT id_a AS src, id_b AS dst FROM sj UNION ALL SELECT id_b, id_a FROM sj), " +
-      "sr AS (SELECT src AS id, src AS label FROM se " +
-      "UNION SELECT se.dst AS id, sr.label FROM sr JOIN se ON se.src = sr.id), " +
-      "slab AS (SELECT id, min(label) AS label FROM sr GROUP BY id), " +
-      "sranked AS (SELECT slab.id, ROW_NUMBER() OVER (PARTITION BY slab.label " +
-      "ORDER BY sasg.cc ASC, slab.id ASC) AS rk FROM slab JOIN sasg ON sasg.id = slab.id), " +
-      "q3s AS (SELECT * FROM q3 WHERE doc_id NOT IN (SELECT id FROM sranked WHERE rk > 1)), " +
+      jlProjectSql + semanticRungSql(q3sMat = false) +
       pipelineTailSql("q3s") +
-      "SELECT (SELECT count(*) FROM aug) AS n_input, " +
-      "(SELECT count(*) FROM q1) AS n_quality, " +
-      "(SELECT count(*) FROM q2) AS n_exact_dedup, " +
-      "(SELECT count(*) FROM q3) AS n_near_dedup, " +
-      "(SELECT count(*) FROM q3s) AS n_semantic_dedup, " +
-      "(SELECT count(*) FROM q3s) AS n_decontaminated, " +
-      "(SELECT CAST(sum(doc_id) AS BIGINT) FROM q3s) AS id_checksum, " +
-      "(SELECT CAST(sum(length(rt)) AS BIGINT) FROM red) AS text_len_sum, " +
-      "(SELECT count(*) FROM sp WHERE split='train') AS n_train, " +
-      "(SELECT count(*) FROM sp WHERE split='val') AS n_val, " +
-      "(SELECT count(*) FROM sp WHERE split='test') AS n_test, " +
-      "(SELECT count(*) FROM ck) AS n_chunks, " +
-      "(SELECT CAST(sum(n) AS BIGINT) FROM ck) AS chunk_token_sum"
-  }
+      pipelineStatsSql("aug", semanticStages)
 
   /** Ground truth for q_corpus_pipeline_fuzzy: the plain-config chain
     * (quality/lang gate → exact dedup → trigram near-dup CC at 0.8 →
@@ -3502,10 +3414,9 @@ object SparkEntry {
     * trigram Jaccard ≥ 0.4 against ANY benchmark doc drops — over the
     * documents fixture plus the marker-inserted reworded twins (exactly
     * the Spark side's construction, restated in SQL). */
-  private lazy val corpusPipelineFuzzyOracle: String = {
-    def gram8(src: String): String = gram8CteSql(src)
+  private lazy val corpusPipelineFuzzyOracle: String =
     "WITH RECURSIVE " +
-      "d0 AS (SELECT doc_id, text, regexp_split_to_array(trim(regexp_replace(lower(text),'[^a-z0-9]+',' ','g')),'\\s+') AS t FROM documents), " +
+      s"d0 AS (SELECT doc_id, text, regexp_split_to_array($normTextSql,'\\s+') AS t FROM documents), " +
       // reworded twins: a per-doc marker token after every 7th normalized
       // token — the marker uses the ORIGINAL doc_id (inner select), the
       // id offset applies outside, exactly as the Spark side's two-step
@@ -3518,91 +3429,33 @@ object SparkEntry {
       "FROM d0 WHERE doc_id % 50 = 0)), " +
       "aug AS MATERIALIZED (SELECT doc_id, text FROM documents UNION ALL SELECT doc_id, text FROM tw), " +
       "btok AS (SELECT doc_id, t FROM d0 WHERE doc_id % 50 = 0), " +
-      "base AS (SELECT doc_id, text, trim(regexp_replace(lower(text),'[^a-z0-9]+',' ','g')) AS norm FROM aug), " +
-      "tok AS MATERIALIZED (SELECT doc_id, text, norm, regexp_split_to_array(norm,'\\s+') AS t FROM base), " +
-      pipelineLangCteSql +
-      "q1 AS MATERIALIZED (SELECT tok.doc_id AS doc_id, tok.text AS text, tok.norm AS norm, tok.t AS t " +
-      "FROM tok JOIN lang ON tok.doc_id = lang.doc_id " +
-      "WHERE len(tok.t) BETWEEN 10 AND 100000 " +
-      "AND length(regexp_replace(tok.text,'[^A-Za-z]','','g'))*1.0/greatest(length(tok.text),1) >= 0.4 " +
-      "AND lang.lang = 'en'), " +
-      "q2 AS (SELECT * FROM q1 WHERE doc_id IN (SELECT min(doc_id) FROM q1 GROUP BY norm)), " +
-      "sh3 AS MATERIALIZED (SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(t)-1,1)), " +
-      "i -> t[i]||' '||t[i+1]||' '||t[i+2])) AS sh FROM q2), " +
-      "j AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM sh3 a JOIN sh3 b ON a.doc_id < b.doc_id " +
-      "WHERE len(list_intersect(a.sh,b.sh))*1.0/greatest(len(list_distinct(list_concat(a.sh,b.sh))),1) >= 0.8), " +
-      "e AS (SELECT id_a AS src, id_b AS dst FROM j UNION ALL SELECT id_b, id_a FROM j), " +
-      "r AS (SELECT src AS id, src AS label FROM e UNION SELECT e.dst AS id, r.label FROM r JOIN e ON e.src = r.id), " +
-      "lab AS (SELECT id, min(label) AS label FROM r GROUP BY id), " +
-      "q3 AS MATERIALIZED (SELECT * FROM q2 WHERE doc_id NOT IN (SELECT id FROM lab WHERE label <> id)), " +
-      s"sh8c AS (${gram8("q3")}), " +
-      s"sh8b AS (${gram8("btok")}), " +
-      "cont AS (SELECT DISTINCT c.doc_id AS doc_id FROM sh8c c JOIN sh8b b ON len(list_intersect(c.sh,b.sh)) > 0), " +
-      "q4 AS MATERIALIZED (SELECT * FROM q3 WHERE doc_id NOT IN (SELECT doc_id FROM cont)), " +
+      plainChainSql("aug", threshold = 0.8) + deconSql("q3") +
       // fuzzy stage: trigram Jaccard >= 0.4 against any benchmark doc —
       // trigrams of the surviving corpus side reuse sh3 (text is
       // unchanged through the dedup stages)
-      "sh3b AS (SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(t)-1,1)), " +
-      "i -> t[i]||' '||t[i+1]||' '||t[i+2])) AS sh FROM btok), " +
+      s"sh3b AS (SELECT doc_id, ${trigramsSql("t")} AS sh FROM btok), " +
       "fcont AS (SELECT DISTINCT c.doc_id AS doc_id FROM sh3 c JOIN sh3b b ON " +
-      "c.doc_id IN (SELECT doc_id FROM q4) AND " +
-      "len(list_intersect(c.sh,b.sh))*1.0/greatest(len(list_distinct(list_concat(c.sh,b.sh))),1) >= 0.4), " +
+      s"c.doc_id IN (SELECT doc_id FROM q4) AND ${jaccardSql("c", "b")} >= 0.4), " +
       "q5 AS (SELECT * FROM q4 WHERE doc_id NOT IN (SELECT doc_id FROM fcont)), " +
       pipelineTailSql("q5") +
-      "SELECT (SELECT count(*) FROM aug) AS n_input, " +
-      "(SELECT count(*) FROM q1) AS n_quality, " +
-      "(SELECT count(*) FROM q2) AS n_exact_dedup, " +
-      "(SELECT count(*) FROM q3) AS n_near_dedup, " +
-      "(SELECT count(*) FROM q4) AS n_decontaminated, " +
-      "(SELECT count(*) FROM q5) AS n_decontaminated_fuzzy, " +
-      "(SELECT CAST(sum(doc_id) AS BIGINT) FROM q5) AS id_checksum, " +
-      "(SELECT CAST(sum(length(rt)) AS BIGINT) FROM red) AS text_len_sum, " +
-      "(SELECT count(*) FROM sp WHERE split='train') AS n_train, " +
-      "(SELECT count(*) FROM sp WHERE split='val') AS n_val, " +
-      "(SELECT count(*) FROM sp WHERE split='test') AS n_test, " +
-      "(SELECT count(*) FROM ck) AS n_chunks, " +
-      "(SELECT CAST(sum(n) AS BIGINT) FROM ck) AS chunk_token_sum"
-  }
+      pipelineStatsSql("aug", Seq("quality" -> "q1", "exact_dedup" -> "q2",
+        "near_dedup" -> "q3", "decontaminated" -> "q4", "decontaminated_fuzzy" -> "q5"))
 
   /** Ground truth for q_corpus_pipeline_dsir: the plain-config chain
     * (quality/lang gate → exact dedup → trigram near-dup CC at 0.5 →
     * exact 8-gram decontamination) extended with the DSIR selection
     * rung — the FrozenDsir scaled-long fold over the survivors' tokens,
     * the md5-Gumbel key, (z DESC, id) top-150 — over the
-    * filler-augmented documents fixture (benchmark = its %50 slice).
+    * filler-augmented documents fixture (benchmark = the raw %50 slice).
     * The weight table and filler are the SAME literals the Spark side
     * serves (DsirOracle discipline). */
   private lazy val corpusPipelineDsirOracle: String = {
-    def gram8(src: String): String = gram8CteSql(src)
     val m = graft.operators.FrozenDsir.model
     val w = m.weightsScaled.mkString("[", ",", "]") + "::BIGINT[]"
-    val filler = QmOracle.fillerSuffix
-    require(!filler.contains("'"), "filler must be quote-free")
     "WITH RECURSIVE " +
-      s"aug AS MATERIALIZED (SELECT doc_id, CASE WHEN doc_id % 2 = 0 THEN text || '$filler' ELSE text END AS text FROM documents), " +
       // benchmark = the RAW %50 slice (no filler — see the Spark side)
-      "btok AS (SELECT doc_id, regexp_split_to_array(trim(regexp_replace(lower(text),'[^a-z0-9]+',' ','g')),'\\s+') AS t FROM documents WHERE doc_id % 50 = 0), " +
-      "base AS (SELECT doc_id, text, trim(regexp_replace(lower(text),'[^a-z0-9]+',' ','g')) AS norm FROM aug), " +
-      "tok AS MATERIALIZED (SELECT doc_id, text, norm, regexp_split_to_array(norm,'\\s+') AS t FROM base), " +
-      pipelineLangCteSql +
-      "q1 AS MATERIALIZED (SELECT tok.doc_id AS doc_id, tok.text AS text, tok.norm AS norm, tok.t AS t " +
-      "FROM tok JOIN lang ON tok.doc_id = lang.doc_id " +
-      "WHERE len(tok.t) BETWEEN 10 AND 100000 " +
-      "AND length(regexp_replace(tok.text,'[^A-Za-z]','','g'))*1.0/greatest(length(tok.text),1) >= 0.4 " +
-      "AND lang.lang = 'en'), " +
-      "q2 AS (SELECT * FROM q1 WHERE doc_id IN (SELECT min(doc_id) FROM q1 GROUP BY norm)), " +
-      "sh3 AS MATERIALIZED (SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(t)-1,1)), " +
-      "i -> t[i]||' '||t[i+1]||' '||t[i+2])) AS sh FROM q2), " +
-      "j AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM sh3 a JOIN sh3 b ON a.doc_id < b.doc_id " +
-      "WHERE len(list_intersect(a.sh,b.sh))*1.0/greatest(len(list_distinct(list_concat(a.sh,b.sh))),1) >= 0.5), " +
-      "e AS (SELECT id_a AS src, id_b AS dst FROM j UNION ALL SELECT id_b, id_a FROM j), " +
-      "r AS (SELECT src AS id, src AS label FROM e UNION SELECT e.dst AS id, r.label FROM r JOIN e ON e.src = r.id), " +
-      "lab AS (SELECT id, min(label) AS label FROM r GROUP BY id), " +
-      "q3 AS MATERIALIZED (SELECT * FROM q2 WHERE doc_id NOT IN (SELECT id FROM lab WHERE label <> id)), " +
-      s"sh8c AS (${gram8("q3")}), " +
-      s"sh8b AS (${gram8("btok")}), " +
-      "cont AS (SELECT DISTINCT c.doc_id AS doc_id FROM sh8c c JOIN sh8b b ON len(list_intersect(c.sh,b.sh)) > 0), " +
-      "q4 AS MATERIALIZED (SELECT * FROM q3 WHERE doc_id NOT IN (SELECT doc_id FROM cont)), " +
+      fillerAugCte + benchTokCte() +
+      plainChainSql("aug") + deconSql("q3") +
       // DSIR rung: FrozenDsir fold over the survivors' filtered tokens
       // (unigrams ++ bigrams), md5-Gumbel key, (z DESC, id) top-150 —
       // the DsirOracle restatement applied to q4 instead of documents
@@ -3619,21 +3472,13 @@ object SparkEntry {
       "sel AS (SELECT doc_id FROM keyed ORDER BY z DESC, doc_id LIMIT 150), " +
       "q5 AS (SELECT * FROM q4 WHERE doc_id IN (SELECT doc_id FROM sel)), " +
       pipelineTailSql("q5") +
-      "SELECT (SELECT count(*) FROM aug) AS n_input, " +
-      "(SELECT count(*) FROM q1) AS n_quality, " +
-      "(SELECT count(*) FROM q2) AS n_exact_dedup, " +
-      "(SELECT count(*) FROM q3) AS n_near_dedup, " +
-      "(SELECT count(*) FROM q4) AS n_decontaminated, " +
-      "(SELECT count(*) FROM q5) AS n_dsir_selected, " +
-      "(SELECT CAST(sum(doc_id) AS BIGINT) FROM q5) AS id_checksum, " +
-      "(SELECT CAST(sum(length(rt)) AS BIGINT) FROM red) AS text_len_sum, " +
-      "(SELECT CAST(sum(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) FROM q5) AS n_target, " +
-      "(SELECT count(*) FROM sp WHERE split='train') AS n_train, " +
-      "(SELECT count(*) FROM sp WHERE split='val') AS n_val, " +
-      "(SELECT count(*) FROM sp WHERE split='test') AS n_test, " +
-      "(SELECT count(*) FROM ck) AS n_chunks, " +
-      "(SELECT CAST(sum(n) AS BIGINT) FROM ck) AS chunk_token_sum"
+      pipelineStatsSql("aug", Seq("quality" -> "q1", "exact_dedup" -> "q2",
+        "near_dedup" -> "q3", "decontaminated" -> "q4", "dsir_selected" -> "q5"),
+        extra = Seq(nTargetSql("q5")))
   }
+
+  private val decontaminatedStages = Seq("quality" -> "q1", "exact_dedup" -> "q2",
+    "near_dedup" -> "q3", "decontaminated" -> "q4")
 
   /** Ground truth for q_corpus_pipeline_model: the filler-augmented
     * fixture chain (the dsir oracle's skeleton) with the MODEL gate
@@ -3642,61 +3487,25 @@ object SparkEntry {
     * hash, exact integer sum, mean + bias — the QmOracle restatement)
     * at minLogit=0 — and no selection rung. */
   private lazy val corpusPipelineModelOracle: String = {
-    def gram8(src: String): String = gram8CteSql(src)
     val m = graft.operators.FrozenQualityModel.model
     val w = m.weightsScaled.mkString("[", ",", "]") + "::BIGINT[]"
     val scale = graft.operators.QualityModel.WeightScale
-    val filler = QmOracle.fillerSuffix
-    require(!filler.contains("'"), "filler must be quote-free")
-    "WITH RECURSIVE " +
-      s"aug AS MATERIALIZED (SELECT doc_id, CASE WHEN doc_id % 2 = 0 THEN text || '$filler' ELSE text END AS text FROM documents), " +
-      "btok AS (SELECT doc_id, regexp_split_to_array(trim(regexp_replace(lower(text),'[^a-z0-9]+',' ','g')),'\\s+') AS t FROM documents WHERE doc_id % 50 = 0), " +
-      "base AS (SELECT doc_id, text, trim(regexp_replace(lower(text),'[^a-z0-9]+',' ','g')) AS norm FROM aug), " +
-      "tok AS MATERIALIZED (SELECT doc_id, text, norm, regexp_split_to_array(norm,'\\s+') AS t FROM base), " +
-      pipelineLangCteSql +
-      // the model gate: FrozenQualityModel fold over the FILTERED tokens
-      // (normTokens drops empties), exact long sum, mean + bias
-      s"mw AS (SELECT $w AS w), " +
+    // the model gate: FrozenQualityModel fold over the FILTERED tokens
+    // (normTokens drops empties), exact long sum, mean + bias
+    val gate = s"mw AS (SELECT $w AS w), " +
       "mft AS (SELECT doc_id, unnest(list_filter(t, x -> x <> '')) AS tok FROM tok), " +
       s"mpt AS (SELECT doc_id, w[CAST(CAST(concat('0x', substr(md5(tok),1,8)) AS BIGINT) % ${m.dim} AS INT) + 1] AS wt FROM mft, mw), " +
       "msw AS (SELECT doc_id, CAST(sum(wt) AS BIGINT) AS s FROM mpt GROUP BY doc_id), " +
       s"mlg AS (SELECT tok.doc_id AS doc_id, ${java.lang.Double.toString(m.bias)} + " +
       s"(CAST(COALESCE(msw.s, 0) AS DOUBLE) / ${java.lang.Double.toString(scale.toDouble)}) / " +
       "CAST(greatest(len(list_filter(tok.t, x -> x <> '')), 1) AS DOUBLE) AS logit " +
-      "FROM tok LEFT JOIN msw ON tok.doc_id = msw.doc_id), " +
-      "q1 AS MATERIALIZED (SELECT tok.doc_id AS doc_id, tok.text AS text, tok.norm AS norm, tok.t AS t " +
-      "FROM tok JOIN lang ON tok.doc_id = lang.doc_id " +
-      "JOIN mlg ON tok.doc_id = mlg.doc_id " +
-      "WHERE len(tok.t) BETWEEN 10 AND 100000 " +
-      "AND length(regexp_replace(tok.text,'[^A-Za-z]','','g'))*1.0/greatest(length(tok.text),1) >= 0.4 " +
-      "AND lang.lang = 'en' AND mlg.logit >= 0.0), " +
-      "q2 AS (SELECT * FROM q1 WHERE doc_id IN (SELECT min(doc_id) FROM q1 GROUP BY norm)), " +
-      "sh3 AS MATERIALIZED (SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(t)-1,1)), " +
-      "i -> t[i]||' '||t[i+1]||' '||t[i+2])) AS sh FROM q2), " +
-      "j AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM sh3 a JOIN sh3 b ON a.doc_id < b.doc_id " +
-      "WHERE len(list_intersect(a.sh,b.sh))*1.0/greatest(len(list_distinct(list_concat(a.sh,b.sh))),1) >= 0.5), " +
-      "e AS (SELECT id_a AS src, id_b AS dst FROM j UNION ALL SELECT id_b, id_a FROM j), " +
-      "r AS (SELECT src AS id, src AS label FROM e UNION SELECT e.dst AS id, r.label FROM r JOIN e ON e.src = r.id), " +
-      "lab AS (SELECT id, min(label) AS label FROM r GROUP BY id), " +
-      "q3 AS MATERIALIZED (SELECT * FROM q2 WHERE doc_id NOT IN (SELECT id FROM lab WHERE label <> id)), " +
-      s"sh8c AS (${gram8("q3")}), " +
-      s"sh8b AS (${gram8("btok")}), " +
-      "cont AS (SELECT DISTINCT c.doc_id AS doc_id FROM sh8c c JOIN sh8b b ON len(list_intersect(c.sh,b.sh)) > 0), " +
-      "q4 AS MATERIALIZED (SELECT * FROM q3 WHERE doc_id NOT IN (SELECT doc_id FROM cont)), " +
+      "FROM tok LEFT JOIN msw ON tok.doc_id = msw.doc_id), "
+    "WITH RECURSIVE " +
+      fillerAugCte + benchTokCte() + tokCtes("aug") +
+      qualityGateSql(pre = gate, join = "mlg", pred = "mlg.logit >= 0.0") +
+      exactDedupSql() + nearDupSql("q2") + deconSql("q3") +
       pipelineTailSql("q4") +
-      "SELECT (SELECT count(*) FROM aug) AS n_input, " +
-      "(SELECT count(*) FROM q1) AS n_quality, " +
-      "(SELECT count(*) FROM q2) AS n_exact_dedup, " +
-      "(SELECT count(*) FROM q3) AS n_near_dedup, " +
-      "(SELECT count(*) FROM q4) AS n_decontaminated, " +
-      "(SELECT CAST(sum(doc_id) AS BIGINT) FROM q4) AS id_checksum, " +
-      "(SELECT CAST(sum(length(rt)) AS BIGINT) FROM red) AS text_len_sum, " +
-      "(SELECT CAST(sum(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) FROM q4) AS n_target, " +
-      "(SELECT count(*) FROM sp WHERE split='train') AS n_train, " +
-      "(SELECT count(*) FROM sp WHERE split='val') AS n_val, " +
-      "(SELECT count(*) FROM sp WHERE split='test') AS n_test, " +
-      "(SELECT count(*) FROM ck) AS n_chunks, " +
-      "(SELECT CAST(sum(n) AS BIGINT) FROM ck) AS chunk_token_sum"
+      pipelineStatsSql("aug", decontaminatedStages, extra = Seq(nTargetSql("q4")))
   }
 
   /** Ground truth for q_corpus_pipeline_ppl: the filler-augmented
@@ -3706,607 +3515,186 @@ object SparkEntry {
     * three-LEFT-JOIN COALESCE restatement the standalone oracle uses)
     * gated by the exact integer comparison score ≥ ⌊−3.0·1e9⌋·n. */
   private lazy val corpusPipelinePplOracle: String = {
-    def gram8(src: String): String = gram8CteSql(src)
     val thrScaled = math.round(PplMinMeanLog * graft.operators.NgramLm.WeightScale)
-    val filler = QmOracle.fillerSuffix
-    require(!filler.contains("'"), "filler must be quote-free")
-    "WITH RECURSIVE " +
-      s"aug AS MATERIALIZED (SELECT doc_id, CASE WHEN doc_id % 2 = 0 THEN text || '$filler' ELSE text END AS text FROM documents), " +
-      "btok AS (SELECT doc_id, regexp_split_to_array(trim(regexp_replace(lower(text),'[^a-z0-9]+',' ','g')),'\\s+') AS t FROM documents WHERE doc_id % 50 = 0), " +
-      "base AS (SELECT doc_id, text, trim(regexp_replace(lower(text),'[^a-z0-9]+',' ','g')) AS norm FROM aug), " +
-      "tok AS MATERIALIZED (SELECT doc_id, text, norm, regexp_split_to_array(norm,'\\s+') AS t FROM base), " +
-      pipelineLangCteSql +
-      // the perplexity gate: FrozenNgramLm backoff fold over the
-      // FILTERED tokens, exact integer threshold decision
-      "nlm_ft AS (SELECT doc_id, list_filter(t, x -> x <> '') AS ft FROM tok), " +
+    // the perplexity gate: FrozenNgramLm backoff fold over the FILTERED
+    // tokens, exact integer threshold decision
+    val gate = "nlm_ft AS (SELECT doc_id, list_filter(t, x -> x <> '') AS ft FROM tok), " +
       NgramLmOracle.scoreCteChain("nlm_ft") + ", " +
       "ngate AS (SELECT f.doc_id AS doc_id, " +
       s"COALESCE(sw.score, 0) >= $thrScaled * len(f.ft) AS pass " +
-      "FROM nlm_ft f LEFT JOIN nlm_sw sw ON f.doc_id = sw.doc_id), " +
-      "q1 AS MATERIALIZED (SELECT tok.doc_id AS doc_id, tok.text AS text, tok.norm AS norm, tok.t AS t " +
-      "FROM tok JOIN lang ON tok.doc_id = lang.doc_id " +
-      "JOIN ngate ON tok.doc_id = ngate.doc_id " +
-      "WHERE len(tok.t) BETWEEN 10 AND 100000 " +
-      "AND length(regexp_replace(tok.text,'[^A-Za-z]','','g'))*1.0/greatest(length(tok.text),1) >= 0.4 " +
-      "AND lang.lang = 'en' AND ngate.pass), " +
-      "q2 AS (SELECT * FROM q1 WHERE doc_id IN (SELECT min(doc_id) FROM q1 GROUP BY norm)), " +
-      "sh3 AS MATERIALIZED (SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(t)-1,1)), " +
-      "i -> t[i]||' '||t[i+1]||' '||t[i+2])) AS sh FROM q2), " +
-      "j AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM sh3 a JOIN sh3 b ON a.doc_id < b.doc_id " +
-      "WHERE len(list_intersect(a.sh,b.sh))*1.0/greatest(len(list_distinct(list_concat(a.sh,b.sh))),1) >= 0.5), " +
-      "e AS (SELECT id_a AS src, id_b AS dst FROM j UNION ALL SELECT id_b, id_a FROM j), " +
-      "r AS (SELECT src AS id, src AS label FROM e UNION SELECT e.dst AS id, r.label FROM r JOIN e ON e.src = r.id), " +
-      "lab AS (SELECT id, min(label) AS label FROM r GROUP BY id), " +
-      "q3 AS MATERIALIZED (SELECT * FROM q2 WHERE doc_id NOT IN (SELECT id FROM lab WHERE label <> id)), " +
-      s"sh8c AS (${gram8("q3")}), " +
-      s"sh8b AS (${gram8("btok")}), " +
-      "cont AS (SELECT DISTINCT c.doc_id AS doc_id FROM sh8c c JOIN sh8b b ON len(list_intersect(c.sh,b.sh)) > 0), " +
-      "q4 AS MATERIALIZED (SELECT * FROM q3 WHERE doc_id NOT IN (SELECT doc_id FROM cont)), " +
+      "FROM nlm_ft f LEFT JOIN nlm_sw sw ON f.doc_id = sw.doc_id), "
+    "WITH RECURSIVE " +
+      fillerAugCte + benchTokCte() + tokCtes("aug") +
+      qualityGateSql(pre = gate, join = "ngate", pred = "ngate.pass") +
+      exactDedupSql() + nearDupSql("q2") + deconSql("q3") +
       pipelineTailSql("q4") +
-      "SELECT (SELECT count(*) FROM aug) AS n_input, " +
-      "(SELECT count(*) FROM q1) AS n_quality, " +
-      "(SELECT count(*) FROM q2) AS n_exact_dedup, " +
-      "(SELECT count(*) FROM q3) AS n_near_dedup, " +
-      "(SELECT count(*) FROM q4) AS n_decontaminated, " +
-      "(SELECT CAST(sum(doc_id) AS BIGINT) FROM q4) AS id_checksum, " +
-      "(SELECT CAST(sum(length(rt)) AS BIGINT) FROM red) AS text_len_sum, " +
-      "(SELECT CAST(sum(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) FROM q4) AS n_target, " +
-      "(SELECT count(*) FROM sp WHERE split='train') AS n_train, " +
-      "(SELECT count(*) FROM sp WHERE split='val') AS n_val, " +
-      "(SELECT count(*) FROM sp WHERE split='test') AS n_test, " +
-      "(SELECT count(*) FROM ck) AS n_chunks, " +
-      "(SELECT CAST(sum(n) AS BIGINT) FROM ck) AS chunk_token_sum"
+      pipelineStatsSql("aug", decontaminatedStages, extra = Seq(nTargetSql("q4")))
   }
 
   /** Ground truth for q_corpus_pipeline_mix: the plain chain over raw
     * documents (source carried through) with the TRAINING-MIX TAIL —
     * the per-source cap (row_number ≤ 15 by token count desc, id asc)
     * after q1, the token-share rate derivation re-run in SQL after q4
-    * (the q_token_mix float discipline: c = min(toks/w), round(·,4),
-    * thresholdHex as hex()), and the greedy packing recursion (the
+    * ([[mixRungSql]]), and the greedy packing recursion (the
     * q_packed_examples pattern) over the tail's chunk windows. */
-  private lazy val corpusPipelineMixOracle: String = {
-    def gram8(src: String): String = gram8CteSql(src)
+  private lazy val corpusPipelineMixOracle: String =
     "WITH RECURSIVE " +
       "aug AS (SELECT doc_id, text, source FROM documents), " +
-      "btok AS (SELECT doc_id, regexp_split_to_array(trim(regexp_replace(lower(text),'[^a-z0-9]+',' ','g')),'\\s+') AS t FROM documents WHERE doc_id % 50 = 0), " +
-      "base AS (SELECT doc_id, text, source, trim(regexp_replace(lower(text),'[^a-z0-9]+',' ','g')) AS norm FROM aug), " +
-      "tok AS MATERIALIZED (SELECT doc_id, text, source, norm, regexp_split_to_array(norm,'\\s+') AS t FROM base), " +
-      pipelineLangCteSql +
-      "q1 AS MATERIALIZED (SELECT tok.doc_id AS doc_id, tok.text AS text, tok.source AS source, tok.norm AS norm, tok.t AS t " +
-      "FROM tok JOIN lang ON tok.doc_id = lang.doc_id " +
-      "WHERE len(tok.t) BETWEEN 10 AND 100000 " +
-      "AND length(regexp_replace(tok.text,'[^A-Za-z]','','g'))*1.0/greatest(length(tok.text),1) >= 0.4 " +
-      "AND lang.lang = 'en'), " +
+      benchTokCte() + tokCtes("aug", Seq("source")) + qualityGateSql(carry = Seq("source")) +
       // per-source cap: best-first by token count, ties by ascending id
       "qc AS MATERIALIZED (SELECT doc_id, text, source, norm, t FROM " +
       "(SELECT q1.*, ROW_NUMBER() OVER (PARTITION BY source ORDER BY len(t) DESC, doc_id ASC) AS rk FROM q1) " +
       "WHERE rk <= 15), " +
-      "q2 AS (SELECT * FROM qc WHERE doc_id IN (SELECT min(doc_id) FROM qc GROUP BY norm)), " +
-      "sh3 AS MATERIALIZED (SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(t)-1,1)), " +
-      "i -> t[i]||' '||t[i+1]||' '||t[i+2])) AS sh FROM q2), " +
-      "j AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM sh3 a JOIN sh3 b ON a.doc_id < b.doc_id " +
-      "WHERE len(list_intersect(a.sh,b.sh))*1.0/greatest(len(list_distinct(list_concat(a.sh,b.sh))),1) >= 0.5), " +
-      "e AS (SELECT id_a AS src, id_b AS dst FROM j UNION ALL SELECT id_b, id_a FROM j), " +
-      "r AS (SELECT src AS id, src AS label FROM e UNION SELECT e.dst AS id, r.label FROM r JOIN e ON e.src = r.id), " +
-      "lab AS (SELECT id, min(label) AS label FROM r GROUP BY id), " +
-      "q3 AS MATERIALIZED (SELECT * FROM q2 WHERE doc_id NOT IN (SELECT id FROM lab WHERE label <> id)), " +
-      s"sh8c AS (${gram8("q3")}), " +
-      s"sh8b AS (${gram8("btok")}), " +
-      "cont AS (SELECT DISTINCT c.doc_id AS doc_id FROM sh8c c JOIN sh8b b ON len(list_intersect(c.sh,b.sh)) > 0), " +
-      "q4 AS MATERIALIZED (SELECT * FROM q3 WHERE doc_id NOT IN (SELECT doc_id FROM cont)), " +
-      // token-share mix: the q_token_mix derivation over the SURVIVORS'
-      // token mass (zero-mass strata excluded from min and rates)
-      "mshares(s, w) AS (VALUES ('src0', 0.5), ('src1', 0.3), ('src2', 0.2)), " +
-      "mhist AS (SELECT source AS s, CAST(sum(len(t)) AS BIGINT) AS toks " +
-      "FROM q4 WHERE source IN (SELECT s FROM mshares) GROUP BY source HAVING sum(len(t)) > 0), " +
-      "mcst AS (SELECT min(toks / w) AS c FROM mhist JOIN mshares USING (s)), " +
-      "mrates AS (SELECT s, round(least(1.0, c * w / toks), 4) AS rr " +
-      "FROM mhist JOIN mshares USING (s) CROSS JOIN mcst), " +
-      "mth AS (SELECT s, CASE WHEN rr >= 1.0 THEN 'g' ELSE " +
-      "lpad(lower(hex(CAST(least(round(rr * 4294967296.0), 4294967295) AS BIGINT))),8,'0') END AS th FROM mrates), " +
-      "q5 AS MATERIALIZED (SELECT q4.* FROM q4 JOIN mth ON q4.source = mth.s " +
-      "WHERE substr(md5(CAST(q4.doc_id AS VARCHAR)),1,8) < mth.th), " +
-      pipelineTailSql("q5") +
-      packingCtes(256) +
-      "SELECT (SELECT count(*) FROM aug) AS n_input, " +
-      "(SELECT count(*) FROM q1) AS n_quality, " +
-      "(SELECT count(*) FROM qc) AS n_domain_cap, " +
-      "(SELECT count(*) FROM q2) AS n_exact_dedup, " +
-      "(SELECT count(*) FROM q3) AS n_near_dedup, " +
-      "(SELECT count(*) FROM q4) AS n_decontaminated, " +
-      "(SELECT count(*) FROM q5) AS n_mixed, " +
-      "(SELECT CAST(sum(doc_id) AS BIGINT) FROM q5) AS id_checksum, " +
-      "(SELECT CAST(sum(length(rt)) AS BIGINT) FROM red) AS text_len_sum, " +
-      "(SELECT CAST(sum(CASE WHEN source = 'src0' THEN 1 ELSE 0 END) AS BIGINT) FROM q5) AS n_src0, " +
-      "(SELECT CAST(sum(CASE WHEN source = 'src1' THEN 1 ELSE 0 END) AS BIGINT) FROM q5) AS n_src1, " +
-      "(SELECT CAST(sum(CASE WHEN source = 'src2' THEN 1 ELSE 0 END) AS BIGINT) FROM q5) AS n_src2, " +
-      "(SELECT count(*) FROM sp WHERE split='train') AS n_train, " +
-      "(SELECT count(*) FROM sp WHERE split='val') AS n_val, " +
-      "(SELECT count(*) FROM sp WHERE split='test') AS n_test, " +
-      "(SELECT count(*) FROM ck) AS n_chunks, " +
-      "(SELECT CAST(sum(n) AS BIGINT) FROM ck) AS chunk_token_sum, " +
-      "(SELECT count(*) FROM pex) AS n_examples, " +
-      "(SELECT CAST(sum(nchunks) AS BIGINT) FROM pex) AS packed_chunk_sum, " +
-      "(SELECT CAST(sum(ntok) AS BIGINT) FROM pex) AS packed_token_sum"
-  }
+      exactDedupSql("qc") + nearDupSql("q2") + deconSql("q3") +
+      mixRungSql("q4", "t") +
+      pipelineTailSql("q5") + packingCtes(256) +
+      pipelineStatsSql("aug", Seq("quality" -> "q1", "domain_cap" -> "qc",
+        "exact_dedup" -> "q2", "near_dedup" -> "q3", "decontaminated" -> "q4",
+        "mixed" -> "q5"),
+        extra = Seq("src0", "src1", "src2").map(s => countWhereSql(s"source = '$s'", "q5", s"n_$s")),
+        packed = packedStatCols)
+
+  /** The frozen-grid 128-bit image rung ([[imageHamming128Ctes]] pairs
+    * among the stage-3 survivors, recursive-CTE CC, min-id survivor →
+    * q3i) shared by the image and media-decon oracles. */
+  private lazy val imageRungSql: String =
+    imageHamming128Ctes("i", 6) + ", " +
+      mediaRungSql("i", pairsAmongSql("ihm", "hamming <= 6", "q3"), "q3")
 
   /** Ground truth for q_corpus_pipeline_image: the plain chain (quality/
     * lang gate → exact dedup → trigram near-dup CC → decontamination →
     * tail) with the PERCEPTUAL IMAGE stage between near-dup and
-    * decontamination: frozen-grid 128-bit pairs ([[imageHamming128Ctes]])
-    * restricted to stage-3 survivors, recursive-CTE CC, min-id
-    * survivor. */
-  private lazy val corpusPipelineImageOracle: String = {
-    def gram8(src: String): String = gram8CteSql(src)
+    * decontamination ([[imageRungSql]]). */
+  private lazy val corpusPipelineImageOracle: String =
     "WITH RECURSIVE " +
-      "btok AS (SELECT doc_id, regexp_split_to_array(trim(regexp_replace(lower(text),'[^a-z0-9]+',' ','g')),'\\s+') AS t FROM documents WHERE doc_id % 50 = 0), " +
-      "base AS (SELECT doc_id, text, trim(regexp_replace(lower(text),'[^a-z0-9]+',' ','g')) AS norm FROM documents), " +
-      "tok AS MATERIALIZED (SELECT doc_id, text, norm, regexp_split_to_array(norm,'\\s+') AS t FROM base), " +
-      pipelineLangCteSql +
-      "q1 AS MATERIALIZED (SELECT tok.doc_id AS doc_id, tok.text AS text, tok.norm AS norm, tok.t AS t " +
-      "FROM tok JOIN lang ON tok.doc_id = lang.doc_id " +
-      "WHERE len(tok.t) BETWEEN 10 AND 100000 " +
-      "AND length(regexp_replace(tok.text,'[^A-Za-z]','','g'))*1.0/greatest(length(tok.text),1) >= 0.4 " +
-      "AND lang.lang = 'en'), " +
-      "q2 AS (SELECT * FROM q1 WHERE doc_id IN (SELECT min(doc_id) FROM q1 GROUP BY norm)), " +
-      "sh3 AS MATERIALIZED (SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(t)-1,1)), " +
-      "i -> t[i]||' '||t[i+1]||' '||t[i+2])) AS sh FROM q2), " +
-      "j AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM sh3 a JOIN sh3 b ON a.doc_id < b.doc_id " +
-      "WHERE len(list_intersect(a.sh,b.sh))*1.0/greatest(len(list_distinct(list_concat(a.sh,b.sh))),1) >= 0.5), " +
-      "e AS (SELECT id_a AS src, id_b AS dst FROM j UNION ALL SELECT id_b, id_a FROM j), " +
-      "r AS (SELECT src AS id, src AS label FROM e UNION SELECT e.dst AS id, r.label FROM r JOIN e ON e.src = r.id), " +
-      "lab AS (SELECT id, min(label) AS label FROM r GROUP BY id), " +
-      "q3 AS MATERIALIZED (SELECT * FROM q2 WHERE doc_id NOT IN (SELECT id FROM lab WHERE label <> id)), " +
-      imageHamming128Ctes("i", 6) + ", " +
-      // the image stage: frozen-grid pairs among the docs that REACH it
-      "ipair AS (SELECT id_a, id_b FROM ihm WHERE hamming <= 6 " +
-      "AND id_a IN (SELECT doc_id FROM q3) AND id_b IN (SELECT doc_id FROM q3)), " +
-      "ie AS (SELECT id_a AS src, id_b AS dst FROM ipair UNION ALL SELECT id_b, id_a FROM ipair), " +
-      "ir AS (SELECT src AS id, src AS label FROM ie UNION SELECT ie.dst AS id, ir.label FROM ir JOIN ie ON ie.src = ir.id), " +
-      "ilab AS (SELECT id, min(label) AS label FROM ir GROUP BY id), " +
-      "q3i AS MATERIALIZED (SELECT * FROM q3 WHERE doc_id NOT IN (SELECT id FROM ilab WHERE label <> id)), " +
-      s"sh8c AS (${gram8("q3i")}), " +
-      s"sh8b AS (${gram8("btok")}), " +
-      "cont AS (SELECT DISTINCT c.doc_id AS doc_id FROM sh8c c JOIN sh8b b ON len(list_intersect(c.sh,b.sh)) > 0), " +
-      "q4 AS MATERIALIZED (SELECT * FROM q3i WHERE doc_id NOT IN (SELECT doc_id FROM cont)), " +
+      benchTokCte() + plainChainSql("documents") + imageRungSql + deconSql("q3i") +
       pipelineTailSql("q4") +
-      "SELECT (SELECT count(*) FROM documents) AS n_input, " +
-      "(SELECT count(*) FROM q1) AS n_quality, " +
-      "(SELECT count(*) FROM q2) AS n_exact_dedup, " +
-      "(SELECT count(*) FROM q3) AS n_near_dedup, " +
-      "(SELECT count(*) FROM q3i) AS n_image_dedup, " +
-      "(SELECT count(*) FROM q4) AS n_decontaminated, " +
-      "(SELECT CAST(sum(doc_id) AS BIGINT) FROM q4) AS id_checksum, " +
-      "(SELECT CAST(sum(length(rt)) AS BIGINT) FROM red) AS text_len_sum, " +
-      "(SELECT count(*) FROM sp WHERE split='train') AS n_train, " +
-      "(SELECT count(*) FROM sp WHERE split='val') AS n_val, " +
-      "(SELECT count(*) FROM sp WHERE split='test') AS n_test, " +
-      "(SELECT count(*) FROM ck) AS n_chunks, " +
-      "(SELECT CAST(sum(n) AS BIGINT) FROM ck) AS chunk_token_sum"
-  }
+      pipelineStatsSql("documents", Seq("quality" -> "q1", "exact_dedup" -> "q2",
+        "near_dedup" -> "q3", "image_dedup" -> "q3i", "decontaminated" -> "q4"))
 
   /** Ground truth for q_corpus_pipeline_media_decon: the image-variant
     * chain ([[corpusPipelineImageOracle]]'s stages verbatim) plus the
     * MEDIA-DECONTAMINATION stage after text decon — ground-truth
     * ALL-PAIRS 64-bit dHash Hamming between every frozen grid and the
     * benchmark subset (media_id % 5 = 0), the
-    * [[mediaContaminationOracle]] construction with no banding at all. */
-  private lazy val corpusPipelineMediaDeconOracle: String = {
-    def gram8(src: String): String = gram8CteSql(src)
-    val mediaRows = graft.operators.FrozenImageGrids.grids
-      .map { case (id, g) => s"($id, ${g.mkString("[", ",", "]")})" }
-      .mkString(", ")
+    * [[mediaContaminationOracle]] construction ([[benchHammingCtes]]). */
+  private lazy val corpusPipelineMediaDeconOracle: String =
     "WITH RECURSIVE " +
-      "btok AS (SELECT doc_id, regexp_split_to_array(trim(regexp_replace(lower(text),'[^a-z0-9]+',' ','g')),'\\s+') AS t FROM documents WHERE doc_id % 50 = 0), " +
-      "base AS (SELECT doc_id, text, trim(regexp_replace(lower(text),'[^a-z0-9]+',' ','g')) AS norm FROM documents), " +
-      "tok AS MATERIALIZED (SELECT doc_id, text, norm, regexp_split_to_array(norm,'\\s+') AS t FROM base), " +
-      pipelineLangCteSql +
-      "q1 AS MATERIALIZED (SELECT tok.doc_id AS doc_id, tok.text AS text, tok.norm AS norm, tok.t AS t " +
-      "FROM tok JOIN lang ON tok.doc_id = lang.doc_id " +
-      "WHERE len(tok.t) BETWEEN 10 AND 100000 " +
-      "AND length(regexp_replace(tok.text,'[^A-Za-z]','','g'))*1.0/greatest(length(tok.text),1) >= 0.4 " +
-      "AND lang.lang = 'en'), " +
-      "q2 AS (SELECT * FROM q1 WHERE doc_id IN (SELECT min(doc_id) FROM q1 GROUP BY norm)), " +
-      "sh3 AS MATERIALIZED (SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(t)-1,1)), " +
-      "i -> t[i]||' '||t[i+1]||' '||t[i+2])) AS sh FROM q2), " +
-      "j AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM sh3 a JOIN sh3 b ON a.doc_id < b.doc_id " +
-      "WHERE len(list_intersect(a.sh,b.sh))*1.0/greatest(len(list_distinct(list_concat(a.sh,b.sh))),1) >= 0.5), " +
-      "e AS (SELECT id_a AS src, id_b AS dst FROM j UNION ALL SELECT id_b, id_a FROM j), " +
-      "r AS (SELECT src AS id, src AS label FROM e UNION SELECT e.dst AS id, r.label FROM r JOIN e ON e.src = r.id), " +
-      "lab AS (SELECT id, min(label) AS label FROM r GROUP BY id), " +
-      "q3 AS MATERIALIZED (SELECT * FROM q2 WHERE doc_id NOT IN (SELECT id FROM lab WHERE label <> id)), " +
-      imageHamming128Ctes("i", 6) + ", " +
-      "ipair AS (SELECT id_a, id_b FROM ihm WHERE hamming <= 6 " +
-      "AND id_a IN (SELECT doc_id FROM q3) AND id_b IN (SELECT doc_id FROM q3)), " +
-      "ie AS (SELECT id_a AS src, id_b AS dst FROM ipair UNION ALL SELECT id_b, id_a FROM ipair), " +
-      "ir AS (SELECT src AS id, src AS label FROM ie UNION SELECT ie.dst AS id, ir.label FROM ir JOIN ie ON ie.src = ir.id), " +
-      "ilab AS (SELECT id, min(label) AS label FROM ir GROUP BY id), " +
-      "q3i AS MATERIALIZED (SELECT * FROM q3 WHERE doc_id NOT IN (SELECT id FROM ilab WHERE label <> id)), " +
-      s"sh8c AS (${gram8("q3i")}), " +
-      s"sh8b AS (${gram8("btok")}), " +
-      "cont AS (SELECT DISTINCT c.doc_id AS doc_id FROM sh8c c JOIN sh8b b ON len(list_intersect(c.sh,b.sh)) > 0), " +
-      "q4 AS MATERIALIZED (SELECT * FROM q3i WHERE doc_id NOT IN (SELECT doc_id FROM cont)), " +
-      // ── media decontamination: 64-bit dHash bits from the frozen 9×8
-      // grids, all-pairs Hamming vs the benchmark subset, drop ≤ 6
-      s"mgr(media_id, g) AS (VALUES $mediaRows), " +
-      "mbb AS (SELECT unnest(range(0, 64)) AS b), " +
-      "mbt AS (SELECT media_id, b, CASE WHEN g[(b//8)*9 + (b%8) + 1] > g[(b//8)*9 + (b%8) + 2] THEN 1 ELSE 0 END AS bit FROM mgr, mbb), " +
-      "mbench AS (SELECT media_id, b, bit FROM mbt WHERE media_id % 5 = 0), " +
-      "mham AS (SELECT c.media_id AS corpus_id, mbench.media_id AS bench_id, " +
-      "sum(CASE WHEN c.bit <> mbench.bit THEN 1 ELSE 0 END) AS mh " +
-      "FROM mbt c JOIN mbench ON c.b = mbench.b GROUP BY 1, 2), " +
+      benchTokCte() + plainChainSql("documents") + imageRungSql + deconSql("q3i") +
+      // ── media decontamination: drop docs within Hamming 6 of a
+      // benchmark image
+      benchHammingCtes("m", "media_id % 5 = 0") + ", " +
       "q4m AS MATERIALIZED (SELECT * FROM q4 WHERE doc_id NOT IN " +
       "(SELECT DISTINCT corpus_id FROM mham WHERE mh <= 6)), " +
       pipelineTailSql("q4m") +
-      "SELECT (SELECT count(*) FROM documents) AS n_input, " +
-      "(SELECT count(*) FROM q1) AS n_quality, " +
-      "(SELECT count(*) FROM q2) AS n_exact_dedup, " +
-      "(SELECT count(*) FROM q3) AS n_near_dedup, " +
-      "(SELECT count(*) FROM q3i) AS n_image_dedup, " +
-      "(SELECT count(*) FROM q4) AS n_decontaminated, " +
-      "(SELECT count(*) FROM q4m) AS n_media_decontaminated, " +
-      "(SELECT CAST(sum(doc_id) AS BIGINT) FROM q4m) AS id_checksum, " +
-      "(SELECT CAST(sum(length(rt)) AS BIGINT) FROM red) AS text_len_sum, " +
-      "(SELECT count(*) FROM sp WHERE split='train') AS n_train, " +
-      "(SELECT count(*) FROM sp WHERE split='val') AS n_val, " +
-      "(SELECT count(*) FROM sp WHERE split='test') AS n_test, " +
-      "(SELECT count(*) FROM ck) AS n_chunks, " +
-      "(SELECT CAST(sum(n) AS BIGINT) FROM ck) AS chunk_token_sum"
-  }
+      pipelineStatsSql("documents", Seq("quality" -> "q1", "exact_dedup" -> "q2",
+        "near_dedup" -> "q3", "image_dedup" -> "q3i", "decontaminated" -> "q4",
+        "media_decontaminated" -> "q4m"))
 
   /** Ground truth for q_corpus_pipeline_audio: the plain chain with the
     * AUDIO rung between near-dup and decontamination: analytic-envelope
     * pairs ([[audioHammingCtes]]) restricted to stage-3 survivors,
     * recursive-CTE CC, min-id survivor (the image-variant skeleton). */
-  private lazy val corpusPipelineAudioOracle: String = {
-    def gram8(src: String): String = gram8CteSql(src)
+  private lazy val corpusPipelineAudioOracle: String =
     "WITH RECURSIVE " +
-      "btok AS (SELECT doc_id, regexp_split_to_array(trim(regexp_replace(lower(text),'[^a-z0-9]+',' ','g')),'\\s+') AS t FROM documents WHERE doc_id % 50 = 0), " +
-      "base AS (SELECT doc_id, text, trim(regexp_replace(lower(text),'[^a-z0-9]+',' ','g')) AS norm FROM documents), " +
-      "tok AS MATERIALIZED (SELECT doc_id, text, norm, regexp_split_to_array(norm,'\\s+') AS t FROM base), " +
-      pipelineLangCteSql +
-      "q1 AS MATERIALIZED (SELECT tok.doc_id AS doc_id, tok.text AS text, tok.norm AS norm, tok.t AS t " +
-      "FROM tok JOIN lang ON tok.doc_id = lang.doc_id " +
-      "WHERE len(tok.t) BETWEEN 10 AND 100000 " +
-      "AND length(regexp_replace(tok.text,'[^A-Za-z]','','g'))*1.0/greatest(length(tok.text),1) >= 0.4 " +
-      "AND lang.lang = 'en'), " +
-      "q2 AS (SELECT * FROM q1 WHERE doc_id IN (SELECT min(doc_id) FROM q1 GROUP BY norm)), " +
-      "sh3 AS MATERIALIZED (SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(t)-1,1)), " +
-      "i -> t[i]||' '||t[i+1]||' '||t[i+2])) AS sh FROM q2), " +
-      "j AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM sh3 a JOIN sh3 b ON a.doc_id < b.doc_id " +
-      "WHERE len(list_intersect(a.sh,b.sh))*1.0/greatest(len(list_distinct(list_concat(a.sh,b.sh))),1) >= 0.5), " +
-      "e AS (SELECT id_a AS src, id_b AS dst FROM j UNION ALL SELECT id_b, id_a FROM j), " +
-      "r AS (SELECT src AS id, src AS label FROM e UNION SELECT e.dst AS id, r.label FROM r JOIN e ON e.src = r.id), " +
-      "lab AS (SELECT id, min(label) AS label FROM r GROUP BY id), " +
-      "q3 AS MATERIALIZED (SELECT * FROM q2 WHERE doc_id NOT IN (SELECT id FROM lab WHERE label <> id)), " +
+      benchTokCte() + plainChainSql("documents") +
       audioHammingCtes("a", 4) + ", " +
-      // the audio stage: analytic-envelope pairs among the docs that REACH it
-      "apair AS (SELECT id_a, id_b FROM ahm WHERE hamming <= 4 " +
-      "AND id_a IN (SELECT doc_id FROM q3) AND id_b IN (SELECT doc_id FROM q3)), " +
-      "ae AS (SELECT id_a AS src, id_b AS dst FROM apair UNION ALL SELECT id_b, id_a FROM apair), " +
-      "ar AS (SELECT src AS id, src AS label FROM ae UNION SELECT ae.dst AS id, ar.label FROM ar JOIN ae ON ae.src = ar.id), " +
-      "alab AS (SELECT id, min(label) AS label FROM ar GROUP BY id), " +
-      "q3a AS MATERIALIZED (SELECT * FROM q3 WHERE doc_id NOT IN (SELECT id FROM alab WHERE label <> id)), " +
-      s"sh8c AS (${gram8("q3a")}), " +
-      s"sh8b AS (${gram8("btok")}), " +
-      "cont AS (SELECT DISTINCT c.doc_id AS doc_id FROM sh8c c JOIN sh8b b ON len(list_intersect(c.sh,b.sh)) > 0), " +
-      "q4 AS MATERIALIZED (SELECT * FROM q3a WHERE doc_id NOT IN (SELECT doc_id FROM cont)), " +
-      pipelineTailSql("q4") +
-      "SELECT (SELECT count(*) FROM documents) AS n_input, " +
-      "(SELECT count(*) FROM q1) AS n_quality, " +
-      "(SELECT count(*) FROM q2) AS n_exact_dedup, " +
-      "(SELECT count(*) FROM q3) AS n_near_dedup, " +
-      "(SELECT count(*) FROM q3a) AS n_audio_dedup, " +
-      "(SELECT count(*) FROM q4) AS n_decontaminated, " +
-      "(SELECT CAST(sum(doc_id) AS BIGINT) FROM q4) AS id_checksum, " +
-      "(SELECT CAST(sum(length(rt)) AS BIGINT) FROM red) AS text_len_sum, " +
-      "(SELECT count(*) FROM sp WHERE split='train') AS n_train, " +
-      "(SELECT count(*) FROM sp WHERE split='val') AS n_val, " +
-      "(SELECT count(*) FROM sp WHERE split='test') AS n_test, " +
-      "(SELECT count(*) FROM ck) AS n_chunks, " +
-      "(SELECT CAST(sum(n) AS BIGINT) FROM ck) AS chunk_token_sum"
-  }
+      mediaRungSql("a", pairsAmongSql("ahm", "hamming <= 4", "q3"), "q3") +
+      deconSql("q3a") + pipelineTailSql("q4") +
+      pipelineStatsSql("documents", Seq("quality" -> "q1", "exact_dedup" -> "q2",
+        "near_dedup" -> "q3", "audio_dedup" -> "q3a", "decontaminated" -> "q4"))
 
   /** Ground truth for q_corpus_pipeline_video: the plain chain with the
     * VIDEO rung between near-dup and decontamination: analytic
     * per-frame-grid matched pairs ([[videoMatchCtes]], matched-frame
-    * gate ≥ ceil(0.6·3) = 2) restricted to stage-3 survivors,
-    * recursive-CTE CC, min-id survivor (the image/audio-variant
-    * skeleton). */
-  private lazy val corpusPipelineVideoOracle: String = {
-    def gram8(src: String): String = gram8CteSql(src)
+    * gate ≥ ceil(0.6·3) = 2, i.e. ≥ 2 of 3 aligned frames within 4 bits)
+    * restricted to stage-3 survivors, recursive-CTE CC, min-id survivor
+    * (the image/audio-variant skeleton). */
+  private lazy val corpusPipelineVideoOracle: String =
     "WITH RECURSIVE " +
-      "btok AS (SELECT doc_id, regexp_split_to_array(trim(regexp_replace(lower(text),'[^a-z0-9]+',' ','g')),'\\s+') AS t FROM documents WHERE doc_id % 50 = 0), " +
-      "base AS (SELECT doc_id, text, trim(regexp_replace(lower(text),'[^a-z0-9]+',' ','g')) AS norm FROM documents), " +
-      "tok AS MATERIALIZED (SELECT doc_id, text, norm, regexp_split_to_array(norm,'\\s+') AS t FROM base), " +
-      pipelineLangCteSql +
-      "q1 AS MATERIALIZED (SELECT tok.doc_id AS doc_id, tok.text AS text, tok.norm AS norm, tok.t AS t " +
-      "FROM tok JOIN lang ON tok.doc_id = lang.doc_id " +
-      "WHERE len(tok.t) BETWEEN 10 AND 100000 " +
-      "AND length(regexp_replace(tok.text,'[^A-Za-z]','','g'))*1.0/greatest(length(tok.text),1) >= 0.4 " +
-      "AND lang.lang = 'en'), " +
-      "q2 AS (SELECT * FROM q1 WHERE doc_id IN (SELECT min(doc_id) FROM q1 GROUP BY norm)), " +
-      "sh3 AS MATERIALIZED (SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(t)-1,1)), " +
-      "i -> t[i]||' '||t[i+1]||' '||t[i+2])) AS sh FROM q2), " +
-      "j AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM sh3 a JOIN sh3 b ON a.doc_id < b.doc_id " +
-      "WHERE len(list_intersect(a.sh,b.sh))*1.0/greatest(len(list_distinct(list_concat(a.sh,b.sh))),1) >= 0.5), " +
-      "e AS (SELECT id_a AS src, id_b AS dst FROM j UNION ALL SELECT id_b, id_a FROM j), " +
-      "r AS (SELECT src AS id, src AS label FROM e UNION SELECT e.dst AS id, r.label FROM r JOIN e ON e.src = r.id), " +
-      "lab AS (SELECT id, min(label) AS label FROM r GROUP BY id), " +
-      "q3 AS MATERIALIZED (SELECT * FROM q2 WHERE doc_id NOT IN (SELECT id FROM lab WHERE label <> id)), " +
+      benchTokCte() + plainChainSql("documents") +
       videoMatchCtes("v") + ", " +
-      // the video stage: analytic matched-frame pairs among the docs
-      // that REACH it (≥ 2 of 3 aligned frames within 4 bits)
-      "vpair AS (SELECT id_a, id_b FROM vvm WHERE n_matched >= 2 " +
-      "AND id_a IN (SELECT doc_id FROM q3) AND id_b IN (SELECT doc_id FROM q3)), " +
-      "ve AS (SELECT id_a AS src, id_b AS dst FROM vpair UNION ALL SELECT id_b, id_a FROM vpair), " +
-      "vr AS (SELECT src AS id, src AS label FROM ve UNION SELECT ve.dst AS id, vr.label FROM vr JOIN ve ON ve.src = vr.id), " +
-      "vlab AS (SELECT id, min(label) AS label FROM vr GROUP BY id), " +
-      "q3v AS MATERIALIZED (SELECT * FROM q3 WHERE doc_id NOT IN (SELECT id FROM vlab WHERE label <> id)), " +
-      s"sh8c AS (${gram8("q3v")}), " +
-      s"sh8b AS (${gram8("btok")}), " +
-      "cont AS (SELECT DISTINCT c.doc_id AS doc_id FROM sh8c c JOIN sh8b b ON len(list_intersect(c.sh,b.sh)) > 0), " +
-      "q4 AS MATERIALIZED (SELECT * FROM q3v WHERE doc_id NOT IN (SELECT doc_id FROM cont)), " +
-      pipelineTailSql("q4") +
-      "SELECT (SELECT count(*) FROM documents) AS n_input, " +
-      "(SELECT count(*) FROM q1) AS n_quality, " +
-      "(SELECT count(*) FROM q2) AS n_exact_dedup, " +
-      "(SELECT count(*) FROM q3) AS n_near_dedup, " +
-      "(SELECT count(*) FROM q3v) AS n_video_dedup, " +
-      "(SELECT count(*) FROM q4) AS n_decontaminated, " +
-      "(SELECT CAST(sum(doc_id) AS BIGINT) FROM q4) AS id_checksum, " +
-      "(SELECT CAST(sum(length(rt)) AS BIGINT) FROM red) AS text_len_sum, " +
-      "(SELECT count(*) FROM sp WHERE split='train') AS n_train, " +
-      "(SELECT count(*) FROM sp WHERE split='val') AS n_val, " +
-      "(SELECT count(*) FROM sp WHERE split='test') AS n_test, " +
-      "(SELECT count(*) FROM ck) AS n_chunks, " +
-      "(SELECT CAST(sum(n) AS BIGINT) FROM ck) AS chunk_token_sum"
-  }
+      mediaRungSql("v", pairsAmongSql("vvm", "n_matched >= 2", "q3"), "q3") +
+      deconSql("q3v") + pipelineTailSql("q4") +
+      pipelineStatsSql("documents", Seq("quality" -> "q1", "exact_dedup" -> "q2",
+        "near_dedup" -> "q3", "video_dedup" -> "q3v", "decontaminated" -> "q4"))
 
   /** Ground truth for q_corpus_pipeline_bpe: the plain chain over raw
     * documents, with the TAIL's chunk windows sliced over the FrozenBpe
     * PIECE stream of the redacted text ([[bpePieceCtes]] over the
     * redacted tokens, flattened per doc in token order) and the packing
     * recursion counting those pieces. */
-  private lazy val corpusPipelineBpeOracle: String = {
-    def gram8(src: String): String = gram8CteSql(src)
+  private lazy val corpusPipelineBpeOracle: String =
     "WITH RECURSIVE " +
-      "btok AS (SELECT doc_id, regexp_split_to_array(trim(regexp_replace(lower(text),'[^a-z0-9]+',' ','g')),'\\s+') AS t FROM documents WHERE doc_id % 50 = 0), " +
-      "base AS (SELECT doc_id, text, trim(regexp_replace(lower(text),'[^a-z0-9]+',' ','g')) AS norm FROM documents), " +
-      "tok AS MATERIALIZED (SELECT doc_id, text, norm, regexp_split_to_array(norm,'\\s+') AS t FROM base), " +
-      pipelineLangCteSql +
-      "q1 AS MATERIALIZED (SELECT tok.doc_id AS doc_id, tok.text AS text, tok.norm AS norm, tok.t AS t " +
-      "FROM tok JOIN lang ON tok.doc_id = lang.doc_id " +
-      "WHERE len(tok.t) BETWEEN 10 AND 100000 " +
-      "AND length(regexp_replace(tok.text,'[^A-Za-z]','','g'))*1.0/greatest(length(tok.text),1) >= 0.4 " +
-      "AND lang.lang = 'en'), " +
-      "q2 AS (SELECT * FROM q1 WHERE doc_id IN (SELECT min(doc_id) FROM q1 GROUP BY norm)), " +
-      "sh3 AS MATERIALIZED (SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(t)-1,1)), " +
-      "i -> t[i]||' '||t[i+1]||' '||t[i+2])) AS sh FROM q2), " +
-      "j AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM sh3 a JOIN sh3 b ON a.doc_id < b.doc_id " +
-      "WHERE len(list_intersect(a.sh,b.sh))*1.0/greatest(len(list_distinct(list_concat(a.sh,b.sh))),1) >= 0.5), " +
-      "e AS (SELECT id_a AS src, id_b AS dst FROM j UNION ALL SELECT id_b, id_a FROM j), " +
-      "r AS (SELECT src AS id, src AS label FROM e UNION SELECT e.dst AS id, r.label FROM r JOIN e ON e.src = r.id), " +
-      "lab AS (SELECT id, min(label) AS label FROM r GROUP BY id), " +
-      "q3 AS MATERIALIZED (SELECT * FROM q2 WHERE doc_id NOT IN (SELECT id FROM lab WHERE label <> id)), " +
-      s"sh8c AS (${gram8("q3")}), " +
-      s"sh8b AS (${gram8("btok")}), " +
-      "cont AS (SELECT DISTINCT c.doc_id AS doc_id FROM sh8c c JOIN sh8b b ON len(list_intersect(c.sh,b.sh)) > 0), " +
-      "q4 AS MATERIALIZED (SELECT * FROM q3 WHERE doc_id NOT IN (SELECT doc_id FROM cont)), " +
+      benchTokCte() + plainChainSql("documents") + deconSql("q3") +
       // BPE tail: redact → tokenize → FrozenBpe pieces per distinct word
       // → per-doc piece stream in token order → chunk windows → split
-      s"red AS (SELECT doc_id, $piiRedactSql AS rt FROM q4), " +
-      "rtok AS (SELECT doc_id, list_filter(regexp_split_to_array(trim(regexp_replace(lower(rt),'[^a-z0-9]+',' ','g')),'\\s+'), x -> x <> '') AS t FROM red), " +
+      redactSql("q4") +
       "rtoks AS (SELECT doc_id, unnest(t) AS w, generate_subscripts(t, 1) AS pos FROM rtok), " +
       bpePieceCtes("rtoks") +
       "pstream AS MATERIALIZED (SELECT rtoks.doc_id AS doc_id, flatten(list(ps ORDER BY pos)) AS t " +
       "FROM rtoks JOIN pieces ON rtoks.w = pieces.w GROUP BY rtoks.doc_id), " +
-      "st AS (SELECT doc_id, t, unnest(list_filter(range(0, len(t), 48), s -> s = 0 OR s + 16 < len(t))) AS s FROM pstream WHERE len(t) > 0), " +
-      "ck AS (SELECT doc_id, CAST(s // 48 AS BIGINT) AS chunk_idx, len(list_slice(t, s + 1, s + 64)) AS n FROM st), " +
+      chunkCtes("pstream") +
       // every packed chunk's pieces through the vocab-id arithmetic —
       // summed, this pins the engine-side input_ids end to end
       "cpc AS (SELECT unnest(list_slice(t, s + 1, s + 64)) AS p FROM st), " +
       bpeIdmCte + ", " +
       s"cpid AS (SELECT ${bpePidExpr("p")} AS pid FROM cpc ${bpeIdmJoin("p")}), " +
-      "sp AS (SELECT doc_id, CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)),1,8) < 'e6666666' THEN 'train' " +
-      "WHEN substr(md5(CAST(doc_id AS VARCHAR)),1,8) < 'f3333333' THEN 'val' ELSE 'test' END AS split FROM q4) " +
-      packingCtes(256) +
-      "SELECT (SELECT count(*) FROM documents) AS n_input, " +
-      "(SELECT count(*) FROM q1) AS n_quality, " +
-      "(SELECT count(*) FROM q2) AS n_exact_dedup, " +
-      "(SELECT count(*) FROM q3) AS n_near_dedup, " +
-      "(SELECT count(*) FROM q4) AS n_decontaminated, " +
-      "(SELECT CAST(sum(doc_id) AS BIGINT) FROM q4) AS id_checksum, " +
-      "(SELECT CAST(sum(length(rt)) AS BIGINT) FROM red) AS text_len_sum, " +
-      "(SELECT count(*) FROM sp WHERE split='train') AS n_train, " +
-      "(SELECT count(*) FROM sp WHERE split='val') AS n_val, " +
-      "(SELECT count(*) FROM sp WHERE split='test') AS n_test, " +
-      "(SELECT count(*) FROM ck) AS n_chunks, " +
-      "(SELECT CAST(sum(n) AS BIGINT) FROM ck) AS chunk_token_sum, " +
-      "(SELECT count(*) FROM pex) AS n_examples, " +
-      "(SELECT CAST(sum(nchunks) AS BIGINT) FROM pex) AS packed_chunk_sum, " +
-      "(SELECT CAST(sum(ntok) AS BIGINT) FROM pex) AS packed_token_sum, " +
-      "(SELECT CAST(sum(pid) AS BIGINT) FROM cpid) AS input_id_sum"
-  }
+      splitCte("q4") + packingCtes(256) +
+      pipelineStatsSql("documents", decontaminatedStages,
+        packed = packedStatCols :+ "(SELECT CAST(sum(pid) AS BIGINT) FROM cpid) AS input_id_sum")
 
   /** Ground truth for q_corpus_pipeline_url: the URL rung — canonical-url
     * min-id survivor over the [[urlVariantSql]] fixture, NULL urls
     * (%7==3) kept unconditionally, canonicalization restated via
     * [[urlCanonCtes]] — followed by the plain-config chain (quality/lang
     * gate → exact dedup → trigram near-dup CC at 0.5 → exact 8-gram
-    * decontamination → redact → chunk → split), the dsir oracle's
-    * upstream skeleton without the filler augmentation. */
-  private lazy val corpusPipelineUrlOracle: String = {
-    def gram8(src: String): String = gram8CteSql(src)
+    * decontamination → redact → chunk → split). */
+  private lazy val corpusPipelineUrlOracle: String =
     "WITH RECURSIVE " +
       s"aug AS (SELECT doc_id, text, CASE WHEN doc_id % 7 = 3 THEN NULL ELSE $urlVariantSql END AS url FROM documents), " +
       urlCanonCtes("aug") + ", " +
       "ukeep AS (SELECT min(doc_id) AS doc_id FROM canon WHERE curl IS NOT NULL GROUP BY curl), " +
       "u1 AS MATERIALIZED (SELECT doc_id, text FROM aug WHERE url IS NULL OR doc_id IN (SELECT doc_id FROM ukeep)), " +
-      "btok AS (SELECT doc_id, regexp_split_to_array(trim(regexp_replace(lower(text),'[^a-z0-9]+',' ','g')),'\\s+') AS t FROM documents WHERE doc_id % 50 = 0), " +
-      "base AS (SELECT doc_id, text, trim(regexp_replace(lower(text),'[^a-z0-9]+',' ','g')) AS norm FROM u1), " +
-      "tok AS MATERIALIZED (SELECT doc_id, text, norm, regexp_split_to_array(norm,'\\s+') AS t FROM base), " +
-      pipelineLangCteSql +
-      "q1 AS MATERIALIZED (SELECT tok.doc_id AS doc_id, tok.text AS text, tok.norm AS norm, tok.t AS t " +
-      "FROM tok JOIN lang ON tok.doc_id = lang.doc_id " +
-      "WHERE len(tok.t) BETWEEN 10 AND 100000 " +
-      "AND length(regexp_replace(tok.text,'[^A-Za-z]','','g'))*1.0/greatest(length(tok.text),1) >= 0.4 " +
-      "AND lang.lang = 'en'), " +
-      "q2 AS (SELECT * FROM q1 WHERE doc_id IN (SELECT min(doc_id) FROM q1 GROUP BY norm)), " +
-      "sh3 AS MATERIALIZED (SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(t)-1,1)), " +
-      "i -> t[i]||' '||t[i+1]||' '||t[i+2])) AS sh FROM q2), " +
-      "j AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM sh3 a JOIN sh3 b ON a.doc_id < b.doc_id " +
-      "WHERE len(list_intersect(a.sh,b.sh))*1.0/greatest(len(list_distinct(list_concat(a.sh,b.sh))),1) >= 0.5), " +
-      "e AS (SELECT id_a AS src, id_b AS dst FROM j UNION ALL SELECT id_b, id_a FROM j), " +
-      "r AS (SELECT src AS id, src AS label FROM e UNION SELECT e.dst AS id, r.label FROM r JOIN e ON e.src = r.id), " +
-      "lab AS (SELECT id, min(label) AS label FROM r GROUP BY id), " +
-      "q3 AS MATERIALIZED (SELECT * FROM q2 WHERE doc_id NOT IN (SELECT id FROM lab WHERE label <> id)), " +
-      s"sh8c AS (${gram8("q3")}), " +
-      s"sh8b AS (${gram8("btok")}), " +
-      "cont AS (SELECT DISTINCT c.doc_id AS doc_id FROM sh8c c JOIN sh8b b ON len(list_intersect(c.sh,b.sh)) > 0), " +
-      "q4 AS MATERIALIZED (SELECT * FROM q3 WHERE doc_id NOT IN (SELECT doc_id FROM cont)), " +
-      pipelineTailSql("q4") +
-      "SELECT (SELECT count(*) FROM aug) AS n_input, " +
-      "(SELECT count(*) FROM u1) AS n_url_dedup, " +
-      "(SELECT count(*) FROM q1) AS n_quality, " +
-      "(SELECT count(*) FROM q2) AS n_exact_dedup, " +
-      "(SELECT count(*) FROM q3) AS n_near_dedup, " +
-      "(SELECT count(*) FROM q4) AS n_decontaminated, " +
-      "(SELECT CAST(sum(doc_id) AS BIGINT) FROM q4) AS id_checksum, " +
-      "(SELECT CAST(sum(length(rt)) AS BIGINT) FROM red) AS text_len_sum, " +
-      "(SELECT count(*) FROM sp WHERE split='train') AS n_train, " +
-      "(SELECT count(*) FROM sp WHERE split='val') AS n_val, " +
-      "(SELECT count(*) FROM sp WHERE split='test') AS n_test, " +
-      "(SELECT count(*) FROM ck) AS n_chunks, " +
-      "(SELECT CAST(sum(n) AS BIGINT) FROM ck) AS chunk_token_sum"
-  }
+      benchTokCte() + plainChainSql("u1") + deconSql("q3") + pipelineTailSql("q4") +
+      pipelineStatsSql("aug", ("url_dedup" -> "u1") +: decontaminatedStages)
 
-  /** Ground truth for q_corpus_pipeline_c4: the C4 rung — line clean
-    * ([[c4KeepSql]]) + page gates (curly/lorem on the RAW page, the
-    * 5-sentence floor on the CLEANED text, exactly c4PageFlags) over the
-    * [[c4AugSql]] fixture — followed by the plain-config chain, the url
-    * oracle's skeleton with the C4 front end instead of the URL rung. */
-  private lazy val corpusPipelineC4Oracle: String = {
-    def gram8(src: String): String = gram8CteSql(src)
-    "WITH RECURSIVE " +
-      s"aug0 AS (SELECT doc_id, $c4AugSql AS t FROM documents), " +
-      // u0 = the raw-page gates alone (the engine's c4_page_gate stage);
-      // the line clean is computed only for its survivors, then the
-      // sentence floor — exactly the restructured single-evaluation chain
+  /** aug0 → u0 → cln → u1: the C4 rung — page gates (curly/lorem on the
+    * RAW page: u0, the engine's c4_page_gate stage), the line clean
+    * ([[c4KeepSql]]) computed only for their survivors, then the
+    * 5-sentence floor on the CLEANED text (exactly c4PageFlags) — over
+    * the [[c4AugSql]] fixture. */
+  private lazy val c4FrontSql: String =
+    s"aug0 AS (SELECT doc_id, $c4AugSql AS t FROM documents), " +
       "u0 AS MATERIALIZED (SELECT doc_id, t FROM aug0 WHERE " +
       "NOT contains(t, '{') AND NOT contains(lower(t), 'lorem ipsum')), " +
       "cln AS MATERIALIZED (SELECT doc_id, array_to_string(list_filter(" +
       s"string_split(t, chr(10)), l -> $c4KeepSql), chr(10)) AS text FROM u0), " +
       "u1 AS MATERIALIZED (SELECT doc_id, text FROM cln WHERE " +
-      "len(regexp_extract_all(text, '[.!?]+')) >= 5), " +
-      "btok AS (SELECT doc_id, regexp_split_to_array(trim(regexp_replace(lower(text),'[^a-z0-9]+',' ','g')),'\\s+') AS t FROM documents WHERE doc_id % 50 = 0), " +
-      "base AS (SELECT doc_id, text, trim(regexp_replace(lower(text),'[^a-z0-9]+',' ','g')) AS norm FROM u1), " +
-      "tok AS MATERIALIZED (SELECT doc_id, text, norm, regexp_split_to_array(norm,'\\s+') AS t FROM base), " +
-      pipelineLangCteSql +
-      "q1 AS MATERIALIZED (SELECT tok.doc_id AS doc_id, tok.text AS text, tok.norm AS norm, tok.t AS t " +
-      "FROM tok JOIN lang ON tok.doc_id = lang.doc_id " +
-      "WHERE len(tok.t) BETWEEN 10 AND 100000 " +
-      "AND length(regexp_replace(tok.text,'[^A-Za-z]','','g'))*1.0/greatest(length(tok.text),1) >= 0.4 " +
-      "AND lang.lang = 'en'), " +
-      "q2 AS (SELECT * FROM q1 WHERE doc_id IN (SELECT min(doc_id) FROM q1 GROUP BY norm)), " +
-      "sh3 AS MATERIALIZED (SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(t)-1,1)), " +
-      "i -> t[i]||' '||t[i+1]||' '||t[i+2])) AS sh FROM q2), " +
-      "j AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM sh3 a JOIN sh3 b ON a.doc_id < b.doc_id " +
-      "WHERE len(list_intersect(a.sh,b.sh))*1.0/greatest(len(list_distinct(list_concat(a.sh,b.sh))),1) >= 0.5), " +
-      "e AS (SELECT id_a AS src, id_b AS dst FROM j UNION ALL SELECT id_b, id_a FROM j), " +
-      "r AS (SELECT src AS id, src AS label FROM e UNION SELECT e.dst AS id, r.label FROM r JOIN e ON e.src = r.id), " +
-      "lab AS (SELECT id, min(label) AS label FROM r GROUP BY id), " +
-      "q3 AS MATERIALIZED (SELECT * FROM q2 WHERE doc_id NOT IN (SELECT id FROM lab WHERE label <> id)), " +
-      s"sh8c AS (${gram8("q3")}), " +
-      s"sh8b AS (${gram8("btok")}), " +
-      "cont AS (SELECT DISTINCT c.doc_id AS doc_id FROM sh8c c JOIN sh8b b ON len(list_intersect(c.sh,b.sh)) > 0), " +
-      "q4 AS MATERIALIZED (SELECT * FROM q3 WHERE doc_id NOT IN (SELECT doc_id FROM cont)), " +
-      pipelineTailSql("q4") +
-      "SELECT (SELECT count(*) FROM aug0) AS n_input, " +
-      "(SELECT count(*) FROM u0) AS n_c4_page_gate, " +
-      "(SELECT count(*) FROM q1) AS n_quality, " +
-      "(SELECT count(*) FROM q2) AS n_exact_dedup, " +
-      "(SELECT count(*) FROM q3) AS n_near_dedup, " +
-      "(SELECT count(*) FROM q4) AS n_decontaminated, " +
-      "(SELECT CAST(sum(doc_id) AS BIGINT) FROM q4) AS id_checksum, " +
-      "(SELECT CAST(sum(length(rt)) AS BIGINT) FROM red) AS text_len_sum, " +
-      "(SELECT count(*) FROM sp WHERE split='train') AS n_train, " +
-      "(SELECT count(*) FROM sp WHERE split='val') AS n_val, " +
-      "(SELECT count(*) FROM sp WHERE split='test') AS n_test, " +
-      "(SELECT count(*) FROM ck) AS n_chunks, " +
-      "(SELECT CAST(sum(n) AS BIGINT) FROM ck) AS chunk_token_sum"
-  }
+      "len(regexp_extract_all(text, '[.!?]+')) >= 5), "
 
-  /** Ground truth for q_corpus_pipeline_c4_lines: the C4 chain
-    * ([[corpusPipelineC4Oracle]]) with the LINE-LEVEL dedup stage
-    * between exact and near-dup — the configuration prescribed for
-    * high-boilerplate crawl corpora at scale (the measured 237.5 →
-    * 96.4 s fix at 500k, BASELINE.md round 11): shared nav/menu lines
-    * are scrubbed BEFORE shingling, so they can never flood the
-    * near-dup band join. Line stage = the q_line_dedup restatement
-    * (lines in ≥ 2 distinct docs scrubbed everywhere, blank lines
-    * exempt, order-preserving reassembly, minTokens re-gate). */
-  private lazy val corpusPipelineC4LinesOracle: String = {
-    def gram8(src: String): String = gram8CteSql(src)
-    val renorm = "trim(regexp_replace(lower(text),'[^a-z0-9]+',' ','g'))"
+  /** Ground truth for q_corpus_pipeline_c4: the C4 rung
+    * ([[c4FrontSql]]) followed by the plain-config chain. */
+  private lazy val corpusPipelineC4Oracle: String =
     "WITH RECURSIVE " +
-      s"aug0 AS (SELECT doc_id, $c4AugSql AS t FROM documents), " +
-      "u0 AS MATERIALIZED (SELECT doc_id, t FROM aug0 WHERE " +
-      "NOT contains(t, '{') AND NOT contains(lower(t), 'lorem ipsum')), " +
-      "cln AS MATERIALIZED (SELECT doc_id, array_to_string(list_filter(" +
-      s"string_split(t, chr(10)), l -> $c4KeepSql), chr(10)) AS text FROM u0), " +
-      "u1 AS MATERIALIZED (SELECT doc_id, text FROM cln WHERE " +
-      "len(regexp_extract_all(text, '[.!?]+')) >= 5), " +
-      "btok AS (SELECT doc_id, regexp_split_to_array(trim(regexp_replace(lower(text),'[^a-z0-9]+',' ','g')),'\\s+') AS t FROM documents WHERE doc_id % 50 = 0), " +
-      "base AS (SELECT doc_id, text, trim(regexp_replace(lower(text),'[^a-z0-9]+',' ','g')) AS norm FROM u1), " +
-      "tok AS MATERIALIZED (SELECT doc_id, text, norm, regexp_split_to_array(norm,'\\s+') AS t FROM base), " +
-      pipelineLangCteSql +
-      "q1 AS MATERIALIZED (SELECT tok.doc_id AS doc_id, tok.text AS text, tok.norm AS norm, tok.t AS t " +
-      "FROM tok JOIN lang ON tok.doc_id = lang.doc_id " +
-      "WHERE len(tok.t) BETWEEN 10 AND 100000 " +
-      "AND length(regexp_replace(tok.text,'[^A-Za-z]','','g'))*1.0/greatest(length(tok.text),1) >= 0.4 " +
-      "AND lang.lang = 'en'), " +
-      "q2 AS (SELECT * FROM q1 WHERE doc_id IN (SELECT min(doc_id) FROM q1 GROUP BY norm)), " +
-      // line-level dedup (the q_line_dedup restatement; see
-      // corpusPipelineOracle's identical block)
-      "lls AS (SELECT doc_id, unnest(string_split(text, chr(10))) AS line, " +
-      "generate_subscripts(string_split(text, chr(10)), 1) AS lpos FROM q2), " +
-      "ldup AS (SELECT line FROM (SELECT DISTINCT doc_id, line FROM lls WHERE trim(line) <> '') " +
-      "GROUP BY line HAVING count(*) >= 2), " +
-      "lkept AS (SELECT doc_id, line, lpos FROM lls WHERE trim(line) = '' OR line NOT IN (SELECT line FROM ldup)), " +
-      "lreb AS (SELECT doc_id, string_agg(line, chr(10) ORDER BY lpos) AS t2 FROM lkept GROUP BY doc_id), " +
-      "q2l0 AS (SELECT q2.doc_id AS doc_id, COALESCE(lreb.t2, '') AS text FROM q2 LEFT JOIN lreb ON q2.doc_id = lreb.doc_id), " +
-      s"q2l AS MATERIALIZED (SELECT doc_id, text, $renorm AS norm, regexp_split_to_array($renorm,'\\s+') AS t " +
-      s"FROM q2l0 WHERE len(regexp_split_to_array($renorm,'\\s+')) >= 10), " +
-      "sh3 AS MATERIALIZED (SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(t)-1,1)), " +
-      "i -> t[i]||' '||t[i+1]||' '||t[i+2])) AS sh FROM q2l), " +
-      "j AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM sh3 a JOIN sh3 b ON a.doc_id < b.doc_id " +
-      "WHERE len(list_intersect(a.sh,b.sh))*1.0/greatest(len(list_distinct(list_concat(a.sh,b.sh))),1) >= 0.5), " +
-      "e AS (SELECT id_a AS src, id_b AS dst FROM j UNION ALL SELECT id_b, id_a FROM j), " +
-      "r AS (SELECT src AS id, src AS label FROM e UNION SELECT e.dst AS id, r.label FROM r JOIN e ON e.src = r.id), " +
-      "lab AS (SELECT id, min(label) AS label FROM r GROUP BY id), " +
-      "q3 AS MATERIALIZED (SELECT * FROM q2l WHERE doc_id NOT IN (SELECT id FROM lab WHERE label <> id)), " +
-      s"sh8c AS (${gram8("q3")}), " +
-      s"sh8b AS (${gram8("btok")}), " +
-      "cont AS (SELECT DISTINCT c.doc_id AS doc_id FROM sh8c c JOIN sh8b b ON len(list_intersect(c.sh,b.sh)) > 0), " +
-      "q4 AS MATERIALIZED (SELECT * FROM q3 WHERE doc_id NOT IN (SELECT doc_id FROM cont)), " +
+      c4FrontSql + benchTokCte() + plainChainSql("u1") + deconSql("q3") +
       pipelineTailSql("q4") +
-      "SELECT (SELECT count(*) FROM aug0) AS n_input, " +
-      "(SELECT count(*) FROM u0) AS n_c4_page_gate, " +
-      "(SELECT count(*) FROM q1) AS n_quality, " +
-      "(SELECT count(*) FROM q2) AS n_exact_dedup, " +
-      "(SELECT count(*) FROM q2l) AS n_line_dedup, " +
-      "(SELECT count(*) FROM q3) AS n_near_dedup, " +
-      "(SELECT count(*) FROM q4) AS n_decontaminated, " +
-      "(SELECT CAST(sum(doc_id) AS BIGINT) FROM q4) AS id_checksum, " +
-      "(SELECT CAST(sum(length(rt)) AS BIGINT) FROM red) AS text_len_sum, " +
-      "(SELECT count(*) FROM sp WHERE split='train') AS n_train, " +
-      "(SELECT count(*) FROM sp WHERE split='val') AS n_val, " +
-      "(SELECT count(*) FROM sp WHERE split='test') AS n_test, " +
-      "(SELECT count(*) FROM ck) AS n_chunks, " +
-      "(SELECT CAST(sum(n) AS BIGINT) FROM ck) AS chunk_token_sum"
-  }
+      pipelineStatsSql("aug0", ("c4_page_gate" -> "u0") +: decontaminatedStages)
+
+  /** Ground truth for q_corpus_pipeline_c4_lines: the C4 chain with the
+    * LINE-LEVEL dedup stage ([[lineDedupSql]]) between exact and
+    * near-dup — the configuration prescribed for high-boilerplate crawl
+    * corpora at scale (the measured 237.5 → 96.4 s fix at 500k,
+    * BASELINE.md round 11): shared nav/menu lines are scrubbed BEFORE
+    * shingling, so they can never flood the near-dup band join. */
+  private lazy val corpusPipelineC4LinesOracle: String =
+    "WITH RECURSIVE " +
+      c4FrontSql + benchTokCte() + tokCtes("u1") + qualityGateSql() + exactDedupSql() +
+      lineDedupSql + nearDupSql("q2l") + deconSql("q3") +
+      pipelineTailSql("q4") +
+      pipelineStatsSql("aug0", Seq("c4_page_gate" -> "u0", "quality" -> "q1",
+        "exact_dedup" -> "q2", "line_dedup" -> "q2l", "near_dedup" -> "q3",
+        "decontaminated" -> "q4"))
 
   /** Ground truth shared by q_hard_negatives AND q_hard_negatives_ivf:
     * exact cosine ranking with the query and its two planted positives
@@ -4332,8 +3720,7 @@ object SparkEntry {
     * single-source table the kernel classifies with). */
   private lazy val mlShingleCte: String = {
     val toks = graft.functions.Tok.Ml.sqlTokens("text")
-    "sh AS (SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(t)-1,1)), " +
-      "i -> t[i]||' '||t[i+1]||' '||t[i+2])) AS shingles " +
+    s"sh AS (SELECT doc_id, ${trigramsSql("t")} AS shingles " +
       s"FROM (SELECT doc_id, $toks AS t FROM ${graft.operators.MlFixture.sqlValues}))"
   }
 
@@ -4343,7 +3730,7 @@ object SparkEntry {
   private lazy val mlExactJaccardPairsSql: String =
     s"WITH $mlShingleCte, " +
       "j AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, " +
-      "len(list_intersect(a.shingles,b.shingles))*1.0/greatest(len(list_distinct(list_concat(a.shingles,b.shingles))),1) AS jaccard " +
+      s"${jaccardSql("a", "b", "shingles")} AS jaccard " +
       "FROM sh a JOIN sh b ON a.doc_id < b.doc_id) " +
       "SELECT id_a, id_b, jaccard FROM j WHERE jaccard >= 0.5 ORDER BY id_a, id_b"
 
@@ -4363,10 +3750,20 @@ object SparkEntry {
       s"md5(array_to_string($toks, ' ')) AS toks_fp FROM all_docs ORDER BY doc_id"
   }
 
+  /** DuckDB CTE producing (doc_id, shingles): distinct 3-gram shingles of
+    * the normalized text — the oracle-side mirror of
+    * [[graft.operators.Dedup.shingleSets]], shared by every dedup oracle. */
   private val shingleCte: String =
-    "sh AS (SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(t)-1,1)), " +
-      "i -> t[i]||' '||t[i+1]||' '||t[i+2])) AS shingles " +
-      "FROM (SELECT doc_id, regexp_split_to_array(trim(regexp_replace(lower(text),'[^a-z0-9]+',' ','g')),'\\s+') AS t FROM documents))"
+    s"sh AS (SELECT doc_id, ${trigramsSql("t")} AS shingles " +
+      s"FROM (SELECT doc_id, regexp_split_to_array($normTextSql,'\\s+') AS t FROM documents))"
+
+  /** `WITH RECURSIVE sh, j, CC`: exact trigram Jaccard ≥ 0.5 pairs over
+    * the documents' shingles (`cond` narrows the pairs), then the
+    * recursive-CTE connected components (ends with `lab`). */
+  private def shingleCcSql(cond: String = ""): String =
+    s"WITH RECURSIVE $shingleCte, " +
+      "j AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM sh a JOIN sh b ON a.doc_id < b.doc_id " +
+      s"WHERE $cond${jaccardSql("a", "b", "shingles")} >= 0.5), " + ccCtes("", "j")
 
   /** Exact all-pairs n-gram Jaccard ≥ 0.5 — the ground truth that BOTH
     * q_ngram_jaccard_pairs (exact prefix-filter join) and
@@ -4375,7 +3772,7 @@ object SparkEntry {
   private val exactJaccardPairsSql: String =
     s"WITH $shingleCte, " +
       "j AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, " +
-      "len(list_intersect(a.shingles,b.shingles))*1.0/greatest(len(list_distinct(list_concat(a.shingles,b.shingles))),1) AS jaccard " +
+      s"${jaccardSql("a", "b", "shingles")} AS jaccard " +
       "FROM sh a JOIN sh b ON a.doc_id < b.doc_id) " +
       "SELECT id_a, id_b, jaccard FROM j WHERE jaccard >= 0.5 ORDER BY id_a, id_b"
 
@@ -4583,24 +3980,14 @@ object SparkEntry {
     // edges until fixpoint (UNION dedups), then min-label per node; a doc
     // is removed iff its cluster min label isn't itself.
     "q_dedup_resolved" ->
-      (s"WITH RECURSIVE $shingleCte, " +
-        "j AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM sh a JOIN sh b ON a.doc_id < b.doc_id " +
-        "WHERE len(list_intersect(a.shingles,b.shingles))*1.0/greatest(len(list_distinct(list_concat(a.shingles,b.shingles))),1) >= 0.5), " +
-        "e AS (SELECT id_a AS src, id_b AS dst FROM j UNION ALL SELECT id_b, id_a FROM j), " +
-        "r AS (SELECT src AS id, src AS label FROM e UNION SELECT e.dst AS id, r.label FROM r JOIN e ON e.src = r.id), " +
-        "lab AS (SELECT id, min(label) AS label FROM r GROUP BY id), " +
+      (shingleCcSql() +
         "losers AS (SELECT count(*) AS n_losers FROM lab WHERE label <> id) " +
         "SELECT (SELECT count(*) FROM documents) AS n_docs, " +
         "(SELECT count(*) FROM documents) - n_losers AS n_kept FROM losers"),
     // same pairs + CC as q_dedup_resolved; the survivor RANK swaps to
     // (priority desc, id asc) — the checksum pins which member survived
     "q_dedup_prioritized" ->
-      (s"WITH RECURSIVE $shingleCte, " +
-        "j AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM sh a JOIN sh b ON a.doc_id < b.doc_id " +
-        "WHERE len(list_intersect(a.shingles,b.shingles))*1.0/greatest(len(list_distinct(list_concat(a.shingles,b.shingles))),1) >= 0.5), " +
-        "e AS (SELECT id_a AS src, id_b AS dst FROM j UNION ALL SELECT id_b, id_a FROM j), " +
-        "r AS (SELECT src AS id, src AS label FROM e UNION SELECT e.dst AS id, r.label FROM r JOIN e ON e.src = r.id), " +
-        "lab AS (SELECT id, min(label) AS label FROM r GROUP BY id), " +
+      (shingleCcSql() +
         // TRY_CAST + explicit NULLS LAST: a digitless source yields a null
         // priority on the Spark side ("no priority = crawl-grade"); the
         // oracle must mirror that, not throw a conversion error
@@ -4642,9 +4029,7 @@ object SparkEntry {
         "j AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b FROM aug a " +
         "JOIN aug b ON a.vec_id < b.vec_id " +
         "WHERE list_cosine_similarity(a.embedding, b.embedding) >= 0.9), " +
-        "e AS (SELECT id_a AS src, id_b AS dst FROM j UNION ALL SELECT id_b, id_a FROM j), " +
-        "r AS (SELECT src AS id, src AS label FROM e UNION SELECT e.dst AS id, r.label FROM r JOIN e ON e.src = r.id), " +
-        "lab AS (SELECT id, min(label) AS label FROM r GROUP BY id), " +
+        ccCtes("", "j") +
         "losers AS (SELECT count(*) AS n_losers FROM lab WHERE label <> id) " +
         "SELECT (SELECT count(*) FROM aug) AS n_vecs, " +
         "(SELECT count(*) FROM aug) - n_losers AS n_kept FROM losers"),
@@ -5270,9 +4655,7 @@ object SparkEntry {
       // corpus-pipeline oracle composes, fed by the engine's own
       // stopword map (no drift anywhere)
       val rules = gopherRuleSqls("t", "tok", "norm")
-      val names = Seq("word_count_ok", "mean_word_len_ok", "symbol_ratio_ok",
-        "bullet_ratio_ok", "ellipsis_ratio_ok", "alpha_word_ratio_ok",
-        "stopword_ok")
+      val names = gopherFlagNames
       val flagCols = rules.zip(names).map { case (r, n) => s"$r AS $n" }
       val pass = rules.map(r => s"($r)").mkString(" AND ")
       "WITH aug AS (SELECT doc_id, text || " +
@@ -5348,12 +4731,7 @@ object SparkEntry {
       "WITH RECURSIVE " +
         audioHammingCtesFromRows("", 4, (exRows ++ inRows).mkString(", ")) + ", " +
         "p2 AS (SELECT id_a, id_b FROM hm WHERE hamming <= 4 AND id_b >= 1000), " +
-        "e AS (SELECT id_a AS src, id_b AS dst FROM p2 UNION ALL SELECT id_b, id_a FROM p2), " +
-        "r AS (SELECT src AS id, src AS label FROM e UNION SELECT e.dst AS id, r.label FROM r JOIN e ON e.src = r.id), " +
-        "lab AS (SELECT id, min(label) AS label FROM r GROUP BY id), " +
-        "tainted AS (SELECT DISTINCT label FROM lab WHERE id < 1000), " +
-        "losers AS (SELECT id FROM lab WHERE id >= 1000 AND " +
-        "(label IN (SELECT label FROM tainted) OR id <> label)), " +
+        ccCtes("", "p2") + taintLosersCtes(1000) +
         "inc AS (SELECT unnest(range(1000, 1030)) AS id), " +
         "kept AS (SELECT id FROM inc WHERE id NOT IN (SELECT id FROM losers)) " +
         "SELECT (SELECT count(*) FROM inc) AS n_incoming, count(*) AS n_kept, " +
@@ -5374,12 +4752,7 @@ object SparkEntry {
       "WITH RECURSIVE " +
         videoMatchCtesFromRows("", (videoFixtureRows ++ inRows).mkString(", ")) + ", " +
         "p2 AS (SELECT id_a, id_b FROM vm WHERE n_matched >= 2 AND id_b >= 1000), " +
-        "e AS (SELECT id_a AS src, id_b AS dst FROM p2 UNION ALL SELECT id_b, id_a FROM p2), " +
-        "r AS (SELECT src AS id, src AS label FROM e UNION SELECT e.dst AS id, r.label FROM r JOIN e ON e.src = r.id), " +
-        "lab AS (SELECT id, min(label) AS label FROM r GROUP BY id), " +
-        "tainted AS (SELECT DISTINCT label FROM lab WHERE id < 1000), " +
-        "losers AS (SELECT id FROM lab WHERE id >= 1000 AND " +
-        "(label IN (SELECT label FROM tainted) OR id <> label)), " +
+        ccCtes("", "p2") + taintLosersCtes(1000) +
         "inc AS (SELECT unnest(range(1000, 1020)) AS id), " +
         "kept AS (SELECT id FROM inc WHERE id NOT IN (SELECT id FROM losers)) " +
         "SELECT (SELECT count(*) FROM inc) AS n_incoming, count(*) AS n_kept, " +
@@ -5422,7 +4795,7 @@ object SparkEntry {
   private lazy val contaminationFuzzyOracle: String =
     s"WITH $shingleCte, " +
       "cont AS (SELECT DISTINCT c.doc_id FROM sh c JOIN sh b ON b.doc_id % 50 = 0 AND " +
-      "len(list_intersect(c.shingles,b.shingles))*1.0/greatest(len(list_distinct(list_concat(c.shingles,b.shingles))),1) >= 0.5), " +
+      s"${jaccardSql("c", "b", "shingles")} >= 0.5), " +
       "kept AS (SELECT doc_id FROM documents WHERE doc_id NOT IN (SELECT doc_id FROM cont)) " +
       "SELECT (SELECT count(*) FROM documents) AS n_docs, count(*) AS n_kept, " +
       "CAST(COALESCE(sum(doc_id), 0) AS BIGINT) AS id_checksum FROM kept"
@@ -5447,6 +4820,11 @@ object SparkEntry {
     * horizontal runs fold, newlines survive (backref keeps the `\n`). */
   private def collapseLineWsSql(src: String): String =
     s"trim(regexp_replace(regexp_replace($src, '[ \\t]*(\\n)[ \\t]*', '\\1', 'g'), '[ \\t]+', ' ', 'g'))"
+
+  /** Output column names of the seven Gopher flags, in rule order. */
+  private val gopherFlagNames = Seq("word_count_ok", "mean_word_len_ok",
+    "symbol_ratio_ok", "bullet_ratio_ok", "ellipsis_ratio_ok",
+    "alpha_word_ratio_ok", "stopword_ok")
 
   /** The seven [[graft.functions.TextAnalysis.gopherFlags]] rules over SQL
     * expressions for the raw text, its normalized token array, and the
@@ -5503,16 +4881,13 @@ object SparkEntry {
 
   private lazy val mlGopherQualitySql: String = {
     val rules = gopherRuleSqlsMl("text", "tok", "lang")
-    val names = Seq("word_count_ok", "mean_word_len_ok", "symbol_ratio_ok",
-      "bullet_ratio_ok", "ellipsis_ratio_ok", "alpha_word_ratio_ok",
-      "stopword_ok")
+    val names = gopherFlagNames
     val flagCols = rules.zip(names).map { case (r, n) => s"$r AS $n" }
     val pass = rules.map(r => s"($r)").mkString(" AND ")
     val mlToks = graft.functions.Tok.Ml.sqlTokens("text")
     s"WITH g AS (SELECT doc_id, text FROM ${graft.operators.MlFixture.gateSqlValues}), " +
       s"k AS (SELECT doc_id, text, $mlToks AS tok FROM g), " +
-      s"l AS (SELECT doc_id, text, tok, CASE ${langScriptWhensSql("text")} " +
-      s"WHEN CAST(substr(b,1,8) AS INT) > 0 THEN substr(b,9,2) ELSE 'und' END AS lang " +
+      s"l AS (SELECT doc_id, text, tok, ${langCaseSql("text")} " +
       // the routing vote reads the SAME ml token array the gate rules do
       // (the kernel's round-14 tokenizer)
       s"FROM (SELECT doc_id, text, tok, ${langVoteGreatestSql("tok")} AS b FROM k) x) " +
@@ -5520,70 +4895,50 @@ object SparkEntry {
       "FROM l ORDER BY doc_id"
   }
 
-  /** Ground truth for q_corpus_pipeline_ml: the full multilingual chain
-    * restated in DuckDB — ml tokenization ([[graft.functions.Tok]]
-    * `.Ml.sqlTokens`, the same generator the kernel parity oracle uses),
-    * script-ratio + stopword-vote language routing, the seven per-script
-    * Gopher rules ([[gopherRuleSqlsMl]]), ml-token-stream exact dedup,
-    * ml-trigram Jaccard pairs + recursive-CTE CC, ml 8-gram
-    * decontamination against the clean benchmark docs, then the
-    * redact → ml re-tokenize → chunk(64/16) → md5 split tail. Every
-    * fragment generated from the same Scala tables the kernels read —
-    * the no-drift discipline. */
-  private lazy val corpusPipelineMlOracle: String = {
-    val mlToks = graft.functions.Tok.Ml.sqlTokens("text")
+  /** ptok → pl → q1: the script-aware gate over `pd(doc_id, text, carry…)`
+    * — ml tokenization ([[graft.functions.Tok]]`.Ml.sqlTokens`),
+    * script-ratio + stopword-vote language routing over the SAME ml token
+    * array (the round-14 tokenizer), the config gate and the seven
+    * per-script Gopher rules ([[gopherRuleSqlsMl]]). */
+  private def mlGateSql(carry: Seq[String] = Nil): String = {
+    val c = carry.map(_ + ", ").mkString
     val rules = gopherRuleSqlsMl("text", "tok", "lang")
       .map(r => s"($r)").mkString(" AND ")
-    val mlRtToks = graft.functions.Tok.Ml.sqlTokens("rt")
+    s"ptok AS MATERIALIZED (SELECT doc_id, text, $c${graft.functions.Tok.Ml.sqlTokens("text")} AS tok FROM pd), " +
+      s"pl AS MATERIALIZED (SELECT doc_id, text, ${c}tok, ${langCaseSql("text")} " +
+      s"FROM (SELECT doc_id, text, ${c}tok, ${langVoteGreatestSql("tok")} AS b FROM ptok) x), " +
+      s"q1 AS MATERIALIZED (SELECT doc_id, text, ${c}tok FROM pl " +
+      "WHERE len(tok) BETWEEN 10 AND 100000 " +
+      "AND length(array_to_string(tok,''))*1.0/greatest(length(text),1) >= 0.4 " +
+      s"AND lang IN ('ar','en','ja','ru','zh') AND $rules), " +
+      exactDedupSql(key = "array_to_string(tok, ' ')")
+  }
+
+  /** btok → c8: the ml token arrays of the clean benchmark docs (2 and
+    * 42) and of the corpus stage `src`, for the CJK-capable 8-gram probe. */
+  private def mlBenchCtes(src: String): String = {
     val benchVals = graft.operators.MlFixture.docs
       .filter(d => d._1 == 2L || d._1 == 42L)
       .map { case (i, _, t) => s"($i, '$t')" }
       .mkString("(VALUES ", ", ", ") bf(doc_id, text)")
+    s"btok AS (SELECT doc_id, ${graft.functions.Tok.Ml.sqlTokens("text")} AS t FROM $benchVals), " +
+      s"c8 AS (SELECT doc_id, tok AS t FROM $src), "
+  }
+
+  /** Ground truth for q_corpus_pipeline_ml: the full multilingual chain
+    * restated in DuckDB — the script-aware gate ([[mlGateSql]]),
+    * ml-token-stream exact dedup, ml-trigram Jaccard pairs +
+    * recursive-CTE CC, ml 8-gram decontamination against the clean
+    * benchmark docs, then the redact → ml re-tokenize → chunk(64/16) →
+    * md5 split tail. Every fragment generated from the same Scala tables
+    * the kernels read — the no-drift discipline. */
+  private lazy val corpusPipelineMlOracle: String =
     "WITH RECURSIVE " +
       s"pd AS MATERIALIZED (SELECT doc_id, text FROM ${graft.operators.MlFixture.pipelineSqlValues}), " +
-      s"ptok AS MATERIALIZED (SELECT doc_id, text, $mlToks AS tok FROM pd), " +
-      s"pl AS MATERIALIZED (SELECT doc_id, text, tok, CASE ${langScriptWhensSql("text")} " +
-      "WHEN CAST(substr(b,1,8) AS INT) > 0 THEN substr(b,9,2) ELSE 'und' END AS lang " +
-      // routing vote over the SAME ml token array (round-14 tokenizer)
-      s"FROM (SELECT doc_id, text, tok, ${langVoteGreatestSql("tok")} AS b FROM ptok) x), " +
-      "q1 AS MATERIALIZED (SELECT doc_id, text, tok FROM pl " +
-      "WHERE len(tok) BETWEEN 10 AND 100000 " +
-      "AND length(array_to_string(tok,''))*1.0/greatest(length(text),1) >= 0.4 " +
-      s"AND lang IN ('ar','en','ja','ru','zh') AND $rules), " +
-      "q2 AS (SELECT * FROM q1 WHERE doc_id IN (SELECT min(doc_id) FROM q1 GROUP BY array_to_string(tok, ' '))), " +
-      "sh3 AS (SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(tok)-1,1)), " +
-      "i -> tok[i]||' '||tok[i+1]||' '||tok[i+2])) AS sh FROM q2), " +
-      "j AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM sh3 a JOIN sh3 b ON a.doc_id < b.doc_id " +
-      "WHERE len(list_intersect(a.sh,b.sh))*1.0/greatest(len(list_distinct(list_concat(a.sh,b.sh))),1) >= 0.5), " +
-      "e AS (SELECT id_a AS src, id_b AS dst FROM j UNION ALL SELECT id_b, id_a FROM j), " +
-      "r AS (SELECT src AS id, src AS label FROM e UNION SELECT e.dst AS id, r.label FROM r JOIN e ON e.src = r.id), " +
-      "lab AS (SELECT id, min(label) AS label FROM r GROUP BY id), " +
-      "q3 AS (SELECT * FROM q2 WHERE doc_id NOT IN (SELECT id FROM lab WHERE label <> id)), " +
-      s"btok AS (SELECT doc_id, $mlToks AS t FROM $benchVals), " +
-      "c8 AS (SELECT doc_id, tok AS t FROM q3), " +
-      s"sh8c AS (${gram8CteSql("c8")}), " +
-      s"sh8b AS (${gram8CteSql("btok")}), " +
-      "cont AS (SELECT DISTINCT c.doc_id AS doc_id FROM sh8c c JOIN sh8b b ON len(list_intersect(c.sh,b.sh)) > 0), " +
-      "q4 AS (SELECT * FROM q3 WHERE doc_id NOT IN (SELECT doc_id FROM cont)), " +
-      s"red AS (SELECT doc_id, $piiRedactSql AS rt FROM q4), " +
-      s"rtok AS (SELECT doc_id, $mlRtToks AS t FROM red), " +
-      "st AS (SELECT doc_id, t, unnest(list_filter(range(0, len(t), 48), s -> s = 0 OR s + 16 < len(t))) AS s FROM rtok WHERE len(t) > 0), " +
-      "ck AS (SELECT doc_id, len(list_slice(t, s + 1, s + 64)) AS n FROM st), " +
-      "sp AS (SELECT doc_id, CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)),1,8) < 'e6666666' THEN 'train' " +
-      "WHEN substr(md5(CAST(doc_id AS VARCHAR)),1,8) < 'f3333333' THEN 'val' ELSE 'test' END AS split FROM q4) " +
-      "SELECT (SELECT count(*) FROM pd) AS n_input, " +
-      "(SELECT count(*) FROM q1) AS n_quality, " +
-      "(SELECT count(*) FROM q2) AS n_exact_dedup, " +
-      "(SELECT count(*) FROM q3) AS n_near_dedup, " +
-      "(SELECT count(*) FROM q4) AS n_decontaminated, " +
-      "(SELECT CAST(sum(doc_id) AS BIGINT) FROM q4) AS id_checksum, " +
-      "(SELECT CAST(sum(length(rt)) AS BIGINT) FROM red) AS text_len_sum, " +
-      "(SELECT count(*) FROM sp WHERE split='train') AS n_train, " +
-      "(SELECT count(*) FROM sp WHERE split='val') AS n_val, " +
-      "(SELECT count(*) FROM sp WHERE split='test') AS n_test, " +
-      "(SELECT count(*) FROM ck) AS n_chunks, " +
-      "(SELECT CAST(sum(n) AS BIGINT) FROM ck) AS chunk_token_sum"
-  }
+      mlGateSql() + nearDupSql("q2", tokCol = "tok", matSh3 = false, matQ3 = false) +
+      mlBenchCtes("q3") + deconSql("q3", gramSrc = "c8", mat = false) +
+      pipelineTailSql("q4", graft.functions.Tok.Ml.sqlTokens("rt"), chunkIdx = false) +
+      pipelineStatsSql("pd", decontaminatedStages)
 
   /** Ground truth for q_corpus_pipeline_full — every rung of the
     * all-rungs chain restated from the same generated tables: the
@@ -5597,91 +4952,28 @@ object SparkEntry {
     * the ml chunk → split → greedy-pack tail. */
   private lazy val corpusPipelineFullOracle: String = {
     val fx = graft.operators.MlFixture
-    val mlToks = graft.functions.Tok.Ml.sqlTokens("text")
-    val rules = gopherRuleSqlsMl("text", "tok", "lang")
-      .map(r => s"($r)").mkString(" AND ")
-    val mlRtToks = graft.functions.Tok.Ml.sqlTokens("rt")
-    val benchVals = fx.docs
-      .filter(d => d._1 == 2L || d._1 == 42L)
-      .map { case (i, _, t) => s"($i, '$t')" }
-      .mkString("(VALUES ", ", ", ") bf(doc_id, text)")
     val imapVals = fx.fullMediaAttach
       .map { case (d, m) => s"($d, $m)" }
       .mkString("(VALUES ", ", ", ") im(doc_id, media_id)")
     val benchImgs = fx.fullBenchImageIds.mkString(", ")
-    // the JL cell table — the q_corpus_pipeline_semantic_jl emission
-    val outDim = 16; val inDim = 64
-    val m = graft.operators.Similarity.randomProjectionMatrix(inDim, outDim)
-    (0 until outDim).foreach(j => require(
-      m.slice(j * inDim, (j + 1) * inDim).exists(_ != 0),
-      s"JL matrix row $j is all-zero; the oracle's list reassembly " +
-        "would drop a dimension"))
-    val cells = (for {
-      j <- 0 until outDim; d <- 0 until inDim
-      w = m(j * inDim + d) if w != 0
-    } yield s"($d, $j, $w)").mkString(", ")
     "WITH RECURSIVE " +
-      AnnOracles.coarseCtesProjected(outDim) + ", " +
-      s"w(d0, j, wt) AS (VALUES $cells), " +
+      jlPreludeSql +
       s"femb AS (SELECT doc_id, v FROM ${fx.fullEmbSqlValues}), " +
       s"imap AS (SELECT doc_id, media_id FROM $imapVals), " +
       s"pd AS MATERIALIZED (SELECT doc_id, text, 'src' || CAST(doc_id % 3 AS VARCHAR) AS source FROM ${fx.fullSqlValues}), " +
-      s"ptok AS MATERIALIZED (SELECT doc_id, text, source, $mlToks AS tok FROM pd), " +
-      s"pl AS MATERIALIZED (SELECT doc_id, text, source, tok, CASE ${langScriptWhensSql("text")} " +
-      "WHEN CAST(substr(b,1,8) AS INT) > 0 THEN substr(b,9,2) ELSE 'und' END AS lang " +
-      s"FROM (SELECT doc_id, text, source, tok, ${langVoteGreatestSql("tok")} AS b FROM ptok) x), " +
-      "q1 AS MATERIALIZED (SELECT doc_id, text, source, tok FROM pl " +
-      "WHERE len(tok) BETWEEN 10 AND 100000 " +
-      "AND length(array_to_string(tok,''))*1.0/greatest(length(text),1) >= 0.4 " +
-      s"AND lang IN ('ar','en','ja','ru','zh') AND $rules), " +
-      "q2 AS (SELECT * FROM q1 WHERE doc_id IN (SELECT min(doc_id) FROM q1 GROUP BY array_to_string(tok, ' '))), " +
-      "sh3 AS (SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(tok)-1,1)), " +
-      "i -> tok[i]||' '||tok[i+1]||' '||tok[i+2])) AS sh FROM q2), " +
-      "j AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM sh3 a JOIN sh3 b ON a.doc_id < b.doc_id " +
-      "WHERE len(list_intersect(a.sh,b.sh))*1.0/greatest(len(list_distinct(list_concat(a.sh,b.sh))),1) >= 0.5), " +
-      "e AS (SELECT id_a AS src, id_b AS dst FROM j UNION ALL SELECT id_b, id_a FROM j), " +
-      "r AS (SELECT src AS id, src AS label FROM e UNION SELECT e.dst AS id, r.label FROM r JOIN e ON e.src = r.id), " +
-      "lab AS (SELECT id, min(label) AS label FROM r GROUP BY id), " +
-      "q3 AS MATERIALIZED (SELECT * FROM q2 WHERE doc_id NOT IN (SELECT id FROM lab WHERE label <> id)), " +
+      mlGateSql(Seq("source")) + nearDupSql("q2", tokCol = "tok", matSh3 = false) +
       // ── SEMANTIC-JL rung (the semantic_jl oracle block over femb) ──
       "semq AS (SELECT q3.doc_id AS id, generate_subscripts(f.v, 1) - 1 AS d0, " +
       "CAST(floor(unnest(f.v) * 1024 + 0.5) AS BIGINT) AS qv FROM q3 JOIN femb f ON f.doc_id = q3.doc_id), " +
-      "semp AS (SELECT semq.id AS id, w.j AS j, CAST(sum(qv * wt) AS DOUBLE) AS o " +
-      "FROM semq JOIN w ON semq.d0 = w.d0 GROUP BY semq.id, w.j), " +
-      "sememb AS MATERIALIZED (SELECT id, list(o ORDER BY j) AS v FROM semp GROUP BY id), " +
-      "sasg AS MATERIALIZED (SELECT id, l, cc FROM (SELECT s2.id, ls.l, " +
-      "list_cosine_similarity(s2.v, cents[ls.l+1]) AS cc, " +
-      "ROW_NUMBER() OVER (PARTITION BY s2.id ORDER BY " +
-      "list_cosine_similarity(s2.v, cents[ls.l+1]) DESC, ls.l) AS rk " +
-      "FROM sememb s2, ls, co) WHERE rk = 1), " +
-      "sj AS MATERIALIZED (SELECT ax.id AS id_a, ay.id AS id_b " +
-      "FROM sasg ax JOIN sasg ay ON ax.l = ay.l AND ax.id < ay.id " +
-      "JOIN sememb x ON x.id = ax.id JOIN sememb y ON y.id = ay.id " +
-      "WHERE list_cosine_similarity(x.v, y.v) >= 0.9), " +
-      "se AS (SELECT id_a AS src, id_b AS dst FROM sj UNION ALL SELECT id_b, id_a FROM sj), " +
-      "sr AS (SELECT src AS id, src AS label FROM se " +
-      "UNION SELECT se.dst AS id, sr.label FROM sr JOIN se ON se.src = sr.id), " +
-      "slab AS (SELECT id, min(label) AS label FROM sr GROUP BY id), " +
-      "sranked AS (SELECT slab.id, ROW_NUMBER() OVER (PARTITION BY slab.label " +
-      "ORDER BY sasg.cc ASC, slab.id ASC) AS rk FROM slab JOIN sasg ON sasg.id = slab.id), " +
-      "q3s AS MATERIALIZED (SELECT * FROM q3 WHERE doc_id NOT IN (SELECT id FROM sranked WHERE rk > 1)), " +
+      jlProjectSql + semanticRungSql(q3sMat = true) +
       // ── IMAGE rung: frozen-grid 128-bit pairs mapped doc→media ──
       imageHamming128Ctes("i", 6) + ", " +
-      "ipair AS (SELECT da.doc_id AS id_a, db.doc_id AS id_b FROM ihm " +
-      "JOIN imap da ON da.media_id = ihm.id_a JOIN imap db ON db.media_id = ihm.id_b " +
-      "WHERE ihm.hamming <= 6 " +
-      "AND da.doc_id IN (SELECT doc_id FROM q3s) AND db.doc_id IN (SELECT doc_id FROM q3s)), " +
-      "ie AS (SELECT id_a AS src, id_b AS dst FROM ipair UNION ALL SELECT id_b, id_a FROM ipair), " +
-      "ir AS (SELECT src AS id, src AS label FROM ie UNION SELECT ie.dst AS id, ir.label FROM ir JOIN ie ON ie.src = ir.id), " +
-      "ilab AS (SELECT id, min(label) AS label FROM ir GROUP BY id), " +
-      "q3i AS MATERIALIZED (SELECT * FROM q3s WHERE doc_id NOT IN (SELECT id FROM ilab WHERE label <> id)), " +
+      mediaRungSql("i", "SELECT da.doc_id AS id_a, db.doc_id AS id_b FROM ihm " +
+        "JOIN imap da ON da.media_id = ihm.id_a JOIN imap db ON db.media_id = ihm.id_b " +
+        "WHERE ihm.hamming <= 6 " +
+        "AND da.doc_id IN (SELECT doc_id FROM q3s) AND db.doc_id IN (SELECT doc_id FROM q3s)", "q3s") +
       // ── TEXT decon: CJK-capable 8-gram probe over ml tokens ──
-      s"btok AS (SELECT doc_id, $mlToks AS t FROM $benchVals), " +
-      "c8 AS (SELECT doc_id, tok AS t FROM q3i), " +
-      s"sh8c AS (${gram8CteSql("c8")}), " +
-      s"sh8b AS (${gram8CteSql("btok")}), " +
-      "cont AS (SELECT DISTINCT c.doc_id AS doc_id FROM sh8c c JOIN sh8b b ON len(list_intersect(c.sh,b.sh)) > 0), " +
-      "q4 AS MATERIALIZED (SELECT * FROM q3i WHERE doc_id NOT IN (SELECT doc_id FROM cont)), " +
+      mlBenchCtes("q3i") + deconSql("q3i", gramSrc = "c8") +
       // ── MEDIA decon: 64-bit horizontal dHash bits (the ibt rows with
       // b < 64) vs the benchmark image, all-pairs, mapped doc→media ──
       "mbt AS (SELECT media_id, b, bit FROM ibt WHERE b < 64), " +
@@ -5692,45 +4984,13 @@ object SparkEntry {
       "JOIN mbench ON mbench.b = x.b GROUP BY 1, 2), " +
       "q4m AS MATERIALIZED (SELECT * FROM q4 WHERE doc_id NOT IN " +
       "(SELECT DISTINCT corpus_doc FROM mham WHERE mh <= 6)), " +
-      // ── MIX: the q_token_mix derivation over the survivors' ml-token
-      // mass (zero-mass strata excluded from min and rates) ──
-      "mshares(s, w) AS (VALUES ('src0', 0.5), ('src1', 0.3), ('src2', 0.2)), " +
-      "mhist AS (SELECT source AS s, CAST(sum(len(tok)) AS BIGINT) AS toks " +
-      "FROM q4m WHERE source IN (SELECT s FROM mshares) GROUP BY source HAVING sum(len(tok)) > 0), " +
-      "mcst AS (SELECT min(toks / w) AS c FROM mhist JOIN mshares USING (s)), " +
-      "mrates AS (SELECT s, round(least(1.0, c * w / toks), 4) AS rr " +
-      "FROM mhist JOIN mshares USING (s) CROSS JOIN mcst), " +
-      "mth AS (SELECT s, CASE WHEN rr >= 1.0 THEN 'g' ELSE " +
-      "lpad(lower(hex(CAST(least(round(rr * 4294967296.0), 4294967295) AS BIGINT))),8,'0') END AS th FROM mrates), " +
-      "q5 AS MATERIALIZED (SELECT q4m.* FROM q4m JOIN mth ON q4m.source = mth.s " +
-      "WHERE substr(md5(CAST(q4m.doc_id AS VARCHAR)),1,8) < mth.th), " +
-      // ── ml tail: redact → ml re-tokenize → chunk(64/16) → split ──
-      s"red AS (SELECT doc_id, $piiRedactSql AS rt FROM q5), " +
-      s"rtok AS (SELECT doc_id, $mlRtToks AS t FROM red), " +
-      "st AS (SELECT doc_id, t, unnest(list_filter(range(0, len(t), 48), s -> s = 0 OR s + 16 < len(t))) AS s FROM rtok WHERE len(t) > 0), " +
-      "ck AS (SELECT doc_id, CAST(s // 48 AS BIGINT) AS chunk_idx, len(list_slice(t, s + 1, s + 64)) AS n FROM st), " +
-      "sp AS (SELECT doc_id, CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)),1,8) < 'e6666666' THEN 'train' " +
-      "WHEN substr(md5(CAST(doc_id AS VARCHAR)),1,8) < 'f3333333' THEN 'val' ELSE 'test' END AS split FROM q5) " +
-      packingCtes(256) +
-      "SELECT (SELECT count(*) FROM pd) AS n_input, " +
-      "(SELECT count(*) FROM q1) AS n_quality, " +
-      "(SELECT count(*) FROM q2) AS n_exact_dedup, " +
-      "(SELECT count(*) FROM q3) AS n_near_dedup, " +
-      "(SELECT count(*) FROM q3s) AS n_semantic_dedup, " +
-      "(SELECT count(*) FROM q3i) AS n_image_dedup, " +
-      "(SELECT count(*) FROM q4) AS n_decontaminated, " +
-      "(SELECT count(*) FROM q4m) AS n_media_decontaminated, " +
-      "(SELECT count(*) FROM q5) AS n_mixed, " +
-      "(SELECT CAST(sum(doc_id) AS BIGINT) FROM q5) AS id_checksum, " +
-      "(SELECT CAST(sum(length(rt)) AS BIGINT) FROM red) AS text_len_sum, " +
-      "(SELECT count(*) FROM sp WHERE split='train') AS n_train, " +
-      "(SELECT count(*) FROM sp WHERE split='val') AS n_val, " +
-      "(SELECT count(*) FROM sp WHERE split='test') AS n_test, " +
-      "(SELECT count(*) FROM ck) AS n_chunks, " +
-      "(SELECT CAST(sum(n) AS BIGINT) FROM ck) AS chunk_token_sum, " +
-      "(SELECT count(*) FROM pex) AS n_examples, " +
-      "(SELECT CAST(sum(nchunks) AS BIGINT) FROM pex) AS packed_chunk_sum, " +
-      "(SELECT CAST(sum(ntok) AS BIGINT) FROM pex) AS packed_token_sum"
+      // ── MIX over the survivors' ml-token mass ──
+      mixRungSql("q4m", "tok") +
+      pipelineTailSql("q5", graft.functions.Tok.Ml.sqlTokens("rt")) + packingCtes(256) +
+      pipelineStatsSql("pd", Seq("quality" -> "q1", "exact_dedup" -> "q2",
+        "near_dedup" -> "q3", "semantic_dedup" -> "q3s", "image_dedup" -> "q3i",
+        "decontaminated" -> "q4", "media_decontaminated" -> "q4m", "mixed" -> "q5"),
+        packed = packedStatCols)
   }
 
   /** Ground-truth media decontamination: all-pairs 64-bit dHash Hamming
@@ -5738,20 +4998,10 @@ object SparkEntry {
     * 0), restated from [[graft.operators.FrozenImageGrids]] — the same
     * frozen-side discipline as q_image_near_dups, with no banding at all
     * (the oracle must not share the engine's candidate structure). */
-  private lazy val mediaContaminationOracle: String = {
-    val rows = graft.operators.FrozenImageGrids.grids
-      .map { case (id, g) => s"($id, ${g.mkString("[", ",", "]")})" }
-      .mkString(", ")
-    s"WITH gr(media_id, g) AS (VALUES $rows), " +
-      "bb AS (SELECT unnest(range(0, 64)) AS b), " +
-      "bt AS (SELECT media_id, b, CASE WHEN g[(b//8)*9 + (b%8) + 1] > g[(b//8)*9 + (b%8) + 2] THEN 1 ELSE 0 END AS bit FROM gr, bb), " +
-      "bench AS (SELECT media_id, b, bit FROM bt WHERE media_id % 5 = 0), " +
-      "ham AS (SELECT c.media_id AS corpus_id, bench.media_id AS bench_id, " +
-      "sum(CASE WHEN c.bit <> bench.bit THEN 1 ELSE 0 END) AS h " +
-      "FROM bt c JOIN bench ON c.b = bench.b GROUP BY 1, 2) " +
+  private lazy val mediaContaminationOracle: String =
+    "WITH " + benchHammingCtes("", "media_id % 5 = 0") + " " +
       "SELECT corpus_id, count(*) AS n_benchmark_hits FROM ham " +
       "WHERE h <= 6 GROUP BY corpus_id ORDER BY corpus_id"
-  }
 
   private lazy val contaminationOracle: String =
     s"WITH $shingleCte, " +
