@@ -294,13 +294,16 @@ object Dedup {
     * hashed at source like [[exactJaccardPairs]]) so the per-pair payload
     * is 8 bytes/element. The Jaccard itself is the native
     * [[graft.functions.JaccardSim]] kernel (same math as [[jaccardCol]],
-    * codegen'd O(n+m), string and long element types). */
+    * codegen'd O(n+m), string and long element types). `shingledB` holds
+    * the `id_b` side when the two sides are different id spaces (a
+    * corpus probing a benchmark). */
   private[graft] def verifyJaccard(candidates: DataFrame, shingled: DataFrame,
-      threshold: Double): DataFrame = {
+      threshold: Double, shingledB: Option[DataFrame] = None): DataFrame = {
     GraftFunctions.register(shingled.sparkSession)
     candidates
       .join(shingled.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-      .join(shingled.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
+      .join(shingledB.getOrElse(shingled)
+        .select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
       .withColumn("jaccard", GraftFunctions.jaccardSim(col("sh_a"), col("sh_b")))
       .where(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
@@ -474,9 +477,7 @@ object Dedup {
     val joined = banded.as("a")
       .join(banded.as("b"),
         col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
-          col("a.id") < col("b.id") &&
-          least(col("a.sz"), col("b.sz")).cast("double") >=
-            greatest(col("a.sz"), col("b.sz")) * threshold - lit(1e-9))
+          col("a.id") < col("b.id") && lengthFilter(threshold))
     // SUB-BUCKET staging's cell restriction ((i, j, p)): keep only pairs
     // whose id-hash blocks are exactly {i, j} under p blocks. Runs as a
     // codegen'd filter streaming straight off the join output — pairs of
@@ -1859,15 +1860,6 @@ object Dedup {
       .as[Multimodal.MediaRecord]
   }
 
-  /** The persistable hash frame of a media `kind`: (id, sh) for image
-    * and audio, the per-frame (id, fpos, sh, every_n) for video. */
-  private def mediaHashFrame(kind: String, df: DataFrame, idCol: String,
-      typeCol: String, binaryCol: String, everyN: Int): DataFrame = kind match {
-    case "image" => imageHashFrame(df, idCol, typeCol, binaryCol)
-    case "audio" => audioHashFrame(df, idCol, typeCol, binaryCol)
-    case _ => videoFrameHashFrame(df, idCol, typeCol, binaryCol, everyN)
-  }
-
   /** Refuse to probe a persisted video hash index at another sampling
     * rate: fpos semantics depend on the rate the index was built with,
     * and probing an everyN=2 index with everyN=1 silently shifts every
@@ -1875,19 +1867,93 @@ object Dedup {
     * a persisted index carries its rate). An index WITHOUT the column
     * predates the stamp — the caller owns the invariant then; a
     * MIXED-VINTAGE partitioned index reads pre-stamp rows as NULL under
-    * the merged schema, and those rows are excluded, not crashed on. */
+    * the merged schema, and those rows are excluded, not crashed on.
+    * One scan job, no shuffle: each partition ships its distinct rates. */
   private def requireIndexRate(index: DataFrame, everyN: Int,
       caller: String): Unit =
     if (index.columns.contains("every_n")) {
       val rates = index.select(col("every_n").cast("long").as("every_n"))
-        .where(col("every_n").isNotNull).distinct()
-        .limit(2).collect().map(_.getLong(0))
-      require(rates.length <= 1 && rates.forall(_ == everyN),
+        .where(col("every_n").isNotNull).rdd
+        .mapPartitions(_.map(_.getLong(0)).toSet.iterator)
+        .collect().distinct
+      require(rates.forall(_ == everyN),
         s"$caller: probe everyN=$everyN but the persisted video hash index " +
           s"carries every_n=${rates.sorted.mkString(",")} — fpos alignment " +
           "would silently shift; probe at the index's rate or rebuild " +
           "the index at one rate")
     }
+
+  /** The media probes' shared preamble: validate the kind and, for
+    * video, the frame fraction and the index rate — before any decode —
+    * then decode the probe side (row count riding the checkpoint) unless
+    * `hashes` is given, and project both sides to (id, fpos, sh) for
+    * video, (id, sh) else. Returns (probe, index, decoded row count,
+    * video gate). */
+  private def mediaProbeSides(caller: String, kind: String, df: DataFrame,
+      idCol: String, typeCol: String, binaryCol: String, everyN: Int,
+      minMatchFrac: Double, hashes: Option[DataFrame], index: DataFrame)
+      : (DataFrame, DataFrame, Option[Long], Option[FrameGate]) = {
+    require(Set("image", "audio", "video").contains(kind),
+      s"$caller: kind must be 'image', 'audio' or 'video', got '$kind'")
+    val gate = if (kind == "video") Some(FrameGate(minMatchFrac)) else None
+    if (gate.isDefined) requireIndexRate(index, everyN, caller)
+    val (h, nRows) = hashes.map(f => (f, Option.empty[Long])).getOrElse {
+      val (m, c) = materializeCounted(kind match {
+        case "image" => imageHashFrame(df, idCol, typeCol, binaryCol)
+        case "audio" => audioHashFrame(df, idCol, typeCol, binaryCol)
+        case "video" => videoFrameHashFrame(df, idCol, typeCol, binaryCol, everyN)
+      })
+      (m, Some(c))
+    }
+    val cols = (if (gate.isDefined) Seq("id", "fpos", "sh") else Seq("id", "sh")).map(col)
+    (h.select(cols: _*), index.select(cols: _*), nRows, gate)
+  }
+
+  /** The media probes' Hamming join over [[hammingChunks]] frames:
+    * [[probeJoin]] on the chunk key, the exact bit_count verify, the
+    * pair dedup, minus `prior`. Image/audio emit (id_a, id_b); video
+    * (`frames` defined, `Some(false)` = the trim-robust SET probe keyed
+    * without the ordinal) emits (id_a, id_b, fpos), one row per matched
+    * PROBE-side ordinal for the [[FrameGate]] — the batch SET variant's
+    * accounting. A staged both-incoming pair surfaces once per member's
+    * sub-batch with that member's own ordinal, rows the single pass also
+    * emits; an aligned duplicate dies in the prior anti-join. */
+  private def hammingProbe(probe: DataFrame, index: DataFrame,
+      maxHamming: Int, frames: Option[Boolean], oneSided: Boolean)
+      (prior: Option[DataFrame]): DataFrame = {
+    val pairKey = Seq(col("id_a"), col("id_b")) ++ frames.map(_ => col("fpos"))
+    minusPrior(probeJoin(probe, index, hammingProbeKeys(frames), oneSided,
+        extra = frames.map(_ => col("a.fpos").as("fpos")).toSeq :+
+          bit_count(col("a.sh").bitwiseXOR(col("b.sh"))).as("hamming"))
+      .where(col("hamming") <= maxHamming)
+      .select(pairKey: _*).distinct(), prior)
+  }
+
+  /** Join keys of [[hammingProbe]], shared with its disk guard. */
+  private def hammingProbeKeys(frames: Option[Boolean]): Seq[String] =
+    (if (frames.contains(true)) Seq("fpos") else Nil) ++ Seq("chunk", "chunk_key")
+
+  /** The matched-frame gate of every video rung: keep an (id_a, id_b)
+    * pair whose matched frames — `framePairs` rows, one per matched
+    * ordinal — reach ⌈minMatchFrac · min(nf_a, nf_b)⌉ of the two clips'
+    * sampled frames (`nfA`/`nfB`: (id, nf) counts, [[frameCounts]]).
+    * Constructed before any decode, so a bad fraction fails fast. */
+  private final case class FrameGate(minMatchFrac: Double) {
+    require(minMatchFrac > 0 && minMatchFrac <= 1,
+      s"minMatchFrac must be in (0, 1], got $minMatchFrac")
+    def apply(framePairs: DataFrame, nfA: DataFrame, nfB: DataFrame): DataFrame =
+      framePairs.groupBy(col("id_a"), col("id_b"))
+        .agg(count(lit(1)).as("n_matched"))
+        .join(nfA.select(col("id").as("id_a"), col("nf").as("nf_a")), Seq("id_a"))
+        .join(nfB.select(col("id").as("id_b"), col("nf").as("nf_b")), Seq("id_b"))
+        .where(col("n_matched") >=
+          ceil(lit(minMatchFrac) * least(col("nf_a"), col("nf_b"))))
+        .select(col("id_a"), col("id_b"), col("n_matched"), col("nf_a"), col("nf_b"))
+  }
+
+  /** (id, nf) sampled-frame count per clip of a per-frame hash frame. */
+  private def frameCounts(frames: DataFrame): DataFrame =
+    frames.groupBy(col("id")).agg(count(lit(1)).as("nf"))
 
   /** End-to-end perceptual audio dedup: [[audioNearDupPairs]] → CC →
     * keep each cluster's min id; undecodable payloads always survive. */
@@ -1925,169 +1991,40 @@ object Dedup {
       incomingHashes: Option[DataFrame] = None,
       alignFrames: Boolean = true,
       forceProbeGroups: Option[Int] = None): DataFrame = {
-    require(Set("image", "audio", "video").contains(kind),
-      s"removeNearDuplicateMediaIncremental: kind must be 'image', " +
-        s"'audio' or 'video', got '$kind'")
+    val caller = "removeNearDuplicateMediaIncremental"
     // `incomingHashes`: the PRECOMPUTED (and caller-materialized) hash
     // frame of `incoming` — decode-once composition for callers that
     // also persist the batch's hash frame (the streaming media rung:
-    // probe + index-append must not decode every payload twice)
-    // The guard's delta-side count rides the decode checkpoint as an
-    // observation (round 17) — one driver action, not checkpoint+count.
-    // A caller-shared frame defers its (cheap, checkpoint-scan) count to
-    // the guard's first use, exactly as before — a forceProbeGroups
-    // bypass then never counts at all.
-    val (inH0, nInRowsOpt) = incomingHashes match {
-      case Some(f) => (f, None)
-      case None =>
-        val (m, n) = materializeCounted(
-          mediaHashFrame(kind, incoming, idCol, typeCol, binaryCol, everyN))
-        (m, Some(n))
-    }
-    // video indexes the per-frame frame (id, fpos, sh); image/audio one
-    // (id, sh) long per item. The probe's band join ships bare longs —
-    // the every_n provenance column is validated here, then dropped.
-    val inH =
-      if (kind == "video") inH0.select(col("id"), col("fpos"), col("sh"))
-      else inH0.select(col("id"), col("sh"))
-    if (kind == "video")
-      requireIndexRate(existingHashes, everyN, "removeNearDuplicateMediaIncremental")
-    val exH =
-      if (kind == "video") existingHashes.select(col("id"), col("fpos"), col("sh"))
-      else existingHashes.select(col("id"), col("sh"))
-    if (checkDisjointIds) {
-      val overlap = inH.select(col("id")).join(exH.select(col("id")), Seq("id"), "left_semi")
-      require(overlap.isEmpty,
-        s"removeNearDuplicateMediaIncremental: incoming and existing share " +
-          s"ids (e.g. ${overlap.limit(3).collect().mkString(",")}) — id " +
-          "spaces must be disjoint")
-    }
-    // one-sided probe: incoming chunks × (incoming ∪ existing) chunks —
-    // existing↔existing pairs are unrepresentable in this join's output
-    val inChunks = hammingChunks(inH, Seq("sh"), maxHamming)
-    val allChunks = inChunks.unionByName(hammingChunks(exH, Seq("sh"), maxHamming))
-    // Disk guard, now with a BOUNDED plan instead of a warning (round
-    // 15): probe mass = Σ_k in_k · all_k, estimated spill priced against
-    // usable shuffle bytes exactly like the batch families — but the
-    // probe's staging axis is the INCOMING-ID hash (sub-batches), which
-    // is arbitrarily divisible, so an oversized delta (the round-13
-    // failure mode fed back through a 10M-doc batch) auto-splits into
-    // sequential sub-batches rather than warn-and-die. Each sub-batch
-    // probes the FULL (incoming ∪ existing) chunk side, so the union
-    // over sub-batches is the single-pass pair set: an incoming↔existing
-    // pair appears in exactly its incoming id's sub-batch; an
-    // incoming↔incoming pair appears in both members' sub-batches and
-    // the staged prior anti-join keeps the first. inH is materialized
-    // above and exH is normally a persisted parquet index, so the
-    // counts/aggregates never re-decode anything.
-    val spark = incoming.sparkSession
-    val kSub = forceProbeGroups.getOrElse {
-      // Delta-first floor check (the text probe's round-15 discipline): a
-      // delta that alone clears the rows floor prices the guard without
-      // ever counting the index side — the common big-batch case pays one
-      // count, not two (the index count is a metadata-only parquet job,
-      // but at a million-file index even listing isn't free). The
-      // delta-side count rode the inH0 checkpoint (round 17): zero
-      // guard actions on the delta. (inH projects inH0 1:1, so the
-      // checkpoint's row count IS inH's.)
-      val nIn = nInRowsOpt.getOrElse(inH.count())
-      if (nIn < BandGuardMinRows && nIn + exH.count() < BandGuardMinRows) 1
-      else {
-        val keys =
-          if (kind == "video" && alignFrames) Seq("fpos", "chunk", "chunk_key")
-          else Seq("chunk", "chunk_key")
-        val payload = if (kind == "video") 24.0 else 16.0
-        val usable = shuffleDirUsableBytes(spark)
-        val est = bandSpillEstimateBytes(
-          bandProbeMass(inChunks, allChunks, keys), payload)
-        val k = spillChunkCount(est, usable)
-        if (k > 1) System.err.println(stagingNote(
-          s"removeNearDuplicateMediaIncremental($kind) probe", est, usable, k,
-          "sub-batch", remedies = "lower maxHamming, or for video raise " +
-            "everyN / keep alignFrames=true"))
-        k
+    // probe + index-append must not decode every payload twice). Its
+    // (cheap, checkpoint-scan) count is deferred to the guard's first
+    // use — a forceProbeGroups bypass then never counts at all.
+    val (inH, exH, nInDecoded, gate) = mediaProbeSides(caller, kind,
+      incoming, idCol, typeCol, binaryCol, everyN, minMatchFrac,
+      incomingHashes, existingHashes)
+    incrementalSurvivors(caller, incoming, idCol, inH, exH,
+        checkDisjointIds, maxIter) {
+      val frames = gate.map(_ => alignFrames)
+      val inChunks = hammingChunks(inH, Seq("sh"), maxHamming)
+      val allChunks = inChunks.unionByName(hammingChunks(exH, Seq("sh"), maxHamming))
+      // probe mass = Σ_k in_k · all_k over the join keys: the SET
+      // variant drops the ordinal from the key, multiplying the mass by
+      // ~frames-per-clip — exactly the geometry the pricing must see
+      val kSub = forceProbeGroups.getOrElse(probePlan(
+        s"$caller($kind) probe", nInDecoded.getOrElse(inH.count()),
+        exH.count(), inChunks, allChunks, hammingProbeKeys(frames),
+        payloadBytes = if (gate.isDefined) 24.0 else 16.0,
+        remedies = "lower maxHamming, or for video raise everyN / keep " +
+          "alignFrames=true")._1)
+      // the staged unit is the matched-ordinal row (id_a, id_b, fpos)
+      // for video; the gate counts the union once
+      val pairs = probeSubBatches(inChunks, kSub,
+        Seq("id_a", "id_b") ++ frames.map(_ => "fpos"),
+        hammingProbe(_, allChunks, maxHamming, frames, oneSided = true)(_))
+      gate.fold(pairs) { g =>
+        val counts = frameCounts(inH).unionByName(frameCounts(exH))
+        g(pairs, counts, counts)
       }
     }
-    def inSub(g: Int): DataFrame =
-      if (kSub <= 1) inChunks
-      else inChunks.where(
-        pmod(xxhash64(col("id")), lit(kSub.toLong)) === lit(g.toLong))
-    val pairs =
-      if (kind == "video") {
-        // per-ALIGNED-FRAME probe + the matched-frame gate, exactly the
-        // batch detector's contract ([[videoNearDupPairs]]); alignFrames
-        // = false selects the trim-robust frame-SET probe (band key
-        // without the ordinal; `fpos` below stays the INCOMING side's
-        // ordinal, so matched = how many incoming slots found a partner
-        // — the batch SET variant's exact accounting) at the documented
-        // frame-count candidate multiplier; pair with a coarser everyN
-        val fposKey =
-          if (alignFrames) col("a.fpos") === col("b.fpos") else lit(true)
-        // the staged unit is the matched-ordinal row (id_a, id_b, fpos):
-        // in SET mode a both-incoming pair surfaces once per member's
-        // sub-batch with that member's OWN ordinal in fpos — rows the
-        // single pass also emits (both members sit in inChunks there),
-        // so the union stays exact; the aligned mode's duplicate
-        // (same fpos from both sides) dies in the prior anti-join
-        def framePairsOn(sub: DataFrame, prior: Option[DataFrame]) = {
-          val fp = sub.as("a")
-            .join(allChunks.as("b"),
-              fposKey &&
-                col("a.chunk") === col("b.chunk") &&
-                col("a.chunk_key") === col("b.chunk_key") &&
-                col("a.id") =!= col("b.id"))
-            .select(least(col("a.id"), col("b.id")).as("id_a"),
-              greatest(col("a.id"), col("b.id")).as("id_b"),
-              col("a.fpos").as("fpos"),
-              bit_count(col("a.sh").bitwiseXOR(col("b.sh"))).as("hamming"))
-            .where(col("hamming") <= maxHamming)
-            .dropDuplicates("id_a", "id_b", "fpos")
-          prior.fold(fp)(p =>
-            fp.join(p, Seq("id_a", "id_b", "fpos"), "left_anti"))
-        }
-        val framePairs =
-          if (kSub <= 1) framePairsOn(inChunks, None)
-          else stagedPairUnion(spark, kSub, Seq("id_a", "id_b", "fpos"),
-            (g, prior) => framePairsOn(inSub(g), prior))
-        val counts = inH.groupBy(col("id")).agg(count(lit(1)).as("nf"))
-          .unionByName(exH.groupBy(col("id")).agg(count(lit(1)).as("nf")))
-        framePairs.groupBy(col("id_a"), col("id_b"))
-          .agg(count(lit(1)).as("n_matched"))
-          .join(counts.select(col("id").as("id_a"), col("nf").as("nf_a")), Seq("id_a"))
-          .join(counts.select(col("id").as("id_b"), col("nf").as("nf_b")), Seq("id_b"))
-          .where(col("n_matched") >=
-            ceil(lit(minMatchFrac) * least(col("nf_a"), col("nf_b"))))
-          .select(col("id_a"), col("id_b"))
-      } else {
-        def pairsOn(sub: DataFrame, prior: Option[DataFrame]) = {
-          val p0 = sub.as("a")
-            .join(allChunks.as("b"),
-              col("a.chunk") === col("b.chunk") &&
-                col("a.chunk_key") === col("b.chunk_key") &&
-                col("a.id") =!= col("b.id"))
-            .select(least(col("a.id"), col("b.id")).as("id_a"),
-              greatest(col("a.id"), col("b.id")).as("id_b"),
-              bit_count(col("a.sh").bitwiseXOR(col("b.sh"))).as("hamming"))
-            .where(col("hamming") <= maxHamming)
-            .dropDuplicates("id_a", "id_b")
-            .select(col("id_a"), col("id_b"))
-          prior.fold(p0)(p => p0.join(p, Seq("id_a", "id_b"), "left_anti"))
-        }
-        if (kSub <= 1) pairsOn(inChunks, None)
-        else stagedPairUnion(spark, kSub, Seq("id_a", "id_b"),
-          (g, prior) => pairsOn(inSub(g), prior))
-      }
-    val labels = resolveClusters(pairs, maxIter)
-    val incomingLabeled = labels.join(inH.select(col("id")), Seq("id"), "left_semi")
-    val taintedLabels = labels.join(exH.select(col("id")), Seq("id"), "left_semi")
-      .select(col("label")).distinct()
-    val losers = incomingLabeled.join(taintedLabels, Seq("label"), "left_semi")
-      .select(col("id"))
-      .unionByName(
-        incomingLabeled.join(taintedLabels, Seq("label"), "left_anti")
-          .where(col("id") =!= col("label")).select(col("id")))
-      .withColumnRenamed("id", idCol)
-    incoming.join(losers, Seq(idCol), "left_anti")
   }
 
   /** Sampled-frame perceptual hash frame (id, fpos, sh, every_n) for
@@ -2141,8 +2078,7 @@ object Dedup {
       binaryCol: String, everyN: Int = 2, maxHamming: Int = 4,
       minMatchFrac: Double = 0.6, alignFrames: Boolean = true,
       frameHashes: Option[DataFrame] = None): DataFrame = {
-    require(minMatchFrac > 0 && minMatchFrac <= 1,
-      s"minMatchFrac must be in (0, 1], got $minMatchFrac")
+    val gate = FrameGate(minMatchFrac)
     // `frameHashes` = the caller's already-materialized (id, fpos, sh)
     // frame at the SAME everyN rate (decode-once-across-rungs)
     val (hashes, nFrameRows) = frameHashes
@@ -2150,7 +2086,7 @@ object Dedup {
       .getOrElse(materializeCounted(
         videoFrameHashFrame(df, idCol, typeCol, binaryCol, everyN)
           .select(col("id"), col("fpos"), col("sh"))))
-    val counts = hashes.groupBy(col("id")).agg(count(lit(1)).as("nf"))
+    val counts = frameCounts(hashes)
     val chunked = hammingChunks(hashes, Seq("sh"), maxHamming)
     // disk guard over the FRAME rows (the band join's true input): the
     // SET variant drops the ordinal from the band key, multiplying the
@@ -2180,13 +2116,7 @@ object Dedup {
     val framePairs =
       if (k <= 1) videoFramePairsOn(chunked, alignFrames, maxHamming, None)
       else videoFramePairsStaged(chunked, alignFrames, maxHamming, k)
-    framePairs.groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("n_matched"))
-      .join(counts.select(col("id").as("id_a"), col("nf").as("nf_a")), Seq("id_a"))
-      .join(counts.select(col("id").as("id_b"), col("nf").as("nf_b")), Seq("id_b"))
-      .where(col("n_matched") >=
-        ceil(lit(minMatchFrac) * least(col("nf_a"), col("nf_b"))))
-      .select(col("id_a"), col("id_b"), col("n_matched"), col("nf_a"), col("nf_b"))
+    gate(framePairs, counts, counts)
   }
 
   /** The ONE frame-pair construction [[videoNearDupPairs]]'s single-pass
@@ -2526,6 +2456,114 @@ object Dedup {
         maxIter)
   }
 
+  // ── Batch-vs-index probes: build the index once, probe each batch ───
+  // Incremental dedup (text, media) joins a batch ONE-SIDED against
+  // batch ∪ existing (existing↔existing pairs are unrepresentable);
+  // decontamination (fuzzy text, media) joins a corpus CROSS against a
+  // frozen benchmark index.
+
+  /** The ONE probe join: `probe` rows (alias `a`) against `index` rows
+    * (alias `b`) on equal `keys` and `cond`, projected to (id_a, id_b,
+    * extra…). One-sided (the index holds the probe's rows too): no self
+    * matches, pairs oriented (least, greatest) so (A, B) and (B, A)
+    * dedup to one. Cross: id_a = probe id, id_b = index id, no id
+    * relation (a benchmark drawn from the corpus shares its ids). */
+  private def probeJoin(probe: DataFrame, index: DataFrame, keys: Seq[String],
+      oneSided: Boolean, cond: Column = lit(true),
+      extra: Seq[Column] = Nil): DataFrame = {
+    val on = keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) && cond
+    val (idA, idB) =
+      if (oneSided) (least(col("a.id"), col("b.id")), greatest(col("a.id"), col("b.id")))
+      else (col("a.id"), col("b.id"))
+    probe.as("a")
+      .join(index.as("b"), if (oneSided) on && col("a.id") =!= col("b.id") else on)
+      .select(Seq(idA.as("id_a"), idB.as("id_b")) ++ extra: _*)
+  }
+
+  /** The length filter over two band rows' shingle-set sizes: J ≥ τ
+    * forces min(|A|, |B|) ≥ τ·max(|A|, |B|) (1e-9 slack so a pair at
+    * exactly τ never falls to float rounding). */
+  private def lengthFilter(threshold: Double): Column =
+    least(col("a.sz"), col("b.sz")).cast("double") >=
+      greatest(col("a.sz"), col("b.sz")) * threshold - lit(1e-9)
+
+  /** Drop the pairs earlier staged groups already found (`prior`, keyed
+    * on its own columns), so the union over groups is pair-distinct. */
+  private def minusPrior(pairs: DataFrame, prior: Option[DataFrame]): DataFrame =
+    prior.fold(pairs)(p => pairs.join(p, p.columns.toSeq, "left_anti"))
+
+  /** Band indexes persisted before `sz` rode the band rows lack the
+    * column; backfill it from the shingle index (one cheap join, planned
+    * only on the legacy path) instead of invalidating stored artifacts. */
+  private def withSz(bands: DataFrame, shingles: DataFrame): DataFrame =
+    if (bands.columns.contains("sz")) bands
+    else bands.join(shingles.select(col("id"), size(col("sh")).as("sz")), Seq("id"))
+
+  /** Disk guard of a one-sided probe, with a BOUNDED plan (round 15): a
+    * 10M-row delta against a boilerplate-heavy index re-creates the
+    * round-13 ENOSPC wall one sided, so Σ_k in_k · all_k over the `keys`
+    * buckets ([[bandProbeMass]]) is priced against usable shuffle bytes
+    * like the batch families. Returns (sub-batches, estimate, usable).
+    * Below the rows floor it prices nothing; `nIndex` is only counted
+    * when the probe side alone does not clear the floor. */
+  private def probePlan(family: String, nProbe: Long, nIndex: => Long,
+      probe: DataFrame, all: DataFrame, keys: Seq[String],
+      payloadBytes: => Double, remedies: String): (Int, Double, Long) =
+    if (nProbe < BandGuardMinRows && nProbe + nIndex < BandGuardMinRows)
+      (1, 0.0, 0L)
+    else {
+      val usable = shuffleDirUsableBytes(probe.sparkSession)
+      val est = bandSpillEstimateBytes(bandProbeMass(probe, all, keys), payloadBytes)
+      val k = spillChunkCount(est, usable)
+      if (k > 1) System.err.println(
+        stagingNote(family, est, usable, k, "sub-batch", remedies))
+      (k, est, usable)
+    }
+
+  /** The probe rows whose id hashes to one of the `idx` residues mod `m`
+    * — one sub-batch of the incoming side. */
+  private def subBatch(probe: DataFrame, m: Int, idx: Seq[Int]): DataFrame =
+    probe.where(pmod(xxhash64(col("id")), lit(m.toLong)).isin(idx.map(_.toLong): _*))
+
+  /** Run a one-sided probe in `kSub` sequential sub-batches of the
+    * incoming side ([[stagedPairUnion]]; `kSub <= 1` = one pass). Each
+    * sub-batch probes the FULL (incoming ∪ existing) index side, so the
+    * union is the single-pass pair set: an incoming↔existing pair lands
+    * in its incoming id's sub-batch; an incoming↔incoming pair lands in
+    * both members' and `pairsOn`'s prior anti-join keeps the first. */
+  private def probeSubBatches(probe: DataFrame, kSub: Int, pairKey: Seq[String],
+      pairsOn: (DataFrame, Option[DataFrame]) => DataFrame): DataFrame =
+    if (kSub <= 1) pairsOn(probe, None)
+    else stagedPairUnion(probe.sparkSession, kSub, pairKey,
+      (g, prior) => pairsOn(subBatch(probe, kSub, Seq(g)), prior))
+
+  /** The incremental probes' resolution. First the disjoint-id check
+    * (one id-only semi-join job; callers with disjoint ids by
+    * construction skip it, like mergeUpsert's checkKeyUniqueness), then
+    * the probe's `pairs` are clustered ([[resolveClusters]]): a cluster
+    * touching the existing side (`exIds`) drops ALL its incoming members;
+    * a purely incoming cluster keeps its min id. Returns the surviving
+    * `incoming` rows. */
+  private def incrementalSurvivors(caller: String, incoming: DataFrame,
+      idCol: String, inIds: DataFrame, exIds: DataFrame,
+      checkDisjointIds: Boolean, maxIter: Int)(pairs: => DataFrame): DataFrame = {
+    val (inId, exId) = (inIds.select(col("id")), exIds.select(col("id")))
+    if (checkDisjointIds) {
+      val overlap = inId.join(exId, Seq("id"), "left_semi")
+      require(overlap.isEmpty,
+        s"$caller: incoming and existing share ids " +
+          s"(e.g. ${overlap.limit(3).collect().mkString(",")}) — id spaces must be disjoint")
+    }
+    val labels = resolveClusters(pairs, maxIter)
+    val tainted = labels.join(exId, Seq("id"), "left_semi")
+      .select(col("label"), lit(true).as("_tainted")).distinct()
+    val losers = labels.join(inId, Seq("id"), "left_semi")
+      .join(tainted, Seq("label"), "left")
+      .where(col("_tainted").isNotNull || col("id") =!= col("label"))
+      .select(col("id").as(idCol))
+    incoming.join(losers, Seq(idCol), "left_anti")
+  }
+
   /** INCREMENTAL near-duplicate removal — the daily-increment shape: dedup
     * a new `incoming` batch against an `existing` corpus (and within
     * itself) WITHOUT ever generating existing↔existing pairs. At 100 TB
@@ -2533,14 +2571,10 @@ object Dedup {
     * index and re-pairing the whole corpus every day.
     *
     * Mechanics: both sides shingle + minhash + band (threshold-derived
-    * r/b, as [[nearDupPairsMinHash]]); candidates come from ONE equi-join
-    * of the incoming bands against ALL bands (incoming ∪ existing) — the
-    * join's output can only contain pairs with an incoming member.
-    * Candidates are exact-Jaccard-verified, clustered (CC over verified
-    * pairs), and resolved: a cluster containing ANY existing document
-    * drops all its incoming members (they duplicate corpus content); a
-    * purely-incoming cluster keeps its min-id survivor. Requires the two
-    * id spaces to be disjoint (checked).
+    * r/b, as [[nearDupPairsMinHash]]); the incoming bands probe ALL
+    * bands one-sided ([[probeJoin]]), candidates are exact-Jaccard-
+    * verified and resolved by [[incrementalSurvivors]] (the two id
+    * spaces must be disjoint — checked).
     *
     * Returns the surviving `incoming` rows. The existing corpus's
     * shingle/signature subtree is the per-batch index-build cost; persist
@@ -2620,23 +2654,24 @@ object Dedup {
     * per incoming doc; the corpus side comes from storage). Survivors are
     * still exact-verified — passing the head trades nothing but the
     * ~2·10⁻⁴ at-τ estimator tail, same contract as the batch tuned path.
-    * `prefilterHashes` MUST equal the stored head's width. The prefilter
-    * SELF-GATES on the measured candidate count (`prefilterMinCandidates`,
-    * same gate as the batch tuned path): a routine small batch probing a
-    * large index yields few candidates and skips the head joins' fixed
-    * cost; a flood engages them. Providing the head is therefore always
-    * safe — it changes plans only when it pays. */
+    * The prefilter reads [[PrefilterHashes]] (64) components, so the
+    * stored head must be at least that wide ([[minHashSignatureHead]]'s
+    * default). It SELF-GATES on the measured candidate count
+    * (`prefilterMinCandidates`, same gate as the batch tuned path): a
+    * routine small batch probing a large index yields few candidates
+    * and skips the head joins' fixed cost; a flood engages them.
+    * Providing the head is therefore always safe — it changes plans only
+    * when it pays. */
   def removeNearDuplicatesIncrementalIndexed(existingBands: DataFrame,
       existingShingles: DataFrame, incoming: DataFrame,
       textCol: String, idCol: String, threshold: Double = 0.8,
       n: Int = 3, k: Int = 128, checkDisjointIds: Boolean = true,
       maxIter: Int = 20, existingSigHead: Option[DataFrame] = None,
-      prefilterHashes: Int = 64,
       prefilterMinCandidates: Double = 4e6, tok: Tok = Tok.Latin,
       knownCorpusRows: Option[Long] = None): DataFrame =
     removeIncrementalFrom(existingBands, existingShingles, incoming,
       textCol, idCol, threshold, n, k, checkDisjointIds, maxIter,
-      existingSigHead, prefilterHashes, prefilterMinCandidates, tok,
+      existingSigHead, prefilterMinCandidates, tok,
       knownCorpusRows = knownCorpusRows)
 
   /** Shared incremental-removal core: one-sided band probe of `incoming`
@@ -2646,7 +2681,7 @@ object Dedup {
   private[graft] def removeIncrementalFrom(exBands: DataFrame, shEx: DataFrame,
       incoming: DataFrame, textCol: String, idCol: String, threshold: Double,
       n: Int, k: Int, checkDisjointIds: Boolean, maxIter: Int,
-      exSigHead: Option[DataFrame] = None, prefilterHashes: Int = 64,
+      exSigHead: Option[DataFrame] = None,
       prefilterMinCandidates: Double = 4e6, tok: Tok = Tok.Latin,
       forceProbeGroups: Option[Int] = None,
       knownCorpusRows: Option[Long] = None,
@@ -2660,179 +2695,94 @@ object Dedup {
     // or intermittently across runs). The per-row raise_error in
     // [[prefilterByHead]] stays as the exhaustive backstop for a head
     // with MIXED widths, which one sampled row cannot rule out.
-    exSigHead.withFilter(_ => prefilterHashes > 0).foreach { exHd =>
+    exSigHead.foreach { exHd =>
       exHd.select(size(col("hd")).as("w")).limit(1).collect()
         .headOption.foreach { row =>
           val w = row.getInt(0)
-          require(w >= prefilterHashes,
+          require(w >= PrefilterHashes,
             s"incremental dedup: stored signature head has $w components but " +
-              s"prefilterHashes=$prefilterHashes — the agreement cut would be " +
-              "computed with an understated standard error; rebuild the head " +
-              "or pass its actual width")
+              s"the probe prefilter reads $PrefilterHashes — the agreement cut " +
+              "would be computed with an understated standard error; rebuild " +
+              s"the head at width >= $PrefilterHashes")
         }
     }
-    // The guard's delta metrics (row count + mean shingle width) ride the
-    // shingle checkpoint as an observation — the pricing pass below then
-    // costs ZERO extra driver actions on the delta (round 16; the
-    // round-15 fix had already folded them into one action).
+    // The guard's delta metrics (row count + total shingle count) ride
+    // the shingle checkpoint as an observation — the pricing pass below
+    // then costs ZERO extra driver actions on the delta (round 16).
     val oIn = org.apache.spark.sql.Observation()
     val shInObs = shingleIndex(incoming, textCol, idCol, n, tok)
       .observe(oIn, count(lit(1)).as("n_rows"),
-        coalesce(avg(size(col("sh"))), lit(0.0)).as("mean_sh"))
+        coalesce(sum(size(col("sh"))), lit(0L)).as("n_sh"))
     val shIn = materialize(shInObs)
-    // Default-on eager validation (one id-only semi-join job); callers
-    // that guarantee disjoint id spaces by construction (a sequence-
-    // assigned ingest id, a date-prefixed batch id) pass false to skip it
-    // on the per-batch hot path — mirroring mergeUpsert's
-    // checkKeyUniqueness.
-    if (checkDisjointIds) {
-      val overlap = shIn.select(col("id")).join(shEx.select(col("id")), Seq("id"), "left_semi")
-      require(overlap.isEmpty,
-        s"removeNearDuplicatesIncremental: incoming and existing share ids " +
-          s"(e.g. ${overlap.limit(3).collect().mkString(",")}) — id spaces must be disjoint")
-    }
-    // one-sided probe: incoming bands × all bands — existing↔existing
-    // pairs are unrepresentable in this join's output. The incoming
-    // bands are materialized once: they feed BOTH join sides, and the
-    // minhash signature is the CPU-heavy stage on the delta.
-    val newBands = materialize(minHashBandRows(shIn, k, rr, b))
-    // Band indexes persisted before `sz` rode the band rows lack the
-    // column; backfill it from the shingle index (one cheap join, planned
-    // only on the legacy path) instead of invalidating stored artifacts.
-    val exB =
-      if (exBands.columns.contains("sz")) exBands
-      else exBands.join(shEx.select(col("id"), size(col("sh")).as("sz")), Seq("id"))
-    val allBands = newBands.unionByName(exB.select(newBands.columns.map(col): _*))
-    val shAll = shIn.unionByName(shEx)
-    val shAllH = hashShingles(shAll)
-    // Disk guard with a BOUNDED plan (round 15): the probe's candidate
-    // mass is "batch-bounded" only if someone bounds the batch — a
-    // 10M-doc delta against a boilerplate-heavy index re-creates the
-    // round-13 ENOSPC wall one sided. Price Σ_k in_k · all_k over the
-    // band buckets (length filter ignored — conservative), payload two
-    // hashed shingle arrays at the DELTA's mean width (pair sides agree
-    // within the threshold ratio after the length filter), and auto-
-    // split the incoming side into sequential id-hash sub-batches when
-    // the single probe would not fit. Each sub-batch probes the full
-    // (incoming ∪ existing) band side, so the union over sub-batches is
-    // the single-pass pair set (incoming↔existing pairs land in their
-    // incoming id's sub-batch; both-incoming pairs land in both and the
-    // staged prior anti-join keeps the first).
-    val spark = incoming.sparkSession
-    val (kSub, probeEst, probeUsable) = forceProbeGroups match {
-      case Some(f) => (f, 0.0, 0L)
-      case None =>
-        // Guard pricing with ZERO extra driver actions on the delta (the
-        // count + mean-shingle-width aggregate rides the shIn checkpoint
-        // as the observation attached above, read straight off the
-        // executed plan's accumulators — no listener await, see
-        // [[ObservedLedger]]; one-action recompute fallback for AQE
-        // elision, logged), and the corpus-side count SKIPPED whenever
-        // the delta alone clears the rows floor or the caller already
-        // knows it (`knownCorpusRows` — the stored-index path persists
-        // the count with the index; the streaming path tracks it across
-        // batches). Round-15 bench watch item: the guard's extra
-        // per-batch driver actions were the one identified mechanical
-        // contributor to q_incremental_dedup's drift.
-        lazy val deltaRecompute = {
-          System.err.println(
-            "[graft] WARN incremental probe guard: delta metrics absent " +
-              "from the executed shingle-checkpoint plan (AQE " +
-              "empty-relation elision?) - recomputing with an extra pass")
-          shIn
-            .agg(count(lit(1)), coalesce(avg(size(col("sh"))), lit(0.0))).first()
-        }
-        val deltaRow = {
-          val direct =
-            try shInObs.queryExecution.observedMetrics.get(oIn.name)
-            catch { case _: Throwable => None }
-          direct.orElse(oIn.future.value.flatMap(_.toOption))
-        }
-          .filter(r => r.schema != null &&
-            r.schema.fieldNames.contains("n_rows") &&
-            r.schema.fieldNames.contains("mean_sh"))
-        val nIn = deltaRow.fold(deltaRecompute.getLong(0))(
-          r => r.getLong(r.fieldIndex("n_rows")))
-        val nEx =
-          if (nIn >= BandGuardMinRows) 0L
-          else knownCorpusRows.getOrElse(shEx.count())
-        if (nIn + nEx < BandGuardMinRows) (1, 0.0, 0L)
-        else {
-          val meanSh = deltaRow.fold(deltaRecompute.getDouble(1))(
-            r => r.getDouble(r.fieldIndex("mean_sh")))
-          val usable = shuffleDirUsableBytes(spark)
-          val est = bandSpillEstimateBytes(
-            bandProbeMass(newBands, allBands, Seq("band", "band_key")),
-            payloadBytes = 2.0 * meanSh * 8.0)
-          val ks = spillChunkCount(est, usable)
-          if (ks > 1) System.err.println(stagingNote(
-            "incremental near-dup probe", est, usable, ks, "sub-batch",
+    incrementalSurvivors("removeNearDuplicatesIncremental", incoming, idCol,
+        shIn, shEx, checkDisjointIds, maxIter) {
+      // materialized once: the bands feed BOTH join sides, and the
+      // minhash signature is the CPU-heavy stage on the delta
+      val newBands = materialize(minHashBandRows(shIn, k, rr, b))
+      val allBands = newBands.unionByName(
+        withSz(exBands, shEx).select(newBands.columns.map(col): _*))
+      val shAllH = hashShingles(shIn.unionByName(shEx))
+      val spark = incoming.sparkSession
+      // Disk guard over the band buckets (length filter ignored —
+      // conservative), payload two hashed shingle arrays at the DELTA's
+      // mean width, delta metrics read off the executed shingle
+      // checkpoint; `knownCorpusRows` (persisted with a stored index,
+      // tracked across streaming batches) spares the corpus count.
+      val (kSub, probeEst, probeUsable) = forceProbeGroups.map((_, 0.0, 0L))
+        .getOrElse {
+          val nIn = observedLong(shInObs, oIn, "n_rows")(shIn.count())
+          probePlan("incremental near-dup probe", nIn,
+            knownCorpusRows.getOrElse(shEx.count()),
+            newBands, allBands, Seq("band", "band_key"),
+            payloadBytes = 2.0 * 8.0 * observedLong(shInObs, oIn, "n_sh")(
+              shIn.agg(coalesce(sum(size(col("sh"))), lit(0L))).first().getLong(0)) /
+              math.max(nIn, 1L),
             remedies = "probe in smaller batches, raise the threshold, or " +
               "strip shared boilerplate (line/span dedup) from the delta " +
-              "first"))
-          (ks, est, usable)
+              "first")
         }
-    }
-    // candidates → [self-gated prefilter] → exact verify, per sub-batch
-    // (kSub = 1 ⇒ the whole delta in one pass — the historical plan).
-    // The optional signature-agreement prefilter self-gates on the
-    // MEASURED candidate count per pass (same gate as the batch tuned
-    // path): below prefilterMinCandidates the head joins' fixed cost can
-    // only lose; above it they remove the verify wall (BASELINE.md
-    // round 7: 5M-doc verify 639 → 40 s).
-    def pairsOn(sub: DataFrame, prior: Option[DataFrame]): DataFrame = {
-      val cand0 = sub.as("a")
-        .join(allBands.as("b"),
-          col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
-            col("a.id") =!= col("b.id") &&
-            // same length filter as nearDupPairsMinHash: kill background
-            // band collisions before the pair-dedup shuffle and verify
-            least(col("a.sz"), col("b.sz")).cast("double") >=
-              greatest(col("a.sz"), col("b.sz")) * threshold - lit(1e-9))
-        // canonical orientation so (A,B)/(B,A) dedup to one pair
-        .select(least(col("a.id"), col("b.id")).as("id_a"),
-          greatest(col("a.id"), col("b.id")).as("id_b"))
-        .dropDuplicates("id_a", "id_b")
-      val candidates = prior.fold(cand0)(p =>
-        cand0.join(p, Seq("id_a", "id_b"), "left_anti"))
-      val kept = exSigHead match {
-        case Some(exHd) if prefilterHashes > 0 =>
-          // The self-gate's candidate count rides the materialize as an
-          // observation — one driver action, not a checkpoint + a count
-          // (round 17; the indexed probe paid the extra pass per batch).
-          val (cand, nCand) = materializeCounted(candidates)
-          if (nCand >= prefilterMinCandidates) {
-            val allHd = minHashSignatureHead(shIn, prefilterHashes)
-              .unionByName(exHd.select(col("id"), col("hd")))
-            prefilterByHead(cand, allHd, threshold, prefilterHashes)
-          } else cand
-        case _ => candidates
+      // candidates → [self-gated prefilter] → exact verify, per sub-batch.
+      // The optional signature-agreement prefilter self-gates on the
+      // MEASURED candidate count per pass (same gate as the batch tuned
+      // path): below prefilterMinCandidates the head joins' fixed cost can
+      // only lose; above it they remove the verify wall (BASELINE.md
+      // round 7: 5M-doc verify 639 → 40 s).
+      def pairsOn(sub: DataFrame, prior: Option[DataFrame]): DataFrame = {
+        val candidates = minusPrior(
+          probeJoin(sub, allBands, Seq("band", "band_key"), oneSided = true,
+            lengthFilter(threshold)).dropDuplicates("id_a", "id_b"),
+          prior)
+        val kept = exSigHead match {
+          case Some(exHd) =>
+            // The self-gate's candidate count rides the materialize as an
+            // observation — one driver action, not a checkpoint + a count.
+            val (cand, nCand) = materializeCounted(candidates)
+            if (nCand >= prefilterMinCandidates) {
+              val allHd = minHashSignatureHead(shIn, PrefilterHashes)
+                .unionByName(exHd.select(col("id"), col("hd")))
+              prefilterByHead(cand, allHd, threshold, PrefilterHashes)
+            } else cand
+          case None => candidates
+        }
+        verifyJaccard(kept, shAllH, threshold).select(col("id_a"), col("id_b"))
       }
-      verifyJaccard(kept, shAllH, threshold).select(col("id_a"), col("id_b"))
-    }
-    // PILOT-CALIBRATED probe split (round 16 — the cosine fix applied to
-    // the probe axis): the guard's payload model measured ~×20
-    // pessimistic here (185.6 GB projected vs 8.8 GB real peak at a
-    // 1M-doc delta — BASELINE.md "Round 16"), so AUTO runs a small
-    // id-hash slice of the delta (1/max(kSub,32)) as a measured pilot
-    // and re-chunks the REST with the real bytes-per-candidate (clamped
-    // ≥ 0.05, ×1.5 safety back on — pessimism stays the tie-break).
-    // Exactness is the sub-batch argument unchanged: pilot ∪ rest
-    // groups partition the incoming ids (pmod residues 0 vs 1..m−1),
-    // every sub-batch probes the full (incoming ∪ existing) band side,
-    // and the prior anti-join (seeded with the pilot's keys) keeps the
-    // first copy of a both-incoming pair. `forceProbeGroups` bypasses —
-    // the parity-spec seam keeps its exact historical plan.
-    val calibrateProbe = forceProbePilotCalib || (forceProbeGroups.isEmpty &&
-      spark.conf.get("spark.graft.bandguard.calibratePilot", "true").toBoolean)
-    def subBatch(m: Int, idx: Seq[Int]): DataFrame =
-      newBands.where(
-        pmod(xxhash64(col("id")), lit(m.toLong)).isin(idx.map(_.toLong): _*))
-    val pairs =
-      if (kSub <= 1) pairsOn(newBands, None)
-      else if (!calibrateProbe)
-        stagedPairUnion(spark, kSub, Seq("id_a", "id_b"), (g, prior) =>
-          pairsOn(subBatch(kSub, Seq(g)), prior))
+      // PILOT-CALIBRATED probe split (round 16 — the cosine fix applied
+      // to the probe axis): the guard's payload model measured ~×20
+      // pessimistic here (185.6 GB projected vs 8.8 GB real peak at a
+      // 1M-doc delta — BASELINE.md "Round 16"), so AUTO runs a small
+      // id-hash slice of the delta (1/max(kSub,32)) as a measured pilot
+      // and re-chunks the REST with the real bytes-per-candidate (clamped
+      // ≥ 0.05, ×1.5 safety back on — pessimism stays the tie-break).
+      // Exactness is the sub-batch argument unchanged: pilot ∪ rest
+      // groups partition the incoming ids (pmod residues 0 vs 1..m−1),
+      // every sub-batch probes the full (incoming ∪ existing) band side,
+      // and the prior anti-join (seeded with the pilot's keys) keeps the
+      // first copy of a both-incoming pair. `forceProbeGroups` bypasses —
+      // the parity-spec seam keeps its exact historical plan.
+      val calibrateProbe = forceProbePilotCalib || (forceProbeGroups.isEmpty &&
+        spark.conf.get("spark.graft.bandguard.calibratePilot", "true").toBoolean)
+      if (kSub <= 1 || !calibrateProbe)
+        probeSubBatches(newBands, kSub, Seq("id_a", "id_b"), pairsOn)
       else {
         val mMod = math.max(kSub, 32)
         System.err.println(
@@ -2840,7 +2790,7 @@ object Dedup {
             s"split - probing a 1/$mMod id-hash slice of the delta to " +
             "measure real bytes-per-candidate")
         val (pilot, peak) = withSpillSampler(spark) {
-          val p = materialize(pairsOn(subBatch(mMod, Seq(0)), None))
+          val p = materialize(pairsOn(subBatch(newBands, mMod, Seq(0)), None))
           p.count(); p
         }
         awaitShuffleRelease(spark)
@@ -2854,30 +2804,17 @@ object Dedup {
         val pilotKeys = pilot.select(col("id_a"), col("id_b"))
         val restIdx = 1 until mMod
         val restPairs =
-          if (kRest <= 1) pairsOn(subBatch(mMod, restIdx), Some(pilotKeys))
+          if (kRest <= 1) pairsOn(subBatch(newBands, mMod, restIdx), Some(pilotKeys))
           else {
             val restGroups = stagingGroups(restIdx.length, kRest)
               .map(_.map(restIdx))
             stagedPairUnion(spark, restGroups.length, Seq("id_a", "id_b"),
-              (g, prior) => pairsOn(subBatch(mMod, restGroups(g)),
+              (g, prior) => pairsOn(subBatch(newBands, mMod, restGroups(g)),
                 Some(prior.fold(pilotKeys)(_.unionByName(pilotKeys)))))
           }
         pilot.unionByName(restPairs)
       }
-    val labels = resolveClusters(pairs, maxIter)
-    // clusters touching the existing corpus drop ALL their incoming
-    // members; purely-incoming clusters keep the min-id survivor
-    val incomingLabeled = labels.join(shIn.select(col("id")), Seq("id"), "left_semi")
-    val taintedLabels = labels.join(shEx.select(col("id")), Seq("id"), "left_semi")
-      .select(col("label")).distinct()
-    val losers = incomingLabeled.join(taintedLabels, Seq("label"), "left_semi")
-      .select(col("id"))
-      .unionByName(
-        incomingLabeled.join(taintedLabels, Seq("label"), "left_anti")
-          .where(col("id") =!= col("label")).select(col("id")))
-      .distinct()
-      .select(col("id").as(idCol))
-    incoming.join(losers, Seq(idCol), "left_anti")
+    }
   }
 
   /** Benchmark decontamination: per corpus document, the number of
@@ -2962,28 +2899,13 @@ object Dedup {
     // materializing also cuts the CORPUS lineage — a pipeline hands in a
     // multi-stage computed frame here, not a bare scan
     val shC = materialize(shingleIndex(corpus, textCol, idCol, n, tok))
-    // band indexes persisted before `sz` rode the band rows lack the
-    // column; backfill from the shingle index (the same legacy-artifact
-    // contract as the incremental probe)
-    val benchB =
-      if (benchBands.columns.contains("sz")) benchBands
-      else benchBands.join(shB.select(col("id"), size(col("sh")).as("sz")),
-        Seq("id"))
-    val cand = minHashBandRows(shC, k, rr, b).as("a")
-      .join(benchB.as("b"),
-        col("a.band") === col("b.band") &&
-          col("a.band_key") === col("b.band_key") &&
-          least(col("a.sz"), col("b.sz")).cast("double") >=
-            greatest(col("a.sz"), col("b.sz")) * threshold - lit(1e-9))
-      .select(col("a.id").as("corpus_id"), col("b.id").as("bench_id"))
-      .dropDuplicates("corpus_id", "bench_id")
-    val contaminated = cand
-      .join(hashShingles(shC).select(col("id").as("corpus_id"),
-        col("sh").as("_sh_c")), Seq("corpus_id"))
-      .join(hashShingles(shB).select(col("id").as("bench_id"),
-        col("sh").as("_sh_b")), Seq("bench_id"))
-      .where(GraftFunctions.jaccardSim(col("_sh_c"), col("_sh_b")) >= threshold)
-      .select(col("corpus_id").as(idCol)).distinct()
+    val cand = probeJoin(minHashBandRows(shC, k, rr, b),
+        withSz(benchBands, shB), Seq("band", "band_key"), oneSided = false,
+        lengthFilter(threshold))
+      .dropDuplicates("id_a", "id_b")
+    val contaminated =
+      verifyJaccard(cand, hashShingles(shC), threshold, Some(hashShingles(shB)))
+        .select(col("id_a").as(idCol)).distinct()
     corpus.join(contaminated, Seq(idCol), "left_anti")
   }
 
@@ -3093,59 +3015,20 @@ object Dedup {
       maxHamming: Int, everyN: Int = 2, minMatchFrac: Double = 0.6,
       alignFrames: Boolean = true,
       corpusHashes: Option[DataFrame] = None): DataFrame = {
-    require(Set("image", "audio", "video").contains(kind),
-      s"mediaContaminationHits: kind must be 'image', 'audio' or " +
-        s"'video', got '$kind'")
     // `corpusHashes` = the caller's ALREADY-COMPUTED hash frame for the
     // same payloads at the same rate (the streaming per-batch flow,
     // which decodes once and probes dedup + decon with one frame) — may
     // cover a SUPERSET of the corpus ids (hits on absent ids are inert
     // in the caller's anti-join); when absent, decode here.
-    val cH0 = corpusHashes.getOrElse(materialize(
-      mediaHashFrame(kind, corpus, idCol, typeCol, binaryCol, everyN)))
-    if (kind == "video")
-      requireIndexRate(benchmarkHashes, everyN, "mediaContaminationHits")
-    val (cH, bH) =
-      if (kind == "video")
-        (cH0.select(col("id"), col("fpos"), col("sh")),
-          benchmarkHashes.select(col("id"), col("fpos"), col("sh")))
-      else (cH0.select(col("id"), col("sh")),
-        benchmarkHashes.select(col("id"), col("sh")))
-    val cChunks = hammingChunks(cH, Seq("sh"), maxHamming)
-    val bChunks = hammingChunks(bH, Seq("sh"), maxHamming)
-    val pairs =
-      if (kind == "video") {
-        val fposKey =
-          if (alignFrames) col("a.fpos") === col("b.fpos") else lit(true)
-        val framePairs = cChunks.as("a")
-          .join(bChunks.as("b"),
-            fposKey && col("a.chunk") === col("b.chunk") &&
-              col("a.chunk_key") === col("b.chunk_key"))
-          .select(col("a.id").as("corpus_id"), col("b.id").as("bench_id"),
-            col("a.fpos").as("fpos"),
-            bit_count(col("a.sh").bitwiseXOR(col("b.sh"))).as("hamming"))
-          .where(col("hamming") <= maxHamming)
-          .dropDuplicates("corpus_id", "bench_id", "fpos")
-        val nfC = cH.groupBy(col("id")).agg(count(lit(1)).as("nf_c"))
-        val nfB = bH.groupBy(col("id")).agg(count(lit(1)).as("nf_b"))
-        framePairs.groupBy(col("corpus_id"), col("bench_id"))
-          .agg(count(lit(1)).as("n_matched"))
-          .join(nfC.select(col("id").as("corpus_id"), col("nf_c")), Seq("corpus_id"))
-          .join(nfB.select(col("id").as("bench_id"), col("nf_b")), Seq("bench_id"))
-          .where(col("n_matched") >=
-            ceil(lit(minMatchFrac) * least(col("nf_c"), col("nf_b"))))
-          .select(col("corpus_id"), col("bench_id"))
-      } else
-        cChunks.as("a")
-          .join(bChunks.as("b"),
-            col("a.chunk") === col("b.chunk") &&
-              col("a.chunk_key") === col("b.chunk_key"))
-          .select(col("a.id").as("corpus_id"), col("b.id").as("bench_id"),
-            bit_count(col("a.sh").bitwiseXOR(col("b.sh"))).as("hamming"))
-          .where(col("hamming") <= maxHamming)
-          .dropDuplicates("corpus_id", "bench_id")
-          .select(col("corpus_id"), col("bench_id"))
-    pairs.groupBy(col("corpus_id")).agg(count(lit(1)).as("n_benchmark_hits"))
+    val (cH, bH, _, gate) = mediaProbeSides("mediaContaminationHits", kind,
+      corpus, idCol, typeCol, binaryCol, everyN, minMatchFrac, corpusHashes,
+      benchmarkHashes)
+    val pairs = hammingProbe(hammingChunks(cH, Seq("sh"), maxHamming),
+      hammingChunks(bH, Seq("sh"), maxHamming), maxHamming,
+      gate.map(_ => alignFrames), oneSided = false)(None)
+    gate.fold(pairs)(_(pairs, frameCounts(cH), frameCounts(bH)))
+      .groupBy(col("id_a").as("corpus_id"))
+      .agg(count(lit(1)).as("n_benchmark_hits"))
   }
 
   /** Drop every corpus item flagged by [[mediaContaminationHits]] against
@@ -3162,21 +3045,6 @@ object Dedup {
         corpusHashes)
         .select(col("corpus_id").as(idCol)),
       Seq(idCol), "left_anti")
-
-  /** [[removeContaminatedMediaIndexed]] computing the benchmark index
-    * fresh from the benchmark's own media payloads — the recompute
-    * convenience; persist [[imageHashFrame]]/[[audioHashFrame]]/
-    * [[videoFrameHashFrame]] and probe the stored artifact to pay the
-    * benchmark decode once per version. */
-  def removeContaminatedMedia(corpus: DataFrame, benchmark: DataFrame,
-      idCol: String, typeCol: String, binaryCol: String, kind: String,
-      maxHamming: Int, everyN: Int = 2, minMatchFrac: Double = 0.6,
-      alignFrames: Boolean = true): DataFrame = {
-    val bH = materialize(
-      mediaHashFrame(kind, benchmark, idCol, typeCol, binaryCol, everyN))
-    removeContaminatedMediaIndexed(corpus, bH, idCol, typeCol, binaryCol,
-      kind, maxHamming, everyN, minMatchFrac, alignFrames)
-  }
 
   // ─── Semantic (embedding-space) deduplication — SemDeDup ──────────────
 

@@ -415,11 +415,14 @@ object CorpusPipeline {
     // no source could take anyway; (c) operators that self-join their
     // input duplicate the node — Spark allows exact (sameResult)
     // duplicates and the accumulators agree by construction.
-    val stageObs = ListBuffer.empty[(String, Observation)]
+    // every observed stage is a reported stage: the buffer, in chain
+    // order, is both `Prepared.stages` and `Prepared.observations`
+    val stageObs = ListBuffer.empty[(String, DataFrame, Observation)]
     def observed(name: String, df: DataFrame): DataFrame = {
       val o = Observation()
-      stageObs += name -> o
-      df.observe(o, count(lit(1)).as("n_kept"))
+      val obs = df.observe(o, count(lit(1)).as("n_kept"))
+      stageObs += ((name, obs, o))
+      obs
     }
     // The adaptive spread sits BELOW the input observation: the input
     // count is partitioning-blind (same rows), and the CollectMetrics
@@ -919,32 +922,9 @@ object CorpusPipeline {
           graft.operators.Bpe.pieceIds(col("chunk_text"), m)))
     }
 
-    Prepared(documents, chunks, Seq(
-      "input" -> corpusO) ++
-      cfg.urlCol.map(_ => "url_dedup" -> urlDeduped) ++
-      (if (cfg.c4Rules) Seq("c4_page_gate" -> c4Gated) else Nil) ++ Seq(
-      "quality" -> filtered) ++
-      cfg.domainCap.map(_ => "domain_cap" -> capped) ++ Seq(
-      "exact_dedup" -> exactDeduped) ++
-      cfg.lineDedupMinDocs.map(_ => "line_dedup" -> lineDeduped) ++
-      cfg.spanDedupN.map(_ => "span_dedup" -> spanDeduped) ++ Seq(
-      "near_dedup" -> nearDeduped) ++
-      cfg.semanticDedup.map(_ => "semantic_dedup" -> semDeduped) ++
-      cfg.imageDedup.map(_ => "image_dedup" -> imgDeduped) ++
-      cfg.audioDedup.map(_ => "audio_dedup" -> audDeduped) ++
-      cfg.videoDedup.map(_ => "video_dedup" -> vidDeduped) ++ Seq(
-      "decontaminated" -> cleanM) ++
-      // keyed on BOTH switches: with no benchmark the stage does not run,
-      // and a stage report must never show a rung that never executed
-      benchClean.flatMap(_ => cfg.fuzzyDecontaminate)
-        .map(_ => "decontaminated_fuzzy" -> fuzzyClean) ++
-      cfg.mediaDecontaminate.map(_ => "media_decontaminated" -> mediaClean) ++
-      cfg.dsirSelect.map(_ => "dsir_selected" -> selected) ++
-      cfg.mixToShares.map(_ => "mixed" -> shareMixed) ++
-      cfg.temperatureMix.map(_ => "temperature_mixed" -> mixed),
-      // observed() is called once per reported stage, in chain order, so
-      // the observation list mirrors `stages` name for name
-      stageObs.toList,
+    Prepared(documents, chunks,
+      stageObs.toList.map { case (name, df, _) => name -> df },
+      stageObs.toList.map { case (name, _, o) => name -> o },
       packed)
   }
 }

@@ -31,4 +31,19 @@ object TestSparkSession {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Spark jobs started while `f` runs (listener-counted; the async
+    * listener bus gets 500 ms to drain before the count is read). */
+  def jobsDuring(f: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        n.incrementAndGet(): Unit
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try { f; Thread.sleep(500) }
+    finally spark.sparkContext.removeSparkListener(l)
+    n.get()
+  }
 }

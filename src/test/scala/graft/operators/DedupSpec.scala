@@ -520,18 +520,7 @@ class DedupSpec extends AnyFunSuite {
     // Count Spark jobs launched while BUILDING the plan (the disjointness
     // require and the materialize calls are the only eager work): with the
     // flag off, plan construction must launch strictly fewer jobs.
-    def jobsDuring(f: => Unit): Int = {
-      val n = new java.util.concurrent.atomic.AtomicInteger(0)
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          n.incrementAndGet(): Unit
-        }
-      }
-      spark.sparkContext.addSparkListener(l)
-      try { f; Thread.sleep(500) } // let the async listener bus drain
-      finally spark.sparkContext.removeSparkListener(l)
-      n.get()
-    }
+    import graft.TestSparkSession.jobsDuring
     var planChecked: org.apache.spark.sql.DataFrame = null
     var planUnchecked: org.apache.spark.sql.DataFrame = null
     val jobsWithCheck = jobsDuring {

@@ -694,6 +694,55 @@ class MultimodalSpec extends AnyFunSuite {
       "SET probe must flag the trimmed re-upload and nothing else")
   }
 
+  test("media probes: a mismatched-rate video index is rejected after at most one Spark job") {
+    // a persisted index stamped every_n=2; the batch probes at everyN=1.
+    // The rate probe is the one job the rejection may cost — the batch's
+    // payloads must never be decoded first.
+    val idxDir = java.nio.file.Files.createTempDirectory("video_idx_rate").toString
+    Seq((0L, 0, 11L, 2), (0L, 1, 12L, 2), (1L, 0, 13L, 2))
+      .toDF("id", "fpos", "sh", "every_n").write.mode("overwrite").parquet(idxDir)
+    val index = spark.read.parquet(idxDir)
+    val batch = Seq((1000L, "video/avi", VideoFixture.aviBytes(5000L)))
+      .toDF("media_id", "media_type", "content")
+    val dedupJobs = TestSparkSession.jobsDuring {
+      val e = intercept[IllegalArgumentException] {
+        Dedup.removeNearDuplicateMediaIncremental(index, batch, "media_id",
+          "media_type", "content", kind = "video", maxHamming = 4, everyN = 1)
+      }
+      assert(e.getMessage.contains("every_n=2"))
+    }
+    val deconJobs = TestSparkSession.jobsDuring {
+      val e = intercept[IllegalArgumentException] {
+        Dedup.mediaContaminationHits(batch, index, "media_id", "media_type",
+          "content", "video", maxHamming = 4, everyN = 1)
+      }
+      assert(e.getMessage.contains("every_n=2"))
+    }
+    assert(dedupJobs <= 1 && deconJobs <= 1,
+      s"rejection cost $dedupJobs (dedup) / $deconJobs (decon) jobs, expected <= 1")
+  }
+
+  test("media probes: kind=video rejects minMatchFrac outside (0, 1] in both probes") {
+    // a fraction above 1 makes the matched-frame gate unsatisfiable (the
+    // probes would silently match no video at all); 0 gates nothing
+    val index = Seq((0L, 0, 11L, 2)).toDF("id", "fpos", "sh", "every_n")
+    val batch = Seq((1000L, "video/avi", VideoFixture.aviBytes(5000L)))
+      .toDF("media_id", "media_type", "content")
+    for (frac <- Seq(1.5, 0.0)) {
+      val dedup = intercept[IllegalArgumentException] {
+        Dedup.removeNearDuplicateMediaIncremental(index, batch, "media_id",
+          "media_type", "content", kind = "video", maxHamming = 4,
+          minMatchFrac = frac)
+      }
+      assert(dedup.getMessage.contains("minMatchFrac"))
+      val decon = intercept[IllegalArgumentException] {
+        Dedup.mediaContaminationHits(batch, index, "media_id", "media_type",
+          "content", "video", maxHamming = 4, minMatchFrac = frac)
+      }
+      assert(decon.getMessage.contains("minMatchFrac"))
+    }
+  }
+
   test("videoFrameHashFrame: fpos is the decoder slot — a partially corrupt twin still aligns") {
     // clip A = intact fixture clip; clip B = same clip with its LAST
     // sampled frame's movi bytes corrupted so that frame alone fails to
