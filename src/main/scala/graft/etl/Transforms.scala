@@ -95,8 +95,4 @@ object Transforms {
   /** P10 variant — dedup on a key subset (keeps one arbitrary row per key). */
   def dedupByKey(df: DataFrame, keys: Seq[String]): DataFrame =
     df.dropDuplicates(keys)
-
-  /** P11 — row count (len(df), etl_pipeline.py:78 etc.). An action: compute
-    * once and reuse (SURVEY §2.7 O4). */
-  def rowCount(df: DataFrame): Long = df.count()
 }

@@ -162,6 +162,11 @@ object Dedup {
     * accumulators read as their INITIAL row (count 0), not as absent,
     * so an early read would silently return 0 instead of falling back.
     * Every call site here reads immediately after its materialize.
+    * A direct `queryExecution.observedMetrics` read is valid only for a
+    * frame whose own plan executed; on a frame that was WRITTEN (the
+    * write runs its own `QueryExecution`) it reads `[0]`, so a written
+    * frame's count comes from its observation instead
+    * (`Pipeline.writtenRows`).
     * AQE may still replace an empty subtree with an empty relation and
     * elide the CollectMetrics node; that — and only that — takes the
     * caller's fallback, now LOUDLY (round-16 verdict: every degraded

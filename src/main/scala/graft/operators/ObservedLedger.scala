@@ -30,7 +30,10 @@ import org.apache.spark.sql.{DataFrame, Row}
   * Bounded ring (metric rows are a handful of scalars each); safe for
   * concurrent readers/writers (streaming micro-batches). Only FULLY
   * materializing actions may record — a limit-1 take would record
-  * partial accumulator values (the documented dsir-probe hazard). */
+  * partial accumulator values (the documented dsir-probe hazard). A
+  * direct `queryExecution.observedMetrics` read is valid only for a
+  * frame whose own plan executed; on a frame that was written it reads
+  * `[0]`, so never record a frame a write consumed. */
 private[graft] object ObservedLedger {
   private val MaxEntries = 64
   private val recent =

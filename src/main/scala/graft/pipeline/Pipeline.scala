@@ -1,6 +1,12 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.{ExecutionException, Executors}
+
+import scala.util.{Failure, Try}
+
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.functions.{count, lit}
 
 import graft.etl.{Transforms, Warehouse}
 import graft.quality.{CheckResult, Checks}
@@ -10,17 +16,16 @@ import graft.sources.Sources
   *
   * The reference's Airflow DAG (dags/etl_pipeline.py:534–543) —
   * `create_dataset >> [extract → transform → load]×2 >> validate` —
-  * restated as plain function composition: each branch is one lazy
-  * LogicalPlan ending in saveAsTable, the "barrier" is simply evaluating
-  * validation after both loads return, and XCom scalars become ordinary
-  * return values. There is no scheduler, SMTP, or metadata DB here by
+  * restated as one driver program that keeps the DAG's shape: after the
+  * database exists, the two extract → transform → load branches run as
+  * concurrent Spark jobs, the barrier is joining both before validation,
+  * and validation submits its nine independent queries at once (the
+  * reference's nine BigQuery queries). XCom scalars become ordinary
+  * return values: each branch's row count is observed on the write
+  * that loads it. There is no scheduler, SMTP, or metadata DB here by
   * design (SURVEY §1.5, §7.4).
   */
 object Pipeline {
-
-  /** O2 — a stage's data plus its logged row count (replaces XCom counts,
-    * etl_pipeline.py:77–78). `count` is computed once and reused (O4). */
-  final case class StageResult(df: DataFrame, count: Long)
 
   /** O3 — the reference's retry budget (retries=3, delay, :21–22) as a
     * local combinator; scheduling/e-mail stay out of engine scope.
@@ -62,36 +67,32 @@ object Pipeline {
   }
 
   /** Post-load validation (validate_data, etl_pipeline.py:261–473): the
-    * nine reference queries over the loaded tables, returned as results
-    * rather than raised (callers choose `Checks.assertAllPassed`). */
+    * nine reference queries over the loaded tables, submitted at the same
+    * time and returned as results in the reference's order rather than
+    * raised (callers choose `Checks.assertAllPassed`). */
   def validate(
       sales: DataFrame,
       products: DataFrame,
       expectedSales: Long,
       expectedProducts: Long): Seq[CheckResult] = {
 
-    val salesCount = Checks.rowCount(sales)
-    val productsCount = Checks.rowCount(products)
-
-    val salesNulls = Checks
-      .nullCounts(sales, Seq("date", "product_id", "units_sold", "sales_amount"))
-      .head()
-    val productNulls = Checks
-      .nullCounts(products, Seq("product_id", "product_name", "price"))
-      .head()
-
-    val salesDupes = Checks.duplicateKeys(sales, Seq("product_id", "date"))
-    val productDupes = Checks.duplicateKeys(products, Seq("product_id"))
-
-    // products is a known dimension table → force the broadcast hint
-    // (the generic default decides from size stats; see Checks.orphanRows)
-    val orphans = Checks.orphanCount(sales, products, "product_id", "product_id",
-      broadcastParent = Some(true))
-
-    val salesRanges = Checks
-      .valueRanges(sales, Seq("sales_amount", "units_sold"))
-      .head()
-    val priceRange = Checks.valueRanges(products, Seq("price")).head()
+    val Seq(salesCount: Long, productsCount: Long, salesNulls: Row, productNulls: Row,
+        salesDupes: CheckResult, productDupes: CheckResult, orphans: Long,
+        salesRanges: Row, priceRange: Row) = concurrently[Any](sales.sparkSession)(
+      () => Checks.rowCount(sales),
+      () => Checks.rowCount(products),
+      () => Checks.nullCounts(sales, Seq("date", "product_id", "units_sold", "sales_amount"))
+        .head(),
+      () => Checks.nullCounts(products, Seq("product_id", "product_name", "price")).head(),
+      () => Checks.checkNoDuplicates("store_sales",
+        Checks.duplicateKeys(sales, Seq("product_id", "date"))),
+      () => Checks.checkNoDuplicates("products", Checks.duplicateKeys(products, Seq("product_id"))),
+      // products is a known dimension table → force the broadcast hint
+      // (the generic default decides from size stats; see Checks.orphanRows)
+      () => Checks.orphanCount(sales, products, "product_id", "product_id",
+        broadcastParent = Some(true)),
+      () => Checks.valueRanges(sales, Seq("sales_amount", "units_sold")).head(),
+      () => Checks.valueRanges(products, Seq("price")).head())
 
     Seq(
       Checks.checkNotEmpty("store_sales", salesCount),
@@ -100,8 +101,8 @@ object Pipeline {
       Checks.checkRowCount("products", productsCount, expectedProducts)) ++
       Checks.checkNoNulls("store_sales", salesNulls) ++
       Checks.checkNoNulls("products", productNulls) ++ Seq(
-      Checks.checkNoDuplicates("store_sales", salesDupes),
-      Checks.checkNoDuplicates("products", productDupes),
+      salesDupes,
+      productDupes,
       Checks.checkNoOrphans("store_sales", orphans),
       Checks.checkNonNegative("store_sales", "sales_amount",
         salesRanges.getAs[Double]("min_sales_amount")),
@@ -123,25 +124,79 @@ object Pipeline {
 
     Warehouse.ensureDatabase(spark, database)
 
-    // Two parallel branches — independent lazy plans (the parallelism the
-    // DAG models at process level is free here).
-    val sales = StageResult(
-      transformSales(Sources.tabular(spark, salesCsvPath)), -1L) match {
-      case s => s.copy(count = s.df.count())
-    }
-    val products = StageResult(
-      transformProducts(Sources.json(spark, productsJsonPath)), -1L) match {
-      case s => s.copy(count = s.df.count())
-    }
+    // The DAG's two branches run as concurrent Spark jobs; the barrier is
+    // the join inside `concurrently`, before validation starts.
+    val Seq(salesRows, productRows) = concurrently(spark)(
+      () => loadCounted(transformSales(Sources.tabular(spark, salesCsvPath)),
+        s"$database.store_sales"),
+      () => loadCounted(transformProducts(Sources.json(spark, productsJsonPath)),
+        s"$database.products"))
 
-    Warehouse.overwriteTable(sales.df, s"$database.store_sales")
-    Warehouse.overwriteTable(products.df, s"$database.products")
-
-    // Barrier: validation reads the *loaded* tables (the reference
-    // deliberately re-counts what load already knew, SURVEY §4.1).
+    // Validation reads the *loaded* tables (the reference deliberately
+    // re-counts what load already knew, SURVEY §4.1).
     val loadedSales = Sources.table(spark, s"$database.store_sales")
     val loadedProducts = Sources.table(spark, s"$database.products")
-    val results = validate(loadedSales, loadedProducts, sales.count, products.count)
+    val results = validate(loadedSales, loadedProducts, salesRows, productRows)
     if (failOnCritical) Checks.assertAllPassed(results) else results
+  }
+
+  /** K2 + O2 — load `df` into `fqTable` and return how many rows the load
+    * wrote (the reference's XCom count, etl_pipeline.py:77–78), counted by
+    * an observation on the write itself rather than by a second pass over
+    * the source. */
+  private[pipeline] def loadCounted(df: DataFrame, fqTable: String): Long = {
+    val o = Observation()
+    Warehouse.overwriteTable(df.observe(o, count(lit(1)).as("rows")), fqTable)
+    writtenRows(o)(df.count())
+  }
+
+  /** The `rows` count an observation took on a frame that was WRITTEN.
+    * A write runs its own `QueryExecution`, so the written frame's
+    * `queryExecution.observedMetrics` (what `Dedup.observedLong` reads)
+    * is its never-executed plan's initial row, `[0]`: a silent wrong
+    * zero. The observation's own result is read instead. Spark completes
+    * it from the listener bus when the write's execution ends, and the
+    * catalog update after the data write gives the bus time: it was
+    * complete on every return measured. If it is not, this says so on
+    * stderr and recomputes. */
+  private[pipeline] def writtenRows(o: Observation)(fallback: => Long): Long =
+    o.future.value.flatMap(_.toOption) match {
+      case Some(row) => row.getAs[Long]("rows")
+      case None =>
+        System.err.println(
+          s"[graft] WARN observed metric 'rows' (observation ${o.name}) absent " +
+            "after the write returned - recomputing with an extra pass")
+        fallback
+    }
+
+  /** One pool for the independent Spark actions of the DAG, as wide as its
+    * widest fan-out (the nine validation queries). Only callers of
+    * [[concurrently]] submit to it, never an action running on it, so no
+    * pool thread ever waits on another. */
+  private lazy val pool = Executors.newFixedThreadPool(9, { (r: Runnable) =>
+    val t = new Thread(r, "graft-pipeline")
+    t.setDaemon(true)
+    t
+  })
+
+  /** Runs `actions` at the same time and returns their results in order.
+    * Each runs with the caller's local properties and active session
+    * (job group, description, scheduler pool), so its jobs belong to the
+    * caller's job group. Waits for every action, then rethrows the first
+    * failure in submission order as itself, the later ones suppressed.
+    * The `Try` keeps a failing action from skipping the pool thread's
+    * restore of its own properties. */
+  private def concurrently[T](spark: SparkSession)(actions: (() => T)*): Seq[T] = {
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val submitted = actions.map(a => SQLExecution.withThreadLocalCaptured(session, pool)(Try(a())))
+    val outcomes = submitted.map { f =>
+      try f.get() catch { case e: ExecutionException => Failure(e.getCause) }
+    }
+    outcomes.collect { case Failure(e) => e } match {
+      case first +: later =>
+        later.filterNot(_ eq first).foreach(first.addSuppressed)
+        throw first
+      case _ => outcomes.map(_.get)
+    }
   }
 }

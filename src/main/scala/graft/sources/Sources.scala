@@ -35,15 +35,27 @@ object Sources {
     spark.read.format("xlsx").load(path)
 
   /** "Tabular file with header" — pluggable by format name; picks the
-    * format from the extension when called with "auto". */
+    * format from the extension of the path's last segment when called
+    * with "auto" (a dot in a directory name is not an extension). */
   def tabular(spark: SparkSession, path: String, format: String = "auto"): DataFrame =
-    (if (format == "auto") path.replaceAll(".*\\.", "") else format) match {
+    (if (format == "auto") extension(path) else format) match {
       case "csv"            => csv(spark, path)
       case "json"           => json(spark, path)
       case "parquet"        => parquet(spark, path)
       case "xlsx" | "excel" => excel(spark, path)
       case other            => spark.read.format(other).load(path)
     }
+
+  /** The extension of `path`'s last segment, for `tabular`'s "auto". */
+  private def extension(path: String): String = {
+    val name = path.stripSuffix("/").split("[/\\\\]").last
+    name.lastIndexOf('.') match {
+      case i if i > 0 && i < name.length - 1 => name.substring(i + 1)
+      case _ => throw new IllegalArgumentException(
+        s"cannot pick a format for '$path': its last segment has no extension " +
+          "(known formats: csv, json, parquet, xlsx); pass the format explicitly")
+    }
+  }
 
   /** Columnar scan — the engine-native stage format (replaces the
     * reference's lossy /tmp CSV hand-off, etl_pipeline.py:73–78). */

@@ -1,11 +1,20 @@
 package graft.pipeline
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.{AnalysisException, Observation}
+import org.apache.spark.sql.functions.{count, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSparkSession
-import graft.quality.ValidationFailure
+import graft.quality.{CheckResult, ValidationFailure}
 
 /** End-to-end pipeline test with planted defects (SURVEY §5.2.2,
   * FIXTURES.md §A): the transform must drop exactly the malformed rows and
@@ -44,6 +53,42 @@ class PipelineSpec extends AnyFunSuite {
       |  {"product_id": "P004", "product_name": null,     "price": 5.0}
       |]""".stripMargin)
 
+  private lazy val cleanSales = write("target/fixtures/clean_sales.csv",
+    """dt,store,product,units,amount
+      |2024-01-05,S01,P001,3,29.97
+      |2024-01-06,S01,P002,1,9.99
+      |""".stripMargin)
+
+  private lazy val cleanProducts = write("target/fixtures/clean_products.json",
+    """[
+      |  {"product_id": "P001", "product_name": "Widget", "price": 9.99},
+      |  {"product_id": "P002", "product_name": "Gadget", "price": 19.99}
+      |]""".stripMargin)
+
+  // Every check on the planted fixture, in the reference's order:
+  // (table, check, passed, detail).
+  private val plantedResults = Seq(
+    ("store_sales", "not_empty", true, "rows=5"),
+    ("products", "not_empty", true, "rows=3"),
+    ("store_sales", "row_count", true, "actual=5 expected=5"),
+    ("products", "row_count", true, "actual=3 expected=3"),
+    ("store_sales", "null_date", true, "nulls=0"),
+    ("store_sales", "null_product_id", true, "nulls=0"),
+    ("store_sales", "null_units_sold", true, "nulls=0"),
+    ("store_sales", "null_sales_amount", true, "nulls=0"),
+    ("products", "null_product_id", true, "nulls=0"),
+    ("products", "null_product_name", true, "nulls=0"),
+    ("products", "null_price", true, "nulls=0"),
+    ("store_sales", "no_duplicate_keys", false,
+      "duplicate keys (first 5): [P002,2024-01-07 00:00:00.0,2]"),
+    ("products", "no_duplicate_keys", true, "duplicates=0"),
+    ("store_sales", "referential_integrity", false, "orphans=1"),
+    ("store_sales", "range_sales_amount", false, "min=-5.0 (must be >= 0)"),
+    ("store_sales", "range_units_sold", true, "min=1.0 (must be >= 0)"),
+    ("products", "range_price", false, "min=0.0 (must be > 0)"))
+
+  private def rows(rs: Seq[CheckResult]) = rs.map(r => (r.table, r.check, r.passed, r.detail))
+
   test("E2E: transform drops exactly the malformed rows") {
     val sales = Pipeline.transformSales(graft.sources.Sources.csv(spark, salesCsv))
     // 7 rows - bad date - bad units = 5
@@ -63,25 +108,115 @@ class PipelineSpec extends AnyFunSuite {
       "store_sales/referential_integrity", // P999 orphan
       "store_sales/range_sales_amount",    // -5.00
       "products/range_price"))             // price 0.0 (strict > 0)
+    assert(rows(e.results) == plantedResults.filterNot(_._3))
+    val all = Pipeline.run(spark, salesCsv, productsJson, database = "test_e2e",
+      failOnCritical = false)
+    assert(rows(all) == plantedResults)
   }
 
   test("E2E: clean inputs validate green and report renders") {
-    val cleanSales = write("target/fixtures/clean_sales.csv",
-      """dt,store,product,units,amount
-        |2024-01-05,S01,P001,3,29.97
-        |2024-01-06,S01,P002,1,9.99
-        |""".stripMargin)
-    val cleanProducts = write("target/fixtures/clean_products.json",
-      """[
-        |  {"product_id": "P001", "product_name": "Widget", "price": 9.99},
-        |  {"product_id": "P002", "product_name": "Gadget", "price": 19.99}
-        |]""".stripMargin)
     val results = Pipeline.run(spark, cleanSales, cleanProducts, database = "test_clean")
     assert(results.forall(_.passed))
     val report = graft.quality.Checks.renderReport(results)
     assert(report.contains("failed=0"))
     // loaded tables are readable back from the warehouse by name (S4/K2)
     assert(spark.table("test_clean.store_sales").count() == 2)
+  }
+
+  test("concurrent DAG: every job carries the caller's job group, none outlives run") {
+    val sc = spark.sparkContext
+    val starts = new ConcurrentLinkedQueue[(Long, String, String)]()
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        val p = Option(js.properties)
+        def prop(k: String) = p.flatMap(x => Option(x.getProperty(k))).orNull
+        starts.add((js.time, prop("spark.jobGroup.id"), prop("spark.job.description"))): Unit
+      }
+    }
+    sc.addSparkListener(l)
+    val returnedAt =
+      try {
+        sc.setJobGroup("pipeline-spec", "planted DAG")
+        val results = Pipeline.run(spark, salesCsv, productsJson, database = "test_group",
+          failOnCritical = false)
+        val t = System.currentTimeMillis()
+        assert(rows(results) == plantedResults)
+        t
+      } finally {
+        sc.clearJobGroup()
+        Thread.sleep(500) // the async listener bus drains
+        sc.removeSparkListener(l)
+      }
+    val jobs = starts.asScala.toSeq
+    assert(jobs.size >= 10, s"${jobs.size} jobs")
+    assert(jobs.forall(_._2 == "pipeline-spec"), jobs)
+    assert(jobs.forall(_._3 == "planted DAG"), jobs)
+    assert(jobs.forall(_._1 <= returnedAt), s"a job started after run returned: $jobs")
+  }
+
+  test("concurrent DAG: two runs from two threads into two databases") {
+    val planted = Future(Pipeline.run(spark, salesCsv, productsJson,
+      database = "test_conc_planted", failOnCritical = false))
+    val clean = Future(Pipeline.run(spark, cleanSales, cleanProducts,
+      database = "test_conc_clean"))
+    assert(rows(Await.result(planted, 5.minutes)) == plantedResults)
+    val cleanResults = Await.result(clean, 5.minutes)
+    assert(cleanResults.size == plantedResults.size && cleanResults.forall(_.passed))
+    assert(cleanResults.filter(_.check == "row_count").map(_.detail) ==
+      Seq("actual=2 expected=2", "actual=2 expected=2"))
+    assert(spark.table("test_conc_planted.store_sales").count() == 5)
+    assert(spark.table("test_conc_clean.store_sales").count() == 2)
+  }
+
+  test("concurrent DAG: a failing branch rethrows its own exception after its sibling ends") {
+    val sc = spark.sparkContext
+    val missing = Paths.get("target/fixtures/no_such_products.json").toAbsolutePath.toString
+    val ends = new ConcurrentLinkedQueue[Long]()
+    val started = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = started.incrementAndGet(): Unit
+      override def onJobEnd(je: SparkListenerJobEnd): Unit = ends.add(je.time): Unit
+    }
+    sc.addSparkListener(l)
+    val (e, thrownAt) =
+      try {
+        val e = intercept[AnalysisException] {
+          Pipeline.run(spark, salesCsv, missing, database = "test_missing")
+        }
+        (e, System.currentTimeMillis())
+      } finally {
+        Thread.sleep(500) // the async listener bus drains
+        sc.removeSparkListener(l)
+      }
+    // the same exception the sequential runner threw, not a wrapper
+    assert(e.getClass == classOf[AnalysisException])
+    assert(e.getMessage.contains(missing), e.getMessage)
+    // the sales branch was joined, not abandoned: it ran, every one of its
+    // jobs had ended when run threw, and it loaded its table
+    assert(started.get() > 0 && ends.size == started.get(), s"${started.get()} / ${ends.size}")
+    assert(ends.asScala.forall(_ <= thrownAt))
+    assert(sc.statusTracker.getActiveJobIds().isEmpty)
+    assert(spark.table("test_missing.store_sales").count() == 5)
+  }
+
+  test("written-frame count: a saved frame's observation gives the true count, no WARN") {
+    spark.sql("CREATE DATABASE IF NOT EXISTS test_observed")
+    val df = spark.range(0, 7, 1, 3).toDF("id")
+    val o = Observation()
+    val obs = df.observe(o, count(lit(1)).as("rows"))
+    val err = new java.io.ByteArrayOutputStream()
+    val stderr = System.err
+    System.setErr(new java.io.PrintStream(err, true))
+    val (n, loaded) =
+      try {
+        obs.write.mode("overwrite").format("parquet").saveAsTable("test_observed.seven")
+        (Pipeline.writtenRows(o)(-1L), Pipeline.loadCounted(df, "test_observed.seven_again"))
+      } finally System.setErr(stderr)
+    assert(n == 7 && loaded == 7)
+    assert(!err.toString.contains("[graft] WARN"), err.toString)
+    // the hazard the reader avoids: the written frame's own plan never
+    // executed, so its observedMetrics hold the initial row, a silent 0
+    assert(obs.queryExecution.observedMetrics.get(o.name).map(_.getLong(0)) == Some(0L))
   }
 
   test("O3: retry combinator retries then succeeds") {

@@ -45,5 +45,15 @@ class SqlChecksSpec extends AnyFunSuite {
     assert(failures(sqlResults) == Seq(
       "no_duplicate_keys", "range_price", "range_sales_amount",
       "referential_integrity"))
+
+    // check for check, in order, with the same outcome and detail; the
+    // literal SQL names its null counts with the reference's aliases
+    val sqlAlias = Map("null_dates" -> "null_date", "null_product_ids" -> "null_product_id",
+      "null_units" -> "null_units_sold", "null_amounts" -> "null_sales_amount",
+      "null_names" -> "null_product_name", "null_prices" -> "null_price")
+    def outcomes(rs: Seq[CheckResult]) =
+      rs.map(r => (sqlAlias.getOrElse(r.check, r.check), r.passed, r.detail))
+    assert(dfResults.size == 17)
+    assert(outcomes(dfResults) == outcomes(sqlResults))
   }
 }
