@@ -66,20 +66,26 @@ object Dedup {
       .unionByName(df.join(keep, Seq(idCol), "left_semi"))
   }
 
-  /** (id, shingles) projection — distinct word n-gram shingles per doc.
+  /** (id, shingles) projection — distinct word n-gram shingles per doc,
+    * docs with no shingle dropped.
     *
-    * Repartitions by id BEFORE the shingle expression: higher-order
-    * functions (transform/aggregate) evaluate interpreted (outside
-    * whole-stage codegen), so shingling+minhashing is the CPU-heavy stage
-    * — its parallelism must come from the operator, not from however many
-    * files the input happened to be (a single-file table would otherwise
-    * run the whole corpus in one task). The shuffle moves only (id, text). */
+    * Repartitions by id BEFORE the shingle expression so that, on an
+    * input that arrives in a few splits (a single-file table), the
+    * CPU-heavy shingle and minhash stages still spread over the session's
+    * shuffle partitions. The shuffle moves only (id, text). It does NOT
+    * pin the parallelism: the planner drops this exchange when the input
+    * is already hash-partitioned by id into that many partitions (a join
+    * or aggregate keyed on it just ran), and the stage then runs on
+    * however many partitions AQE coalesced that shuffle into.
+    *
+    * The emptiness filter sits above [[evaluateOnce]]: pushed below the
+    * projection it would build every shingle array twice. */
   def shingleSets(df: DataFrame, textCol: String, idCol: String, n: Int = 3,
       tok: Tok = Tok.Latin): DataFrame = {
     GraftFunctions.register(df.sparkSession)
-    df.select(col(idCol).as("id"), col(textCol).as("_text"))
+    evaluateOnce(df.select(col(idCol).as("id"), col(textCol).as("_text"))
       .repartition(cpuParallelism(df), col("id"))
-      .select(col("id"), tok.shingles(col("_text"), n).as("shingles"))
+      .select(col("id"), tok.shingles(col("_text"), n).as("shingles")))
       .where(size(col("shingles")) > 0)
   }
 
@@ -147,6 +153,22 @@ object Dedup {
     ObservedLedger.record(df)
     m
   }
+
+  /** Keep `df`'s projected columns computed ONCE per row for every filter
+    * stacked on it. PushDownPredicates otherwise pushes a filter below
+    * the projection that defines the column it reads, substituting the
+    * defining expression into the predicate: a gate over a stripped text
+    * column would run the strip once more for every rule that reads it. A
+    * `CollectMetrics` node (a row count no one reads) is a logical node
+    * that filters are not pushed through, so the filter reads the
+    * projected attribute. It adds no action, no stage and no reported
+    * count. */
+  private[graft] def evaluateOnce(df: DataFrame): DataFrame =
+    df.observe(s"graft_once_${onceIds.incrementAndGet()}", count(lit(1)).as("n"))
+
+  // observation names are unique per JVM: two nodes of one plan may not
+  // share a name unless they are the same node
+  private val onceIds = new java.util.concurrent.atomic.AtomicLong()
 
   /** Read a single long metric off an observation whose plan an action
     * has ALREADY executed — synchronously, from the executed plan's own

@@ -44,9 +44,27 @@ import graft.operators.{Chunking, Dedup, Dsir, LineDedup, Packing, Sampling, Spa
   *  - the split is assigned per DOCUMENT and inherited by chunks — a
   *    per-chunk split would leak overlapping windows of one document
   *    across train and test;
-  *  - every stage is a lazy DataFrame→DataFrame function; the only
-  *    materializations are the ones the dedup/CC operators legitimately
-  *    own.
+  *  - every stage is a lazy DataFrame→DataFrame function. Besides the
+  *    checkpoints the dedup/CC operators take inside themselves, the
+  *    pipeline checkpoints a stage only where it is read more than
+  *    once:
+  *     - the quality gate (with the optional pre-gate stages on, or the
+  *       adaptive spread fired): exact dedup reads it twice (fingerprint
+  *       and semi-join), and without line/span dedup the near-dup
+  *       profile and the documents action read it again;
+  *     - the near-dup input (with line or span dedup on): the near-dup
+  *       profile's shingle checkpoint and the documents action both read
+  *       it, and each would otherwise re-run the exact and line/span
+  *       dedup shuffles;
+  *     - the documents (`materializeDocuments`): the caller's actions
+  *       and the chunk derivation all read it;
+  *     - the rare-rung checkpoints named where they are taken (exact
+  *       decontamination survivors under fuzzy decontamination, the DSIR
+  *       selection, the pre-mix survivors).
+  *  - each text rewrite runs once per row: the filters over stripped
+  *    text read it through [[Dedup.evaluateOnce]] (the C4 line clean
+  *    through its stage observation), so the optimizer cannot copy the
+  *    rewrite into every predicate.
   */
 object CorpusPipeline {
 
@@ -475,9 +493,13 @@ object CorpusPipeline {
     //    markup-shingles vs text-shingles would silently under-detect
     //    contamination. (On an already-clean benchmark the strip is a
     //    no-op: shingling normalizes whitespace anyway.)
-    def stripped(df: DataFrame): DataFrame = df.withColumn(
+    //    Every gate rule and the benchmark's shingle filter read the
+    //    stripped column: evaluateOnce keeps the 15-regexp chain from
+    //    being copied into each of those predicates (21 copies in the
+    //    gate filter without it).
+    def stripped(df: DataFrame): DataFrame = Dedup.evaluateOnce(df.withColumn(
       cfg.textCol,
-      TextAnalysis.collapseLineWhitespace(TextAnalysis.stripHtml(text)))
+      TextAnalysis.collapseLineWhitespace(TextAnalysis.stripHtml(text))))
     val source = if (!cfg.stripHtml) urlDeduped else stripped(urlDeduped)
     val benchClean =
       if (!cfg.stripHtml) benchmark else benchmark.map(stripped)
@@ -546,7 +568,7 @@ object CorpusPipeline {
           !TextAnalysis.containsBlockedWord(text, cfg.blocklist, cfg.tokenizer)
         else lit(true)))
     // With the optional stages on, the gate's upstream is no longer a
-    // cheap narrow scan (URL-dedup shuffles; strip is a 14-regexp chain;
+    // cheap narrow scan (URL-dedup shuffles; strip is a 15-regexp chain;
     // C4/Gopher add per-document rule conjunctions) and it feeds MULTIPLE
     // downstream consumers (exactByContent reads it twice, the dedup
     // rungs and both final actions read on) — materialize it once
@@ -612,9 +634,19 @@ object CorpusPipeline {
     //    caller has already profiled). Survivors are identical across
     //    detectors (every candidate is exact-verified at the same
     //    threshold); only the cost moves.
+    // Two actions read the near-dup input: the detector's shingle-profile
+    // checkpoint and the documents action (its anti-join). When line or
+    // span dedup built it, each read would re-run the exact and line/span
+    // dedup shuffles, so it is checkpointed once; without them the input
+    // is the exact-dedup semi-join over the gate checkpoint and stays
+    // lazy.
+    val nearInput =
+      if (cfg.lineDedupMinDocs.isDefined || cfg.spanDedupN.isDefined)
+        Dedup.materialize(spanDeduped)
+      else spanDeduped
     val nearDeduped = observed("near_dedup",
       Dedup.removeNearDuplicates(
-        spanDeduped, cfg.textCol, cfg.idCol, cfg.dedupThreshold, cfg.shingleN,
+        nearInput, cfg.textCol, cfg.idCol, cfg.dedupThreshold, cfg.shingleN,
         tok = cfg.tokenizer,
         detector =
           if (cfg.tunedNearDedup) Dedup.Detector.Tuned else Dedup.Detector.Auto))

@@ -76,8 +76,14 @@ object SqlChecks {
 
     val salesCount = spark.sql(rowCountSql(salesTable)).head().getLong(0)
     val productsCount = spark.sql(rowCountSql(productsTable)).head().getLong(0)
-    val salesNulls = spark.sql(salesNullSql(salesTable)).head()
-    val productNulls = spark.sql(productsNullSql(productsTable)).head()
+    // the SQL keeps the reference's aliases (`null_dates`, …); the checks
+    // are named after the columns they count, as `Checks.nullCounts` does
+    def nullCounts(sql: String, cols: String*) =
+      spark.sql(sql).toDF(cols.map("null_" + _): _*).head()
+    val salesNulls = nullCounts(salesNullSql(salesTable),
+      "date", "product_id", "units_sold", "sales_amount")
+    val productNulls = nullCounts(productsNullSql(productsTable),
+      "product_id", "product_name", "price")
     val salesDupes = spark.sql(salesDuplicateSql(salesTable))
     val productDupes = spark.sql(productsDuplicateSql(productsTable))
     val orphans = spark.sql(orphanSql(salesTable, productsTable)).head().getLong(0)

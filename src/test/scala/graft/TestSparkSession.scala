@@ -46,4 +46,33 @@ object TestSparkSession {
     finally spark.sparkContext.removeSparkListener(l)
     n.get()
   }
+
+  /** The query executions (SQL actions, checkpoints included) that `f`
+    * runs, in completion order. Complete: after `f` it runs a marker
+    * action and waits until the listener bus delivers it, and the bus
+    * delivers in order. */
+  def executionsDuring(f: => Unit): Seq[org.apache.spark.sql.execution.QueryExecution] = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.QueryExecution
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit = {
+        seen.add(qe): Unit
+      }
+      override def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val marker = "graft_executions_marker"
+    def isMarker(qe: QueryExecution) = qe.analyzed.output.exists(_.name == marker)
+    spark.listenerManager.register(l)
+    try {
+      f
+      spark.range(1).toDF(marker).collect()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.asScala.exists(isMarker) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+    } finally spark.listenerManager.unregister(l)
+    val all = seen.asScala.toSeq
+    require(all.exists(isMarker), "listener bus did not deliver the marker in 30 s")
+    all.filterNot(isMarker)
+  }
 }

@@ -1221,6 +1221,20 @@ class DedupSpec extends AnyFunSuite {
     assert(msg.contains("recomputing"), s"message names the recompute: '$msg'")
   }
 
+  test("shingleSets builds each shingle array once: the emptiness filter sits above a CollectMetrics node") {
+    val docs = Seq((1L, "a b c d e"), (2L, "x"), (3L, "")).toDF("doc_id", "text")
+    val sh = Dedup.shingleSets(docs, "text", "doc_id")
+    val plan = sh.queryExecution.optimizedPlan.toString
+    val n = "shingles\\(".r.findAllIn(plan).size
+    assert(n == 1, s"the shingle expression must appear once, found $n:\n$plan")
+    val filterIdx = plan.indexOf("Filter")
+    val metricsIdx = plan.indexOf("CollectMetrics graft_once_")
+    assert(filterIdx >= 0 && filterIdx < metricsIdx,
+      s"the emptiness filter must stay above the CollectMetrics node:\n$plan")
+    // docs with no 3-shingle still drop
+    assert(sh.select("id").as[Long].collect().toSeq == Seq(1L))
+  }
+
   implicit class Tuple3Ops(rows: Array[(Long, Long, Long)]) {
     def toMap2: Map[(Long, Long), Long] = rows.map(r => (r._1, r._2) -> r._3).toMap
   }

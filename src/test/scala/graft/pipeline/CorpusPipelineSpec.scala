@@ -801,6 +801,115 @@ class CorpusPipelineSpec extends AnyFunSuite {
     assert(offTexts(1L).contains("click here"))
   }
 
+  /** A small crawl: HTML pages of seeded English word salad, each with
+    * the same navigation line and footer, plus one exact duplicate, one
+    * near duplicate and two pages that leak into the benchmark. The
+    * pages are generated here (java.util.Random, seed 7), so the
+    * expected rows below do not depend on any testdata file. */
+  private lazy val crawl: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    val words = ("the of and to in a is that for it with as was on be by this are " +
+      "from at river market garden village engine library harbor winter letter " +
+      "station museum forest bridge school council kitchen journey island " +
+      "painter festival").split(" ")
+    val r = new java.util.Random(7)
+    def prose(n: Int) = Seq.fill(n)(words(r.nextInt(words.length))).mkString(" ")
+    def page(body: String) =
+      "<html><head><script>var t = 1;</script></head><body>" +
+        "<div class='nav'>home news sport weather contact about us</div>\n" +
+        s"<p>$body</p>\n<footer>copyright the site owner all rights reserved</footer>" +
+        "</body></html>"
+    val bodies = (1 to 60).map(i => i.toLong -> s"${prose(60)}\n${prose(40)}")
+    val near = bodies(4)._2.split(" ").updated(3, "zebra").updated(50, "yacht").mkString(" ")
+    val pages = bodies.map { case (i, b) => (i, page(b)) } ++
+      Seq((61L, page(bodies(6)._2)), (62L, page(near)))
+    val bench = Seq((1L, bodies(10)._2), (2L, bodies(20)._2.take(120)))
+    (pages.toDF("doc_id", "text"), bench.toDF("doc_id", "text"))
+  }
+
+  private val crawlCfg = CorpusPipeline.Config(
+    stripHtml = true, langs = Set("en"), minTokens = 10, dedupThreshold = 0.5,
+    lineDedupMinDocs = Some(2), decontaminateN = 8,
+    chunkTokens = 32, overlapTokens = 8,
+    splits = Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1),
+    materializeDocuments = true)
+  // (rows, MurmurHash3.seqHash) of the crawl pass's sorted documents and
+  // chunks as computed before the near-dup input was checkpointed
+  private val DocDigest = 1938860979
+  private val ChunkRows = 231
+  private val ChunkDigest = 420214814
+
+  test("html strip runs once per document: the gate filter reads the stripped column above a CollectMetrics node") {
+    val (pages, bench) = crawl
+    var out: CorpusPipeline.Prepared = null
+    val plans = TestSparkSession.executionsDuring {
+      out = CorpusPipeline.prepare(pages, Some(bench), crawlCfg)
+    }.map(_.optimizedPlan.toString)
+    // the strip chain's script pattern, once per plan that strips: the
+    // gate checkpoint strips the corpus, the decontamination the benchmark
+    val script = java.util.regex.Pattern.quote("<script\\b[^>]*>.*?</script")
+    val stripping = plans.filter(_.contains("<script"))
+    assert(stripping.nonEmpty)
+    stripping.foreach { p =>
+      val n = script.r.findAllIn(p).size
+      assert(n == 1, s"the strip chain must appear once per plan, found $n:\n$p")
+    }
+    // the gate: its filter (lang id is one of its rules) sits ABOVE the
+    // CollectMetrics node, the strip projection below it
+    val gate = stripping.filter(_.contains("lang_id("))
+    assert(gate.size == 1, s"expected one gate plan:\n${gate.mkString("\n\n")}")
+    val g = gate.head
+    val filterIdx = g.indexOf("Filter")
+    val metricsIdx = g.indexOf("CollectMetrics graft_once_")
+    val stripIdx = g.indexOf("<script")
+    assert(filterIdx >= 0 && filterIdx < metricsIdx && metricsIdx < stripIdx,
+      s"gate filter above the CollectMetrics node above the strip:\n$g")
+    // the node adds no reported stage
+    assert(out.stages.map(_._1) == Seq("input", "quality", "exact_dedup",
+      "line_dedup", "near_dedup", "decontaminated"))
+    assert(out.observations.map(_._1) == out.stages.map(_._1))
+  }
+
+  test("line dedup runs once per pass: one execution plans it, outputs and counts unchanged") {
+    val (pages, bench) = crawl
+    var out: CorpusPipeline.Prepared = null
+    var docs: Array[(Long, String, String)] = null
+    val executions = TestSparkSession.executionsDuring {
+      out = CorpusPipeline.prepare(pages, Some(bench), crawlCfg)
+      docs = out.documents.select($"doc_id", $"split", $"text")
+        .as[(Long, String, String)].collect().sortBy(_._1)
+    }
+    // the line-dedup operator's posexplode of each text into lines runs
+    // in exactly one SQL execution: the near-dup input checkpoint
+    val lineDedups = executions.map(_.executedPlan.toString)
+      .filter(_.contains("posexplode"))
+    assert(lineDedups.size == 1,
+      s"line dedup planned in ${lineDedups.size} executions:\n${lineDedups.mkString("\n\n")}")
+    val chunks = out.chunks
+      .select($"doc_id", $"chunk_idx".cast("int"), $"chunk_text",
+        $"n_chunk_tokens".cast("int"), $"split")
+      .as[(Long, Int, String, Int, String)].collect().sortBy(c => (c._1, c._2))
+
+    val observed = out.observedCounts.toMap
+    val recomputed = out.stages.map { case (n, df) => n -> df.count() }.toMap
+    assert(observed == recomputed, s"observed $observed vs recomputed $recomputed")
+    // exact dup 61, near dup 62 and the leaked pages 11 and 21 drop
+    assert(observed == Map("input" -> 62L, "quality" -> 62L, "exact_dedup" -> 61L,
+      "line_dedup" -> 61L, "near_dedup" -> 60L, "decontaminated" -> 58L))
+    assert(docs.map(_._1).toSet == ((1L to 60L).toSet -- Set(11L, 21L)))
+    // the shared navigation line and footer are scrubbed, no markup left
+    docs.foreach { case (id, _, t) =>
+      assert(!t.contains("copyright") && !t.contains("home news") && !t.contains("<"),
+        s"doc $id: $t")
+    }
+    // row-identical to the lazy chain these checkpoints replace: digests
+    // of every document and chunk row as the chain computed them before
+    // any stage was checkpointed for a second reader
+    val docDigest = scala.util.hashing.MurmurHash3.seqHash(docs.toSeq)
+    val chunkDigest = scala.util.hashing.MurmurHash3.seqHash(chunks.toSeq)
+    assert((docs.length, docDigest) == ((58, DocDigest)), "documents changed")
+    assert((chunks.length, chunkDigest) == ((ChunkRows, ChunkDigest)), "chunks changed")
+  }
+
   test("stage accounting: observed counts ride the materializing pass and equal recomputed counts") {
     import graft.operators.FrozenDsir
     // a config that turns on MOST optional rungs, so every conditional

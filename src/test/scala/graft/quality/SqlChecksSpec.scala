@@ -19,6 +19,45 @@ class SqlChecksSpec extends AnyFunSuite {
     path
   }
 
+  test("the nine queries keep the reference's SQL text byte for byte") {
+    assert(SqlChecks.rowCountSql("t") == "SELECT COUNT(*) AS total_rows FROM t")
+    assert(SqlChecks.salesNullSql("t") ==
+      "SELECT\n" +
+        "  count_if(date IS NULL) AS null_dates,\n" +
+        "  count_if(product_id IS NULL) AS null_product_ids,\n" +
+        "  count_if(units_sold IS NULL) AS null_units,\n" +
+        "  count_if(sales_amount IS NULL) AS null_amounts\n" +
+        "FROM t")
+    assert(SqlChecks.productsNullSql("t") ==
+      "SELECT\n" +
+        "  count_if(product_id IS NULL) AS null_product_ids,\n" +
+        "  count_if(product_name IS NULL) AS null_names,\n" +
+        "  count_if(price IS NULL) AS null_prices\n" +
+        "FROM t")
+    assert(SqlChecks.salesDuplicateSql("t") ==
+      "SELECT product_id, date, COUNT(*) AS duplicate_count\n" +
+        "FROM t\n" +
+        "GROUP BY product_id, date\n" +
+        "HAVING COUNT(*) > 1")
+    assert(SqlChecks.productsDuplicateSql("t") ==
+      "SELECT product_id, COUNT(*) AS duplicate_count\n" +
+        "FROM t\n" +
+        "GROUP BY product_id\n" +
+        "HAVING COUNT(*) > 1")
+    assert(SqlChecks.orphanSql("s_t", "p_t") ==
+      "SELECT COUNT(*) AS orphaned_records\n" +
+        "FROM s_t s\n" +
+        "LEFT JOIN p_t p ON s.product_id = p.product_id\n" +
+        "WHERE p.product_id IS NULL")
+    assert(SqlChecks.salesRangeSql("t") ==
+      "SELECT\n" +
+        "  MIN(sales_amount) AS min_amount, MAX(sales_amount) AS max_amount,\n" +
+        "  MIN(units_sold) AS min_units, MAX(units_sold) AS max_units\n" +
+        "FROM t")
+    assert(SqlChecks.priceRangeSql("t") ==
+      "SELECT MIN(price) AS min_price, MAX(price) AS max_price FROM t")
+  }
+
   test("spark.sql validation suite flags the same defects as the DataFrame form") {
     val sales = write("target/fixtures/sqlchecks_sales.csv",
       """dt,store,product,units,amount
@@ -46,13 +85,8 @@ class SqlChecksSpec extends AnyFunSuite {
       "no_duplicate_keys", "range_price", "range_sales_amount",
       "referential_integrity"))
 
-    // check for check, in order, with the same outcome and detail; the
-    // literal SQL names its null counts with the reference's aliases
-    val sqlAlias = Map("null_dates" -> "null_date", "null_product_ids" -> "null_product_id",
-      "null_units" -> "null_units_sold", "null_amounts" -> "null_sales_amount",
-      "null_names" -> "null_product_name", "null_prices" -> "null_price")
-    def outcomes(rs: Seq[CheckResult]) =
-      rs.map(r => (sqlAlias.getOrElse(r.check, r.check), r.passed, r.detail))
+    // check for check, in order, with the same name, outcome and detail
+    def outcomes(rs: Seq[CheckResult]) = rs.map(r => (r.check, r.passed, r.detail))
     assert(dfResults.size == 17)
     assert(outcomes(dfResults) == outcomes(sqlResults))
   }
