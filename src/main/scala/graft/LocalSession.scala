@@ -5,7 +5,13 @@ import org.apache.spark.sql.SparkSession
   * main runs on — Bench, Verify, Explain, PlanProbes, ProfileQuery:
   * shuffle partitions = cores, UI off, UTC, AQE on, and parquet
   * TIMESTAMP(NANOS) read as a long (SparkEntry re-derives the
-  * TimestampType column). */
+  * TimestampType column).
+  *
+  * The generated-class cache holds 2000 entries instead of Spark's 100.
+  * One warm corpus-pipeline pass alone touches ~124 entries (each
+  * whole-stage class is compiled once when its plan is prepared and again
+  * under the tasks' class loader), so at 100 every pass recompiles ~100
+  * classes. */
 private[graft] object LocalSession {
   def apply(logLevel: String = "WARN"): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -16,6 +22,7 @@ private[graft] object LocalSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
       .getOrCreate()
     spark.sparkContext.setLogLevel(logLevel)
     spark

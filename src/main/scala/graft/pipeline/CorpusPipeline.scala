@@ -229,7 +229,6 @@ object CorpusPipeline {
       blocklist: Seq[String] = Nil,
       lineDedupMinDocs: Option[Int] = None,
       spanDedupN: Option[Int] = None,
-      spanDedupMinCount: Int = 2,
       dedupThreshold: Double = 0.8,
       shingleN: Int = 3,
       tunedNearDedup: Boolean = false,
@@ -617,7 +616,7 @@ object CorpusPipeline {
     val spanDeduped = cfg.spanDedupN.fold(lineDeduped) { n =>
       observed("span_dedup",
         SpanDedup.removeDuplicatedSpans(lineDeduped, cfg.textCol, cfg.idCol, n,
-          cfg.spanDedupMinCount, cfg.tokenizer)
+          tok = cfg.tokenizer)
           .where(nTokens(text) >= cfg.minTokens))
     }
 

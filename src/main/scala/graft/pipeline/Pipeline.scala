@@ -1,15 +1,10 @@
 package graft.pipeline
 
-import java.util.concurrent.{ExecutionException, Executors}
-
-import scala.util.{Failure, Try}
-
-import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
-import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 
 import graft.etl.{Transforms, Warehouse}
-import graft.quality.{CheckResult, Checks}
+import graft.quality.{CheckResult, Checks, Concurrently, ValidationSuite}
 import graft.sources.Sources
 
 /** Pipeline runner — SURVEY.md §2.7 (O1–O5) and §3.1.
@@ -70,47 +65,10 @@ object Pipeline {
     * nine reference queries over the loaded tables, submitted at the same
     * time and returned as results in the reference's order rather than
     * raised (callers choose `Checks.assertAllPassed`). */
-  def validate(
-      sales: DataFrame,
-      products: DataFrame,
-      expectedSales: Long,
-      expectedProducts: Long): Seq[CheckResult] = {
-
-    val Seq(salesCount: Long, productsCount: Long, salesNulls: Row, productNulls: Row,
-        salesDupes: CheckResult, productDupes: CheckResult, orphans: Long,
-        salesRanges: Row, priceRange: Row) = concurrently[Any](sales.sparkSession)(
-      () => Checks.rowCount(sales),
-      () => Checks.rowCount(products),
-      () => Checks.nullCounts(sales, Seq("date", "product_id", "units_sold", "sales_amount"))
-        .head(),
-      () => Checks.nullCounts(products, Seq("product_id", "product_name", "price")).head(),
-      () => Checks.checkNoDuplicates("store_sales",
-        Checks.duplicateKeys(sales, Seq("product_id", "date"))),
-      () => Checks.checkNoDuplicates("products", Checks.duplicateKeys(products, Seq("product_id"))),
-      // products is a known dimension table → force the broadcast hint
-      // (the generic default decides from size stats; see Checks.orphanRows)
-      () => Checks.orphanCount(sales, products, "product_id", "product_id",
-        broadcastParent = Some(true)),
-      () => Checks.valueRanges(sales, Seq("sales_amount", "units_sold")).head(),
-      () => Checks.valueRanges(products, Seq("price")).head())
-
-    Seq(
-      Checks.checkNotEmpty("store_sales", salesCount),
-      Checks.checkNotEmpty("products", productsCount),
-      Checks.checkRowCount("store_sales", salesCount, expectedSales),
-      Checks.checkRowCount("products", productsCount, expectedProducts)) ++
-      Checks.checkNoNulls("store_sales", salesNulls) ++
-      Checks.checkNoNulls("products", productNulls) ++ Seq(
-      salesDupes,
-      productDupes,
-      Checks.checkNoOrphans("store_sales", orphans),
-      Checks.checkNonNegative("store_sales", "sales_amount",
-        salesRanges.getAs[Double]("min_sales_amount")),
-      Checks.checkNonNegative("store_sales", "units_sold",
-        salesRanges.getAs[Long]("min_units_sold").toDouble),
-      Checks.checkStrictlyPositive("products", "price",
-        priceRange.getAs[Double]("min_price")))
-  }
+  def validate(sales: DataFrame, products: DataFrame, expectedSales: Long,
+      expectedProducts: Long): Seq[CheckResult] =
+    ValidationSuite.run(sales.sparkSession, "store_sales", "products", expectedSales,
+      expectedProducts)(ValidationSuite.frame(sales, products))
 
   /** O1 — the whole DAG as one driver program. Returns the validation
     * results (and throws [[graft.quality.ValidationFailure]] on critical
@@ -125,8 +83,8 @@ object Pipeline {
     Warehouse.ensureDatabase(spark, database)
 
     // The DAG's two branches run as concurrent Spark jobs; the barrier is
-    // the join inside `concurrently`, before validation starts.
-    val Seq(salesRows, productRows) = concurrently(spark)(
+    // the join inside `Concurrently`, before validation starts.
+    val Seq(salesRows, productRows) = Concurrently(spark)(
       () => loadCounted(transformSales(Sources.tabular(spark, salesCsvPath)),
         s"$database.store_sales"),
       () => loadCounted(transformProducts(Sources.json(spark, productsJsonPath)),
@@ -168,35 +126,4 @@ object Pipeline {
             "after the write returned - recomputing with an extra pass")
         fallback
     }
-
-  /** One pool for the independent Spark actions of the DAG, as wide as its
-    * widest fan-out (the nine validation queries). Only callers of
-    * [[concurrently]] submit to it, never an action running on it, so no
-    * pool thread ever waits on another. */
-  private lazy val pool = Executors.newFixedThreadPool(9, { (r: Runnable) =>
-    val t = new Thread(r, "graft-pipeline")
-    t.setDaemon(true)
-    t
-  })
-
-  /** Runs `actions` at the same time and returns their results in order.
-    * Each runs with the caller's local properties and active session
-    * (job group, description, scheduler pool), so its jobs belong to the
-    * caller's job group. Waits for every action, then rethrows the first
-    * failure in submission order as itself, the later ones suppressed.
-    * The `Try` keeps a failing action from skipping the pool thread's
-    * restore of its own properties. */
-  private def concurrently[T](spark: SparkSession)(actions: (() => T)*): Seq[T] = {
-    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val submitted = actions.map(a => SQLExecution.withThreadLocalCaptured(session, pool)(Try(a())))
-    val outcomes = submitted.map { f =>
-      try f.get() catch { case e: ExecutionException => Failure(e.getCause) }
-    }
-    outcomes.collect { case Failure(e) => e } match {
-      case first +: later =>
-        later.filterNot(_ eq first).foreach(first.addSuppressed)
-        throw first
-      case _ => outcomes.map(_.get)
-    }
-  }
 }

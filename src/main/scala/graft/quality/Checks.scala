@@ -1,6 +1,6 @@
 package graft.quality
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** One validation outcome — the engine's analogue of a line in the
@@ -24,19 +24,14 @@ final class ValidationFailure(val results: Seq[CheckResult])
       s"${results.count(r => !r.passed)} critical validation check(s) failed:\n" +
         results.filterNot(_.passed).map(_.render).mkString("\n"))
 
-/** Data-quality checks — SURVEY.md §2.4–§2.6 (A1–A4, J1, B1–B9).
-  *
-  * Each aggregate is a single-pass Spark plan; scalar threshold
-  * comparisons (B1–B8) happen on the driver against the collected
-  * aggregate row — the same shape as the reference's client-side
-  * comparisons on BigQuery results.
+/** Data-quality aggregates and the report — SURVEY.md §2.4–§2.6 (A2–A4,
+  * J1, B9). Each aggregate is a single-pass Spark plan. The reference's
+  * suite over them, with its threshold rules (B1–B8) applied to the
+  * collected rows, is [[ValidationSuite]].
   */
 object Checks {
 
   // ── aggregates ────────────────────────────────────────────────────────
-
-  /** A1 — table row count (SELECT COUNT(*), etl_pipeline.py:283–291). */
-  def rowCount(df: DataFrame): Long = df.count()
 
   /** A2 — per-column null counts in ONE pass over the table
     * (COUNTIF(col IS NULL) ×N, etl_pipeline.py:327–334, :344–350).
@@ -80,11 +75,6 @@ object Checks {
     child.join(if (doBroadcast) broadcast(keys) else keys, Seq(childKey), "left_anti")
   }
 
-  /** J1 + B8 — orphan count. */
-  def orphanCount(child: DataFrame, parent: DataFrame, childKey: String, parentKey: String,
-      broadcastParent: Option[Boolean] = None): Long =
-    orphanRows(child, parent, childKey, parentKey, broadcastParent).count()
-
   /** A4 — multi-column MIN/MAX range extraction in one pass
     * (etl_pipeline.py:414–421, :438–443). Output: `min_<col>`, `max_<col>`. */
   def valueRanges(df: DataFrame, cols: Seq[String]): DataFrame = {
@@ -92,54 +82,6 @@ object Checks {
       Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
     df.agg(aggs.head, aggs.tail: _*)
   }
-
-  // ── threshold checks (B1–B9) ──────────────────────────────────────────
-
-  /** B4 — empty-table check (etl_pipeline.py:294–304). */
-  def checkNotEmpty(table: String, actual: Long): CheckResult =
-    CheckResult("not_empty", table, "CRITICAL", actual > 0, s"rows=$actual")
-
-  /** B5 — actual vs expected row count (etl_pipeline.py:307–321). */
-  def checkRowCount(table: String, actual: Long, expected: Long): CheckResult =
-    CheckResult("row_count", table, "CRITICAL", actual == expected,
-      s"actual=$actual expected=$expected")
-
-  /** B6 — any null count > 0 is critical (etl_pipeline.py:336–342, :352–358). */
-  def checkNoNulls(table: String, nullCountRow: Row): Seq[CheckResult] = {
-    val schema = nullCountRow.schema
-    schema.fields.toSeq.map { f =>
-      val n = nullCountRow.getAs[Long](f.name)
-      CheckResult(f.name, table, "CRITICAL", n == 0, s"nulls=$n")
-    }
-  }
-
-  /** B7 — any duplicate group is critical; offenders logged like the
-    * reference's head() of the duplicate frame (etl_pipeline.py:371–390). */
-  def checkNoDuplicates(table: String, dupes: DataFrame, sample: Int = 5): CheckResult = {
-    val offenders = dupes.limit(sample + 1).collect()
-    val pass = offenders.isEmpty
-    val detail =
-      if (pass) "duplicates=0"
-      else s"duplicate keys (first $sample): " +
-        offenders.take(sample).map(_.toString).mkString(", ")
-    CheckResult("no_duplicate_keys", table, "CRITICAL", pass, detail)
-  }
-
-  /** B8 — orphaned FK count must be 0 (etl_pipeline.py:404–408). */
-  def checkNoOrphans(table: String, orphans: Long): CheckResult =
-    CheckResult("referential_integrity", table, "CRITICAL", orphans == 0,
-      s"orphans=$orphans")
-
-  /** B1/B2 — non-negative range rule (min >= 0; etl_pipeline.py:424–435). */
-  def checkNonNegative(table: String, column: String, minValue: Double): CheckResult =
-    CheckResult(s"range_$column", table, "CRITICAL", minValue >= 0,
-      s"min=$minValue (must be >= 0)")
-
-  /** B3 — strictly-positive range rule (min > 0; etl_pipeline.py:445–449 —
-    * note the deliberate `<= 0` asymmetry vs B1/B2). */
-  def checkStrictlyPositive(table: String, column: String, minValue: Double): CheckResult =
-    CheckResult(s"range_$column", table, "CRITICAL", minValue > 0,
-      s"min=$minValue (must be > 0)")
 
   // ── report (B9 / O5) ─────────────────────────────────────────────────
 

@@ -4,7 +4,6 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSparkSession
-import graft.quality.Checks
 
 /** P1–P11 operator specs (SURVEY.md §2.3, §5.2.1). */
 class TransformsSpec extends AnyFunSuite {
@@ -67,7 +66,7 @@ class TransformsSpec extends AnyFunSuite {
     val df = Seq(("2024-01-05", "3"), ("bad", "xx"), ("2024-01-07", "5")).toDF("date", "units")
     val typed = Transforms.coerceLong(Transforms.coerceTimestamp(df, "date"), "units")
     val kept = Transforms.dropNullRows(typed)
-    assert(Checks.rowCount(df) == Checks.rowCount(kept) + 1)
+    assert(df.count() == kept.count() + 1)
   }
 
   test("coerceSchema applies all casts in one projection") {

@@ -102,10 +102,47 @@ class EdgeCasesSpec extends AnyFunSuite {
   }
 
   test("checks on empty tables report failure, not exceptions") {
-    import graft.quality.Checks
+    import graft.quality.{CheckResult, Checks, SqlChecks, ValidationSuite}
+    import ValidationSuite.{RowCount, Sales}
     val sales = emptyDocs.select($"doc_id".as("product_id"), $"text".as("date"))
-    assert(!Checks.checkNotEmpty("t", Checks.rowCount(sales)).passed)
+    assert(!ValidationSuite.evaluate(RowCount(Sales),
+      ValidationSuite.frame(sales, sales)(RowCount(Sales)), "t", 0).head.passed)
     assert(Checks.duplicateKeys(sales, Seq("product_id")).count() == 0)
+
+    // the whole suite, in both forms, over empty loaded tables: only the
+    // not-empty checks fail, and a column with no rows has no minimum to
+    // break a range rule
+    def empty(cols: (String, DataType)*) = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      StructType(cols.map { case (n, t) => StructField(n, t) }))
+    val emptySales = empty("date" -> TimestampType, "store_id" -> StringType,
+      "product_id" -> StringType, "units_sold" -> LongType, "sales_amount" -> DoubleType)
+    val emptyProducts = empty("product_id" -> StringType, "product_name" -> StringType,
+      "price" -> DoubleType)
+    val expected = Seq(
+      ("store_sales", "not_empty", false, "rows=0"),
+      ("products", "not_empty", false, "rows=0"),
+      ("store_sales", "row_count", true, "actual=0 expected=0"),
+      ("products", "row_count", true, "actual=0 expected=0"),
+      ("store_sales", "null_date", true, "nulls=0"),
+      ("store_sales", "null_product_id", true, "nulls=0"),
+      ("store_sales", "null_units_sold", true, "nulls=0"),
+      ("store_sales", "null_sales_amount", true, "nulls=0"),
+      ("products", "null_product_id", true, "nulls=0"),
+      ("products", "null_product_name", true, "nulls=0"),
+      ("products", "null_price", true, "nulls=0"),
+      ("store_sales", "no_duplicate_keys", true, "duplicates=0"),
+      ("products", "no_duplicate_keys", true, "duplicates=0"),
+      ("store_sales", "referential_integrity", true, "orphans=0"),
+      ("store_sales", "range_sales_amount", true, "min=null (must be >= 0)"),
+      ("store_sales", "range_units_sold", true, "min=null (must be >= 0)"),
+      ("products", "range_price", true, "min=null (must be > 0)"))
+    def rows(rs: Seq[CheckResult]) = rs.map(r => (r.table, r.check, r.passed, r.detail))
+    assert(rows(graft.pipeline.Pipeline.validate(emptySales, emptyProducts, 0, 0)) == expected)
+    emptySales.createOrReplaceTempView("empty_store_sales")
+    emptyProducts.createOrReplaceTempView("empty_products")
+    assert(rows(SqlChecks.runAll(spark, "empty_store_sales", "empty_products", 0, 0)) ==
+      expected.map { case (t, c, p, d) => (s"empty_$t", c, p, d) })
   }
 
   test("CorpusPipeline.prepare on an EMPTY corpus: zero-row outputs, zero observed counts, no crash") {

@@ -31,10 +31,10 @@ class ChecksSpec extends AnyFunSuite {
   test("J1: orphanRows = child rows with no parent key match") {
     val child = Seq(("P1", 1), ("P9", 2), ("P9", 3)).toDF("product_id", "n")
     val parent = Seq("P1", "P2").toDF("product_id")
-    assert(Checks.orphanCount(child, parent, "product_id", "product_id") == 2)
+    assert(Checks.orphanRows(child, parent, "product_id", "product_id").count() == 2)
     // FK property: after inner join with the parent, zero orphans remain.
     val joined = child.join(parent, Seq("product_id"), "left_semi")
-    assert(Checks.orphanCount(joined, parent, "product_id", "product_id") == 0)
+    assert(Checks.orphanRows(joined, parent, "product_id", "product_id").count() == 0)
   }
 
   test("A4: valueRanges extracts min/max per column in one pass") {
@@ -45,22 +45,30 @@ class ChecksSpec extends AnyFunSuite {
     assert(row.getAs[Long]("max_units") == 9L)
   }
 
+  // the suite's rules over one query's result frame
+  import ValidationSuite.{evaluate, DuplicateKeys, NullCounts, Ranges, RowCount, Sales}
+
   test("B1-B5: threshold checks pass/fail at the right boundaries") {
-    assert(Checks.checkNotEmpty("t", 1).passed)
-    assert(!Checks.checkNotEmpty("t", 0).passed)
-    assert(Checks.checkRowCount("t", 5, 5).passed)
-    assert(!Checks.checkRowCount("t", 4, 5).passed)
-    assert(Checks.checkNonNegative("t", "c", 0.0).passed) // >= 0 passes at 0
-    assert(!Checks.checkNonNegative("t", "c", -0.01).passed)
-    assert(!Checks.checkStrictlyPositive("t", "c", 0.0).passed) // > 0 fails at 0 (B3 asymmetry)
-    assert(Checks.checkStrictlyPositive("t", "c", 0.01).passed)
+    // [not_empty, row_count] for a row count of `n`
+    def counted(n: Long, expected: Long) = evaluate(RowCount(Sales), Seq(n).toDF(), "t", expected)
+    def range(min: Double, strict: Boolean) =
+      evaluate(Ranges(Sales, Seq("c" -> "c"), strict), Seq((min, min)).toDF(), "t", 0).head
+    assert(counted(1, 1).head.passed)
+    assert(!counted(0, 0).head.passed)
+    assert(counted(5, 5)(1).passed)
+    assert(!counted(4, 5)(1).passed)
+    assert(range(0.0, strict = false).passed) // >= 0 passes at 0
+    assert(!range(-0.01, strict = false).passed)
+    assert(!range(0.0, strict = true).passed) // > 0 fails at 0 (B3 asymmetry)
+    assert(range(0.01, strict = true).passed)
   }
 
   test("B6/B7: null-count and duplicate checks") {
-    val nulls = Checks.nullCounts(Seq(("a", 1)).toDF("s", "v"), Seq("s", "v")).head()
-    assert(Checks.checkNoNulls("t", nulls).forall(_.passed))
+    val nulls = Checks.nullCounts(Seq(("a", 1)).toDF("s", "v"), Seq("s", "v"))
+    assert(evaluate(NullCounts(Sales, Seq("s" -> "s", "v" -> "v")), nulls, "t", 0)
+      .forall(_.passed))
     val dupes = Checks.duplicateKeys(Seq("k", "k").toDF("id"), Seq("id"))
-    val res = Checks.checkNoDuplicates("t", dupes)
+    val Seq(res) = evaluate(DuplicateKeys(Sales, Seq("id")), dupes, "t", 0)
     assert(!res.passed && res.detail.contains("k"))
   }
 

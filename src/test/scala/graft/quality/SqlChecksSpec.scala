@@ -1,7 +1,12 @@
 package graft.quality
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.AnalysisException
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSparkSession
@@ -20,41 +25,44 @@ class SqlChecksSpec extends AnyFunSuite {
   }
 
   test("the nine queries keep the reference's SQL text byte for byte") {
-    assert(SqlChecks.rowCountSql("t") == "SELECT COUNT(*) AS total_rows FROM t")
-    assert(SqlChecks.salesNullSql("t") ==
+    val Seq(salesCount, productsCount, salesNulls, productsNulls, salesDupes, productsDupes,
+      _, salesRanges, priceRange) = SqlChecks.queries("t", "t")
+    assert(salesCount == "SELECT COUNT(*) AS total_rows FROM t")
+    assert(productsCount == "SELECT COUNT(*) AS total_rows FROM t")
+    assert(salesNulls ==
       "SELECT\n" +
         "  count_if(date IS NULL) AS null_dates,\n" +
         "  count_if(product_id IS NULL) AS null_product_ids,\n" +
         "  count_if(units_sold IS NULL) AS null_units,\n" +
         "  count_if(sales_amount IS NULL) AS null_amounts\n" +
         "FROM t")
-    assert(SqlChecks.productsNullSql("t") ==
+    assert(productsNulls ==
       "SELECT\n" +
         "  count_if(product_id IS NULL) AS null_product_ids,\n" +
         "  count_if(product_name IS NULL) AS null_names,\n" +
         "  count_if(price IS NULL) AS null_prices\n" +
         "FROM t")
-    assert(SqlChecks.salesDuplicateSql("t") ==
+    assert(salesDupes ==
       "SELECT product_id, date, COUNT(*) AS duplicate_count\n" +
         "FROM t\n" +
         "GROUP BY product_id, date\n" +
         "HAVING COUNT(*) > 1")
-    assert(SqlChecks.productsDuplicateSql("t") ==
+    assert(productsDupes ==
       "SELECT product_id, COUNT(*) AS duplicate_count\n" +
         "FROM t\n" +
         "GROUP BY product_id\n" +
         "HAVING COUNT(*) > 1")
-    assert(SqlChecks.orphanSql("s_t", "p_t") ==
+    assert(SqlChecks.queries("s_t", "p_t")(6) ==
       "SELECT COUNT(*) AS orphaned_records\n" +
         "FROM s_t s\n" +
         "LEFT JOIN p_t p ON s.product_id = p.product_id\n" +
         "WHERE p.product_id IS NULL")
-    assert(SqlChecks.salesRangeSql("t") ==
+    assert(salesRanges ==
       "SELECT\n" +
         "  MIN(sales_amount) AS min_amount, MAX(sales_amount) AS max_amount,\n" +
         "  MIN(units_sold) AS min_units, MAX(units_sold) AS max_units\n" +
         "FROM t")
-    assert(SqlChecks.priceRangeSql("t") ==
+    assert(priceRange ==
       "SELECT MIN(price) AS min_price, MAX(price) AS max_price FROM t")
   }
 
@@ -89,5 +97,79 @@ class SqlChecksSpec extends AnyFunSuite {
     def outcomes(rs: Seq[CheckResult]) = rs.map(r => (r.check, r.passed, r.detail))
     assert(dfResults.size == 17)
     assert(outcomes(dfResults) == outcomes(sqlResults))
+  }
+
+  private lazy val loaded = {
+    val sales = write("target/fixtures/sqlchecks_conc_sales.csv",
+      """dt,store,product,units,amount
+        |2024-01-05,S01,P001,3,29.97
+        |2024-01-07,S02,P002,2,19.98
+        |""".stripMargin)
+    val products = write("target/fixtures/sqlchecks_conc_products.json",
+      """[{"product_id": "P001", "product_name": "Widget", "price": 9.99},
+        |{"product_id": "P002", "product_name": "Gadget", "price": 19.99}]""".stripMargin)
+    Pipeline.run(spark, sales, products, database = "test_sqlchecks_conc")
+  }
+
+  test("concurrent suite: every job carries the caller's job group, none outlives runAll") {
+    assert(loaded.forall(_.passed))
+    val sc = spark.sparkContext
+    val starts = new ConcurrentLinkedQueue[(Long, String, String)]()
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        val p = Option(js.properties)
+        def prop(k: String) = p.flatMap(x => Option(x.getProperty(k))).orNull
+        starts.add((js.time, prop("spark.jobGroup.id"), prop("spark.job.description"))): Unit
+      }
+    }
+    sc.addSparkListener(l)
+    val returnedAt =
+      try {
+        sc.setJobGroup("sqlchecks-spec", "sql suite")
+        val results = SqlChecks.runAll(spark, "test_sqlchecks_conc.store_sales",
+          "test_sqlchecks_conc.products", expectedSales = 2, expectedProducts = 2)
+        val t = System.currentTimeMillis()
+        assert(results.size == 17 && results.forall(_.passed), results)
+        t
+      } finally {
+        sc.clearJobGroup()
+        Thread.sleep(500) // the async listener bus drains
+        sc.removeSparkListener(l)
+      }
+    val jobs = starts.asScala.toSeq
+    assert(jobs.size >= 9, s"${jobs.size} jobs")
+    assert(jobs.forall(_._2 == "sqlchecks-spec"), jobs)
+    assert(jobs.forall(_._3 == "sql suite"), jobs)
+    assert(jobs.forall(_._1 <= returnedAt), s"a job started after runAll returned: $jobs")
+  }
+
+  test("concurrent suite: a missing table rethrows its own AnalysisException after its siblings end") {
+    assert(loaded.forall(_.passed))
+    val sc = spark.sparkContext
+    val ends = new ConcurrentLinkedQueue[Long]()
+    val started = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = started.incrementAndGet(): Unit
+      override def onJobEnd(je: SparkListenerJobEnd): Unit = ends.add(je.time): Unit
+    }
+    sc.addSparkListener(l)
+    val (e, thrownAt) =
+      try {
+        val e = intercept[AnalysisException] {
+          SqlChecks.runAll(spark, "test_sqlchecks_conc.store_sales",
+            "test_sqlchecks_conc.no_such_products", expectedSales = 2, expectedProducts = 2)
+        }
+        (e, System.currentTimeMillis())
+      } finally {
+        Thread.sleep(500) // the async listener bus drains
+        sc.removeSparkListener(l)
+      }
+    // the analysis error itself, not the pool's ExecutionException wrapper
+    assert(e.getMessage.contains("no_such_products"), e.getMessage)
+    // the sales-side queries were joined, not abandoned: they ran, and
+    // every one of their jobs had ended when runAll threw
+    assert(started.get() > 0 && ends.size == started.get(), s"${started.get()} / ${ends.size}")
+    assert(ends.asScala.forall(_ <= thrownAt))
+    assert(sc.statusTracker.getActiveJobIds().isEmpty)
   }
 }
