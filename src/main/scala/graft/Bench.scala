@@ -18,7 +18,7 @@ object Bench {
       try System.err.println(s"[bench] $tag loadavg " +
         new String(java.nio.file.Files.readAllBytes(
           java.nio.file.Paths.get("/proc/loadavg"))).trim)
-      catch { case _: Throwable => }
+      catch { case scala.util.control.NonFatal(_) => }
     logLoad("start")
     LocalSession.warmUp(spark, sfDir)
 

@@ -33,6 +33,6 @@ private[graft] object LocalSession {
   def warmUp(spark: SparkSession, sfDir: String): Unit = {
     spark.range(0, 1000000L).selectExpr("sum(id)").collect()
     try spark.read.parquet(s"$sfDir/nation.parquet").count()
-    catch { case _: Throwable => }
+    catch { case scala.util.control.NonFatal(_) => }
   }
 }

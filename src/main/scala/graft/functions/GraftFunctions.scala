@@ -16,6 +16,11 @@ object GraftFunctions {
       "minhash_sig", exprs => MinHashSig(exprs.head,
         exprs(1).eval(null).asInstanceOf[Int]), "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      "band_keys", exprs => BandKeys(exprs.head,
+        exprs(1).eval(null).asInstanceOf[Int],
+        exprs(2).eval(null).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+          .toIntArray().toSeq), "built-in")
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "jaccard_sim", exprs => JaccardSim(exprs.head, exprs(1)), "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "norm_tokens", exprs => NormTokens(exprs.head), "built-in")
@@ -103,6 +108,12 @@ object GraftFunctions {
   /** `minhash_sig(array<string>, k) -> array<int>` as a Column. */
   def minhashSig(c: Column, k: Int): Column =
     call_function("minhash_sig", c, org.apache.spark.sql.functions.lit(k))
+
+  /** `band_keys(array<int>, rr, bands) -> array<struct<band, band_key>>`
+    * as a Column: the LSH band keys of a MinHash signature
+    * ([[MinHashUtil.bandKeys]]). */
+  def bandKeys(sig: Column, rr: Int, bands: Seq[Int]): Column =
+    call_function("band_keys", sig, lit(rr), lit(bands.toArray))
 
   /** `jaccard_sim(array<string>, array<string>) -> double` as a Column. */
   def jaccardSim(a: Column, b: Column): Column = call_function("jaccard_sim", a, b)

@@ -44,7 +44,7 @@ private[graft] object ObservedLedger {
   def record(df: DataFrame): Unit = {
     val m =
       try df.queryExecution.observedMetrics
-      catch { case _: Throwable => Map.empty[String, Row] }
+      catch { case scala.util.control.NonFatal(_) => Map.empty[String, Row] }
     if (m.nonEmpty) {
       recent.addFirst(m)
       while (recent.size > MaxEntries) recent.pollLast()

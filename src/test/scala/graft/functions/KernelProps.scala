@@ -84,6 +84,39 @@ object KernelProps extends Properties("graft.kernels") {
       (0 until 16).forall(i => sa.getInt(i) <= ss.getInt(i))
     }
 
+  // the plain definition the kernel must equal bit for bit: one full
+  // Murmur3_x86_32.hashUnsafeBytes per (element, seed j), null elements skipped
+  private def referenceMinhash(xs: Seq[String], k: Int): Seq[Int] =
+    (0 until k).map { j =>
+      xs.filter(_ != null).foldLeft(Int.MaxValue) { (m, x) =>
+        val s = UTF8String.fromString(x)
+        math.min(m, org.apache.spark.unsafe.hash.Murmur3_x86_32.hashUnsafeBytes(
+          s.getBaseObject, s.getBaseOffset, s.numBytes, j))
+      }
+    }
+
+  // ASCII, 2-, 3- and 4-byte UTF-8 characters; lengths 0–40 characters
+  // reach every byte length mod 4, so every tail-byte count is hashed
+  private val anyChar: Gen[String] = Gen.oneOf(
+    Gen.alphaNumChar.map(_.toString),
+    Gen.choose(' ', '߿').map(_.toString),
+    Gen.choose('ࠀ', '퟿').map(_.toString),
+    Gen.choose(0x10000, 0x10ffff).map(cp => new String(Character.toChars(cp))))
+  // plus short ASCII elements of 0–7 bytes: a tail with no full block, or
+  // one block and every tail length
+  private val element: Gen[String] = Gen.frequency(
+    1 -> Gen.const(null),
+    4 -> Gen.choose(0, 7).flatMap(n => Gen.listOfN(n, Gen.asciiChar).map(_.mkString)),
+    12 -> Gen.choose(0, 40).flatMap(n => Gen.listOfN(n, anyChar).map(_.mkString)))
+
+  property("minhash: equals one hashUnsafeBytes per element and seed, k in {1, 16, 128, 1024}") =
+    forAll(Gen.listOf(element), Gen.oneOf(1, 16, 128, 1024)) { (xs, k) =>
+      val a = new GenericArrayData(
+        xs.map(s => (if (s == null) null else UTF8String.fromString(s)): Any).toArray)
+      val sig = MinHashUtil.minhash(a, k)
+      sig.numElements() == k && sig.toIntArray().toSeq == referenceMinhash(xs, k)
+    }
+
   // ── norm_tokens / shingles ────────────────────────────────────────────
 
   property("normTokens: output is nonempty lowercase alnum tokens") =
