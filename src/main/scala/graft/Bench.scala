@@ -48,7 +48,9 @@ object Bench {
             fn(spark, sfDir).count()
             timings(name) += (System.nanoTime() - t0) / 1e9
           } catch {
-            case e: Throwable =>
+            // a fatal error (out of memory, stack overflow) ends the run:
+            // the JVM's state no longer backs the later timings
+            case scala.util.control.NonFatal(e) =>
               errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
           }
           // UNTIMED between-query hygiene: evict blocks pinned by the
@@ -107,7 +109,7 @@ object Bench {
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LAST.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(out),
       (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case e: Throwable =>
+    catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] could not write $out: ${e.getMessage}") }
     // LAST stdout line: a SHORT summary that fits whole inside any tail
     // window — the headline total (and failure count) parse even when

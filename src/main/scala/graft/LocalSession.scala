@@ -8,10 +8,11 @@ import org.apache.spark.sql.SparkSession
   * TimestampType column).
   *
   * The generated-class cache holds 2000 entries instead of Spark's 100.
-  * One warm corpus-pipeline pass alone touches ~124 entries (each
+  * One warm corpus-pipeline pass alone touches ~94 entries (each
   * whole-stage class is compiled once when its plan is prepared and again
-  * under the tasks' class loader), so at 100 every pass recompiles ~100
-  * classes. */
+  * under the tasks' class loader), and the 100 entries are 4 LRU
+  * segments of 25: a segment that overflows recompiles every class it
+  * holds on every pass. */
 private[graft] object LocalSession {
   def apply(logLevel: String = "WARN"): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")

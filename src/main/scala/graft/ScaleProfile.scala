@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Dev utility: per-STAGE wall-clock splits for the dedup-family scaling
@@ -53,6 +53,12 @@ object ScaleProfile {
       val t0 = System.nanoTime(); val n = f
       println(f"[profile] $name%-48s ${(System.nanoTime() - t0) / 1e9}%8.2f s  rows=$n")
     }
+    // times the checkpoint that computes `df`; its rows ride that action
+    def timedMaterialize(name: String)(df: => DataFrame): (DataFrame, Long) = {
+      var m: (DataFrame, Long) = null
+      timed(name) { m = Dedup.materializeCounted(df); m._2 }
+      m
+    }
 
     // ── q_dedup_resolved: detect → CC → full removal ──────────────────
     if (sections("dedup")) {
@@ -99,20 +105,16 @@ object ScaleProfile {
     //  scale-up is drowning in background LSH collisions or in the
     //  verify join's shingle shuffle)
     if (sections("detect_split")) {
-      import org.apache.spark.sql.functions.array_sort
       val (rr, b) = Dedup.minHashBands(0.5)
-      val sh = Dedup.materialize(
-        Dedup.shingleSets(docs, "text", "doc_id")
-          .select(col("id"), array_sort(col("shingles")).as("sh")))
-      timed("detect.shingle+sign(materialize shingle sets)") { sh.count() }
-      val banded = Dedup.materialize(Dedup.minHashBandRows(sh, 128, rr, b))
-      timed(s"detect.bands(minHashBandRows r=$rr b=$b)") { banded.count() }
+      val (sh, _) = timedMaterialize("detect.shingle+sign(materialize shingle sets)")(
+        Dedup.shingleIndex(docs, "text", "doc_id"))
+      val (banded, _) = timedMaterialize(s"detect.bands(minHashBandRows r=$rr b=$b)")(
+        Dedup.minHashBandRows(sh, 128, rr, b))
       // the SHARED candidate-join construction (Dedup.minHashCandidates)
       // — this section decomposes the real plan by construction
-      val candidates = Dedup.materialize(Dedup.minHashCandidates(banded, 0.5))
-      timed("detect.candidates(band join + length filter + pair dedup)") {
-        candidates.count()
-      }
+      val (candidates, _) =
+        timedMaterialize("detect.candidates(band join + length filter + pair dedup)")(
+          Dedup.minHashCandidates(banded, 0.5))
       graft.functions.GraftFunctions.register(spark)
       val shH = sh.select(col("id"),
         graft.functions.GraftFunctions.hashArray64(col("sh")).as("sh"))
@@ -126,13 +128,10 @@ object ScaleProfile {
     //    detect_split so the candidate counts are directly comparable —
     //    the BASELINE.md tuned-vs-default table reads both sections. ────
     if (sections("detect_tuned")) {
-      import org.apache.spark.sql.functions.array_sort
-      val sh = Dedup.materialize(
-        Dedup.shingleSets(docs, "text", "doc_id")
-          .select(col("id"), array_sort(col("shingles")).as("sh")))
-      timed("tuned.shingle(materialize shingle sets)") { sh.count() }
-      val shH = Dedup.materialize(Dedup.hashShingles(sh))
-      val nDocs = sh.count()
+      val (sh, nDocs) = timedMaterialize("tuned.shingle(materialize shingle sets)")(
+        Dedup.shingleIndex(docs, "text", "doc_id"))
+      val (shH, _) = timedMaterialize("tuned.hash(materialize hashed shingles)")(
+        Dedup.hashShingles(sh))
       var est: Dedup.BackgroundEstimate = null
       timed("tuned.sample(128-doc background estimate)") {
         est = Dedup.sampleBackgroundJaccard(shH, 128)
@@ -148,20 +147,17 @@ object ScaleProfile {
       // same single-signature-pass decomposition as the Tuned detector:
       // sigM feeds bandProjection AND the prefilter head (shared helpers —
       // this section decomposes the production plan by construction)
-      val sigM = Dedup.materialize(
+      val (sigM, _) = timedMaterialize(s"tuned.sign(minHashSignatures k=${rr * b})")(
         Dedup.minHashSignatures(sh.withColumnRenamed("sh", "shingles"), rr * b)
           .select(col("id"), org.apache.spark.sql.functions.size(
             col("shingles")).as("sz"), col("sig")))
-      timed(s"tuned.sign(minHashSignatures k=${rr * b})") { sigM.count() }
-      val banded = Dedup.materialize(Dedup.bandProjection(sigM, rr, b))
-      timed(s"tuned.bands(bandProjection r=$rr b=$b)") { banded.count() }
-      val candidates = Dedup.materialize(Dedup.minHashCandidates(banded, 0.5))
-      timed("tuned.candidates(band join + length filter + pair dedup)") {
-        candidates.count()
-      }
-      val kept = Dedup.materialize(Dedup.prefilterBySignature(
-        candidates, sigM, 0.5, math.min(64, rr * b)))
-      timed("tuned.prefilter(signature-agreement, h=64)") { kept.count() }
+      val (banded, _) = timedMaterialize(s"tuned.bands(bandProjection r=$rr b=$b)")(
+        Dedup.bandProjection(sigM, rr, b))
+      val (candidates, _) =
+        timedMaterialize("tuned.candidates(band join + length filter + pair dedup)")(
+          Dedup.minHashCandidates(banded, 0.5))
+      val (kept, _) = timedMaterialize("tuned.prefilter(signature-agreement, h=64)")(
+        Dedup.prefilterBySignature(candidates, sigM, 0.5, math.min(64, rr * b)))
       timed("tuned.verify(hashed-shingle join + exact jaccard)") {
         Dedup.verifyJaccard(kept, shH, 0.5).count()
       }

@@ -1,7 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions.{call_function, lit}
 
@@ -9,73 +10,65 @@ import org.apache.spark.sql.functions.{call_function, lit}
   * safe to call per query; also usable from `spark.sql` once registered. */
 object GraftFunctions {
 
+  /** Registers every native function the session's registry does not hold
+    * yet. Operators call this per plan they build; a function already
+    * registered is left as it is, so a repeated call replaces nothing
+    * (replacing one makes Spark log a warning per function). */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig", exprs => MinHashSig(exprs.head,
-        exprs(1).eval(null).asInstanceOf[Int]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "band_keys", exprs => BandKeys(exprs.head,
+    val registry = spark.sessionState.functionRegistry
+    builders.foreach { case (name, builder) =>
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
+    }
+  }
+
+  private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "graft_once" -> (exprs => Once(exprs.head)),
+    "simhash64" -> (exprs => SimHash64(exprs.head)),
+    "minhash_sig" -> (exprs => MinHashSig(exprs.head,
+        exprs(1).eval(null).asInstanceOf[Int])),
+    "band_keys" -> (exprs => BandKeys(exprs.head,
         exprs(1).eval(null).asInstanceOf[Int],
         exprs(2).eval(null).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-          .toIntArray().toSeq), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaccard_sim", exprs => JaccardSim(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "norm_tokens", exprs => NormTokens(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "norm_tokens_ml", exprs => NormTokensMl(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingles_ml", exprs => ShinglesMlExpr(exprs.head,
-        exprs(1).eval(null).asInstanceOf[Int]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ngrams_ml", exprs => NGramsMlExpr(exprs.head,
-        exprs(1).eval(null).asInstanceOf[Int]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingles", exprs => ShinglesExpr(exprs.head,
-        exprs(1).eval(null).asInstanceOf[Int]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ngrams", exprs => NGramsExpr(exprs.head,
-        exprs(1).eval(null).asInstanceOf[Int]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSim(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sign_signature", exprs => SignSignature(exprs.head,
+          .toIntArray().toSeq)),
+    "jaccard_sim" -> (exprs => JaccardSim(exprs.head, exprs(1))),
+    "norm_tokens" -> (exprs => NormTokens(exprs.head)),
+    "norm_tokens_ml" -> (exprs => NormTokensMl(exprs.head)),
+    "shingles_ml" -> (exprs => ShinglesMlExpr(exprs.head,
+        exprs(1).eval(null).asInstanceOf[Int])),
+    "ngrams_ml" -> (exprs => NGramsMlExpr(exprs.head,
+        exprs(1).eval(null).asInstanceOf[Int])),
+    "shingles" -> (exprs => ShinglesExpr(exprs.head,
+        exprs(1).eval(null).asInstanceOf[Int])),
+    "ngrams" -> (exprs => NGramsExpr(exprs.head,
+        exprs(1).eval(null).asInstanceOf[Int])),
+    "cosine_sim" -> (exprs => CosineSim(exprs.head, exprs(1))),
+    "sign_signature" -> (exprs => SignSignature(exprs.head,
         exprs(1).eval(null).asInstanceOf[Int],
-        exprs(2).eval(null).asInstanceOf[Int]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lang_id", exprs => LangIdExpr(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hash_array64", exprs => HashArray64(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_normalize", exprs => NfcNormalize(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sig_agreement", exprs => SigAgreement(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bpe_pieces", exprs => BpeEncodeExpr(exprs.head,
+        exprs(2).eval(null).asInstanceOf[Int])),
+    "lang_id" -> (exprs => LangIdExpr(exprs.head)),
+    "hash_array64" -> (exprs => HashArray64(exprs.head)),
+    "nfc_normalize" -> (exprs => NfcNormalize(exprs.head)),
+    "sig_agreement" -> (exprs => SigAgreement(exprs.head, exprs(1))),
+    "bpe_pieces" -> (exprs => BpeEncodeExpr(exprs.head,
         exprs(1).eval(null).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
           .toArray[org.apache.spark.unsafe.types.UTF8String](
             org.apache.spark.sql.types.StringType).map(_.toString),
         ml = exprs.length > 2 &&
-          exprs(2).eval(null).asInstanceOf[Boolean]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bpe_piece_ids", exprs => BpePieceIdsExpr(exprs.head,
+          exprs(2).eval(null).asInstanceOf[Boolean])),
+    "bpe_piece_ids" -> (exprs => BpePieceIdsExpr(exprs.head,
         exprs(1).eval(null).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
           .toArray[org.apache.spark.unsafe.types.UTF8String](
-            org.apache.spark.sql.types.StringType).map(_.toString)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jl_project", exprs => JlProjectExpr(exprs.head,
+            org.apache.spark.sql.types.StringType).map(_.toString))),
+    "jl_project" -> (exprs => JlProjectExpr(exprs.head,
         exprs(1).eval(null).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
           .toIntArray(),
-        exprs(2).eval(null).asInstanceOf[Int]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bpe_decode", exprs => BpeDecodeExpr(exprs.head,
+        exprs(2).eval(null).asInstanceOf[Int])),
+    "bpe_decode" -> (exprs => BpeDecodeExpr(exprs.head,
         exprs(1).eval(null).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
           .toArray[org.apache.spark.unsafe.types.UTF8String](
-            org.apache.spark.sql.types.StringType).map(_.toString)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ngram_lm_score", exprs => {
+            org.apache.spark.sql.types.StringType).map(_.toString))),
+    "ngram_lm_score" -> (exprs => {
         import org.apache.spark.sql.catalyst.util.ArrayData
         import org.apache.spark.sql.types.StringType
         import org.apache.spark.unsafe.types.UTF8String
@@ -86,20 +79,22 @@ object GraftFunctions {
           strs(1), lngs(2), strs(3), lngs(4), strs(5), lngs(6),
           exprs(7).eval(null).asInstanceOf[Long],
           exprs(8).eval(null).asInstanceOf[Long]))
-      }, "built-in")
+      }),
     // Spark's own runtime-filter bloom pair, surfaced as callable
     // functions (they are not in FunctionRegistry by default). Using the
     // engine's pair — not a re-implementation — guarantees the serialized
     // binary format and the long-hash discipline agree between build and
     // probe, exactly as they do inside injected runtime filters.
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_agg", exprs =>
+    "graft_bloom_agg" -> (exprs =>
         new BloomFilterAggregate(exprs.head, exprs(1), exprs(2))
-          .toAggregateExpression(), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_might_contain", exprs =>
-        BloomFilterMightContain(exprs.head, exprs(1)), "built-in")
-  }
+          .toAggregateExpression()),
+    "graft_bloom_might_contain" -> (exprs =>
+        BloomFilterMightContain(exprs.head, exprs(1)))
+  )
+
+  /** `graft_once(x) -> x` as a Column: `x` evaluated once per row for
+    * every reader of the column ([[Once]]). */
+  def once(c: Column): Column = call_function("graft_once", c)
 
   /** `simhash64(array<string>) -> long` as a Column (session must be
     * registered first; queries call [[register]] idempotently). */

@@ -78,14 +78,15 @@ object Dedup {
     * or aggregate keyed on it just ran), and the stage then runs on
     * however many partitions AQE coalesced that shuffle into.
     *
-    * The emptiness filter sits above [[evaluateOnce]]: pushed below the
-    * projection it would build every shingle array twice. */
+    * The emptiness filter reads the shingles through [[evaluateOnce]]:
+    * pushed below the projection it would build every shingle array
+    * twice. */
   def shingleSets(df: DataFrame, textCol: String, idCol: String, n: Int = 3,
       tok: Tok = Tok.Latin): DataFrame = {
     GraftFunctions.register(df.sparkSession)
-    evaluateOnce(df.select(col(idCol).as("id"), col(textCol).as("_text"))
+    df.select(col(idCol).as("id"), col(textCol).as("_text"))
       .repartition(cpuParallelism(df), col("id"))
-      .select(col("id"), tok.shingles(col("_text"), n).as("shingles")))
+      .select(col("id"), evaluateOnce(tok.shingles(col("_text"), n)).as("shingles"))
       .where(size(col("shingles")) > 0)
   }
 
@@ -154,21 +155,18 @@ object Dedup {
     m
   }
 
-  /** Keep `df`'s projected columns computed ONCE per row for every filter
-    * stacked on it. PushDownPredicates otherwise pushes a filter below
-    * the projection that defines the column it reads, substituting the
-    * defining expression into the predicate: a gate over a stripped text
-    * column would run the strip once more for every rule that reads it. A
-    * `CollectMetrics` node (a row count no one reads) is a logical node
-    * that filters are not pushed through, so the filter reads the
-    * projected attribute. It adds no action, no stage and no reported
-    * count. */
-  private[graft] def evaluateOnce(df: DataFrame): DataFrame =
-    df.observe(s"graft_once_${onceIds.incrementAndGet()}", count(lit(1)).as("n"))
-
-  // observation names are unique per JVM: two nodes of one plan may not
-  // share a name unless they are the same node
-  private val onceIds = new java.util.concurrent.atomic.AtomicLong()
+  /** `c`, computed ONCE per row for every filter or projection that
+    * reads the column it defines. PushDownPredicates otherwise pushes a
+    * filter below the projection that defines the column it reads,
+    * substituting the defining expression into the predicate: a gate
+    * over a stripped text column would run the strip once more for every
+    * rule that reads it. Wrapped in the nondeterministic identity
+    * `graft_once` ([[graft.functions.Once]]), the projection is one that
+    * filters are not pushed through and that CollapseProject does not
+    * inline, so its readers read the projected attribute. The identity's
+    * generated code is its child's: the projection stays in the codegen
+    * stage around it, with no extra stage, action or accumulator. */
+  private[graft] def evaluateOnce(c: Column): Column = GraftFunctions.once(c)
 
   /** Read a single long metric off an observation whose plan an action
     * has ALREADY executed — synchronously, from the executed plan's own
@@ -2336,7 +2334,10 @@ object Dedup {
     // list — label₁(v) = min(v, min of v's neighbors). Identical to the
     // former shape's first loop pass (join against identity labels), at
     // one groupBy instead of distinct-checkpoint + join + groupBy + join.
-    val l1Plan = edges.groupBy(col("dst"))
+    // Edges with a null endpoint join nothing; dropping them up front
+    // makes both of round 2's reads of this aggregate the same plan, so
+    // its exchange runs once and is reused.
+    val l1Plan = edges.where(col("dst").isNotNull).groupBy(col("dst"))
       .agg(min(col("src")).as("_nmin"))
       .select(col("dst").as("id"),
         least(col("dst"), col("_nmin")).as("label"))
@@ -2664,11 +2665,14 @@ object Dedup {
     * production incremental-dedup pipeline persists ONCE (parquet / a
     * warehouse table) instead of re-shingling 100 TB every daily batch.
     * `sh` is the sorted distinct word-n-gram array [[shingleSets]]
-    * produces; [[minHashBandIndex]] derives the band index from it. */
+    * produces; [[minHashBandIndex]] derives the band index from it.
+    * Shingles hold no nulls, so `sort_array` gives `array_sort`'s order,
+    * and unlike `array_sort` (a lambda comparator) it is codegen'd into
+    * the shingle stage. */
   def shingleIndex(df: DataFrame, textCol: String, idCol: String,
       n: Int = 3, tok: Tok = Tok.Latin): DataFrame =
     shingleSets(df, textCol, idCol, n, tok)
-      .select(col("id"), array_sort(col("shingles")).as("sh"))
+      .select(col("id"), sort_array(col("shingles")).as("sh"))
 
   /** (id, hd) signature-head projection over a STORED shingle index — the
     * OPTIONAL third persisted incremental-dedup artifact, enabling the

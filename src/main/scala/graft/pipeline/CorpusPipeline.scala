@@ -270,11 +270,16 @@ object CorpusPipeline {
     * a stage report: each count re-executes that stage's upstream chain.
     *
     * `observations` carries one [[Observation]] per stage (same names,
-    * same order): every stage frame has a `CollectMetrics` count
-    * accumulator attached IN the main chain, so the per-stage kept
-    * counts every production corpus run reports are collected as a side
-    * effect of whatever action first materializes `documents` / `chunks`
-    * — zero extra scans at any scale. Read them via [[observedCounts]]. */
+    * same order): each stage's count is a `CollectMetrics` accumulator
+    * attached IN the main chain, so the per-stage kept counts every
+    * production corpus run reports are collected as a side effect of
+    * the checkpoints inside [[prepare]] and whatever action first
+    * materializes `documents` / `chunks` — zero extra scans at any
+    * scale. Each count sits where it splits no codegen stage, in one
+    * executed plan: a checkpointed stage at the root of its checkpoint,
+    * a lazy stage at a plan root, directly under an exchange, or on the
+    * one read of it that sees every row (a frame that keeps one row per
+    * row of the stage counts for it). Read them via [[observedCounts]]. */
   final case class Prepared(documents: DataFrame, chunks: DataFrame,
       stages: Seq[(String, DataFrame)] = Nil,
       observations: Seq[(String, Observation)] = Nil,
@@ -421,25 +426,51 @@ object CorpusPipeline {
     val text = col(cfg.textCol)
 
     // Stage accounting rides the main chain as CollectMetrics count
-    // accumulators (Dataset.observe): each stage frame below is wrapped
-    // ONCE and the wrapped frame feeds the next rung, so the counts are
-    // collected by whatever action first executes each node — no
-    // re-execution, ever. Notes: (a) a count accumulator references no
-    // columns, so column pruning still reaches the scan; (b) predicate
-    // pushdown does not cross a CollectMetrics node — which is the
-    // SEMANTICS of an input count (the gate must not pre-shrink the
-    // input tally), and the gate predicates are complex text expressions
-    // no source could take anyway; (c) operators that self-join their
-    // input duplicate the node — Spark allows exact (sameResult)
-    // duplicates and the accumulators agree by construction.
-    // every observed stage is a reported stage: the buffer, in chain
-    // order, is both `Prepared.stages` and `Prepared.observations`
+    // accumulators (Dataset.observe), collected by whatever action first
+    // executes each node — no re-execution, ever. A CollectMetrics node is
+    // not codegen'd: between two codegen'd operators it splits one fused
+    // stage in two, and every codegen stage costs generated classes
+    // (compiled once for the driver and once for the tasks). So each
+    // count sits where it splits no stage, in exactly one executed plan:
+    //  - a materialized stage is counted BELOW its checkpoint, at the
+    //    root of the checkpoint action ([[materializedStage]]);
+    //  - a lazy stage is counted at a plan root, directly under an
+    //    exchange, or on the one branch that reads it once: exact dedup
+    //    at line dedup's output (one row per input row), the near-dup
+    //    survivors on the decontamination's shingle branch, the last
+    //    stage at the documents root (redaction and the split are 1:1).
+    // Notes: (a) a count accumulator references no columns, so column
+    // pruning still reaches the scan; (b) predicate pushdown does not
+    // cross a CollectMetrics node — which is the SEMANTICS of an input
+    // count (the gate must not pre-shrink the input tally).
+    // Every counted stage is a reported stage: the buffer, in chain
+    // order, is both `Prepared.stages` and `Prepared.observations`.
     val stageObs = ListBuffer.empty[(String, DataFrame, Observation)]
+    // `df` with `o` counting its rows (`df` must hold one row per row of
+    // the stage `o` counts)
+    def counted(df: DataFrame, o: Observation): DataFrame =
+      df.observe(o, count(lit(1)).as("n_kept"))
+    // registers the stage; the caller attaches its count where it splits
+    // no codegen stage
+    def stage(name: String, df: DataFrame): Observation = {
+      val o = Observation()
+      stageObs += ((name, df, o))
+      o
+    }
+    // a lazy stage counted on its own frame: for a stage whose reader
+    // reads it once, at a plan root or directly under an exchange
     def observed(name: String, df: DataFrame): DataFrame = {
       val o = Observation()
-      val obs = df.observe(o, count(lit(1)).as("n_kept"))
+      val obs = counted(df, o)
       stageObs += ((name, obs, o))
       obs
+    }
+    // a checkpointed stage, counted at the root of its checkpoint
+    def materializedStage(name: String, df: DataFrame): DataFrame = {
+      val o = Observation()
+      val m = Dedup.materialize(counted(df, o))
+      stageObs += ((name, m, o))
+      m
     }
     // The adaptive spread sits BELOW the input observation: the input
     // count is partitioning-blind (same rows), and the CollectMetrics
@@ -496,9 +527,9 @@ object CorpusPipeline {
     //    stripped column: evaluateOnce keeps the 15-regexp chain from
     //    being copied into each of those predicates (21 copies in the
     //    gate filter without it).
-    def stripped(df: DataFrame): DataFrame = Dedup.evaluateOnce(df.withColumn(
-      cfg.textCol,
-      TextAnalysis.collapseLineWhitespace(TextAnalysis.stripHtml(text))))
+    def stripped(df: DataFrame): DataFrame = df.withColumn(cfg.textCol,
+      Dedup.evaluateOnce(
+        TextAnalysis.collapseLineWhitespace(TextAnalysis.stripHtml(text))))
     val source = if (!cfg.stripHtml) urlDeduped else stripped(urlDeduped)
     val benchClean =
       if (!cfg.stripHtml) benchmark else benchmark.map(stripped)
@@ -581,8 +612,9 @@ object CorpusPipeline {
     // survivors replaces 2–3 spread+gate re-executions (see spreadOn).
     // The plain-config gate WITHOUT a fired spread (the at-scale shape)
     // stays a lazy narrow scan, exactly as before.
-    val filtered = observed("quality",
-      if (heavyChain || spreadOn) Dedup.materialize(gate) else gate)
+    val filtered =
+      if (heavyChain || spreadOn) materializedStage("quality", gate)
+      else observed("quality", gate)
 
     // 1b. optional per-domain cap — right after the gate, BEFORE the
     //    dedup rungs: ranks read only (group, token count, id), and a
@@ -599,8 +631,9 @@ object CorpusPipeline {
     }
 
     // 2. exact content dedup (min-id survivor per normalized text)
-    val exactDeduped = observed("exact_dedup",
-      Dedup.exactByContent(capped, cfg.textCol, cfg.idCol, cfg.tokenizer))
+    val exactBare =
+      Dedup.exactByContent(capped, cfg.textCol, cfg.idCol, cfg.tokenizer)
+    val exactObs = stage("exact_dedup", exactBare)
 
     // 2b/2c. optional line- then span-level dedup. Both REWRITE text, so
     //    each re-applies the minTokens gate (a doc scrubbed below the
@@ -608,17 +641,40 @@ object CorpusPipeline {
     //    and both run BEFORE near-dup: removing shared boilerplate
     //    changes shingle sets, and the near-dup decision must be made on
     //    the text that will actually be trained on.
-    val lineDeduped = cfg.lineDedupMinDocs.fold(exactDeduped) { m =>
-      observed("line_dedup",
-        LineDedup.removeDuplicatedLines(exactDeduped, cfg.textCol, cfg.idCol, m)
-          .where(nTokens(text) >= cfg.minTokens))
+    // Each rewrite returns one row per input row (a document that loses
+    // all its text comes back empty), reads its input more than once
+    // (line dedup three times, span dedup three times) and is read by two
+    // actions downstream (the near-dup detector's shingle checkpoint and
+    // the documents action). So each rewrite is checkpointed once with the
+    // minTokens verdict as a column: its kept count (the verdict's trues)
+    // and the count of the stage it read (every row) both sit at the
+    // checkpoint's root, and readers filter on the verdict column.
+    // Without a rewrite the near-dup input is the exact-dedup semi-join
+    // over the gate checkpoint and stays lazy.
+    def rewriteStage(name: String, rewritten: DataFrame,
+        inputCount: Option[Observation]): DataFrame = {
+      val verdict = "_min_tokens_ok"
+      val judged = rewritten.withColumn(verdict, nTokens(text) >= cfg.minTokens)
+      val o = Observation()
+      val m = Dedup.materialize(inputCount.fold(judged)(counted(judged, _))
+        .observe(o, count(when(col(verdict), lit(1))).as("n_kept")))
+      val kept = m.where(col(verdict)).drop(verdict)
+      stageObs += ((name, kept, o))
+      kept
     }
-    val spanDeduped = cfg.spanDedupN.fold(lineDeduped) { n =>
-      observed("span_dedup",
-        SpanDedup.removeDuplicatedSpans(lineDeduped, cfg.textCol, cfg.idCol, n,
-          tok = cfg.tokenizer)
-          .where(nTokens(text) >= cfg.minTokens))
+    val lineDeduped = cfg.lineDedupMinDocs.map { m =>
+      rewriteStage("line_dedup",
+        LineDedup.removeDuplicatedLines(exactBare, cfg.textCol, cfg.idCol, m),
+        Some(exactObs))
     }
+    val spanDeduped = cfg.spanDedupN.map { n =>
+      rewriteStage("span_dedup",
+        SpanDedup.removeDuplicatedSpans(lineDeduped.getOrElse(exactBare),
+          cfg.textCol, cfg.idCol, n, tok = cfg.tokenizer),
+        if (lineDeduped.isEmpty) Some(exactObs) else None)
+    }
+    val nearInput = spanDeduped.orElse(lineDeduped)
+      .getOrElse(counted(exactBare, exactObs))
 
     // 3. near-dup removal (MinHash+LSH detect → CC → min-id survivor).
     //    The DEFAULT detector is AUTO-selected per corpus
@@ -633,22 +689,18 @@ object CorpusPipeline {
     //    caller has already profiled). Survivors are identical across
     //    detectors (every candidate is exact-verified at the same
     //    threshold); only the cost moves.
-    // Two actions read the near-dup input: the detector's shingle-profile
-    // checkpoint and the documents action (its anti-join). When line or
-    // span dedup built it, each read would re-run the exact and line/span
-    // dedup shuffles, so it is checkpointed once; without them the input
-    // is the exact-dedup semi-join over the gate checkpoint and stays
-    // lazy.
-    val nearInput =
-      if (cfg.lineDedupMinDocs.isDefined || cfg.spanDedupN.isDefined)
-        Dedup.materialize(spanDeduped)
-      else spanDeduped
-    val nearDeduped = observed("near_dedup",
-      Dedup.removeNearDuplicates(
-        nearInput, cfg.textCol, cfg.idCol, cfg.dedupThreshold, cfg.shingleN,
-        tok = cfg.tokenizer,
-        detector =
-          if (cfg.tunedNearDedup) Dedup.Detector.Tuned else Dedup.Detector.Auto))
+    val nearBare = Dedup.removeNearDuplicates(
+      nearInput, cfg.textCol, cfg.idCol, cfg.dedupThreshold, cfg.shingleN,
+      tok = cfg.tokenizer,
+      detector =
+        if (cfg.tunedNearDedup) Dedup.Detector.Tuned else Dedup.Detector.Auto)
+    val nearObs = stage("near_dedup", nearBare)
+    // Decontamination reads its corpus twice (its anti-join and the hits'
+    // shingles), so when it reads the near-dup survivors directly their
+    // count is not attached here (see `flagDecon`).
+    val nearOnDecon = benchClean.isDefined && cfg.semanticDedup.isEmpty &&
+      cfg.imageDedup.isEmpty && cfg.audioDedup.isEmpty && cfg.videoDedup.isEmpty
+    val nearDeduped = if (nearOnDecon) nearBare else counted(nearBare, nearObs)
 
     // 3b. optional SEMANTIC dedup (SemDeDup) — the last dedup rung:
     //    paraphrase-level duplicates the shingle families cannot see,
@@ -755,13 +807,38 @@ object CorpusPipeline {
           frameHashes = sharedVid))
     }
 
-    val clean = benchClean.fold(vidDeduped)(b =>
-      if (cfg.bloomDecontaminate)
-        Dedup.removeContaminatedBloom(vidDeduped, b, cfg.textCol, cfg.idCol,
-          cfg.decontaminateN, cfg.bloomFpp, cfg.tokenizer)
+    // Decontamination is the last stage unless a fuzzy/media probe, the
+    // DSIR selection or a mix follows; the last stage's count rides the
+    // documents root (see documentsPlan). When it is last and reads the
+    // near-dup survivors directly, it FLAGS the contaminated documents
+    // instead of dropping them: every near-dup survivor then reaches the
+    // documents root, both counts sit there, and the documents drop the
+    // flagged rows above it (after the checkpoint, with
+    // materializeDocuments). Otherwise the near-dup count rides the
+    // anti-join side, the one read that sees every row.
+    val fuzzyOn = benchClean.isDefined && cfg.fuzzyDecontaminate.isDefined
+    val mixOn = cfg.mixToShares.isDefined || cfg.temperatureMix.isDefined
+    val deconLast = !fuzzyOn && cfg.mediaDecontaminate.isEmpty &&
+      cfg.dsirSelect.isEmpty && !mixOn
+    val flagDecon = nearOnDecon && deconLast
+    val hitFlag = "_contaminated"
+    val clean = benchClean.fold(vidDeduped) { b =>
+      val hits = (
+        if (cfg.bloomDecontaminate)
+          Dedup.contaminationHitsBloom(vidDeduped, b, cfg.textCol, cfg.idCol,
+            cfg.decontaminateN, cfg.bloomFpp, cfg.tokenizer)
+        else
+          Dedup.contaminationHits(vidDeduped, b, cfg.textCol, cfg.idCol,
+            cfg.decontaminateN, cfg.tokenizer))
+        .select(col("corpus_id").as(cfg.idCol))
+      if (flagDecon)
+        vidDeduped.join(hits.withColumn(hitFlag, lit(true)), Seq(cfg.idCol), "left")
       else
-        Dedup.removeContaminated(vidDeduped, b, cfg.textCol, cfg.idCol,
-          cfg.decontaminateN, cfg.tokenizer))
+        (if (nearOnDecon) counted(vidDeduped, nearObs) else vidDeduped)
+          .join(hits, Seq(cfg.idCol), "left_anti")
+    }
+    def unflagged(df: DataFrame): DataFrame =
+      if (flagDecon) df.where(col(hitFlag).isNull).drop(hitFlag) else df
 
     // 4b. optional FUZZY decontamination — the reworded-leak net: a
     //    paraphrased benchmark dump shares most of its SHINGLE set while
@@ -780,11 +857,12 @@ object CorpusPipeline {
     // checkpoint each of those re-executes the whole six-stage chain
     // (measured ×2.7 on the pipeline query at sf0.1). Off = no fuzzy
     // stage = plans unchanged.
-    val cleanM = observed("decontaminated",
-      (benchClean, cfg.fuzzyDecontaminate) match {
-        case (Some(_), Some(_)) => Dedup.materialize(clean)
-        case _                  => clean
-      })
+    val deconObs =
+      if (deconLast) Some(stage("decontaminated", unflagged(clean))) else None
+    val cleanM =
+      if (fuzzyOn) materializedStage("decontaminated", clean)
+      else if (deconLast) clean
+      else observed("decontaminated", clean)
     val fuzzyClean = (benchClean, cfg.fuzzyDecontaminate) match {
       case (Some(b), Some(tau)) =>
         observed("decontaminated_fuzzy",
@@ -861,7 +939,6 @@ object CorpusPipeline {
     //    (the DSIR rung's is), the pre-mix survivors are materialized
     //    once rather than re-executing the whole chain for the histogram
     //    pass AND every downstream consumer.
-    val mixOn = cfg.mixToShares.isDefined || cfg.temperatureMix.isDefined
     // `mixProbe` is the OBSERVE-FREE checkpoint emptiness probes read
     // (see dsirBare above); with no dsir rung the pre-mix survivors are
     // checkpointed here (the checkpoint action itself flows every row
@@ -913,12 +990,22 @@ object CorpusPipeline {
     //    run stages the final documents to storage before chunking for
     //    exactly this reason; at test scale it is a survivor-sized local
     //    checkpoint). Default off: the lazy-API contract stands.
+    //    Redaction and the split keep every row, so the counts still
+    //    pending (decontamination, and with flagged decontamination the
+    //    near-dup survivors) sit at the documents root, below the
+    //    checkpoint.
     val documentsPlan = Sampling.hashSplit(
       mixed.withColumn(cfg.textCol, TextAnalysis.redactPii(text)),
       cfg.idCol, cfg.splits)
-    val documents =
-      if (cfg.materializeDocuments) Dedup.materialize(documentsPlan)
-      else documentsPlan
+    val documentsCounted = deconObs.fold(documentsPlan) { o =>
+      if (flagDecon)
+        counted(documentsPlan, nearObs)
+          .observe(o, count(when(col(hitFlag).isNull, lit(1))).as("n_kept"))
+      else counted(documentsPlan, o)
+    }
+    val documents = unflagged(
+      if (cfg.materializeDocuments) Dedup.materialize(documentsCounted)
+      else documentsCounted)
 
     // 7. chunks get the SAME split: it is a pure function of the id
     //    (md5 bucket), so re-deriving it on the chunker's output is a

@@ -75,7 +75,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
     // The bloom path is a PREFILTER — the exact confirm join removes
     // bloom false positives, so survivors must be identical to the
     // exact-join path by construction, even at an absurd fpp. This pins
-    // the Config wiring end to end (Config → prepare → removeContaminatedBloom).
+    // the Config wiring end to end (Config → prepare → contaminationHitsBloom).
     val corpus = docs.select($"doc_id", $"text")
     val benchmark = docs.where($"doc_id" % 50 === 0).select($"doc_id", $"text")
     val cfg = CorpusPipeline.Config(
@@ -854,19 +854,65 @@ class CorpusPipelineSpec extends AnyFunSuite {
       assert(n == 1, s"the strip chain must appear once per plan, found $n:\n$p")
     }
     // the gate: its filter (lang id is one of its rules) sits ABOVE the
-    // CollectMetrics node, the strip projection below it
+    // graft_once projection, which holds the strip
     val gate = stripping.filter(_.contains("lang_id("))
     assert(gate.size == 1, s"expected one gate plan:\n${gate.mkString("\n\n")}")
     val g = gate.head
     val filterIdx = g.indexOf("Filter")
-    val metricsIdx = g.indexOf("CollectMetrics graft_once_")
+    val barrierIdx = g.indexOf("graft_once(")
     val stripIdx = g.indexOf("<script")
-    assert(filterIdx >= 0 && filterIdx < metricsIdx && metricsIdx < stripIdx,
-      s"gate filter above the CollectMetrics node above the strip:\n$g")
-    // the node adds no reported stage
+    assert(filterIdx >= 0 && filterIdx < barrierIdx && barrierIdx < stripIdx,
+      s"gate filter above the graft_once projection around the strip:\n$g")
+    // the barrier adds no reported stage
     assert(out.stages.map(_._1) == Seq("input", "quality", "exact_dedup",
       "line_dedup", "near_dedup", "decontaminated"))
     assert(out.observations.map(_._1) == out.stages.map(_._1))
+  }
+
+  test("stage counts split no codegen stage: each count sits in exactly one executed plan, once") {
+    import org.apache.spark.sql.execution.{CollectMetricsExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    // the final plans' nodes, stage by stage (a reused exchange is a leaf)
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => nodes(s.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    // below a run of CollectMetrics nodes
+    def under(p: SparkPlan): SparkPlan = p match {
+      case c: CollectMetricsExec => under(c.child)
+      case other => other
+    }
+    val (pages, bench) = crawl
+    var out: CorpusPipeline.Prepared = null
+    val executions = TestSparkSession.executionsDuring {
+      out = CorpusPipeline.prepare(pages, Some(bench), crawlCfg)
+      out.documents.select($"doc_id").collect()
+      out.chunks.select($"doc_id").distinct().collect()
+    }
+    val plans = executions.map(qe => nodes(qe.executedPlan))
+    // a count between two codegen'd operators ends one fused stage and
+    // starts another: an InputAdapter over it, a codegen stage under it
+    val splitting = plans.flatten.collect {
+      case ia: InputAdapter if ia.child.isInstanceOf[CollectMetricsExec] &&
+          under(ia.child).isInstanceOf[WholeStageCodegenExec] => ia.child
+    }
+    assert(splitting.isEmpty,
+      s"counts that split a codegen stage:\n${splitting.mkString("\n")}")
+    // the only barrier left is graft_once, which is no plan node
+    assert(!plans.flatten.exists {
+      case c: CollectMetricsExec => c.name.startsWith("graft_once")
+      case _ => false
+    })
+    // every stage's count: one executed plan, one node
+    out.observations.foreach { case (stage, o) =>
+      val perPlan = plans.map(_.count {
+        case c: CollectMetricsExec => c.name == o.name
+        case _ => false
+      }).filter(_ > 0)
+      assert(perPlan == Seq(1), s"stage '$stage' counted in plans $perPlan")
+    }
+    assert(out.observedCounts.map(_._1) == out.stages.map(_._1))
   }
 
   test("line dedup runs once per pass: one execution plans it, outputs and counts unchanged") {
