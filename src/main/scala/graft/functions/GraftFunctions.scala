@@ -10,14 +10,16 @@ import org.apache.spark.sql.functions.{call_function, lit}
   * safe to call per query; also usable from `spark.sql` once registered. */
 object GraftFunctions {
 
-  /** Registers every native function the session's registry does not hold
-    * yet. Operators call this per plan they build; a function already
-    * registered is left as it is, so a repeated call replaces nothing
-    * (replacing one makes Spark log a warning per function). */
+  /** Registers every native function whose name the session's registry
+    * does not map to graft's own builder: a missing one, or one another
+    * registration replaced (a temporary function or UDF of the same
+    * name). Operators call this per plan they build; a function graft
+    * already registered is left as it is, so a repeated call replaces
+    * nothing (replacing one makes Spark log a warning per function). */
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
     builders.foreach { case (name, builder) =>
-      if (!registry.functionExists(FunctionIdentifier(name)))
+      if (!registry.lookupFunctionBuilder(FunctionIdentifier(name)).exists(_ eq builder))
         registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
   }
@@ -91,10 +93,6 @@ object GraftFunctions {
     "graft_bloom_might_contain" -> (exprs =>
         BloomFilterMightContain(exprs.head, exprs(1)))
   )
-
-  /** `graft_once(x) -> x` as a Column: `x` evaluated once per row for
-    * every reader of the column ([[Once]]). */
-  def once(c: Column): Column = call_function("graft_once", c)
 
   /** `simhash64(array<string>) -> long` as a Column (session must be
     * registered first; queries call [[register]] idempotently). */

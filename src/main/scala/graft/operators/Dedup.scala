@@ -156,17 +156,11 @@ object Dedup {
   }
 
   /** `c`, computed ONCE per row for every filter or projection that
-    * reads the column it defines. PushDownPredicates otherwise pushes a
-    * filter below the projection that defines the column it reads,
-    * substituting the defining expression into the predicate: a gate
-    * over a stripped text column would run the strip once more for every
-    * rule that reads it. Wrapped in the nondeterministic identity
-    * `graft_once` ([[graft.functions.Once]]), the projection is one that
-    * filters are not pushed through and that CollapseProject does not
-    * inline, so its readers read the projected attribute. The identity's
-    * generated code is its child's: the projection stays in the codegen
-    * stage around it, with no extra stage, action or accumulator. */
-  private[graft] def evaluateOnce(c: Column): Column = GraftFunctions.once(c)
+    * reads the column it defines: `graft_once(c)`, an identity the
+    * optimizer keeps in its projection without splitting the codegen
+    * stage ([[graft.functions.Once]] says why). */
+  private[graft] def evaluateOnce(c: Column): Column =
+    call_function("graft_once", c)
 
   /** Read a single long metric off an observation whose plan an action
     * has ALREADY executed — synchronously, from the executed plan's own
@@ -2977,13 +2971,29 @@ object Dedup {
   }
 
   /** Drop every corpus document that shares an n-gram with the benchmark
-    * (left-anti on [[contaminationHits]]). */
+    * ([[contaminationHits]], through [[flagContaminated]]). */
   def removeContaminated(corpus: DataFrame, benchmark: DataFrame,
       textCol: String, idCol: String, n: Int = 3, tok: Tok = Tok.Latin): DataFrame =
+    dropFlagged(flagContaminated(corpus,
+      contaminationHits(corpus, benchmark, textCol, idCol, n, tok), idCol))
+
+  /** The column [[flagContaminated]] adds. */
+  private[graft] val contaminatedFlag = "_contaminated"
+
+  /** `corpus` with a boolean [[contaminatedFlag]]: true on each document `hits`
+    * names, null on the rest. `hits` is [[contaminationHits]] or
+    * [[contaminationHitsBloom]] over `corpus` (one row per `corpus_id`),
+    * so the result keeps one row per corpus row, in the column order of
+    * a left-anti join plus the flag: a count of every row still counts
+    * the corpus, and [[dropFlagged]] then leaves the clean documents. */
+  def flagContaminated(corpus: DataFrame, hits: DataFrame, idCol: String): DataFrame =
     corpus.join(
-      contaminationHits(corpus, benchmark, textCol, idCol, n, tok)
-        .select(col("corpus_id").as(idCol)),
-      Seq(idCol), "left_anti")
+      hits.select(col("corpus_id").as(idCol), lit(true).as(contaminatedFlag)),
+      Seq(idCol), "left")
+
+  /** The rows [[flagContaminated]] did not flag, without the flag. */
+  def dropFlagged(df: DataFrame): DataFrame =
+    df.where(col(contaminatedFlag).isNull).drop(contaminatedFlag)
 
   /** [[contaminationHits]] with a BLOOM prefilter on the corpus side —
     * identical results (the exact confirm join removes bloom false
@@ -3044,10 +3054,9 @@ object Dedup {
   def removeContaminatedBloom(corpus: DataFrame, benchmark: DataFrame,
       textCol: String, idCol: String, n: Int = 3,
       fpp: Double = 0.001, tok: Tok = Tok.Latin): DataFrame =
-    corpus.join(
-      contaminationHitsBloom(corpus, benchmark, textCol, idCol, n, fpp, tok)
-        .select(col("corpus_id").as(idCol)),
-      Seq(idCol), "left_anti")
+    dropFlagged(flagContaminated(corpus,
+      contaminationHitsBloom(corpus, benchmark, textCol, idCol, n, fpp, tok),
+      idCol))
 
   // ─── MEDIA decontamination (perceptual benchmark probe) ───────────────
 

@@ -52,10 +52,10 @@ import graft.operators.{Chunking, Dedup, Dsir, LineDedup, Packing, Sampling, Spa
   *       adaptive spread fired): exact dedup reads it twice (fingerprint
   *       and semi-join), and without line/span dedup the near-dup
   *       profile and the documents action read it again;
-  *     - the near-dup input (with line or span dedup on): the near-dup
-  *       profile's shingle checkpoint and the documents action both read
-  *       it, and each would otherwise re-run the exact and line/span
-  *       dedup shuffles;
+  *     - the near-dup input (with line or span dedup on, the last of
+  *       them): the near-dup profile's shingle checkpoint and the
+  *       documents action both read it, and each would otherwise re-run
+  *       the exact and line/span dedup shuffles;
   *     - the documents (`materializeDocuments`): the caller's actions
   *       and the chunk derivation all read it;
   *     - the rare-rung checkpoints named where they are taken (exact
@@ -275,11 +275,17 @@ object CorpusPipeline {
     * production corpus run reports are collected as a side effect of
     * the checkpoints inside [[prepare]] and whatever action first
     * materializes `documents` / `chunks` — zero extra scans at any
-    * scale. Each count sits where it splits no codegen stage, in one
-    * executed plan: a checkpointed stage at the root of its checkpoint,
-    * a lazy stage at a plan root, directly under an exchange, or on the
-    * one read of it that sees every row (a frame that keeps one row per
-    * row of the stage counts for it). Read them via [[observedCounts]]. */
+    * scale. A count node between two codegen'd operators would split a
+    * fused stage, so on the rungs of the plain and crawl configs each
+    * count sits in one executed plan where it splits none: a
+    * checkpointed stage at the root of its checkpoint, a lazy stage at a
+    * plan root (the documents root for the near-dup and decontamination
+    * counts when no checkpoint follows them), directly under an
+    * exchange, or on a frame that keeps one row per row of the stage. A
+    * rung that reads its input more than once (semantic and media dedup,
+    * line dedup under span dedup, the near-dup detector) repeats the
+    * count node of the stage it reads; the copies agree. Read them via
+    * [[observedCounts]]. */
   final case class Prepared(documents: DataFrame, chunks: DataFrame,
       stages: Seq[(String, DataFrame)] = Nil,
       observations: Seq[(String, Observation)] = Nil,
@@ -431,18 +437,26 @@ object CorpusPipeline {
     // not codegen'd: between two codegen'd operators it splits one fused
     // stage in two, and every codegen stage costs generated classes
     // (compiled once for the driver and once for the tasks). So each
-    // count sits where it splits no stage, in exactly one executed plan:
+    // count sits where it splits no stage, in one executed plan:
     //  - a materialized stage is counted BELOW its checkpoint, at the
     //    root of the checkpoint action ([[materializedStage]]);
     //  - a lazy stage is counted at a plan root, directly under an
-    //    exchange, or on the one branch that reads it once: exact dedup
-    //    at line dedup's output (one row per input row), the near-dup
-    //    survivors on the decontamination's shingle branch, the last
-    //    stage at the documents root (redaction and the split are 1:1).
+    //    exchange, or on a frame that keeps one row per row of the stage:
+    //    exact dedup at the line/span rewrite's checkpoint, and the
+    //    near-dup and decontamination counts wait (`pending`) for the
+    //    next checkpoint or the documents root (redaction and the split
+    //    keep every row; decontamination flags rather than drops).
+    // That holds for the rungs the plain and crawl configs run. A rung
+    // that reads its input more than once (semantic, media dedup, line
+    // dedup under span dedup, the near-dup detector) reads a counted
+    // input, so those plans repeat the count node.
     // Notes: (a) a count accumulator references no columns, so column
     // pruning still reaches the scan; (b) predicate pushdown does not
     // cross a CollectMetrics node — which is the SEMANTICS of an input
-    // count (the gate must not pre-shrink the input tally).
+    // count (the gate must not pre-shrink the input tally); (c) a count
+    // node that an operator reads more than once (a self-join, or the
+    // rungs above) is duplicated — Spark allows exact (sameResult)
+    // duplicates and the accumulators agree by construction.
     // Every counted stage is a reported stage: the buffer, in chain
     // order, is both `Prepared.stages` and `Prepared.observations`.
     val stageObs = ListBuffer.empty[(String, DataFrame, Observation)]
@@ -471,6 +485,20 @@ object CorpusPipeline {
       val m = Dedup.materialize(counted(df, o))
       stageObs += ((name, m, o))
       m
+    }
+    // Counts that wait for a read of their rows that sees each row once,
+    // each with the column that marks its stage's kept rows: the frame
+    // in between keeps one row per row of each waiting stage.
+    val pending = ListBuffer.empty[(Observation, Column)]
+    // `df` with the waiting counts attached and the documents
+    // decontamination flagged dropped; `cut` (a checkpoint) in between
+    // puts the counts at its root
+    def settled(df: DataFrame, cut: DataFrame => DataFrame = identity): DataFrame = {
+      val c = cut(pending.foldLeft(df) { case (d, (o, kept)) =>
+        d.observe(o, count(when(kept, lit(1))).as("n_kept"))
+      })
+      pending.clear()
+      if (c.columns.contains(Dedup.contaminatedFlag)) Dedup.dropFlagged(c) else c
     }
     // The adaptive spread sits BELOW the input observation: the input
     // count is partitioning-blind (same rows), and the CollectMetrics
@@ -642,38 +670,45 @@ object CorpusPipeline {
     //    changes shingle sets, and the near-dup decision must be made on
     //    the text that will actually be trained on.
     // Each rewrite returns one row per input row (a document that loses
-    // all its text comes back empty), reads its input more than once
-    // (line dedup three times, span dedup three times) and is read by two
-    // actions downstream (the near-dup detector's shingle checkpoint and
-    // the documents action). So each rewrite is checkpointed once with the
-    // minTokens verdict as a column: its kept count (the verdict's trues)
-    // and the count of the stage it read (every row) both sit at the
-    // checkpoint's root, and readers filter on the verdict column.
-    // Without a rewrite the near-dup input is the exact-dedup semi-join
-    // over the gate checkpoint and stays lazy.
-    def rewriteStage(name: String, rewritten: DataFrame,
-        inputCount: Option[Observation]): DataFrame = {
-      val verdict = "_min_tokens_ok"
-      val judged = rewritten.withColumn(verdict, nTokens(text) >= cfg.minTokens)
+    // all its text comes back empty) and reads its input three times.
+    // The last rewrite is read by two actions downstream (the near-dup
+    // detector's shingle checkpoint and the documents action), so it is
+    // checkpointed once with the minTokens verdict as a column: its kept
+    // count (the verdict's trues) and the count of the stage it read
+    // (every row) both sit at the checkpoint's root, and readers filter
+    // on the verdict column. Line dedup under span dedup stays lazy
+    // (span dedup's three reads of it share its exchanges) and filters
+    // at once; its count rides the span checkpoint's root, exact dedup's
+    // its own rewrite. Without a rewrite the near-dup input is the
+    // exact-dedup semi-join over the gate checkpoint and stays lazy.
+    def rewriteStage(name: String, rewritten: DataFrame, read: Observation,
+        last: Boolean): (DataFrame, Observation) = {
       val o = Observation()
-      val m = Dedup.materialize(inputCount.fold(judged)(counted(judged, _))
-        .observe(o, count(when(col(verdict), lit(1))).as("n_kept")))
-      val kept = m.where(col(verdict)).drop(verdict)
+      val kept =
+        if (!last) counted(rewritten, read).where(nTokens(text) >= cfg.minTokens)
+        else {
+          val verdict = "_min_tokens_ok"
+          Dedup.materialize(counted(
+              rewritten.withColumn(verdict, nTokens(text) >= cfg.minTokens), read)
+            .observe(o, count(when(col(verdict), lit(1))).as("n_kept")))
+            .where(col(verdict)).drop(verdict)
+        }
       stageObs += ((name, kept, o))
-      kept
+      (kept, o)
     }
     val lineDeduped = cfg.lineDedupMinDocs.map { m =>
       rewriteStage("line_dedup",
         LineDedup.removeDuplicatedLines(exactBare, cfg.textCol, cfg.idCol, m),
-        Some(exactObs))
+        exactObs, last = cfg.spanDedupN.isEmpty)
     }
+    val (spanRead, spanReadObs) = lineDeduped.getOrElse((exactBare, exactObs))
     val spanDeduped = cfg.spanDedupN.map { n =>
       rewriteStage("span_dedup",
-        SpanDedup.removeDuplicatedSpans(lineDeduped.getOrElse(exactBare),
-          cfg.textCol, cfg.idCol, n, tok = cfg.tokenizer),
-        if (lineDeduped.isEmpty) Some(exactObs) else None)
+        SpanDedup.removeDuplicatedSpans(spanRead, cfg.textCol, cfg.idCol, n,
+          tok = cfg.tokenizer),
+        spanReadObs, last = true)._1
     }
-    val nearInput = spanDeduped.orElse(lineDeduped)
+    val nearInput = spanDeduped.orElse(lineDeduped.map(_._1))
       .getOrElse(counted(exactBare, exactObs))
 
     // 3. near-dup removal (MinHash+LSH detect → CC → min-id survivor).
@@ -694,13 +729,13 @@ object CorpusPipeline {
       tok = cfg.tokenizer,
       detector =
         if (cfg.tunedNearDedup) Dedup.Detector.Tuned else Dedup.Detector.Auto)
-    val nearObs = stage("near_dedup", nearBare)
-    // Decontamination reads its corpus twice (its anti-join and the hits'
-    // shingles), so when it reads the near-dup survivors directly their
-    // count is not attached here (see `flagDecon`).
-    val nearOnDecon = benchClean.isDefined && cfg.semanticDedup.isEmpty &&
-      cfg.imageDedup.isEmpty && cfg.audioDedup.isEmpty && cfg.videoDedup.isEmpty
-    val nearDeduped = if (nearOnDecon) nearBare else counted(nearBare, nearObs)
+    pending += stage("near_dedup", nearBare) -> lit(true)
+    // a semantic or media-dedup rung reads the survivors more than once:
+    // it reads them counted
+    val nearDeduped =
+      if (Seq(cfg.semanticDedup, cfg.imageDedup, cfg.audioDedup,
+          cfg.videoDedup).exists(_.isDefined)) settled(nearBare)
+      else nearBare
 
     // 3b. optional SEMANTIC dedup (SemDeDup) — the last dedup rung:
     //    paraphrase-level duplicates the shingle families cannot see,
@@ -807,38 +842,25 @@ object CorpusPipeline {
           frameHashes = sharedVid))
     }
 
-    // Decontamination is the last stage unless a fuzzy/media probe, the
-    // DSIR selection or a mix follows; the last stage's count rides the
-    // documents root (see documentsPlan). When it is last and reads the
-    // near-dup survivors directly, it FLAGS the contaminated documents
-    // instead of dropping them: every near-dup survivor then reaches the
-    // documents root, both counts sit there, and the documents drop the
-    // flagged rows above it (after the checkpoint, with
-    // materializeDocuments). Otherwise the near-dup count rides the
-    // anti-join side, the one read that sees every row.
-    val fuzzyOn = benchClean.isDefined && cfg.fuzzyDecontaminate.isDefined
-    val mixOn = cfg.mixToShares.isDefined || cfg.temperatureMix.isDefined
-    val deconLast = !fuzzyOn && cfg.mediaDecontaminate.isEmpty &&
-      cfg.dsirSelect.isEmpty && !mixOn
-    val flagDecon = nearOnDecon && deconLast
-    val hitFlag = "_contaminated"
-    val clean = benchClean.fold(vidDeduped) { b =>
-      val hits = (
+    // Decontamination FLAGS the contaminated documents (a left join on
+    // the hit ids) instead of dropping them: the flagged frame keeps one
+    // row per row it read, so its count and any count still waiting (the
+    // near-dup survivors') ride on to the next checkpoint or the
+    // documents root, and the flagged rows drop above it (see `settled`).
+    // Without a benchmark the stage keeps every row.
+    val (clean, cleanRows) = benchClean.fold((vidDeduped, lit(true))) { b =>
+      val hits =
         if (cfg.bloomDecontaminate)
           Dedup.contaminationHitsBloom(vidDeduped, b, cfg.textCol, cfg.idCol,
             cfg.decontaminateN, cfg.bloomFpp, cfg.tokenizer)
         else
           Dedup.contaminationHits(vidDeduped, b, cfg.textCol, cfg.idCol,
-            cfg.decontaminateN, cfg.tokenizer))
-        .select(col("corpus_id").as(cfg.idCol))
-      if (flagDecon)
-        vidDeduped.join(hits.withColumn(hitFlag, lit(true)), Seq(cfg.idCol), "left")
-      else
-        (if (nearOnDecon) counted(vidDeduped, nearObs) else vidDeduped)
-          .join(hits, Seq(cfg.idCol), "left_anti")
+            cfg.decontaminateN, cfg.tokenizer)
+      (Dedup.flagContaminated(vidDeduped, hits, cfg.idCol),
+        col(Dedup.contaminatedFlag).isNull)
     }
-    def unflagged(df: DataFrame): DataFrame =
-      if (flagDecon) df.where(col(hitFlag).isNull).drop(hitFlag) else df
+    pending += stage("decontaminated",
+      clean.where(cleanRows).drop(Dedup.contaminatedFlag)) -> cleanRows
 
     // 4b. optional FUZZY decontamination — the reworded-leak net: a
     //    paraphrased benchmark dump shares most of its SHINGLE set while
@@ -857,12 +879,10 @@ object CorpusPipeline {
     // checkpoint each of those re-executes the whole six-stage chain
     // (measured ×2.7 on the pipeline query at sf0.1). Off = no fuzzy
     // stage = plans unchanged.
-    val deconObs =
-      if (deconLast) Some(stage("decontaminated", unflagged(clean))) else None
-    val cleanM =
-      if (fuzzyOn) materializedStage("decontaminated", clean)
-      else if (deconLast) clean
-      else observed("decontaminated", clean)
+    val cleanM = (benchClean, cfg.fuzzyDecontaminate) match {
+      case (Some(_), Some(_)) => settled(clean, Dedup.materialize)
+      case _                  => clean
+    }
     val fuzzyClean = (benchClean, cfg.fuzzyDecontaminate) match {
       case (Some(b), Some(tau)) =>
         observed("decontaminated_fuzzy",
@@ -884,7 +904,7 @@ object CorpusPipeline {
         case _       => sharedVid
       }
       observed("media_decontaminated",
-        Dedup.removeContaminatedMediaIndexed(fuzzyClean, mdc.benchmarkHashes,
+        Dedup.removeContaminatedMediaIndexed(settled(fuzzyClean), mdc.benchmarkHashes,
           cfg.idCol, mdc.typeCol, mdc.binaryCol, mdc.kind, mdc.maxHamming,
           mdc.everyN, mdc.minMatchFrac, mdc.alignFrames,
           corpusHashes = shared))
@@ -921,7 +941,7 @@ object CorpusPipeline {
     // session parallelism.
     val dsirBare = cfg.dsirSelect.map { dc =>
       Dedup.materialize(Dedup.spreadRows(
-        Dsir.resampleRows(mediaClean, cfg.textCol,
+        Dsir.resampleRows(settled(mediaClean), cfg.textCol,
           cfg.idCol, dc.model, dc.k, dc.salt, cfg.tokenizer),
         col(cfg.idCol), dc.k))
     }
@@ -939,6 +959,7 @@ object CorpusPipeline {
     //    (the DSIR rung's is), the pre-mix survivors are materialized
     //    once rather than re-executing the whole chain for the histogram
     //    pass AND every downstream consumer.
+    val mixOn = cfg.mixToShares.isDefined || cfg.temperatureMix.isDefined
     // `mixProbe` is the OBSERVE-FREE checkpoint emptiness probes read
     // (see dsirBare above); with no dsir rung the pre-mix survivors are
     // checkpointed here (the checkpoint action itself flows every row
@@ -950,7 +971,7 @@ object CorpusPipeline {
       else dsirBare match {
         case Some(bare) => (selected, bare)
         case None =>
-          val m = Dedup.materialize(selected)
+          val m = settled(selected, Dedup.materialize)
           (m, m)
       }
     val shareMixed = cfg.mixToShares.fold(mixInput) { mc =>
@@ -991,21 +1012,14 @@ object CorpusPipeline {
     //    exactly this reason; at test scale it is a survivor-sized local
     //    checkpoint). Default off: the lazy-API contract stands.
     //    Redaction and the split keep every row, so the counts still
-    //    pending (decontamination, and with flagged decontamination the
-    //    near-dup survivors) sit at the documents root, below the
-    //    checkpoint.
+    //    pending (near-dup and decontamination, when no checkpoint came
+    //    after them) sit at the documents root, below the checkpoint,
+    //    and the flagged documents drop above it.
     val documentsPlan = Sampling.hashSplit(
       mixed.withColumn(cfg.textCol, TextAnalysis.redactPii(text)),
       cfg.idCol, cfg.splits)
-    val documentsCounted = deconObs.fold(documentsPlan) { o =>
-      if (flagDecon)
-        counted(documentsPlan, nearObs)
-          .observe(o, count(when(col(hitFlag).isNull, lit(1))).as("n_kept"))
-      else counted(documentsPlan, o)
-    }
-    val documents = unflagged(
-      if (cfg.materializeDocuments) Dedup.materialize(documentsCounted)
-      else documentsCounted)
+    val documents = settled(documentsPlan,
+      d => if (cfg.materializeDocuments) Dedup.materialize(d) else d)
 
     // 7. chunks get the SAME split: it is a pure function of the id
     //    (md5 bucket), so re-deriving it on the chunker's output is a

@@ -32,12 +32,26 @@ class GraftFunctionsSpec extends AnyFunSuite {
       Seq("a b c", "b c d"))
   }
 
+  test("register replaces a foreign function that holds a graft name") {
+    val s2 = spark.newSession()
+    GraftFunctions.register(s2)
+    val registry = s2.sessionState.functionRegistry
+    val id = FunctionIdentifier("shingles")
+    val graftBuilder = registry.lookupFunctionBuilder(id).get
+    s2.udf.register("shingles", (t: String, n: Int) => Seq("foreign"))
+    assert(s2.sql("SELECT shingles('a b c d', 3)").head().getSeq[String](0) == Seq("foreign"))
+    GraftFunctions.register(s2)
+    assert(registry.lookupFunctionBuilder(id).get eq graftBuilder)
+    assert(s2.sql("SELECT shingles('a b c d', 3)").head().getSeq[String](0) ==
+      Seq("a b c", "b c d"))
+  }
+
   test("graft_once is the identity, computed once under the filters that read it") {
     import spark.implicits._
     GraftFunctions.register(spark)
     // the repartition keeps the optimizer from folding the local rows
     val df = Seq((1L, "a b c d"), (2L, "x")).toDF("id", "t").repartition(1)
-      .select($"id", GraftFunctions.once(GraftFunctions.shinglesNative($"t", 3)).as("sh"))
+      .select($"id", graft.operators.Dedup.evaluateOnce(GraftFunctions.shinglesNative($"t", 3)).as("sh"))
       .where(org.apache.spark.sql.functions.size($"sh") > 0)
     assert(df.as[(Long, Seq[String])].collect().toSeq == Seq((1L, Seq("a b c", "b c d"))))
     val plan = df.queryExecution.optimizedPlan.toString

@@ -869,7 +869,11 @@ class CorpusPipelineSpec extends AnyFunSuite {
     assert(out.observations.map(_._1) == out.stages.map(_._1))
   }
 
-  test("stage counts split no codegen stage: each count sits in exactly one executed plan, once") {
+  // Runs prepare over the crawl corpus (with or without its benchmark)
+  // and the caller's two collects, and asserts that no count splits a
+  // codegen stage and that each stage is counted in one executed plan,
+  // once.
+  private def assertCountsSplitNoStage(withBench: Boolean): Unit = {
     import org.apache.spark.sql.execution.{CollectMetricsExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     // the final plans' nodes, stage by stage (a reused exchange is a leaf)
@@ -886,7 +890,8 @@ class CorpusPipelineSpec extends AnyFunSuite {
     val (pages, bench) = crawl
     var out: CorpusPipeline.Prepared = null
     val executions = TestSparkSession.executionsDuring {
-      out = CorpusPipeline.prepare(pages, Some(bench), crawlCfg)
+      out = CorpusPipeline.prepare(pages, Some(bench).filter(_ => withBench),
+        crawlCfg)
       out.documents.select($"doc_id").collect()
       out.chunks.select($"doc_id").distinct().collect()
     }
@@ -913,6 +918,14 @@ class CorpusPipelineSpec extends AnyFunSuite {
       assert(perPlan == Seq(1), s"stage '$stage' counted in plans $perPlan")
     }
     assert(out.observedCounts.map(_._1) == out.stages.map(_._1))
+  }
+
+  test("stage counts split no codegen stage: each count sits in exactly one executed plan, once") {
+    assertCountsSplitNoStage(withBench = true)
+  }
+
+  test("stage counts split no codegen stage without a benchmark: near_dedup rides the documents root") {
+    assertCountsSplitNoStage(withBench = false)
   }
 
   test("line dedup runs once per pass: one execution plans it, outputs and counts unchanged") {
