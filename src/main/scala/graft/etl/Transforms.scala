@@ -33,11 +33,13 @@ object Transforms {
     */
   def normalizeDelimited(df: DataFrame, names: Seq[String], delim: String = ","): DataFrame = {
     val first = df.columns.head
+    // one job: the sample comes to the driver, which decides
     val sample = df
       .select(col(first).cast("string").as("s"))
       .where(col("s").isNotNull)
       .limit(5)
-    val packed = sample.where(col("s").contains(delim)).limit(1).count() > 0
+      .collect()
+    val packed = sample.exists(_.getString(0).contains(delim))
     if (packed) {
       // P4 — split, fixed arity expand into the canonical names.
       val parts = split(col(first).cast("string"), java.util.regex.Pattern.quote(delim))
@@ -61,10 +63,19 @@ object Transforms {
   def coerceTimestamp(df: DataFrame, c: String): DataFrame =
     df.withColumn(c, try_to_timestamp(col(c)))
 
+  /** The long coercion of column `c`: an integer string casts exactly,
+    * and any other numeric string (`12.0`, `1e3`, `12.7`) through
+    * double, truncated, so a value parses the same whatever the other
+    * values of its column hold. Out of long's range, NaN and infinities
+    * give null. */
+  private def tryLong(c: String): Column =
+    coalesce(expr(s"try_cast(`$c` AS LONG)"),
+      expr(s"try_cast(try_cast(`$c` AS DOUBLE) AS LONG)")).as(c)
+
   /** P7 — numeric parse with coerce → long (etl_pipeline.py:138; see §4.4
     * for the deliberate no-crash divergence). */
   def coerceLong(df: DataFrame, c: String): DataFrame =
-    df.withColumn(c, tryCast(c, "LONG"))
+    df.withColumn(c, tryLong(c))
 
   /** P8 — numeric parse with coerce → double (etl_pipeline.py:139, :174). */
   def coerceDouble(df: DataFrame, c: String): DataFrame =
@@ -76,6 +87,7 @@ object Transforms {
     val cols: Seq[Column] = df.columns.toSeq.map { c =>
       casts.get(c) match {
         case Some("timestamp") => try_to_timestamp(col(c)).as(c)
+        case Some("long")      => tryLong(c)
         case Some(t)           => tryCast(c, t)
         case None              => col(c)
       }
@@ -91,8 +103,4 @@ object Transforms {
     * keeps first occurrence in file order, Spark keeps an arbitrary one —
     * irrelevant for exact duplicates (all survivors identical, SURVEY §4.4.4). */
   def dedupExact(df: DataFrame): DataFrame = df.dropDuplicates()
-
-  /** P10 variant — dedup on a key subset (keeps one arbitrary row per key). */
-  def dedupByKey(df: DataFrame, keys: Seq[String]): DataFrame =
-    df.dropDuplicates(keys)
 }

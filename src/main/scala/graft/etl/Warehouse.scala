@@ -124,13 +124,6 @@ object Warehouse {
       current.join(updates.select(keys.map(col): _*), keys, "left_anti"))
   }
 
-  /** K1 — CSV stage materialization (df.to_csv(index=False),
-    * etl_pipeline.py:74). Kept only for reference-shaped interop; the
-    * engine's own stage hand-off is the lazy plan (no materialization) or
-    * [[stageParquet]] when durability is wanted. */
-  def writeCsv(df: DataFrame, path: String): Unit =
-    df.write.option("header", "true").mode("overwrite").csv(path)
-
   /** Typed durable stage boundary — replaces the reference's lossy /tmp CSV
     * hop (SURVEY §1.5): parquet keeps types, so no re-inference/re-parse
     * downstream.

@@ -1,5 +1,9 @@
 package graft.pipeline
 
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import scala.util.Try
+
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 
@@ -14,8 +18,10 @@ import graft.sources.Sources
   * restated as one driver program that keeps the DAG's shape: after the
   * database exists, the two extract → transform → load branches run as
   * concurrent Spark jobs, the barrier is joining both before validation,
-  * and validation submits its nine independent queries at once (the
-  * reference's nine BigQuery queries). XCom scalars become ordinary
+  * and validation submits the reference's nine BigQuery queries at once,
+  * as five plans: each loaded table's row count, null counts and ranges
+  * share one scan. The sales CSV is read as strings, with no inference
+  * pass; `transformSales` types every value. XCom scalars become ordinary
   * return values: each branch's row count is observed on the write
   * that loads it. There is no scheduler, SMTP, or metadata DB here by
   * design (SURVEY §1.5, §7.4).
@@ -62,13 +68,14 @@ object Pipeline {
   }
 
   /** Post-load validation (validate_data, etl_pipeline.py:261–473): the
-    * nine reference queries over the loaded tables, submitted at the same
-    * time and returned as results in the reference's order rather than
-    * raised (callers choose `Checks.assertAllPassed`). */
+    * nine reference queries over the loaded tables as five plans, each
+    * table's row count, null counts and ranges in one aggregate, submitted
+    * at the same time and returned as results in the reference's order
+    * rather than raised (callers choose `Checks.assertAllPassed`). */
   def validate(sales: DataFrame, products: DataFrame, expectedSales: Long,
       expectedProducts: Long): Seq[CheckResult] =
     ValidationSuite.run(sales.sparkSession, "store_sales", "products", expectedSales,
-      expectedProducts)(ValidationSuite.frame(sales, products))
+      expectedProducts, ValidationSuite.byTable)(ValidationSuite.frame(sales, products))
 
   /** O1 — the whole DAG as one driver program. Returns the validation
     * results (and throws [[graft.quality.ValidationFailure]] on critical
@@ -113,17 +120,22 @@ object Pipeline {
     * `queryExecution.observedMetrics` (what `Dedup.observedLong` reads)
     * is its never-executed plan's initial row, `[0]`: a silent wrong
     * zero. The observation's own result is read instead. Spark completes
-    * it from the listener bus when the write's execution ends, and the
-    * catalog update after the data write gives the bus time: it was
-    * complete on every return measured. If it is not, this says so on
-    * stderr and recomputes. */
+    * it from the listener bus when the write's execution ends, which can
+    * be after the write returns while the other branch's jobs keep the
+    * bus busy, so this waits for it, up to [[ObservationWait]]. If it is
+    * still absent, this says so on stderr and recomputes. */
   private[pipeline] def writtenRows(o: Observation)(fallback: => Long): Long =
-    o.future.value.flatMap(_.toOption) match {
+    Try(Await.result(o.future, ObservationWait)).toOption match {
       case Some(row) => row.getAs[Long]("rows")
       case None =>
         System.err.println(
           s"[graft] WARN observed metric 'rows' (observation ${o.name}) absent " +
-            "after the write returned - recomputing with an extra pass")
+            s"$ObservationWait after the write returned - recomputing with an extra pass")
         fallback
     }
+
+  /** How long [[writtenRows]] waits for the listener bus: far beyond its
+    * usual lag of milliseconds, and short next to the recount it saves
+    * on a large table. */
+  private val ObservationWait = 10.seconds
 }

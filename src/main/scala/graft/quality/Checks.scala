@@ -37,10 +37,13 @@ object Checks {
     * (COUNTIF(col IS NULL) ×N, etl_pipeline.py:327–334, :344–350).
     * Output columns are named `null_<col>`. */
   def nullCounts(df: DataFrame, cols: Seq[String]): DataFrame = {
-    val aggs: Seq[Column] =
-      cols.map(c => count(when(col(c).isNull, lit(1))).as(s"null_$c"))
+    val aggs = nullCountColumns(cols)
     df.agg(aggs.head, aggs.tail: _*)
   }
+
+  /** [[nullCounts]]' aggregate columns, to share a pass with others. */
+  def nullCountColumns(cols: Seq[String]): Seq[Column] =
+    cols.map(c => count(when(col(c).isNull, lit(1))).as(s"null_$c"))
 
   /** A3 — duplicate-key detection (GROUP BY keys HAVING COUNT(*)>1,
     * etl_pipeline.py:364–369, :378–383). Hash aggregate; partial
@@ -78,10 +81,13 @@ object Checks {
   /** A4 — multi-column MIN/MAX range extraction in one pass
     * (etl_pipeline.py:414–421, :438–443). Output: `min_<col>`, `max_<col>`. */
   def valueRanges(df: DataFrame, cols: Seq[String]): DataFrame = {
-    val aggs: Seq[Column] = cols.flatMap(c =>
-      Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
+    val aggs = rangeColumns(cols)
     df.agg(aggs.head, aggs.tail: _*)
   }
+
+  /** [[valueRanges]]' aggregate columns, to share a pass with others. */
+  def rangeColumns(cols: Seq[String]): Seq[Column] =
+    cols.flatMap(c => Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
 
   // ── report (B9 / O5) ─────────────────────────────────────────────────
 

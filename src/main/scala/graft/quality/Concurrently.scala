@@ -8,13 +8,13 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SQLExecution
 
 /** Submits independent Spark actions at once: the reference DAG's two load
-  * branches (`Pipeline.run`) and the validation suite's nine queries
+  * branches (`Pipeline.run`) and the validation suite's query groups
   * ([[ValidationSuite.run]]). */
 private[graft] object Concurrently {
 
-  /** One pool, as wide as the widest fan-out (the nine validation
-    * queries). Only callers of [[apply]] submit to it, never an action
-    * running on it, so no pool thread ever waits on another. */
+  /** One pool, as wide as the widest fan-out (the SQL form's nine
+    * validation queries). Only callers of [[apply]] submit to it, never
+    * an action running on it, so no pool thread ever waits on another. */
   private lazy val pool = Executors.newFixedThreadPool(9, { (r: Runnable) =>
     val t = new Thread(r, "graft-concurrently")
     t.setDaemon(true)

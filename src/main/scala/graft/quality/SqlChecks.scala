@@ -20,6 +20,8 @@ object SqlChecks {
     * (`Pipeline.validate`). */
   def runAll(spark: SparkSession, salesTable: String, productsTable: String,
       expectedSales: Long, expectedProducts: Long): Seq[CheckResult] =
-    ValidationSuite.run(spark, salesTable, productsTable, expectedSales, expectedProducts)(
-      q => spark.sql(ValidationSuite.sql(salesTable, productsTable)(q)))
+    ValidationSuite.run(spark, salesTable, productsTable, expectedSales, expectedProducts,
+      ValidationSuite.alone) {
+      case Seq(q) => spark.sql(ValidationSuite.sql(salesTable, productsTable)(q))
+    }
 }

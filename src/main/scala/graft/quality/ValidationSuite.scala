@@ -1,14 +1,18 @@
 package graft.quality
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 
 /** The reference's validation suite (dags/etl_pipeline.py:283–449) as one
-  * ordered table of its nine queries. Each query is built either as a
-  * DataFrame plan over the loaded frames (`Pipeline.validate`) or as the
-  * reference's literal SQL over named tables (`SqlChecks.runAll`). Both
-  * forms submit the nine at once and turn the nine results into the same
-  * 17 critical checks, in the reference's order.
+  * ordered table of its nine queries, run in groups, one action per group.
+  * The DataFrame form (`Pipeline.validate`) builds plans over the loaded
+  * frames in five groups ([[byTable]]): each table's row count, null
+  * counts and ranges share one aggregate, so one scan of the table
+  * answers the three, as the reference's separate queries would not. The
+  * SQL form (`SqlChecks.runAll`) runs the reference's literal SQL over
+  * named tables, each query alone. Both submit their groups at once and
+  * turn the nine results into the same 17 critical checks, in the
+  * reference's order.
   */
 private[graft] object ValidationSuite {
 
@@ -46,19 +50,41 @@ private[graft] object ValidationSuite {
     Ranges(Sales, Seq("sales_amount" -> "amount", "units_sold" -> "units"), strict = false),
     Ranges(Products, Seq("price" -> "price"), strict = true))
 
-  /** The DataFrame form of `q` over the loaded frames. */
-  def frame(sales: DataFrame, products: DataFrame)(q: Query): DataFrame = {
-    val df = if (q.side == Sales) sales else products
-    q match {
-      case RowCount(_) => df.agg(count(lit(1)))
-      case NullCounts(_, cols) => Checks.nullCounts(df, cols.map(_._1))
-      case DuplicateKeys(_, keys) => Checks.duplicateKeys(df, keys)
+  /** The aggregate columns of a row-count, null-count or range query:
+    * one row over its side's table answers it. */
+  private val aggregates: PartialFunction[Query, Seq[Column]] = {
+    case RowCount(_) => Seq(count(lit(1)))
+    case NullCounts(_, cols) => Checks.nullCountColumns(cols.map(_._1))
+    case Ranges(_, cols, _) => Checks.rangeColumns(cols.map(_._1))
+  }
+
+  /** Each query alone: the SQL form's groups. */
+  val alone: Seq[Seq[Query]] = queries.map(Seq(_))
+
+  /** The DataFrame form's groups: each table's row count, null counts and
+    * ranges together, so one scan of the table answers the three, and the
+    * duplicate-key and orphan queries alone. */
+  val byTable: Seq[Seq[Query]] = {
+    val (fused, own) = queries.partition(aggregates.isDefinedAt)
+    Seq(Sales, Products).map(side => fused.filter(_.side == side)) ++ own.map(Seq(_))
+  }
+
+  /** The DataFrame form of a group over the loaded frames, as one plan: a
+    * duplicate-key or orphan query alone, or aggregate queries over one
+    * table as one aggregate of all their columns, in the group's order. */
+  def frame(sales: DataFrame, products: DataFrame)(group: Seq[Query]): DataFrame = {
+    def on(side: Side) = if (side == Sales) sales else products
+    group match {
+      case Seq(DuplicateKeys(side, keys)) => Checks.duplicateKeys(on(side), keys)
       // products is a known dimension table → force the broadcast hint
       // (the generic default decides from size stats; see Checks.orphanRows)
-      case Orphans(key) =>
+      case Seq(Orphans(key)) =>
         Checks.orphanRows(sales, products, key, key, broadcastParent = Some(true))
           .agg(count(lit(1)))
-      case Ranges(_, cols, _) => Checks.valueRanges(df, cols.map(_._1))
+      case _ =>
+        require(group.forall(_.side == group.head.side), s"one table per aggregate: $group")
+        val aggs = group.flatMap(aggregates)
+        on(group.head.side).agg(aggs.head, aggs.tail: _*)
     }
   }
 
@@ -86,29 +112,47 @@ private[graft] object ValidationSuite {
     }
   }
 
-  /** Runs the nine queries, each built by `build`, at the same time and
-    * returns their 17 checks in the reference's order. `sales` and
-    * `products` name the tables in the checks. */
+  /** Runs the nine queries in `groups`, one action per group and every
+    * group at the same time, and returns their 17 checks in the
+    * reference's order. `build` gives a group's one plan (see [[rows]]).
+    * `sales` and `products` name the tables in the checks. */
   def run(spark: SparkSession, sales: String, products: String, expectedSales: Long,
-      expectedProducts: Long)(build: Query => DataFrame): Seq[CheckResult] = {
-    val checks = Concurrently(spark)(queries.map { q => () =>
+      expectedProducts: Long, groups: Seq[Seq[Query]])(
+      build: Seq[Query] => DataFrame): Seq[CheckResult] = {
+    val answered = Concurrently(spark)(groups.map { g => () => g.zip(rows(g, build(g))) }: _*)
+      .flatten.toMap
+    val checks = queries.map { q =>
       val (table, expected) =
         if (q.side == Sales) (sales, expectedSales) else (products, expectedProducts)
-      evaluate(q, build(q), table, expected)
-    }: _*)
+      evaluate(q, answered(q), table, expected)
+    }
     // B4 for both tables, then B5 for both, then the rest in query order
     val (counts, rest) = checks.splitAt(2)
     counts.transpose.flatten ++ rest.flatten
   }
 
-  /** Runs `q`'s built frame and applies the reference's rules to the
-    * collected rows, as the reference compares its BigQuery results
-    * client-side. Every check is critical. */
-  def evaluate(q: Query, result: DataFrame, table: String,
+  /** Collects a group's plan with one action and returns each query's
+    * rows: the first offenders of a duplicate-key query (the reference
+    * logs the head() of its duplicate frame), the one row of a query
+    * alone, and for aggregate queries built as one aggregate, the slice of
+    * its one row that holds each query's columns. */
+  private def rows(group: Seq[Query], result: DataFrame): Seq[Seq[Row]] = group match {
+    case Seq(_: DuplicateKeys) => Seq(result.limit(6).collect().toSeq)
+    case Seq(_) => Seq(Seq(result.head()))
+    case _ =>
+      val row = result.head().toSeq
+      val ends = group.map(aggregates(_).size).scanLeft(0)(_ + _)
+      ends.zip(ends.tail).map { case (from, until) => Seq(Row.fromSeq(row.slice(from, until))) }
+  }
+
+  /** Applies the reference's rules to `q`'s collected rows, as the
+    * reference compares its BigQuery results client-side. Every check is
+    * critical. */
+  def evaluate(q: Query, rows: Seq[Row], table: String,
       expected: Long): Seq[CheckResult] = {
     def check(name: String, passed: Boolean, detail: String) =
       CheckResult(name, table, "CRITICAL", passed, detail)
-    lazy val row = result.head() // the one row of an aggregate query
+    lazy val row = rows.head // the one row of an aggregate query
     q match {
       case _: RowCount =>
         val n = row.getLong(0)
@@ -118,13 +162,10 @@ private[graft] object ValidationSuite {
       case NullCounts(_, cols) => cols.zipWithIndex.map { case ((c, _), i) =>
         check(s"null_$c", row.getLong(i) == 0, s"nulls=${row.getLong(i)}")
       }
-      // the first offenders are logged like the reference's head() of the
-      // duplicate frame
       case _: DuplicateKeys =>
-        val offenders = result.limit(6).collect()
-        Seq(check("no_duplicate_keys", offenders.isEmpty,
-          if (offenders.isEmpty) "duplicates=0"
-          else offenders.take(5).mkString("duplicate keys (first 5): ", ", ", "")))
+        Seq(check("no_duplicate_keys", rows.isEmpty,
+          if (rows.isEmpty) "duplicates=0"
+          else rows.take(5).mkString("duplicate keys (first 5): ", ", ", "")))
       case _: Orphans =>
         Seq(check("referential_integrity", row.getLong(0) == 0, s"orphans=${row.getLong(0)}"))
       // each column yields its min and max. MIN over no values is SQL NULL

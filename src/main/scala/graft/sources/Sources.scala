@@ -7,17 +7,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * The reference reads an Excel sheet (dags/etl_pipeline.py:70), a JSON
   * document containing an array of records (:92), stage-intermediate CSVs
   * (:117, :169, :227, :248) and warehouse tables by name (:285 etc.).
-  * Here each becomes a lazy Spark scan; schema inference mirrors the
-  * reference's pandas inference semantics.
+  * Here each becomes a lazy Spark scan. The CSV and Excel readers type
+  * nothing: the transforms' coercing casts do all of the typing, per row.
   */
 object Sources {
 
-  /** S3 — CSV with header + type inference (pd.read_csv semantics,
-    * etl_pipeline.py:117). */
+  /** S3 — CSV with a header row (pd.read_csv, etl_pipeline.py:117). No
+    * type inference: every column is a string, as in [[excel]]. An
+    * inference pass would scan the whole file once more before the read,
+    * and pick one type per column from every value in it, so one bad
+    * value would change how the column's good values parse; the
+    * transforms' `try_cast`s type each value on its own instead
+    * (`Transforms.coerceSchema`). Opening the file reads its header
+    * line (one small job). */
   def csv(spark: SparkSession, path: String): DataFrame =
     spark.read
       .option("header", "true")
-      .option("inferSchema", "true")
       .csv(path)
 
   /** S2 — one JSON document holding an array of records

@@ -47,6 +47,16 @@ class TransformsSpec extends AnyFunSuite {
     assert(dbl.where($"x".isNull).count() == 1)
   }
 
+  test("P7: long coercion is per row: integers exactly, other numbers through double") {
+    val df = Seq("12.0", "1e3", "12.7", "-3", "9223372036854775807", "Inf", "NaN", "abc")
+      .toDF("units_sold")
+    val want = Seq(Some(12L), Some(1000L), Some(12L), Some(-3L), Some(Long.MaxValue),
+      None, None, None)
+    assert(Transforms.coerceLong(df, "units_sold").as[Option[Long]].collect().toSeq == want)
+    assert(Transforms.coerceSchema(df, Map("units_sold" -> "long"))
+      .as[Option[Long]].collect().toSeq == want)
+  }
+
   test("P9: dropNullRows drops rows with any null and never increases rows") {
     val df = Seq(
       (Some("a"), Some(1)),

@@ -106,7 +106,8 @@ class EdgeCasesSpec extends AnyFunSuite {
     import ValidationSuite.{RowCount, Sales}
     val sales = emptyDocs.select($"doc_id".as("product_id"), $"text".as("date"))
     assert(!ValidationSuite.evaluate(RowCount(Sales),
-      ValidationSuite.frame(sales, sales)(RowCount(Sales)), "t", 0).head.passed)
+      ValidationSuite.frame(sales, sales)(Seq(RowCount(Sales))).collect().toSeq, "t", 0)
+      .head.passed)
     assert(Checks.duplicateKeys(sales, Seq("product_id")).count() == 0)
 
     // the whole suite, in both forms, over empty loaded tables: only the

@@ -98,6 +98,69 @@ class PipelineSpec extends AnyFunSuite {
     assert(products.count() == 3)
   }
 
+  test("no inference pass: typed sales rows equal those of a type-inferring read") {
+    // columns that inference types: clean dates, then clean timestamps,
+    // integral and exponent doubles and infinities in the numeric columns
+    val dates = write("target/fixtures/infer_dates.csv",
+      """dt,store,product,units,amount
+        |2024-01-05,S01,P001,3,29.97
+        |2024-01-06,S01,P002,12.0,1e3
+        |2024-01-07,S02,P003,1e3,1.5E-2
+        |2024-01-08,S02,P004,Inf,-Inf
+        |2024-01-09,S03,P005,7.9,Inf
+        |2024-01-10,S03,P006,-2,NaN
+        |""".stripMargin)
+    val timestamps = write("target/fixtures/infer_timestamps.csv",
+      """dt,store,product,units,amount
+        |2024-01-05 10:30:00,S01,P001,3,29
+        |2024-01-06T08:00:00,S01,P002,4,30
+        |2024-01-07 23:59:59.5,S02,P003,5,31
+        |""".stripMargin)
+    def inferring(path: String) =
+      spark.read.option("header", "true").option("inferSchema", "true").csv(path)
+    // the inferring read types every column but the keys
+    def types(path: String) = inferring(path).schema.fields.map(_.dataType.typeName).toSeq
+    assert(types(dates) == Seq("date", "string", "string", "double", "double"))
+    assert(types(timestamps) == Seq("timestamp", "string", "string", "integer", "integer"))
+    for (path <- Seq(dates, timestamps)) {
+      val want = Pipeline.transformSales(inferring(path))
+      val got = Pipeline.transformSales(graft.sources.Sources.csv(spark, path))
+      assert(got.schema == want.schema, path)
+      assert(got.collect().toSet == want.collect().toSet, path)
+    }
+    // P004's units are infinite, P006's amount NaN: both rows are dropped
+    assert(Pipeline.transformSales(graft.sources.Sources.csv(spark, dates))
+      .select("units_sold").collect().map(_.getLong(0)).sorted.toSeq == Seq(3L, 7L, 12L, 1000L))
+  }
+
+  test("per-row numeric coercion: 12.0 and 1e3 are 12 and 1000 whatever the column holds") {
+    val rows = """dt,store,product,units,amount
+                 |2024-01-05,S01,P001,12.0,1.00
+                 |2024-01-06,S01,P002,1e3,2.00
+                 |2024-01-07,S02,P003,5,3.00
+                 |""".stripMargin
+    // type inference reads the first file's units as doubles, the second's
+    // (one unparsable value) as strings
+    def file(name: String, units: String) =
+      write(s"target/fixtures/$name.csv", rows + s"2024-01-08,S02,P004,$units,4.00\n")
+    val (numeric, mixed) = (file("units_numeric", "7"), file("units_mixed", "abc"))
+    for ((path, kept) <- Seq(numeric -> 4, mixed -> 3)) {
+      val units = Pipeline.transformSales(graft.sources.Sources.csv(spark, path))
+        .select("product_id", "units_sold").collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(units.size == kept, path)
+      assert(units("P001") == 12 && units("P002") == 1000 && units("P003") == 5, path)
+    }
+  }
+
+  test("job budget: Pipeline.run on the planted fixture runs at most 18 Spark jobs") {
+    val jobs = TestSparkSession.jobsDuring {
+      Pipeline.run(spark, salesCsv, productsJson, database = "test_jobs", failOnCritical = false)
+      ()
+    }
+    assert(jobs <= 18, s"$jobs jobs")
+  }
+
   test("E2E: validation flags exactly the planted defects") {
     val e = intercept[ValidationFailure] {
       Pipeline.run(spark, salesCsv, productsJson, database = "test_e2e")
@@ -217,6 +280,24 @@ class PipelineSpec extends AnyFunSuite {
     // the hazard the reader avoids: the written frame's own plan never
     // executed, so its observedMetrics hold the initial row, a silent 0
     assert(obs.queryExecution.observedMetrics.get(o.name).map(_.getLong(0)) == Some(0L))
+  }
+
+  test("written-frame count: a lagging listener bus delays the observation, no recount") {
+    spark.sql("CREATE DATABASE IF NOT EXISTS test_observed")
+    val sc = spark.sparkContext
+    // holds up the shared listener queue, which also completes observations
+    val lagging = new SparkListener {
+      override def onJobEnd(je: SparkListenerJobEnd): Unit = Thread.sleep(1500)
+    }
+    val err = new java.io.ByteArrayOutputStream()
+    val stderr = System.err
+    sc.addSparkListener(lagging)
+    System.setErr(new java.io.PrintStream(err, true))
+    val n =
+      try Pipeline.loadCounted(spark.range(0, 7, 1, 3).toDF("id"), "test_observed.lagging")
+      finally { System.setErr(stderr); sc.removeSparkListener(lagging) }
+    assert(n == 7)
+    assert(!err.toString.contains("[graft] WARN"), err.toString)
   }
 
   test("O3: retry combinator retries then succeeds") {

@@ -45,14 +45,15 @@ class ChecksSpec extends AnyFunSuite {
     assert(row.getAs[Long]("max_units") == 9L)
   }
 
-  // the suite's rules over one query's result frame
+  // the suite's rules over the rows of one query's result frame
   import ValidationSuite.{evaluate, DuplicateKeys, NullCounts, Ranges, RowCount, Sales}
 
   test("B1-B5: threshold checks pass/fail at the right boundaries") {
     // [not_empty, row_count] for a row count of `n`
-    def counted(n: Long, expected: Long) = evaluate(RowCount(Sales), Seq(n).toDF(), "t", expected)
-    def range(min: Double, strict: Boolean) =
-      evaluate(Ranges(Sales, Seq("c" -> "c"), strict), Seq((min, min)).toDF(), "t", 0).head
+    def counted(n: Long, expected: Long) =
+      evaluate(RowCount(Sales), Seq(n).toDF().collect().toSeq, "t", expected)
+    def range(min: Double, strict: Boolean) = evaluate(Ranges(Sales, Seq("c" -> "c"), strict),
+      Seq((min, min)).toDF().collect().toSeq, "t", 0).head
     assert(counted(1, 1).head.passed)
     assert(!counted(0, 0).head.passed)
     assert(counted(5, 5)(1).passed)
@@ -65,10 +66,10 @@ class ChecksSpec extends AnyFunSuite {
 
   test("B6/B7: null-count and duplicate checks") {
     val nulls = Checks.nullCounts(Seq(("a", 1)).toDF("s", "v"), Seq("s", "v"))
-    assert(evaluate(NullCounts(Sales, Seq("s" -> "s", "v" -> "v")), nulls, "t", 0)
-      .forall(_.passed))
+    assert(evaluate(NullCounts(Sales, Seq("s" -> "s", "v" -> "v")), nulls.collect().toSeq,
+      "t", 0).forall(_.passed))
     val dupes = Checks.duplicateKeys(Seq("k", "k").toDF("id"), Seq("id"))
-    val Seq(res) = evaluate(DuplicateKeys(Sales, Seq("id")), dupes, "t", 0)
+    val Seq(res) = evaluate(DuplicateKeys(Sales, Seq("id")), dupes.collect().toSeq, "t", 0)
     assert(!res.passed && res.detail.contains("k"))
   }
 

@@ -111,6 +111,37 @@ class SqlChecksSpec extends AnyFunSuite {
     Pipeline.run(spark, sales, products, database = "test_sqlchecks_conc")
   }
 
+  test("plan probe: the DataFrame form scans each loaded table once for its aggregate queries") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    assert(loaded.forall(_.passed))
+    val (sales, products) = ("test_sqlchecks_conc.store_sales", "test_sqlchecks_conc.products")
+    // per execution: the tables it scans, and whether it is one global
+    // aggregate over one table (a row count, null count or range query)
+    def probe(f: => Seq[CheckResult]) = TestSparkSession.executionsDuring {
+      assert(f.forall(_.passed)): Unit
+    }.map { qe =>
+      val p = qe.optimizedPlan
+      val tables = p.collect { case r: LogicalRelation => r.catalogTable.map(_.identifier.table) }
+        .flatten.sorted
+      val aggregate =
+        p.exists { case a: Aggregate => a.groupingExpressions.isEmpty; case _ => false }
+      val join = p.exists(_.isInstanceOf[Join])
+      (tables, aggregate && !join)
+    }
+    val frames = probe(Pipeline.validate(spark.table(sales), spark.table(products), 2, 2))
+    assert(frames.collect { case (t, true) => t.mkString(",") }.sorted ==
+      Seq("products", "store_sales"), frames)
+    // the duplicate-key queries and the orphan join keep their own plans
+    assert(frames.size == 5, frames)
+    assert(frames.flatMap(_._1).count(_ == "store_sales") == 3, frames)
+    assert(frames.flatMap(_._1).count(_ == "products") == 3, frames)
+    // the SQL form keeps the reference's nine queries
+    val sql = probe(SqlChecks.runAll(spark, sales, products, expectedSales = 2,
+      expectedProducts = 2))
+    assert(sql.size == 9 && sql.count(_._2) == 6, sql)
+  }
+
   test("concurrent suite: every job carries the caller's job group, none outlives runAll") {
     assert(loaded.forall(_.passed))
     val sc = spark.sparkContext
