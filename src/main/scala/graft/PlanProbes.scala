@@ -50,7 +50,7 @@ object PlanProbes {
       dump("pipeline_documents_plain", p.documents)
     }
 
-    // The DSIR selection tail frame (what dsirBare materializes):
+    // The DSIR selection tail frame (what prepare's dsir rung materializes):
     // round-17 claim — the k-row top-k selection's spread now derives
     // its partition count from k (Exchange hashpartitioning(doc_id, 5)
     // for k=150 at 32 rows/task) instead of fanning to the session

@@ -2170,7 +2170,7 @@ object SparkEntry {
   /** Shared tail of the q_corpus_pipeline* bodies: ONE row of per-stage
     * kept counts + document/chunk stats. The two aggregate `head()`s are
     * the only actions — and they ARE the pipeline's materializing passes,
-    * so every stage observation ([[graft.pipeline.CorpusPipeline
+    * so every stage tally ([[graft.pipeline.CorpusPipeline
     * .Prepared.observations]]) collects its count as a side effect;
     * stage accounting costs ZERO extra scans (it used to re-execute the
     * gate/dedup chain once per stage aggregate). The collected scalars
@@ -2212,12 +2212,7 @@ object SparkEntry {
     // order is preserved, so the emitted row is byte-identical.
     val combined = packedStats
       .foldLeft(docStats.crossJoin(chunkStats))(_ crossJoin _)
-    val row = combined.head() // fires every remaining stage observation
-    // `head()` on a cross-join of GLOBAL aggregates consumes every input
-    // row, so the plan's observation accumulators are complete — record
-    // them for observedCounts' synchronous ledger read (no listener
-    // await; see graft.operators.ObservedLedger).
-    graft.operators.ObservedLedger.record(combined)
+    val row = combined.head() // runs every remaining stage tally
     val litCols = combined.schema.fields.zipWithIndex.map { case (f, i) =>
       (if (row.isNullAt(i)) lit(null) else lit(row.get(i)))
         .cast(f.dataType).as(f.name)

@@ -15,8 +15,10 @@ object GraftFunctions {
     * registration replaced (a temporary function or UDF of the same
     * name). Operators call this per plan they build; a function graft
     * already registered is left as it is, so a repeated call replaces
-    * nothing (replacing one makes Spark log a warning per function). */
+    * nothing (replacing one makes Spark log a warning per function).
+    * Also installs the planner strategy of [[Tally]], once. */
   def register(spark: SparkSession): Unit = {
+    Tally.Strategy.install(spark)
     val registry = spark.sessionState.functionRegistry
     builders.foreach { case (name, builder) =>
       if (!registry.lookupFunctionBuilder(FunctionIdentifier(name)).exists(_ eq builder))

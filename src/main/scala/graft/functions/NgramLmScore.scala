@@ -87,9 +87,6 @@ final class NgramLmScorer(uniKeys: Array[String], uniVals: Array[Long],
     }
     sum
   }
-
-  private[graft] def tableSizes: (Int, Int, Int) =
-    (uniKeys.length, biKeys.length, triKeys.length)
 }
 
 /** `ngram_lm_score(array<string>) -> long` under a literal trigram LM —

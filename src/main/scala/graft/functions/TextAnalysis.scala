@@ -58,10 +58,6 @@ object TextAnalysis {
     * generator read `TextAnalysis.stopwords`. */
   private[graft] val stopwords: Map[String, Seq[String]] = LangProfiles.stopwords
 
-  /** CJK-character ratio of the raw text (Chinese detection — CJK text
-    * doesn't whitespace-tokenize, so stopword voting can't see it). */
-  def cjkRatio(c: Column): Column = scriptRatio(c, "\\p{IsHan}")
-
   /** Tracked-script codepoint ratio (script-rule family). */
   private def scriptRatio(c: Column, javaClass: String): Column =
     coalesce(regexp_count(c, lit(s"[$javaClass]")), lit(0)).cast("double") /

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{GraftFunctions, TextAnalysis, Tok}
+import graft.functions.{GraftFunctions, Tally, TextAnalysis, Tok}
 
 /** Deduplication operators for large-scale training-data pipelines
   * (north-star mandate; extends the reference's exact `drop_duplicates`,
@@ -144,16 +144,9 @@ object Dedup {
     * Every operator that re-reads a subtree goes through HERE so the
     * policy can't drift per call site (round-2 had unconditional
     * localCheckpoints in two dedup hot paths). */
-  private[graft] def materialize(df: DataFrame): DataFrame = {
-    val m =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
-    // The checkpoint action fully executed `df`'s plan — its observed-
-    // metric accumulators are final. Record them so readers never need
-    // the async listener bus (see ObservedLedger's scaladoc).
-    ObservedLedger.record(df)
-    m
-  }
+  private[graft] def materialize(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
+    else df.localCheckpoint()
 
   /** `c`, computed ONCE per row for every filter or projection that
     * reads the column it defines: `graft_once(c)`, an identity the
@@ -162,68 +155,15 @@ object Dedup {
   private[graft] def evaluateOnce(c: Column): Column =
     call_function("graft_once", c)
 
-  /** Read a single long metric off an observation whose plan an action
-    * has ALREADY executed — synchronously, from the executed plan's own
-    * accumulators (`queryExecution.observedMetrics`), NEVER by awaiting
-    * the async listener bus: under a backlogged bus the former bounded
-    * `Await.result(o.future, 10 s)` here stalled the driver for seconds
-    * per site and then SILENTLY recomputed — the round-16 driver bench
-    * paid q_corpus_pipeline_fuzzy ×2.73 / _dsir ×1.58 with exactly that
-    * signature while the same code ran clean quiet and at 8 cores.
-    * `observed` must be the observe-wrapped frame the action ran on
-    * (the checkpoint in [[materialize]] executes that exact plan).
-    * CONTRACT: call only AFTER that action — a never-executed plan's
-    * accumulators read as their INITIAL row (count 0), not as absent,
-    * so an early read would silently return 0 instead of falling back.
-    * Every call site here reads immediately after its materialize.
-    * A direct `queryExecution.observedMetrics` read is valid only for a
-    * frame whose own plan executed; on a frame that was WRITTEN (the
-    * write runs its own `QueryExecution`) it reads `[0]`, so a written
-    * frame's count comes from its observation instead
-    * (`Pipeline.writtenRows`).
-    * AQE may still replace an empty subtree with an empty relation and
-    * elide the CollectMetrics node; that — and only that — takes the
-    * caller's fallback, now LOUDLY (round-16 verdict: every degraded
-    * path here prints a diagnostic; this one sat on every CC round and
-    * every counted materialize and printed nothing). Shared by every
-    * "fold a count into the checkpoint pass" site so the read/elision
-    * policy can't drift per caller. */
-  private[operators] def observedLong(observed: DataFrame,
-      o: org.apache.spark.sql.Observation, field: String)
-      (fallback: => Long): Long = {
-    val direct =
-      try observed.queryExecution.observedMetrics.get(o.name)
-      catch { case scala.util.control.NonFatal(_) => None }
-    direct
-      .orElse(o.future.value.flatMap(_.toOption)) // listener already ran
-      .flatMap { row =>
-        if (row.schema == null) None
-        else row.schema.fieldNames.indexOf(field) match {
-          case -1 => None
-          case ix => Some(row.getLong(ix))
-        }
-      }
-      .getOrElse {
-        System.err.println(
-          s"[graft] WARN observed metric '$field' (observation ${o.name}) " +
-            "absent from the executed plan (AQE empty-relation elision, or " +
-            "the observed frame was never materialized) - recomputing with " +
-            "an extra pass")
-        fallback
-      }
-  }
-
-  /** [[materialize]] + row count in ONE driver action: the count rides
-    * the checkpoint pass as an observation instead of a separate count
-    * job (a full extra pass over the checkpointed frame at any scale),
-    * and is read straight off the executed plan's accumulators.
+  /** [[materialize]] + row count in ONE driver action: the count is a
+    * [[Tally]] the checkpoint pass runs, instead of a separate count job
+    * (a full extra pass over the checkpointed frame at any scale).
     * Used by every detect path that materializes a frame and immediately
     * needs its cardinality (AUTO/tuned banding, guard pricing). */
   private[graft] def materializeCounted(df: DataFrame): (DataFrame, Long) = {
-    val o = org.apache.spark.sql.Observation()
-    val obs = df.observe(o, count(lit(1)).as("n_rows"))
-    val m = materialize(obs)
-    (m, observedLong(obs, o, "n_rows")(m.count()))
+    val (tallied, h) = Tally.of(df, "n_rows" -> lit(1L))
+    val m = materialize(tallied)
+    (m, h.valueOr("n_rows")(m.count()))
   }
 
   /** EXACT n-gram Jaccard pairs above a threshold, via prefix-filtering
@@ -2344,14 +2284,13 @@ object Dedup {
     //   label₂(v) = min(label₁(v), min_{u∈N(v)} label₁(u)),
     //   changed₂ ≡ label₂ < label₁;
     // the round-1 aggregate subtree is shared inside the plan (same
-    // exchange, reused). Convergence reads off the same observation:
+    // exchange, reused). Convergence reads off the same tally:
     // zero nodes (empty edge list — round 1 changes nothing) or
     // changed₂ = 0 (labels₁ were a fixed point). maxIter semantics are
     // unchanged — the fused plan IS rounds 1+2, so it only runs when
     // maxIter admits two rounds; the degenerate maxIter = 1 keeps the
     // single-round plan (converges only on an empty edge list, as
     // before).
-    val o1 = org.apache.spark.sql.Observation()
     var labels: DataFrame = null
     var converged = false
     var i = 0
@@ -2362,48 +2301,43 @@ object Dedup {
       val nm2 = edges.as("e")
         .join(l1Plan.as("l"), col("e.src") === col("l.id"))
         .groupBy(col("e.dst").as("nid")).agg(min(col("l.label")).as("nlabel"))
-      val l2 = l1Plan.as("x")
+      val (l2, t2) = Tally.of(l1Plan.as("x")
         .join(nm2, col("x.id") === col("nid"), "left")
         .select(col("x.id").as("id"),
           least(col("x.label"), coalesce(col("nlabel"), col("x.label"))).as("label"),
           (coalesce(col("nlabel"), col("x.label")) < col("x.label"))
-            .cast("long").as("_changed"))
-        .observe(o1, count(lit(1)).as("n_nodes"),
-          coalesce(sum(col("_changed")), lit(0L)).as("n_changed"))
+            .cast("long").as("_changed")),
+        "n_nodes" -> lit(1L), "n_changed" -> col("_changed"))
       val m = materialize(l2)
       labels = m.drop("_changed")
-      val nNodes =
-        observedLong(l2, o1, "n_nodes")(if (m.isEmpty) 0L else 1L)
-      converged = nNodes == 0L ||
-        observedLong(l2, o1, "n_changed")(m
+      converged = t2.valueOr("n_nodes")(if (m.isEmpty) 0L else 1L) == 0L ||
+        t2.valueOr("n_changed")(m
           .agg(coalesce(sum(col("_changed")), lit(0L))).first().getLong(0)) == 0L
       i = 2 // the fused materialize IS rounds 1 and 2
     } else {
-      val l1 = l1Plan.observe(o1, count(lit(1)).as("n_nodes"))
+      val (l1, t1) = Tally.of(l1Plan, "n_nodes" -> lit(1L))
       labels = materialize(l1)
-      converged =
-        observedLong(l1, o1, "n_nodes")(if (labels.isEmpty) 0L else 1L) == 0L
+      converged = t1.valueOr("n_nodes")(if (labels.isEmpty) 0L else 1L) == 0L
       i = 1
     }
     while (!converged && i < maxIter) {
       val neighborMin = edges.join(labels, edges("src") === labels("id"))
         .groupBy(col("dst").as("nid")).agg(min(col("label")).as("nlabel"))
       // labels only ever decrease, so "changed" ≡ neighbor min < own label.
-      // The changed-count rides the checkpoint pass as an OBSERVATION
-      // instead of a second aggregate action over the materialized frame
-      // — one driver action per CC round, not two (the aggregate was a
-      // full extra pass over the labels at any scale).
-      val o = org.apache.spark.sql.Observation()
-      val roundObs = labels
+      // The changed-count is a TALLY the checkpoint pass runs instead of a
+      // second aggregate action over the materialized frame — one driver
+      // action per CC round, not two (the aggregate was a full extra pass
+      // over the labels at any scale).
+      val (round, t) = Tally.of(labels
         .join(neighborMin, labels("id") === neighborMin("nid"), "left")
         .select(col("id"),
           least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"),
           (coalesce(col("nlabel"), col("label")) < col("label"))
-            .cast("long").as("_changed"))
-        .observe(o, coalesce(sum(col("_changed")), lit(0L)).as("n_changed"))
-      val updated = materialize(roundObs)
+            .cast("long").as("_changed")),
+        "n_changed" -> col("_changed"))
+      val updated = materialize(round)
       labels = updated.drop("_changed")
-      val changed = observedLong(roundObs, o, "n_changed")(updated
+      val changed = t.valueOr("n_changed")(updated
         .agg(coalesce(sum(col("_changed")), lit(0L))).first().getLong(0))
       converged = changed == 0
       i += 1
@@ -2767,14 +2701,12 @@ object Dedup {
               s"the head at width >= $PrefilterHashes")
         }
     }
-    // The guard's delta metrics (row count + total shingle count) ride
-    // the shingle checkpoint as an observation — the pricing pass below
-    // then costs ZERO extra driver actions on the delta (round 16).
-    val oIn = org.apache.spark.sql.Observation()
-    val shInObs = shingleIndex(incoming, textCol, idCol, n, tok)
-      .observe(oIn, count(lit(1)).as("n_rows"),
-        coalesce(sum(size(col("sh"))), lit(0L)).as("n_sh"))
-    val shIn = materialize(shInObs)
+    // The guard's delta metrics (row count + total shingle count) are a
+    // tally the shingle checkpoint runs — the pricing pass below then
+    // costs ZERO extra driver actions on the delta (round 16).
+    val (shInTallied, tIn) = Tally.of(shingleIndex(incoming, textCol, idCol, n, tok),
+      "n_rows" -> lit(1L), "n_sh" -> size(col("sh")))
+    val shIn = materialize(shInTallied)
     incrementalSurvivors("removeNearDuplicatesIncremental", incoming, idCol,
         shIn, shEx, checkDisjointIds, maxIter) {
       // materialized once: the bands feed BOTH join sides, and the
@@ -2791,11 +2723,11 @@ object Dedup {
       // tracked across streaming batches) spares the corpus count.
       val (kSub, probeEst, probeUsable) = forceProbeGroups.map((_, 0.0, 0L))
         .getOrElse {
-          val nIn = observedLong(shInObs, oIn, "n_rows")(shIn.count())
+          val nIn = tIn.valueOr("n_rows")(shIn.count())
           probePlan("incremental near-dup probe", nIn,
             knownCorpusRows.getOrElse(shEx.count()),
             newBands, allBands, Seq("band", "band_key"),
-            payloadBytes = 2.0 * 8.0 * observedLong(shInObs, oIn, "n_sh")(
+            payloadBytes = 2.0 * 8.0 * tIn.valueOr("n_sh")(
               shIn.agg(coalesce(sum(size(col("sh"))), lit(0L))).first().getLong(0)) /
               math.max(nIn, 1L),
             remedies = "probe in smaller batches, raise the threshold, or " +
@@ -2815,8 +2747,8 @@ object Dedup {
           prior)
         val kept = exSigHead match {
           case Some(exHd) =>
-            // The self-gate's candidate count rides the materialize as an
-            // observation — one driver action, not a checkpoint + a count.
+            // The self-gate's candidate count is a tally the materialize
+            // runs — one driver action, not a checkpoint + a count.
             val (cand, nCand) = materializeCounted(candidates)
             if (nCand >= prefilterMinCandidates) {
               val allHd = minHashSignatureHead(shIn, PrefilterHashes)
@@ -2971,29 +2903,17 @@ object Dedup {
   }
 
   /** Drop every corpus document that shares an n-gram with the benchmark
-    * ([[contaminationHits]], through [[flagContaminated]]). */
+    * ([[contaminationHits]]). */
   def removeContaminated(corpus: DataFrame, benchmark: DataFrame,
       textCol: String, idCol: String, n: Int = 3, tok: Tok = Tok.Latin): DataFrame =
-    dropFlagged(flagContaminated(corpus,
-      contaminationHits(corpus, benchmark, textCol, idCol, n, tok), idCol))
+    withoutHits(corpus,
+      contaminationHits(corpus, benchmark, textCol, idCol, n, tok), idCol)
 
-  /** The column [[flagContaminated]] adds. */
-  private[graft] val contaminatedFlag = "_contaminated"
-
-  /** `corpus` with a boolean [[contaminatedFlag]]: true on each document `hits`
-    * names, null on the rest. `hits` is [[contaminationHits]] or
-    * [[contaminationHitsBloom]] over `corpus` (one row per `corpus_id`),
-    * so the result keeps one row per corpus row, in the column order of
-    * a left-anti join plus the flag: a count of every row still counts
-    * the corpus, and [[dropFlagged]] then leaves the clean documents. */
-  def flagContaminated(corpus: DataFrame, hits: DataFrame, idCol: String): DataFrame =
-    corpus.join(
-      hits.select(col("corpus_id").as(idCol), lit(true).as(contaminatedFlag)),
-      Seq(idCol), "left")
-
-  /** The rows [[flagContaminated]] did not flag, without the flag. */
-  def dropFlagged(df: DataFrame): DataFrame =
-    df.where(col(contaminatedFlag).isNull).drop(contaminatedFlag)
+  /** `corpus` without the documents `hits` names: a left-anti join on the
+    * hit ids (`hits` is [[contaminationHits]] or [[contaminationHitsBloom]]
+    * over `corpus`). */
+  private def withoutHits(corpus: DataFrame, hits: DataFrame, idCol: String): DataFrame =
+    corpus.join(hits.select(col("corpus_id").as(idCol)), Seq(idCol), "left_anti")
 
   /** [[contaminationHits]] with a BLOOM prefilter on the corpus side —
     * identical results (the exact confirm join removes bloom false
@@ -3054,9 +2974,8 @@ object Dedup {
   def removeContaminatedBloom(corpus: DataFrame, benchmark: DataFrame,
       textCol: String, idCol: String, n: Int = 3,
       fpp: Double = 0.001, tok: Tok = Tok.Latin): DataFrame =
-    dropFlagged(flagContaminated(corpus,
-      contaminationHitsBloom(corpus, benchmark, textCol, idCol, n, fpp, tok),
-      idCol))
+    withoutHits(corpus,
+      contaminationHitsBloom(corpus, benchmark, textCol, idCol, n, fpp, tok), idCol)
 
   // ─── MEDIA decontamination (perceptual benchmark probe) ───────────────
 
@@ -3170,8 +3089,8 @@ object Dedup {
     // reads the checkpoint, and the a/b block sides + the per-list size
     // broadcast reuse it instead of re-running the codegen'd assignment
     // scan per consumer.
-    // The guard's count rides the assignment checkpoint as an
-    // observation (round 17) — one driver action, not checkpoint+count.
+    // The guard's count is a tally the assignment checkpoint runs
+    // (round 17) — one driver action, not checkpoint+count.
     val (assigned, nAssigned) = materializeCounted(assigned0)
     val dim = centroids.headOption.map(_._2.length).getOrElse(0)
     val (k, _, _) = bandPlan("semanticDupPairs", assigned, Seq("list"),

@@ -2,10 +2,10 @@ package graft.pipeline
 
 import scala.collection.mutable.ListBuffer
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{GraftFunctions, TextAnalysis, Tok}
+import graft.functions.{GraftFunctions, Tally, TallyHandle, TextAnalysis, Tok}
 import graft.operators.{Chunking, Dedup, Dsir, LineDedup, Packing, Sampling, SpanDedup}
 
 /** End-to-end pre-training corpus preparation — the canonical chain every
@@ -63,7 +63,7 @@ import graft.operators.{Chunking, Dedup, Dsir, LineDedup, Packing, Sampling, Spa
   *       selection, the pre-mix survivors).
   *  - each text rewrite runs once per row: the filters over stripped
   *    text read it through [[Dedup.evaluateOnce]] (the C4 line clean
-  *    through its stage observation), so the optimizer cannot copy the
+  *    through its stage tally), so the optimizer cannot copy the
   *    rewrite into every predicate.
   */
 object CorpusPipeline {
@@ -269,43 +269,30 @@ object CorpusPipeline {
     * iff enabled) for ad-hoc inspection — but do NOT count them to build
     * a stage report: each count re-executes that stage's upstream chain.
     *
-    * `observations` carries one [[Observation]] per stage (same names,
-    * same order): each stage's count is a `CollectMetrics` accumulator
-    * attached IN the main chain, so the per-stage kept counts every
-    * production corpus run reports are collected as a side effect of
-    * the checkpoints inside [[prepare]] and whatever action first
-    * materializes `documents` / `chunks` — zero extra scans at any
-    * scale. A count node between two codegen'd operators would split a
-    * fused stage, so on the rungs of the plain and crawl configs each
-    * count sits in one executed plan where it splits none: a
-    * checkpointed stage at the root of its checkpoint, a lazy stage at a
-    * plan root (the documents root for the near-dup and decontamination
-    * counts when no checkpoint follows them), directly under an
-    * exchange, or on a frame that keeps one row per row of the stage. A
-    * rung that reads its input more than once (semantic and media dedup,
-    * line dedup under span dedup, the near-dup detector) repeats the
-    * count node of the stage it reads; the copies agree. Read them via
+    * `observations` carries one row tally per stage (same names, same
+    * order). Each count sits at its stage, inside the main chain, so the
+    * per-stage kept counts are collected by the checkpoints inside
+    * [[prepare]] and whatever action first materializes `documents` /
+    * `chunks`: zero extra scans at any scale. Read them via
     * [[observedCounts]]. */
   final case class Prepared(documents: DataFrame, chunks: DataFrame,
       stages: Seq[(String, DataFrame)] = Nil,
-      observations: Seq[(String, Observation)] = Nil,
+      observations: Seq[(String, TallyHandle)] = Nil,
       packed: Option[DataFrame] = None) {
 
-    /** Per-stage kept counts, in pipeline order, collected by the
-      * observation accumulators. Contract: call AFTER at least one
-      * action over `documents` (or `chunks`) — the counts ride that
-      * single materializing pass (the upstream rungs' own eager
-      * materializations inside [[prepare]] already fire most
-      * observations, but the tail stages' only fire with the caller's
+    /** Per-stage kept counts, in pipeline order, read off the stage
+      * tallies. Contract: call AFTER at least one action over `documents`
+      * (or `chunks`): the counts ride that single materializing pass (the
+      * upstream rungs' own materializations inside [[prepare]] already
+      * run most tallies, but the tail stages' only run with the caller's
       * action); calling before any such action throws a descriptive
-      * IllegalStateException instead of blocking. With
-      * `Config.materializeDocuments` on, the documents checkpoint
-      * executes the whole chain inside [[prepare]], so every count is
-      * available the moment prepare returns.
+      * IllegalStateException. With `Config.materializeDocuments` on, the
+      * documents checkpoint executes the whole chain inside [[prepare]],
+      * so every count is available the moment prepare returns.
       *
-      * A count can legitimately be ABSENT from a fired observation: AQE
-      * may replace the stage's whole runtime subtree with an empty
-      * relation, so the CollectMetrics node never executes — which only
+      * A tally can legitimately be ABSENT from an executed plan: AQE may
+      * replace the stage's whole runtime subtree with an empty relation,
+      * so its exec never runs while a later stage's does — which only
       * happens when zero rows flowed (observed on a fully-gated empty
       * corpus; EdgeCasesSpec pins it). An absent count is therefore
       * coerced to 0 ONLY when the chain proves it exact (the previous
@@ -313,58 +300,17 @@ object CorpusPipeline {
       * for the input row, no stage anywhere reports a survivor);
       * otherwise the count is recomputed from the matching `stages`
       * frame (bounded, loud-in-cost — never a silent wrong 0), and an
-      * UNFIRED observation below a live stage fails fast. */
+      * UNRUN tally below a live stage fails fast. */
     def observedCounts: Seq[(String, Long)] = {
-      import scala.concurrent.Await
-      import scala.concurrent.duration._
-      // Counts are read WITHOUT waiting on the async listener bus: every
-      // observation here executes inside a materializing action — the
-      // in-prepare checkpoints and the caller's stats action all record
-      // their executed plans' accumulator rows in [[graft.operators
-      // .ObservedLedger]] — so the ledger (or an already-completed
-      // future) answers synchronously. The former bounded
-      // `Await.result(future, 10 s)` stalled the driver for seconds per
-      // stage whenever the bus lagged (round-16 driver window:
-      // q_corpus_pipeline_fuzzy ×2.73 with exactly that signature). A
-      // SHORT logged await survives only as the last resort for an
-      // action outside the ledger's reach; a genuinely-unfired stage
-      // still fails with the descriptive error below instead of
-      // hanging the driver.
-      val rowCache =
-        scala.collection.mutable.Map.empty[Int, Option[org.apache.spark.sql.Row]]
-      def rowOf(i: Int): Option[org.apache.spark.sql.Row] =
-        rowCache.getOrElseUpdate(i, {
-          val o = observations(i)._2
-          o.future.value.flatMap(_.toOption)
-            .orElse(graft.operators.ObservedLedger.lookup(o.name))
-            .orElse {
-              val t0 = System.nanoTime()
-              val r = scala.util.Try(Await.result(o.future, 2.seconds)).toOption
-              System.err.println(
-                f"[graft] WARN stage '${observations(i)._1}%s' count in no " +
-                  f"executed plan; awaited the listener bus " +
-                  f"${(System.nanoTime() - t0) / 1e9}%.2f s -> " +
-                  (if (r.isDefined) "delivered" else "timed out"))
-              r
-            }
-        })
-      // `None` = the promise never completed: no action has executed a
-      // plan containing this stage's accumulator yet.
-      // `Some(row)` without the field = the query ran but the node was
-      // elided (AQE empty-relation, or a reused exchange dropping a
-      // duplicate) — fired, but silent.
-      def valueOf(row: org.apache.spark.sql.Row): Option[Long] =
-        if (row.schema == null) None
-        else row.schema.fieldNames.indexOf("n_kept") match {
-          case -1 => None
-          case i  => Some(row.getLong(i))
-        }
-      lazy val anySurvivor = observations.indices
-        .exists(i => rowOf(i).exists(r => valueOf(r).exists(_ > 0L)))
+      // a stage tally that did not run below one that did was in an
+      // executed plan, which dropped it
+      val lastRan = observations.lastIndexWhere(_._2.ran)
+      lazy val anySurvivor = observations.exists { case (n, h) => h.ran && h(n) > 0L }
       var prev: Option[Long] = None
-      observations.zipWithIndex.map { case ((name, _), i) =>
-        val c = rowOf(i) match {
-          case Some(row) => valueOf(row).getOrElse {
+      observations.zipWithIndex.map { case ((name, h), i) =>
+        val c =
+          if (h.ran) h(name)
+          else if (i < lastRan) {
             if (prev.contains(0L) || (prev.isEmpty && !anySurvivor)) 0L
             else stages.collectFirst { case (`name`, df) =>
               System.err.println(
@@ -378,15 +324,11 @@ object CorpusPipeline {
                 s"stage '$name': observed count was dropped from the plan and " +
                   "no stage frame exists to recompute it"))
           }
-          case None =>
-            if (prev.contains(0L)) 0L // monotone chain: upstream kept 0
-            else throw new IllegalStateException(
-              s"stage '$name' has no observed count: either no action has " +
-                "executed it yet (run an action over documents or chunks, " +
-                "or set Config.materializeDocuments to collect every count " +
-                "inside prepare), or the driver's metrics listener is still " +
-                "delivering a just-finished query - retry shortly")
-        }
+          else if (prev.contains(0L)) 0L // monotone chain: upstream kept 0
+          else throw new IllegalStateException(
+            s"stage '$name' has no observed count: no action has executed it " +
+              "yet (run an action over documents or chunks, or set " +
+              "Config.materializeDocuments to collect every count inside prepare)")
         prev = Some(c)
         name -> c
       }
@@ -431,83 +373,27 @@ object CorpusPipeline {
     GraftFunctions.register(corpus.sparkSession)
     val text = col(cfg.textCol)
 
-    // Stage accounting rides the main chain as CollectMetrics count
-    // accumulators (Dataset.observe), collected by whatever action first
-    // executes each node — no re-execution, ever. A CollectMetrics node is
-    // not codegen'd: between two codegen'd operators it splits one fused
-    // stage in two, and every codegen stage costs generated classes
-    // (compiled once for the driver and once for the tasks). So each
-    // count sits where it splits no stage, in one executed plan:
-    //  - a materialized stage is counted BELOW its checkpoint, at the
-    //    root of the checkpoint action ([[materializedStage]]);
-    //  - a lazy stage is counted at a plan root, directly under an
-    //    exchange, or on a frame that keeps one row per row of the stage:
-    //    exact dedup at the line/span rewrite's checkpoint, and the
-    //    near-dup and decontamination counts wait (`pending`) for the
-    //    next checkpoint or the documents root (redaction and the split
-    //    keep every row; decontamination flags rather than drops).
-    // That holds for the rungs the plain and crawl configs run. A rung
-    // that reads its input more than once (semantic, media dedup, line
-    // dedup under span dedup, the near-dup detector) reads a counted
-    // input, so those plans repeat the count node.
-    // Notes: (a) a count accumulator references no columns, so column
-    // pruning still reaches the scan; (b) predicate pushdown does not
-    // cross a CollectMetrics node — which is the SEMANTICS of an input
-    // count (the gate must not pre-shrink the input tally); (c) a count
-    // node that an operator reads more than once (a self-join, or the
-    // rungs above) is duplicated — Spark allows exact (sameResult)
-    // duplicates and the accumulators agree by construction.
-    // Every counted stage is a reported stage: the buffer, in chain
-    // order, is both `Prepared.stages` and `Prepared.observations`.
-    val stageObs = ListBuffer.empty[(String, DataFrame, Observation)]
-    // `df` with `o` counting its rows (`df` must hold one row per row of
-    // the stage `o` counts)
-    def counted(df: DataFrame, o: Observation): DataFrame =
-      df.observe(o, count(lit(1)).as("n_kept"))
-    // registers the stage; the caller attaches its count where it splits
-    // no codegen stage
-    def stage(name: String, df: DataFrame): Observation = {
-      val o = Observation()
-      stageObs += ((name, df, o))
-      o
+    // Each stage is counted at the stage itself by a row tally named
+    // after it ([[graft.functions.Tally]], codegen'd, so it splits no
+    // stage); the buffer, in chain order, is both `Prepared.stages` and
+    // `Prepared.observations`.
+    val stageTallies = ListBuffer.empty[(String, DataFrame, TallyHandle)]
+    // `df` counted as the stage `name`; `cut` (a checkpoint) follows the count
+    def counted(name: String, df: DataFrame,
+        cut: DataFrame => DataFrame = identity): DataFrame = {
+      val (tallied, h) = Tally.of(df, name -> lit(1L))
+      val out = cut(tallied)
+      stageTallies += ((name, out, h))
+      out
     }
-    // a lazy stage counted on its own frame: for a stage whose reader
-    // reads it once, at a plan root or directly under an exchange
-    def observed(name: String, df: DataFrame): DataFrame = {
-      val o = Observation()
-      val obs = counted(df, o)
-      stageObs += ((name, obs, o))
-      obs
-    }
-    // a checkpointed stage, counted at the root of its checkpoint
-    def materializedStage(name: String, df: DataFrame): DataFrame = {
-      val o = Observation()
-      val m = Dedup.materialize(counted(df, o))
-      stageObs += ((name, m, o))
-      m
-    }
-    // Counts that wait for a read of their rows that sees each row once,
-    // each with the column that marks its stage's kept rows: the frame
-    // in between keeps one row per row of each waiting stage.
-    val pending = ListBuffer.empty[(Observation, Column)]
-    // `df` with the waiting counts attached and the documents
-    // decontamination flagged dropped; `cut` (a checkpoint) in between
-    // puts the counts at its root
-    def settled(df: DataFrame, cut: DataFrame => DataFrame = identity): DataFrame = {
-      val c = cut(pending.foldLeft(df) { case (d, (o, kept)) =>
-        d.observe(o, count(when(kept, lit(1))).as("n_kept"))
-      })
-      pending.clear()
-      if (c.columns.contains(Dedup.contaminatedFlag)) Dedup.dropFlagged(c) else c
-    }
-    // The adaptive spread sits BELOW the input observation: the input
-    // count is partitioning-blind (same rows), and the CollectMetrics
-    // node is the established pushdown barrier — placed above a bare
-    // repartition, PushDownPredicates would substitute the gate filter
-    // (strip chain inlined) straight back through the exchange into the
-    // scan stage, recreating the single-task gate the spread exists to
-    // fix (measured round 16: a 1.36 s one-task map stage with the
-    // spread above the observation; ~0.1 s 32-way below it).
+    // The adaptive spread sits BELOW the input count: the input count is
+    // partitioning-blind (same rows), and the tally is a pushdown
+    // barrier — placed above a bare repartition, PushDownPredicates would
+    // substitute the gate filter (strip chain inlined) straight back
+    // through the exchange into the scan stage, recreating the
+    // single-task gate the spread exists to fix (measured round 16: a
+    // 1.36 s one-task map stage with the spread above the count; ~0.1 s
+    // 32-way below it).
     // Applied to EVERY config (the plain gate's token/alpha/lang-vote
     // signals are the same per-byte text machinery — measured round 16:
     // the dsir variant's plain gate ran ~1.3 s single-task), but only
@@ -528,7 +414,7 @@ object CorpusPipeline {
     // same argument that made the spread safe. No spread (the 100 TB
     // scan) ⇒ heavyChain alone decides, exactly as before.
     val spreadOn = spreadCorpus ne corpus
-    val corpusO = observed("input", spreadCorpus)
+    val corpusO = counted("input", spreadCorpus)
 
     // 0a. optional URL-level dedup — the FIRST rung when `urlCol` is set
     //    (crawl corpora carry one): one document per canonical URL is a
@@ -538,7 +424,7 @@ object CorpusPipeline {
     //    shuffle ([[Dedup.exactByUrl]]); NULL urls pass through (no URL
     //    ≠ same URL).
     val urlDeduped = cfg.urlCol.fold(corpusO) { u =>
-      observed("url_dedup", Dedup.exactByUrl(corpusO, u, cfg.idCol))
+      counted("url_dedup", Dedup.exactByUrl(corpusO, u, cfg.idCol))
     }
 
     // 0. optional HTML stripping — FIRST: every downstream signal (token
@@ -574,17 +460,17 @@ object CorpusPipeline {
     //     1. the raw-page rules (no '{', no lorem ipsum) filter FIRST —
     //        cheap contains-gates that push into the parquet scan;
     //     2. the line clean rewrites the text in one projection, and the
-    //        `c4_page_gate` stage count's CollectMetrics node doubles as
-    //        the pushdown barrier: PushDownPredicates would otherwise
-    //        substitute the cleaned-text alias back into the sentence
-    //        floor below the projection (measured, round 10) and pay the
-    //        14-op clean twice — a filter cannot cross an observation
-    //        (that is the SEMANTICS of a stage count), so
+    //        `c4_page_gate` stage count's tally doubles as the pushdown
+    //        barrier: PushDownPredicates would otherwise substitute the
+    //        cleaned-text alias back into the sentence floor below the
+    //        projection (measured, round 10) and pay the 14-op clean
+    //        twice — a filter cannot cross a tally (that is the
+    //        SEMANTICS of a stage count), so
     //     3. the sentence floor above it reads the cleaned ATTRIBUTE.
     //    The extra reported stage is honest accounting: a production C4
     //    run reports page-rule drops separately from the quality gate.
     val c4Gated = if (!cfg.c4Rules) source else
-      observed("c4_page_gate",
+      counted("c4_page_gate",
         source.where(TextAnalysis.c4RawPagePass(text))
           .withColumn(cfg.textCol, TextAnalysis.c4LineClean(text)))
     val c4Source = if (!cfg.c4Rules) c4Gated
@@ -630,9 +516,7 @@ object CorpusPipeline {
     // C4/Gopher add per-document rule conjunctions) and it feeds MULTIPLE
     // downstream consumers (exactByContent reads it twice, the dedup
     // rungs and both final actions read on) — materialize it once
-    // instead of re-running the expensive scan per consumer. Stage
-    // COUNTS are no longer a consumer (they ride as observations); the
-    // multi-consumer rationale is what remains.
+    // instead of re-running the expensive scan per consumer.
     // Round 17: a FIRED spread materializes the gate too — the spread
     // put an Exchange (plus the per-byte gate work above it) into the
     // lazy chain, and every one of those same downstream consumers
@@ -640,9 +524,8 @@ object CorpusPipeline {
     // survivors replaces 2–3 spread+gate re-executions (see spreadOn).
     // The plain-config gate WITHOUT a fired spread (the at-scale shape)
     // stays a lazy narrow scan, exactly as before.
-    val filtered =
-      if (heavyChain || spreadOn) materializedStage("quality", gate)
-      else observed("quality", gate)
+    val filtered = counted("quality", gate,
+      if (heavyChain || spreadOn) Dedup.materialize else identity)
 
     // 1b. optional per-domain cap — right after the gate, BEFORE the
     //    dedup rungs: ranks read only (group, token count, id), and a
@@ -653,15 +536,14 @@ object CorpusPipeline {
     //    as a map-side-partial WindowGroupLimit (bounded k-row buffer per
     //    domain — the 100 TB shape; see Sampling.capPerGroup).
     val capped = cfg.domainCap.fold(filtered) { dc =>
-      observed("domain_cap",
+      counted("domain_cap",
         Sampling.capPerGroup(filtered, dc.groupCol, cfg.idCol, dc.k,
           nTokens(text)))
     }
 
     // 2. exact content dedup (min-id survivor per normalized text)
-    val exactBare =
-      Dedup.exactByContent(capped, cfg.textCol, cfg.idCol, cfg.tokenizer)
-    val exactObs = stage("exact_dedup", exactBare)
+    val exact = counted("exact_dedup",
+      Dedup.exactByContent(capped, cfg.textCol, cfg.idCol, cfg.tokenizer))
 
     // 2b/2c. optional line- then span-level dedup. Both REWRITE text, so
     //    each re-applies the minTokens gate (a doc scrubbed below the
@@ -669,47 +551,25 @@ object CorpusPipeline {
     //    and both run BEFORE near-dup: removing shared boilerplate
     //    changes shingle sets, and the near-dup decision must be made on
     //    the text that will actually be trained on.
-    // Each rewrite returns one row per input row (a document that loses
-    // all its text comes back empty) and reads its input three times.
     // The last rewrite is read by two actions downstream (the near-dup
     // detector's shingle checkpoint and the documents action), so it is
-    // checkpointed once with the minTokens verdict as a column: its kept
-    // count (the verdict's trues) and the count of the stage it read
-    // (every row) both sit at the checkpoint's root, and readers filter
-    // on the verdict column. Line dedup under span dedup stays lazy
-    // (span dedup's three reads of it share its exchanges) and filters
-    // at once; its count rides the span checkpoint's root, exact dedup's
-    // its own rewrite. Without a rewrite the near-dup input is the
-    // exact-dedup semi-join over the gate checkpoint and stays lazy.
-    def rewriteStage(name: String, rewritten: DataFrame, read: Observation,
-        last: Boolean): (DataFrame, Observation) = {
-      val o = Observation()
-      val kept =
-        if (!last) counted(rewritten, read).where(nTokens(text) >= cfg.minTokens)
-        else {
-          val verdict = "_min_tokens_ok"
-          Dedup.materialize(counted(
-              rewritten.withColumn(verdict, nTokens(text) >= cfg.minTokens), read)
-            .observe(o, count(when(col(verdict), lit(1))).as("n_kept")))
-            .where(col(verdict)).drop(verdict)
-        }
-      stageObs += ((name, kept, o))
-      (kept, o)
-    }
+    // checkpointed once, after its count. Line dedup under span dedup
+    // stays lazy: span dedup's three reads of it share its exchanges.
+    def rewriteStage(name: String, rewritten: DataFrame, last: Boolean): DataFrame =
+      counted(name, rewritten.where(nTokens(text) >= cfg.minTokens),
+        if (last) Dedup.materialize else identity)
     val lineDeduped = cfg.lineDedupMinDocs.map { m =>
       rewriteStage("line_dedup",
-        LineDedup.removeDuplicatedLines(exactBare, cfg.textCol, cfg.idCol, m),
-        exactObs, last = cfg.spanDedupN.isEmpty)
+        LineDedup.removeDuplicatedLines(exact, cfg.textCol, cfg.idCol, m),
+        last = cfg.spanDedupN.isEmpty)
     }
-    val (spanRead, spanReadObs) = lineDeduped.getOrElse((exactBare, exactObs))
     val spanDeduped = cfg.spanDedupN.map { n =>
       rewriteStage("span_dedup",
-        SpanDedup.removeDuplicatedSpans(spanRead, cfg.textCol, cfg.idCol, n,
-          tok = cfg.tokenizer),
-        spanReadObs, last = true)._1
+        SpanDedup.removeDuplicatedSpans(lineDeduped.getOrElse(exact), cfg.textCol,
+          cfg.idCol, n, tok = cfg.tokenizer),
+        last = true)
     }
-    val nearInput = spanDeduped.orElse(lineDeduped.map(_._1))
-      .getOrElse(counted(exactBare, exactObs))
+    val nearInput = spanDeduped.orElse(lineDeduped).getOrElse(exact)
 
     // 3. near-dup removal (MinHash+LSH detect → CC → min-id survivor).
     //    The DEFAULT detector is AUTO-selected per corpus
@@ -724,18 +584,11 @@ object CorpusPipeline {
     //    caller has already profiled). Survivors are identical across
     //    detectors (every candidate is exact-verified at the same
     //    threshold); only the cost moves.
-    val nearBare = Dedup.removeNearDuplicates(
+    val nearDeduped = counted("near_dedup", Dedup.removeNearDuplicates(
       nearInput, cfg.textCol, cfg.idCol, cfg.dedupThreshold, cfg.shingleN,
       tok = cfg.tokenizer,
       detector =
-        if (cfg.tunedNearDedup) Dedup.Detector.Tuned else Dedup.Detector.Auto)
-    pending += stage("near_dedup", nearBare) -> lit(true)
-    // a semantic or media-dedup rung reads the survivors more than once:
-    // it reads them counted
-    val nearDeduped =
-      if (Seq(cfg.semanticDedup, cfg.imageDedup, cfg.audioDedup,
-          cfg.videoDedup).exists(_.isDefined)) settled(nearBare)
-      else nearBare
+        if (cfg.tunedNearDedup) Dedup.Detector.Tuned else Dedup.Detector.Auto))
 
     // 3b. optional SEMANTIC dedup (SemDeDup) — the last dedup rung:
     //    paraphrase-level duplicates the shingle families cannot see,
@@ -747,7 +600,7 @@ object CorpusPipeline {
     //    metadata — the line/span text rewrites upstream don't touch
     //    them.
     val semDeduped = cfg.semanticDedup.fold(nearDeduped) { sc =>
-      observed("semantic_dedup",
+      counted("semantic_dedup",
         Dedup.removeSemanticDuplicates(nearDeduped, sc.embedCol, cfg.idCol,
           sc.centroids, sc.threshold, assignKeep = sc.assignKeep,
           maxClusterSize = sc.maxClusterSize, projectTo = sc.projectTo))
@@ -786,7 +639,7 @@ object CorpusPipeline {
         case _ => None
       }
     val imgDeduped = cfg.imageDedup.fold(semDeduped) { ic =>
-      observed("image_dedup",
+      counted("image_dedup",
         if (ic.use128)
           Dedup.removeNearDuplicateImages128(semDeduped, cfg.idCol,
             ic.typeCol, ic.binaryCol, ic.maxHamming,
@@ -797,15 +650,6 @@ object CorpusPipeline {
             hashes = sharedImg.map(_._1)))
     }
 
-    // 4. benchmark decontamination. DELIBERATELY a larger n than the
-    //    dedup shingles: any-single-trigram overlap would scrub nearly
-    //    every English document (common trigrams are everywhere); the
-    //    standard decontamination window is ~8–13 contiguous tokens —
-    //    long enough that sharing one is real benchmark leakage.
-    //    `bloomDecontaminate` selects the bloom-prefiltered scale path
-    //    (the corpus-side shuffle shrinks from "all shingles" to "true
-    //    hits + fpp noise"); survivors are IDENTICAL by construction —
-    //    the exact confirm join removes bloom false positives at any fpp.
     // 3d. optional PERCEPTUAL AUDIO dedup — the image rung's audio
     //    sibling, same slot discipline (see [[AudioDedupConfig]]).
     val sharedAud: Option[DataFrame] =
@@ -816,7 +660,7 @@ object CorpusPipeline {
         case _ => None
       }
     val audDeduped = cfg.audioDedup.fold(imgDeduped) { ac =>
-      observed("audio_dedup",
+      counted("audio_dedup",
         Dedup.removeNearDuplicateAudio(imgDeduped, cfg.idCol,
           ac.typeCol, ac.binaryCol, ac.maxHamming, hashes = sharedAud))
     }
@@ -835,32 +679,38 @@ object CorpusPipeline {
         case _ => None
       }
     val vidDeduped = cfg.videoDedup.fold(audDeduped) { vc =>
-      observed("video_dedup",
+      counted("video_dedup",
         Dedup.removeNearDuplicateVideos(audDeduped, cfg.idCol,
           vc.typeCol, vc.binaryCol, vc.everyN, vc.maxHamming,
           vc.minMatchFrac, alignFrames = vc.alignFrames,
           frameHashes = sharedVid))
     }
 
-    // Decontamination FLAGS the contaminated documents (a left join on
-    // the hit ids) instead of dropping them: the flagged frame keeps one
-    // row per row it read, so its count and any count still waiting (the
-    // near-dup survivors') ride on to the next checkpoint or the
-    // documents root, and the flagged rows drop above it (see `settled`).
-    // Without a benchmark the stage keeps every row.
-    val (clean, cleanRows) = benchClean.fold((vidDeduped, lit(true))) { b =>
-      val hits =
-        if (cfg.bloomDecontaminate)
-          Dedup.contaminationHitsBloom(vidDeduped, b, cfg.textCol, cfg.idCol,
-            cfg.decontaminateN, cfg.bloomFpp, cfg.tokenizer)
-        else
-          Dedup.contaminationHits(vidDeduped, b, cfg.textCol, cfg.idCol,
-            cfg.decontaminateN, cfg.tokenizer)
-      (Dedup.flagContaminated(vidDeduped, hits, cfg.idCol),
-        col(Dedup.contaminatedFlag).isNull)
-    }
-    pending += stage("decontaminated",
-      clean.where(cleanRows).drop(Dedup.contaminatedFlag)) -> cleanRows
+    // 4. benchmark decontamination. DELIBERATELY a larger n than the
+    //    dedup shingles: any-single-trigram overlap would scrub nearly
+    //    every English document (common trigrams are everywhere); the
+    //    standard decontamination window is ~8–13 contiguous tokens —
+    //    long enough that sharing one is real benchmark leakage.
+    //    `bloomDecontaminate` selects the bloom-prefiltered scale path
+    //    (the corpus-side shuffle shrinks from "all shingles" to "true
+    //    hits + fpp noise"); survivors are IDENTICAL by construction —
+    //    the exact confirm join removes bloom false positives at any fpp.
+    // Without a benchmark the stage keeps every row. When the fuzzy
+    // stage is ON, cut the lineage at the exact-decon survivors once: the
+    // fuzzy probe reads its corpus side for shingles AND for the final
+    // anti-join, and every downstream consumer (documents, chunks)
+    // re-reads it again — without the checkpoint each of those
+    // re-executes the whole six-stage chain (measured ×2.7 on the
+    // pipeline query at sf0.1). Off = no fuzzy stage = plans unchanged.
+    val fuzzyOn = benchClean.isDefined && cfg.fuzzyDecontaminate.isDefined
+    val cleanM = counted("decontaminated", benchClean.fold(vidDeduped) { b =>
+      if (cfg.bloomDecontaminate)
+        Dedup.removeContaminatedBloom(vidDeduped, b, cfg.textCol, cfg.idCol,
+          cfg.decontaminateN, cfg.bloomFpp, cfg.tokenizer)
+      else
+        Dedup.removeContaminated(vidDeduped, b, cfg.textCol, cfg.idCol,
+          cfg.decontaminateN, cfg.tokenizer)
+    }, if (fuzzyOn) Dedup.materialize else identity)
 
     // 4b. optional FUZZY decontamination — the reworded-leak net: a
     //    paraphrased benchmark dump shares most of its SHINGLE set while
@@ -872,20 +722,9 @@ object CorpusPipeline {
     //    is asymmetric, a decon cut well BELOW the dedup cut is the
     //    normal configuration (dropping a borderline training doc is
     //    cheap; keeping a borderline benchmark twin poisons the eval).
-    // When the fuzzy stage is ON, cut the lineage at the exact-decon
-    // survivors once: the fuzzy probe reads its corpus side for shingles
-    // AND for the final anti-join, and every downstream consumer
-    // (stage counts, documents, chunks) re-reads it again — without the
-    // checkpoint each of those re-executes the whole six-stage chain
-    // (measured ×2.7 on the pipeline query at sf0.1). Off = no fuzzy
-    // stage = plans unchanged.
-    val cleanM = (benchClean, cfg.fuzzyDecontaminate) match {
-      case (Some(_), Some(_)) => settled(clean, Dedup.materialize)
-      case _                  => clean
-    }
     val fuzzyClean = (benchClean, cfg.fuzzyDecontaminate) match {
       case (Some(b), Some(tau)) =>
-        observed("decontaminated_fuzzy",
+        counted("decontaminated_fuzzy",
           Dedup.removeContaminatedFuzzy(cleanM, b, cfg.textCol, cfg.idCol,
             tau, cfg.shingleN, tok = cfg.tokenizer))
       case _ => cleanM
@@ -903,8 +742,8 @@ object CorpusPipeline {
         case "audio" => sharedAud
         case _       => sharedVid
       }
-      observed("media_decontaminated",
-        Dedup.removeContaminatedMediaIndexed(settled(fuzzyClean), mdc.benchmarkHashes,
+      counted("media_decontaminated",
+        Dedup.removeContaminatedMediaIndexed(fuzzyClean, mdc.benchmarkHashes,
           cfg.idCol, mdc.typeCol, mdc.binaryCol, mdc.kind, mdc.maxHamming,
           mdc.everyN, mdc.minMatchFrac, mdc.alignFrames,
           corpusHashes = shared))
@@ -916,15 +755,10 @@ object CorpusPipeline {
     //    survived every dedup/decontamination rung (a high-importance
     //    duplicate or leak must stay dead), and it reads pre-redaction
     //    text (placeholder tokens carry no target-distribution signal).
-    // Materialized: the k-row selection feeds documents, chunks, and its
-    // stage count — without the checkpoint each consumer re-runs the
+    // Materialized after its count: the k-row selection feeds documents
+    // and chunks — without the checkpoint each consumer re-runs the
     // Gumbel-scored top-k over the whole upstream chain (the cleanM
     // multi-consumer rationale, at a k-row materialization cost).
-    // The dsir checkpoint is kept BARE alongside its observed wrapper:
-    // any emptiness probe downstream must read the bare frame — a
-    // limit-1 take through the stage's CollectMetrics node would
-    // complete the observation with a partial count (the promise keeps
-    // the FIRST action's metrics), silently corrupting the stage report.
     // The top-k selection ends in a single partition (orderBy + limit ⇒
     // TakeOrdered merge), which would serialize EVERY downstream stage —
     // redaction, chunking, packing, the stats aggregates — onto one task
@@ -939,14 +773,12 @@ object CorpusPipeline {
     // keeps the ~10 ms/row redaction parallel (k=150 ⇒ 5 tasks of ~30
     // rows) without the fan; a corpus-sized k still spreads to the full
     // session parallelism.
-    val dsirBare = cfg.dsirSelect.map { dc =>
-      Dedup.materialize(Dedup.spreadRows(
-        Dsir.resampleRows(settled(mediaClean), cfg.textCol,
+    val selected = cfg.dsirSelect.fold(mediaClean) { dc =>
+      counted("dsir_selected", Dedup.spreadRows(
+        Dsir.resampleRows(mediaClean, cfg.textCol,
           cfg.idCol, dc.model, dc.k, dc.salt, cfg.tokenizer),
-        col(cfg.idCol), dc.k))
+        col(cfg.idCol), dc.k), Dedup.materialize)
     }
-    val selected = dsirBare.map(b => observed("dsir_selected", b))
-      .getOrElse(mediaClean)
 
     // 4d. optional MIXING rungs — the training-mix composition step,
     //    after every selection rung (mix rates must be derived from the
@@ -960,20 +792,8 @@ object CorpusPipeline {
     //    once rather than re-executing the whole chain for the histogram
     //    pass AND every downstream consumer.
     val mixOn = cfg.mixToShares.isDefined || cfg.temperatureMix.isDefined
-    // `mixProbe` is the OBSERVE-FREE checkpoint emptiness probes read
-    // (see dsirBare above); with no dsir rung the pre-mix survivors are
-    // checkpointed here (the checkpoint action itself flows every row
-    // through the upstream accumulators, so their counts complete FULL)
-    // and the checkpoint-result frame — whose plan carries no
-    // CollectMetrics — doubles as the probe.
-    val (mixInput, mixProbe) =
-      if (!mixOn) (selected, selected)
-      else dsirBare match {
-        case Some(bare) => (selected, bare)
-        case None =>
-          val m = settled(selected, Dedup.materialize)
-          (m, m)
-      }
+    val mixInput =
+      if (mixOn && cfg.dsirSelect.isEmpty) Dedup.materialize(selected) else selected
     val shareMixed = cfg.mixToShares.fold(mixInput) { mc =>
       // A pre-mix corpus with NO target stratum carrying positive token
       // mass (fully-gated streaming micro-batch; a batch whose survivors
@@ -984,13 +804,13 @@ object CorpusPipeline {
       // the empty frame (every non-target stratum drops; every target
       // stratum rate is 0). The operator's own require stays reserved
       // for direct misuse. One bounded existence probe on the
-      // checkpointed pre-mix frame (mixProbe — observe-free, see above).
-      val noTargetMass = mixProbe
+      // checkpointed pre-mix frame.
+      val noTargetMass = mixInput
         .where(col(mc.strataCol).cast("string")
           .isin(mc.targetShares.keys.toSeq: _*) &&
           nTokens(text) > 0)
         .isEmpty
-      observed("mixed",
+      counted("mixed",
         if (noTargetMass) mixInput.where(lit(false))
         else Sampling.mixToTokenShares(
           mixInput.withColumn("_mix_tokens", nTokens(text)),
@@ -998,7 +818,7 @@ object CorpusPipeline {
           .drop("_mix_tokens"))
     }
     val mixed = cfg.temperatureMix.fold(shareMixed) { tc =>
-      observed("temperature_mixed",
+      counted("temperature_mixed",
         Sampling.temperatureResample(shareMixed, cfg.idCol, tc.strataCol,
           tc.alpha, tc.targetFraction))
     }
@@ -1011,15 +831,11 @@ object CorpusPipeline {
     //    run stages the final documents to storage before chunking for
     //    exactly this reason; at test scale it is a survivor-sized local
     //    checkpoint). Default off: the lazy-API contract stands.
-    //    Redaction and the split keep every row, so the counts still
-    //    pending (near-dup and decontamination, when no checkpoint came
-    //    after them) sit at the documents root, below the checkpoint,
-    //    and the flagged documents drop above it.
     val documentsPlan = Sampling.hashSplit(
       mixed.withColumn(cfg.textCol, TextAnalysis.redactPii(text)),
       cfg.idCol, cfg.splits)
-    val documents = settled(documentsPlan,
-      d => if (cfg.materializeDocuments) Dedup.materialize(d) else d)
+    val documents =
+      if (cfg.materializeDocuments) Dedup.materialize(documentsPlan) else documentsPlan
 
     // 7. chunks get the SAME split: it is a pure function of the id
     //    (md5 bucket), so re-deriving it on the chunker's output is a
@@ -1055,8 +871,8 @@ object CorpusPipeline {
     }
 
     Prepared(documents, chunks,
-      stageObs.toList.map { case (name, df, _) => name -> df },
-      stageObs.toList.map { case (name, _, o) => name -> o },
+      stageTallies.toList.map { case (name, df, _) => name -> df },
+      stageTallies.toList.map { case (name, _, h) => name -> h },
       packed)
   }
 }

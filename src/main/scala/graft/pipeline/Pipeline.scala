@@ -1,13 +1,10 @@
 package graft.pipeline
 
-import scala.concurrent.Await
-import scala.concurrent.duration._
-import scala.util.Try
-
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.lit
 
 import graft.etl.{Transforms, Warehouse}
+import graft.functions.Tally
 import graft.quality.{CheckResult, Checks, Concurrently, ValidationSuite}
 import graft.sources.Sources
 
@@ -22,8 +19,8 @@ import graft.sources.Sources
   * as five plans: each loaded table's row count, null counts and ranges
   * share one scan. The sales CSV is read as strings, with no inference
   * pass; `transformSales` types every value. XCom scalars become ordinary
-  * return values: each branch's row count is observed on the write
-  * that loads it. There is no scheduler, SMTP, or metadata DB here by
+  * return values: each branch's row count is a tally on the write that
+  * loads it. There is no scheduler, SMTP, or metadata DB here by
   * design (SURVEY §1.5, §7.4).
   */
 object Pipeline {
@@ -107,35 +104,11 @@ object Pipeline {
 
   /** K2 + O2 — load `df` into `fqTable` and return how many rows the load
     * wrote (the reference's XCom count, etl_pipeline.py:77–78), counted by
-    * an observation on the write itself rather than by a second pass over
-    * the source. */
+    * a [[Tally]] on the write itself rather than by a second pass over the
+    * source. */
   private[pipeline] def loadCounted(df: DataFrame, fqTable: String): Long = {
-    val o = Observation()
-    Warehouse.overwriteTable(df.observe(o, count(lit(1)).as("rows")), fqTable)
-    writtenRows(o)(df.count())
+    val (counted, written) = Tally.of(df, "rows" -> lit(1L))
+    Warehouse.overwriteTable(counted, fqTable)
+    written.valueOr("rows")(df.count())
   }
-
-  /** The `rows` count an observation took on a frame that was WRITTEN.
-    * A write runs its own `QueryExecution`, so the written frame's
-    * `queryExecution.observedMetrics` (what `Dedup.observedLong` reads)
-    * is its never-executed plan's initial row, `[0]`: a silent wrong
-    * zero. The observation's own result is read instead. Spark completes
-    * it from the listener bus when the write's execution ends, which can
-    * be after the write returns while the other branch's jobs keep the
-    * bus busy, so this waits for it, up to [[ObservationWait]]. If it is
-    * still absent, this says so on stderr and recomputes. */
-  private[pipeline] def writtenRows(o: Observation)(fallback: => Long): Long =
-    Try(Await.result(o.future, ObservationWait)).toOption match {
-      case Some(row) => row.getAs[Long]("rows")
-      case None =>
-        System.err.println(
-          s"[graft] WARN observed metric 'rows' (observation ${o.name}) absent " +
-            s"$ObservationWait after the write returned - recomputing with an extra pass")
-        fallback
-    }
-
-  /** How long [[writtenRows]] waits for the listener bus: far beyond its
-    * usual lag of milliseconds, and short next to the recount it saves
-    * on a large table. */
-  private val ObservationWait = 10.seconds
 }

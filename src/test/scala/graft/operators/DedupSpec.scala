@@ -1249,8 +1249,8 @@ class DedupSpec extends AnyFunSuite {
         s"only-calibrated=${calibrated -- single}")
   }
 
-  // ── Round 17: observed metrics read off the EXECUTED PLAN, never the
-  //    async listener bus (ObservedLedger / observedLong) ───────────────
+  // ── Counts read off the tally of the executed plan, never the async
+  //    listener bus (TallyHandle.valueOr) ───────────────────────────────
 
   test("spreadRows: partition count derives from the known row count, clamped") {
     import org.apache.spark.sql.functions.col
@@ -1275,39 +1275,30 @@ class DedupSpec extends AnyFunSuite {
     assert(m.count() == 3L)
   }
 
-  test("materialize records the executed plan's observations in the ledger") {
-    val o = org.apache.spark.sql.Observation()
-    val obs = Seq(1L, 2L, 3L, 4L).toDF("id")
-      .observe(o, org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("n"))
-    Dedup.materialize(obs)
-    // Synchronous read — no listener await anywhere in this path.
-    val row = ObservedLedger.lookup(o.name)
-    assert(row.isDefined, "checkpointed plan's metrics missing from ledger")
-    assert(row.get.getLong(row.get.fieldIndex("n")) == 4L)
-  }
-
-  test("observedLong falls back LOUDLY when the metric is not in the plan") {
-    // The elision shape: the executed plan carries NO CollectMetrics
-    // node under the observation's name (what AQE's empty-relation
-    // rewrite produces when it replaces the observed subtree) — the
-    // direct read misses, the future is incomplete. The fallback must
-    // fire AND announce itself on stderr (round-16 verdict: the silent
-    // 10 s Await + recompute was undiagnosable from a bench log).
-    val o = org.apache.spark.sql.Observation()
-    val neverRun = Dedup.materialize(Seq(1L).toDF("id")) // executed, no observe node
+  test("a tally read falls back LOUDLY when no exec of it ran") {
+    // The elision shape: no executed plan ran an exec of the tally (what
+    // AQE's empty-relation rewrite produces when it replaces the tallied
+    // subtree). The fallback must fire AND announce itself on stderr
+    // (round-16 verdict: the silent 10 s Await + recompute was
+    // undiagnosable from a bench log).
+    val (tallied, h) = graft.functions.Tally.of(Seq(1L).toDF("id"),
+      "n" -> org.apache.spark.sql.functions.lit(1L))
+    Dedup.materialize(Seq(1L).toDF("id")) // executed, not the tallied frame
     val buf = new java.io.ByteArrayOutputStream()
     val prev = System.err
     val got =
       try {
         System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
-        Dedup.observedLong(neverRun, o, "n")(42L)
+        h.valueOr("n")(42L)
       } finally System.setErr(prev)
     assert(got == 42L)
     val msg = buf.toString("UTF-8")
     assert(msg.contains("[graft] WARN observed metric"),
       s"fallback must log a diagnostic, got: '$msg'")
     assert(msg.contains("recomputing"), s"message names the recompute: '$msg'")
+    // once the tallied frame has run, the same read is its count, silently
+    Dedup.materialize(tallied)
+    assert(h.valueOr("n")(42L) == 1L)
   }
 
   test("shingleSets builds each shingle array once: the emptiness filter sits above a CollectMetrics node") {

@@ -673,9 +673,8 @@ class CorpusPipelineSpec extends AnyFunSuite {
 
   test("dsir selection + mixing combined: the dsir stage count stays the FULL k") {
     // regression: the mix rung's emptiness probe used to run a limit-1
-    // take THROUGH the dsir stage's CollectMetrics node, completing the
-    // observation with a partial count (first action wins) — the probe
-    // must read the bare checkpoint instead
+    // take THROUGH the dsir stage's count, completing it with a partial
+    // count — a probe must never beat the full action
     import graft.operators.FrozenDsir
     val corpus = docs.select($"doc_id",
       when($"doc_id" % 2 === 0,
@@ -730,10 +729,10 @@ class CorpusPipelineSpec extends AnyFunSuite {
     val out = CorpusPipeline.prepare(corpus, None, CorpusPipeline.Config(
       langs = Set("en"), minTokens = 10, dedupThreshold = 0.5,
       chunkTokens = 64, overlapTokens = 16, splits = Seq("train" -> 1.0)))
-    // the dedup rungs' internal materializations fire the EARLY
-    // observations during prepare, but the tail stages' accumulators
-    // only ride the caller's action — reading counts without one used to
-    // block the driver forever on Observation.get (round-10 ADVICE)
+    // the dedup rungs' internal materializations run the EARLY stage
+    // tallies during prepare, but the tail stages' only run with the
+    // caller's action — reading counts without one used to block the
+    // driver forever on a listener-bus await (round-10 ADVICE)
     val ex = intercept[IllegalStateException] { out.observedCounts }
     assert(ex.getMessage.contains("run an action"),
       s"error must tell the caller what to do: ${ex.getMessage}")
@@ -765,8 +764,8 @@ class CorpusPipelineSpec extends AnyFunSuite {
     // surviving prose is intact
     assert(!texts(1L).contains("click here") && !texts(1L).contains("menu home"))
     assert(texts(1L).contains("The tests all passed!"))
-    // the raw-page gates get their own stage (its CollectMetrics node is
-    // the pushdown barrier that keeps c4LineClean single-evaluation);
+    // the raw-page gates get their own stage (its tally is the pushdown
+    // barrier that keeps c4LineClean single-evaluation);
     // the sentence floor + line clean still ride the quality scan
     assert(out.stages.map(_._1) ==
       Seq("input", "c4_page_gate", "quality", "exact_dedup", "near_dedup",
@@ -775,13 +774,13 @@ class CorpusPipelineSpec extends AnyFunSuite {
     assert(out.observedCounts.toMap.apply("c4_page_gate") == 2L,
       "raw gates keep docs 1 and 4 (no curly, no lorem)")
     // ONE c4LineClean per surviving row: the sentence floor reads the
-    // cleaned ATTRIBUTE above the c4_page_gate CollectMetrics barrier
-    // instead of re-deriving the clean (round-10 measured it twice).
+    // cleaned ATTRIBUTE above the c4_page_gate tally barrier instead of
+    // re-deriving the clean (round-10 measured it twice).
     // The pipeline's own quality frame is checkpointed (its plan is a
-    // scan), so assert on the same filter-over-observed-projection shape
+    // scan), so assert on the same filter-over-tallied-projection shape
     // the pipeline builds: the c4LineKeep terminal-punct class must
     // appear exactly once (in the projection), and the floor's filter
-    // must sit ABOVE the CollectMetrics node, not pushed through it.
+    // must sit ABOVE the tally, not pushed through it.
     val gateShape = out.stages.collectFirst { case ("c4_page_gate", df) => df }
       .get.where(graft.functions.TextAnalysis.c4MinSentencesOk($"text"))
     val planStr = gateShape.queryExecution.optimizedPlan.toString
@@ -789,9 +788,9 @@ class CorpusPipelineSpec extends AnyFunSuite {
     assert(cleanCount == 1,
       s"c4LineClean must appear exactly once in the optimized plan, found $cleanCount:\n$planStr")
     val filterIdx = planStr.indexOf("Filter")
-    val metricsIdx = planStr.indexOf("CollectMetrics")
-    assert(filterIdx >= 0 && metricsIdx >= 0 && filterIdx < metricsIdx,
-      s"the sentence floor must stay above the CollectMetrics barrier:\n$planStr")
+    val tallyIdx = planStr.indexOf("Tally")
+    assert(filterIdx >= 0 && tallyIdx >= 0 && filterIdx < tallyIdx,
+      s"the sentence floor must stay above the tally barrier:\n$planStr")
 
     // off → every doc survives with its boilerplate untouched
     val off = CorpusPipeline.prepare(corpus, None, cfg.copy(c4Rules = false))
@@ -863,69 +862,104 @@ class CorpusPipelineSpec extends AnyFunSuite {
     val stripIdx = g.indexOf("<script")
     assert(filterIdx >= 0 && filterIdx < barrierIdx && barrierIdx < stripIdx,
       s"gate filter above the graft_once projection around the strip:\n$g")
-    // the barrier adds no reported stage
+    // the barrier adds no reported stage; each stage has its tally
     assert(out.stages.map(_._1) == Seq("input", "quality", "exact_dedup",
       "line_dedup", "near_dedup", "decontaminated"))
     assert(out.observations.map(_._1) == out.stages.map(_._1))
+    assert(out.observations.forall(_._2.ran))
   }
 
-  // Runs prepare over the crawl corpus (with or without its benchmark)
-  // and the caller's two collects, and asserts that no count splits a
-  // codegen stage and that each stage is counted in one executed plan,
-  // once.
-  private def assertCountsSplitNoStage(withBench: Boolean): Unit = {
-    import org.apache.spark.sql.execution.{CollectMetricsExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
+  // Every q_corpus_pipeline* query of SparkEntry at sf0.001, run once
+  // each: its name and the query executions it ran.
+  private lazy val pipelineRuns: Seq[(String, Seq[org.apache.spark.sql.execution.QueryExecution])] =
+    graft.SparkEntry.queries.toSeq.filter(_._1.startsWith("q_corpus_pipeline"))
+      .sortBy(_._1).map { case (name, query) =>
+        name -> TestSparkSession.executionsDuring {
+          query(spark, "/root/testdata/sf0.001").collect()
+        }
+      }
+
+  test("stage tallies split no codegen stage on all 19 q_corpus_pipeline configs") {
+    import org.apache.spark.sql.execution.{CollectMetricsExec, FileSourceScanExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    // the final plans' nodes, stage by stage (a reused exchange is a leaf)
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case s: QueryStageExec => nodes(s.plan)
-      case other => other +: other.children.flatMap(nodes)
+    import graft.functions.TallyExec
+    // (node, inside a codegen stage, the node above it) for the final
+    // plans' nodes, stage by stage (a reused exchange is a leaf)
+    def nodes(p: SparkPlan, inStage: Boolean, above: Option[SparkPlan])
+        : Seq[(SparkPlan, Boolean, Option[SparkPlan])] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan, inStage, above)
+      case s: QueryStageExec => nodes(s.plan, false, None)
+      case w: WholeStageCodegenExec => (w, inStage, above) +: nodes(w.child, true, Some(w))
+      case i: InputAdapter => (i, inStage, above) +: nodes(i.child, false, Some(i))
+      case other => (other, inStage, above) +: other.children.flatMap(nodes(_, inStage, Some(other)))
     }
-    // below a run of CollectMetrics nodes
-    def under(p: SparkPlan): SparkPlan = p match {
-      case c: CollectMetricsExec => under(c.child)
-      case other => other
+    assert(pipelineRuns.size == 19, pipelineRuns.map(_._1))
+    val scanning = pipelineRuns.map { case (name, executions) =>
+      val all = executions.flatMap(qe => nodes(qe.executedPlan, false, None))
+      val tallies = all.collect { case (t: TallyExec, inStage, above) => (t, inStage, above) }
+      assert(tallies.nonEmpty, s"$name: no tally in any plan")
+      // outside a codegen stage a tally sits over an operator that is not
+      // codegen'd; it splits a stage only with codegen stages on both sides
+      val splitting = tallies.collect {
+        case (t, false, above) if above.exists(_.isInstanceOf[InputAdapter]) &&
+            t.child.isInstanceOf[WholeStageCodegenExec] => t
+      }
+      assert(splitting.isEmpty, s"$name: tallies that split a codegen stage:\n${splitting.mkString("\n")}")
+      assert(!all.exists(_._1.isInstanceOf[CollectMetricsExec]), s"$name: a CollectMetrics node")
+      // column pruning reaches the scan: no query reads n_chars
+      val docScans = all.collect {
+        case (f: FileSourceScanExec, _, _) if f.relation.location.rootPaths
+          .exists(_.getName == "documents.parquet") => f
+      }
+      assert(docScans.forall(!_.requiredSchema.fieldNames.contains("n_chars")),
+        s"$name: documents scans ${docScans.map(_.requiredSchema.simpleString)}")
+      name -> docScans.nonEmpty
     }
-    val (pages, bench) = crawl
-    var out: CorpusPipeline.Prepared = null
-    val executions = TestSparkSession.executionsDuring {
-      out = CorpusPipeline.prepare(pages, Some(bench).filter(_ => withBench),
-        crawlCfg)
-      out.documents.select($"doc_id").collect()
-      out.chunks.select($"doc_id").distinct().collect()
-    }
-    val plans = executions.map(qe => nodes(qe.executedPlan))
-    // a count between two codegen'd operators ends one fused stage and
-    // starts another: an InputAdapter over it, a codegen stage under it
-    val splitting = plans.flatten.collect {
-      case ia: InputAdapter if ia.child.isInstanceOf[CollectMetricsExec] &&
-          under(ia.child).isInstanceOf[WholeStageCodegenExec] => ia.child
-    }
-    assert(splitting.isEmpty,
-      s"counts that split a codegen stage:\n${splitting.mkString("\n")}")
-    // the only barrier left is graft_once, which is no plan node
-    assert(!plans.flatten.exists {
-      case c: CollectMetricsExec => c.name.startsWith("graft_once")
-      case _ => false
-    })
-    // every stage's count: one executed plan, one node
-    out.observations.foreach { case (stage, o) =>
-      val perPlan = plans.map(_.count {
-        case c: CollectMetricsExec => c.name == o.name
-        case _ => false
-      }).filter(_ > 0)
-      assert(perPlan == Seq(1), s"stage '$stage' counted in plans $perPlan")
-    }
-    assert(out.observedCounts.map(_._1) == out.stages.map(_._1))
+    // only the two MlFixture configs build their corpus in memory
+    assert(scanning.filterNot(_._2).map(_._1).toSet ==
+      Set("q_corpus_pipeline_full", "q_corpus_pipeline_ml"), scanning)
   }
 
-  test("stage counts split no codegen stage: each count sits in exactly one executed plan, once") {
-    assertCountsSplitNoStage(withBench = true)
-  }
-
-  test("stage counts split no codegen stage without a benchmark: near_dedup rides the documents root") {
-    assertCountsSplitNoStage(withBench = false)
+  test("differential: every tally equals a CollectMetrics count of the same frame on all 19 configs") {
+    import org.apache.spark.sql.{Observation, Row}
+    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import graft.functions.{Tally, TallyHandle}
+    def frame(plan: LogicalPlan): org.apache.spark.sql.DataFrame =
+      new org.apache.spark.sql.classic.Dataset[Row](
+        spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan,
+        ExpressionEncoder(plan.schema))
+    def collectMetricsCount(df: org.apache.spark.sql.DataFrame): Long = {
+      val o = Observation()
+      df.observe(o, count(lit(1)).as("n")).foreach(_ => ())
+      o.get("n").asInstanceOf[Long]
+    }
+    assert(pipelineRuns.size == 19)
+    pipelineRuns.foreach { case (name, executions) =>
+      // each tally the query ran, once, with the frame it counts
+      val tallies = executions.flatMap(_.analyzed.collect { case t: Tally => t })
+        .foldLeft(Seq.empty[Tally]) { (seen, t) =>
+          if (seen.exists(_.handle eq t.handle)) seen else seen :+ t }
+      val counts = tallies.flatMap { t =>
+        t.handle.names.zip(t.values).collect { case (n, Literal(1L, _)) => (t, n) } }
+      // a stage tally is named after its stage, the operators' "n_..."
+      def isStage(n: String) = !n.startsWith("n_")
+      assert(counts.exists(c => isStage(c._2)), s"$name: no stage tally")
+      counts.foreach { case (t, n) =>
+        val df = frame(t.child)
+        val expected = collectMetricsCount(df)
+        assert(t.handle.ran && t.handle(n) == expected, s"$name ${t.handle}: ${t.handle(n)} vs $expected")
+        // a stage frame (one row per document) tallied afresh: a limit(1)
+        // probe, then a self-join, still read the full count
+        if (isStage(n)) {
+          val (again, h) = Tally.of(df, n -> lit(1L))
+          again.limit(1).collect()
+          again.as("a").join(again.as("b"), col("a.doc_id") === col("b.doc_id")).count()
+          assert(h(n) == expected, s"$name $h after a probe and a self-join: ${h(n)} vs $expected")
+        }
+      }
+    }
   }
 
   test("line dedup runs once per pass: one execution plans it, outputs and counts unchanged") {
@@ -988,7 +1022,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
       chunkTokens = 64, overlapTokens = 16, splits = Seq("train" -> 1.0))
     val out = CorpusPipeline.prepare(corpus, Some(bench), cfg)
 
-    // observations mirror the stage list name for name, in order
+    // the tallies mirror the stage list name for name, in order
     assert(out.observations.map(_._1) == out.stages.map(_._1))
 
     // ONE action over documents = the materializing pass every stage

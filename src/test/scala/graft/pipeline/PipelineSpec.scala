@@ -9,11 +9,12 @@ import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.{AnalysisException, Observation}
-import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.AnalysisException
+import org.apache.spark.sql.functions.lit
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSparkSession
+import graft.functions.Tally
 import graft.quality.{CheckResult, ValidationFailure}
 
 /** End-to-end pipeline test with planted defects (SURVEY §5.2.2,
@@ -265,21 +266,20 @@ class PipelineSpec extends AnyFunSuite {
   test("written-frame count: a saved frame's observation gives the true count, no WARN") {
     spark.sql("CREATE DATABASE IF NOT EXISTS test_observed")
     val df = spark.range(0, 7, 1, 3).toDF("id")
-    val o = Observation()
-    val obs = df.observe(o, count(lit(1)).as("rows"))
+    val (counted, rows) = Tally.of(df, "rows" -> lit(1L))
     val err = new java.io.ByteArrayOutputStream()
     val stderr = System.err
     System.setErr(new java.io.PrintStream(err, true))
     val (n, loaded) =
       try {
-        obs.write.mode("overwrite").format("parquet").saveAsTable("test_observed.seven")
-        (Pipeline.writtenRows(o)(-1L), Pipeline.loadCounted(df, "test_observed.seven_again"))
+        counted.write.mode("overwrite").format("parquet").saveAsTable("test_observed.seven")
+        (rows.valueOr("rows")(-1L), Pipeline.loadCounted(df, "test_observed.seven_again"))
       } finally System.setErr(stderr)
     assert(n == 7 && loaded == 7)
     assert(!err.toString.contains("[graft] WARN"), err.toString)
-    // the hazard the reader avoids: the written frame's own plan never
-    // executed, so its observedMetrics hold the initial row, a silent 0
-    assert(obs.queryExecution.observedMetrics.get(o.name).map(_.getLong(0)) == Some(0L))
+    // the write ran its own plan, not the written frame's: the tally
+    // reads the exec that plan ran
+    assert(rows.ran)
   }
 
   test("written-frame count: a lagging listener bus delays the observation, no recount") {
