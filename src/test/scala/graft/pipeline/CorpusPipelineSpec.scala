@@ -869,6 +869,61 @@ class CorpusPipelineSpec extends AnyFunSuite {
     assert(out.observations.forall(_._2.ran))
   }
 
+  // Runs prepare over the crawl corpus (with or without its benchmark)
+  // and the caller's two collects, and asserts that no tally splits a
+  // codegen stage and that each stage is counted in one executed plan,
+  // once.
+  private def assertCountsSplitNoStage(withBench: Boolean): Unit = {
+    import org.apache.spark.sql.execution.{CollectMetricsExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import graft.functions.TallyExec
+    // the final plans' nodes, stage by stage (a reused exchange is a leaf)
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => nodes(s.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    val (pages, bench) = crawl
+    var out: CorpusPipeline.Prepared = null
+    val executions = TestSparkSession.executionsDuring {
+      out = CorpusPipeline.prepare(pages, Some(bench).filter(_ => withBench),
+        crawlCfg)
+      out.documents.select($"doc_id").collect()
+      out.chunks.select($"doc_id").distinct().collect()
+    }
+    val plans = executions.map(qe => nodes(qe.executedPlan))
+    // a tally between two codegen'd operators would end one fused stage
+    // and start another: an InputAdapter over it, a codegen stage under it
+    val splitting = plans.flatten.collect {
+      case ia: InputAdapter if ia.child.isInstanceOf[TallyExec] &&
+          ia.child.children.head.isInstanceOf[WholeStageCodegenExec] => ia.child
+    }
+    assert(splitting.isEmpty,
+      s"tallies that split a codegen stage:\n${splitting.mkString("\n")}")
+    assert(!plans.flatten.exists(_.isInstanceOf[CollectMetricsExec]))
+    // every stage's tally runs in one executed plan. A plan may read a
+    // stage's frame more than once (line dedup reads its input three
+    // times, decontamination twice), so it holds one node per read; each
+    // of them counts the same rows, and the handle reads that count once
+    // (their maximum), never their sum.
+    out.observations.foreach { case (stage, h) =>
+      val perPlan = plans.map(_.collect { case t: TallyExec if t.handle eq h => t })
+        .filter(_.nonEmpty)
+      assert(perPlan.size == 1, s"stage '$stage' tallied in ${perPlan.size} plans")
+      val counted = perPlan.head.map(_.metrics(stage).value).distinct
+      assert(counted == Seq(h(stage)), s"stage '$stage': its execs counted $counted, read ${h(stage)}")
+    }
+    assert(out.observedCounts.map(_._1) == out.stages.map(_._1))
+  }
+
+  test("stage counts split no codegen stage: each count sits in exactly one executed plan, once") {
+    assertCountsSplitNoStage(withBench = true)
+  }
+
+  test("stage counts split no codegen stage without a benchmark: near_dedup rides the documents root") {
+    assertCountsSplitNoStage(withBench = false)
+  }
+
   // Every q_corpus_pipeline* query of SparkEntry at sf0.001, run once
   // each: its name and the query executions it ran.
   private lazy val pipelineRuns: Seq[(String, Seq[org.apache.spark.sql.execution.QueryExecution])] =
