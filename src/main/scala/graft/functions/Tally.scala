@@ -162,12 +162,14 @@ case class TallyExec(handle: TallyHandle, values: Seq[Expression], child: SparkP
 
   override protected def doExecute(): RDD[InternalRow] = {
     start()
-    val ms = handle.names.map(metrics)
-    val bound = BindReferences.bindReferences(values, child.output)
+    val ms = handle.names.map(metrics).toArray
+    val bound = BindReferences.bindReferences(values, child.output).toArray
     child.execute().mapPartitions(_.map { r =>
-      bound.zip(ms).foreach { case (e, m) =>
-        val v = e.eval(r)
-        if (v != null) m.add(v.asInstanceOf[Long])
+      var i = 0
+      while (i < bound.length) {
+        val v = bound(i).eval(r)
+        if (v != null) ms(i).add(v.asInstanceOf[Long])
+        i += 1
       }
       r
     })
