@@ -688,8 +688,7 @@ object ScaleProfile {
       timed(s"textprobe.removeIncremental(force=$force share=$share)") {
         Dedup.removeIncrementalFrom(exBands, exSh, incoming, "text",
           "doc_id", threshold = 0.5, n = 3, k = 128,
-          checkDisjointIds = false, maxIter = 20,
-          forceProbeGroups = fg).count()
+          checkDisjointIds = false, forceProbeGroups = fg).count()
       }
     }
     spark.stop()

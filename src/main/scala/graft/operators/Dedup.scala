@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{GraftFunctions, Tally, TextAnalysis, Tok}
+import graft.functions.{GraftFunctions, Tally, TallyHandle, TextAnalysis, Tok}
 
 /** Deduplication operators for large-scale training-data pipelines
   * (north-star mandate; extends the reference's exact `drop_duplicates`,
@@ -1953,11 +1953,10 @@ object Dedup {
   /** End-to-end perceptual audio dedup: [[audioNearDupPairs]] → CC →
     * keep each cluster's min id; undecodable payloads always survive. */
   def removeNearDuplicateAudio(df: DataFrame, idCol: String, typeCol: String,
-      binaryCol: String, maxHamming: Int = 4, maxIter: Int = 20,
+      binaryCol: String, maxHamming: Int = 4,
       hashes: Option[DataFrame] = None): DataFrame =
     removeByPairs(df, idCol,
-      audioNearDupPairs(df, idCol, typeCol, binaryCol, maxHamming, hashes),
-      maxIter)
+      audioNearDupPairs(df, idCol, typeCol, binaryCol, maxHamming, hashes))
 
   /** Incremental batch-vs-corpus PERCEPTUAL media dedup — the multimodal
     * sibling of [[removeNearDuplicatesIncrementalIndexed]] (text) and
@@ -1982,7 +1981,7 @@ object Dedup {
   def removeNearDuplicateMediaIncremental(existingHashes: DataFrame,
       incoming: DataFrame, idCol: String, typeCol: String, binaryCol: String,
       kind: String, maxHamming: Int, checkDisjointIds: Boolean = true,
-      maxIter: Int = 20, everyN: Int = 2, minMatchFrac: Double = 0.6,
+      everyN: Int = 2, minMatchFrac: Double = 0.6,
       incomingHashes: Option[DataFrame] = None,
       alignFrames: Boolean = true,
       forceProbeGroups: Option[Int] = None): DataFrame = {
@@ -1997,7 +1996,7 @@ object Dedup {
       incoming, idCol, typeCol, binaryCol, everyN, minMatchFrac,
       incomingHashes, existingHashes)
     incrementalSurvivors(caller, incoming, idCol, inH, exH,
-        checkDisjointIds, maxIter) {
+        checkDisjointIds) {
       val frames = gate.map(_ => alignFrames)
       val inChunks = hammingChunks(inH, Seq("sh"), maxHamming)
       val allChunks = inChunks.unionByName(hammingChunks(exH, Seq("sh"), maxHamming))
@@ -2162,23 +2161,20 @@ object Dedup {
     * keep each cluster's min id; undecodable payloads always survive. */
   def removeNearDuplicateVideos(df: DataFrame, idCol: String, typeCol: String,
       binaryCol: String, everyN: Int = 2, maxHamming: Int = 4,
-      minMatchFrac: Double = 0.6, maxIter: Int = 20,
-      alignFrames: Boolean = true,
+      minMatchFrac: Double = 0.6, alignFrames: Boolean = true,
       frameHashes: Option[DataFrame] = None): DataFrame =
     removeByPairs(df, idCol,
       videoNearDupPairs(df, idCol, typeCol, binaryCol, everyN, maxHamming,
-        minMatchFrac, alignFrames, frameHashes),
-      maxIter)
+        minMatchFrac, alignFrames, frameHashes))
 
   /** End-to-end perceptual image dedup: [[imageNearDupPairs]] → CC →
     * keep the minimum id per cluster; undecodable payloads always
     * survive (no hash ⇒ no duplicate evidence). */
   def removeNearDuplicateImages(df: DataFrame, idCol: String, typeCol: String,
-      binaryCol: String, maxHamming: Int = 6, maxIter: Int = 20,
+      binaryCol: String, maxHamming: Int = 6,
       hashes: Option[DataFrame] = None): DataFrame =
     removeByPairs(df, idCol,
-      imageNearDupPairs(df, idCol, typeCol, binaryCol, maxHamming, hashes),
-      maxIter)
+      imageNearDupPairs(df, idCol, typeCol, binaryCol, maxHamming, hashes))
 
   /** The persistable 128-BIT image hash frame (id, lo, hi): horizontal
     * dHash in `lo` (bit-identical to [[imageHashFrame]]'s `sh` — a
@@ -2218,11 +2214,10 @@ object Dedup {
   /** End-to-end 128-bit perceptual image dedup ([[imageNearDupPairs128]]
     * → CC → min-id survivor); undecodable payloads always survive. */
   def removeNearDuplicateImages128(df: DataFrame, idCol: String, typeCol: String,
-      binaryCol: String, maxHamming: Int = 6, maxIter: Int = 20,
+      binaryCol: String, maxHamming: Int = 6,
       hashes: Option[DataFrame] = None): DataFrame =
     removeByPairs(df, idCol,
-      imageNearDupPairs128(df, idCol, typeCol, binaryCol, maxHamming, hashes),
-      maxIter)
+      imageNearDupPairs128(df, idCol, typeCol, binaryCol, maxHamming, hashes))
 
   /** Embedding-cosine near-duplicate pairs — delegates candidate
     * generation + verification to [[Similarity.cosinePairs]] (banded
@@ -2231,24 +2226,32 @@ object Dedup {
       threshold: Double = 0.95): DataFrame =
     Similarity.cosinePairs(df, vecCol, idCol, threshold)
 
-  /** Connected components over near-dup pairs (iterative min-label
-    * propagation — the standard large-graph CC in the MapReduce/Pregel
-    * literature): every doc in a duplicate cluster converges to the
-    * cluster's minimum id. Driver loop over ACTIONS only (a convergence
-    * scalar per round, never data). Rounds needed = graph diameter —
-    * near-dup clusters are shallow (pairs share a common origin), so
-    * convergence is fast. Returns (id, label).
+  /** Connected components over near-dup pairs: every doc in a duplicate
+    * cluster gets the cluster's minimum id as its label. Returns
+    * (id, label). A driver loop over ACTIONS only (a convergence scalar
+    * per round, never data).
     *
-    * Scale hardening (round-2): each round runs ONE materializing job —
-    * the update join carries a `_changed` flag, the round's labels are
-    * checkpointed, and the convergence count is a trivial scan of the
-    * materialized blocks (round 1 re-joined new labels against old for
-    * the count: a second shuffle join per round). Checkpointing is
-    * RELIABLE (HDFS/object-store) whenever the session has a checkpoint
-    * dir configured — `localCheckpoint` pins blocks in executor storage
-    * and dies with an executor, fine on local[n], fatal on a 1000-node
-    * job — with `localCheckpoint` as the no-dir fallback. */
-  def resolveClusters(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
+    * Each round after the first two HOOKS every node and its current
+    * label to the smallest label across the node's edges, then JUMPS once
+    * (label ← label(label)): Shiloach–Vishkin hooking and shortcutting,
+    * the label propagation of Kiveris et al., "Connected Components in
+    * MapReduce and Beyond" (SoCC 2014). Hooking the label too is what
+    * makes the round count grow with the log of the cluster diameter,
+    * not the diameter: a 1,000-node path resolves in about a dozen
+    * rounds. A label is always the id of a node in the same
+    * cluster and never exceeds that node's own id, and no round raises
+    * one, so the loop needs no bound: it ends at the first round that
+    * changes no label, and such a round leaves every edge's two ends on
+    * one label, the cluster's minimum.
+    *
+    * Each round runs ONE materializing job: the round's labels are
+    * checkpointed with a `_changed` flag whose sum a [[Tally]] reads.
+    * Checkpointing is RELIABLE (HDFS/object-store) whenever the session
+    * has a checkpoint dir configured — `localCheckpoint` pins blocks in
+    * executor storage and dies with an executor, fine on local[n], fatal
+    * on a 1000-node job — with `localCheckpoint` as the no-dir
+    * fallback. */
+  def resolveClusters(pairs: DataFrame): DataFrame = {
     // ONE materialization for the symmetric edge list, derived from the
     // pair detection with a single explode. The former shape checkpointed
     // the pairs AND a self-union of that checkpoint — two full
@@ -2263,14 +2266,12 @@ object Dedup {
         struct(col("id_a").as("src"), col("id_b").as("dst")),
         struct(col("id_b").as("src"), col("id_a").as("dst")))).as("_e"))
       .select(col("_e.src").as("src"), col("_e.dst").as("dst")))
-    // Iteration 1 in closed form: labels₀(v) = v, so the first round's
-    // neighbor-min join over labels₀ reduces to ONE aggregate on the edge
-    // list — label₁(v) = min(v, min of v's neighbors). Identical to the
-    // former shape's first loop pass (join against identity labels), at
-    // one groupBy instead of distinct-checkpoint + join + groupBy + join.
-    // Edges with a null endpoint join nothing; dropping them up front
-    // makes both of round 2's reads of this aggregate the same plan, so
-    // its exchange runs once and is reused.
+    // Round 1 in closed form: labels₀(v) = v, so the neighbor-min join
+    // over labels₀ reduces to ONE aggregate on the edge list —
+    // label₁(v) = min(v, min of v's neighbors). Edges with a null
+    // endpoint join nothing; dropping them up front makes both of round
+    // 2's reads of this aggregate the same plan, so its exchange runs
+    // once and is reused.
     val l1Plan = edges.where(col("dst").isNotNull).groupBy(col("dst"))
       .agg(min(col("src")).as("_nmin"))
       .select(col("dst").as("id"),
@@ -2280,85 +2281,73 @@ object Dedup {
     // common survivor), so the round that PROVES convergence is almost
     // always round 2 — running it inside round 1's plan turns the common
     // case into ONE labels checkpoint instead of two on every CC caller.
-    // Algebra (exactly two loop rounds of the propagation operator):
     //   label₂(v) = min(label₁(v), min_{u∈N(v)} label₁(u)),
     //   changed₂ ≡ label₂ < label₁;
     // the round-1 aggregate subtree is shared inside the plan (same
-    // exchange, reused). Convergence reads off the same tally:
-    // zero nodes (empty edge list — round 1 changes nothing) or
-    // changed₂ = 0 (labels₁ were a fixed point). maxIter semantics are
-    // unchanged — the fused plan IS rounds 1+2, so it only runs when
-    // maxIter admits two rounds; the degenerate maxIter = 1 keeps the
-    // single-round plan (converges only on an empty edge list, as
-    // before).
-    var labels: DataFrame = null
-    var converged = false
-    var i = 0
-    if (maxIter >= 2) {
-      // explicit aliases: l1Plan appears on BOTH sides of the round-2
-      // join (true self-lineage — the per-round loop below never has
-      // this because its labels are a fresh checkpoint relation)
-      val nm2 = edges.as("e")
-        .join(l1Plan.as("l"), col("e.src") === col("l.id"))
-        .groupBy(col("e.dst").as("nid")).agg(min(col("l.label")).as("nlabel"))
-      val (l2, t2) = Tally.of(l1Plan.as("x")
-        .join(nm2, col("x.id") === col("nid"), "left")
-        .select(col("x.id").as("id"),
-          least(col("x.label"), coalesce(col("nlabel"), col("x.label"))).as("label"),
-          (coalesce(col("nlabel"), col("x.label")) < col("x.label"))
-            .cast("long").as("_changed")),
-        "n_nodes" -> lit(1L), "n_changed" -> col("_changed"))
-      val m = materialize(l2)
-      labels = m.drop("_changed")
-      converged = t2.valueOr("n_nodes")(if (m.isEmpty) 0L else 1L) == 0L ||
-        t2.valueOr("n_changed")(m
-          .agg(coalesce(sum(col("_changed")), lit(0L))).first().getLong(0)) == 0L
-      i = 2 // the fused materialize IS rounds 1 and 2
-    } else {
-      val (l1, t1) = Tally.of(l1Plan, "n_nodes" -> lit(1L))
-      labels = materialize(l1)
-      converged = t1.valueOr("n_nodes")(if (labels.isEmpty) 0L else 1L) == 0L
-      i = 1
-    }
-    while (!converged && i < maxIter) {
-      val neighborMin = edges.join(labels, edges("src") === labels("id"))
-        .groupBy(col("dst").as("nid")).agg(min(col("label")).as("nlabel"))
-      // labels only ever decrease, so "changed" ≡ neighbor min < own label.
-      // The changed-count is a TALLY the checkpoint pass runs instead of a
-      // second aggregate action over the materialized frame — one driver
-      // action per CC round, not two (the aggregate was a full extra pass
-      // over the labels at any scale).
-      val (round, t) = Tally.of(labels
-        .join(neighborMin, labels("id") === neighborMin("nid"), "left")
-        .select(col("id"),
-          least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"),
-          (coalesce(col("nlabel"), col("label")) < col("label"))
-            .cast("long").as("_changed")),
+    // exchange, reused). Convergence reads off the same tally: changed₂
+    // = 0 (labels₁ were a fixed point, or there are no nodes). Explicit
+    // aliases: l1Plan appears on BOTH sides of the
+    // round-2 join (true self-lineage).
+    //
+    // Every join of a round is a LEFT join, so AQE may broadcast only its
+    // right side. An inner join's build side is picked by whichever input
+    // stage finishes first, so identical calls planned either side and
+    // compiled new stage bodies. Here the edges are the right side, so a
+    // broadcast keeps the round-1 aggregate inside the join's stage (one
+    // codegen stage fewer). Every node is some edge's src;
+    // the `coalesce` keys a row without one on its own node, which keeps
+    // `nid` non-null, so no inferred null filter turns the join inner.
+    val nm2 = l1Plan.as("l")
+      .join(edges.as("e"), col("l.id") === col("e.src"), "left")
+      .groupBy(coalesce(col("e.dst"), col("l.id")).as("nid"))
+      .agg(min(col("l.label")).as("nlabel"))
+    val (l2, t2) = Tally.of(l1Plan.as("x")
+      .join(nm2, col("x.id") === col("nid"), "left")
+      .select(col("x.id").as("id"),
+        least(col("x.label"), coalesce(col("nlabel"), col("x.label"))).as("label"),
+        (coalesce(col("nlabel"), col("x.label")) < col("x.label"))
+          .cast("long").as("_changed")),
+      "n_changed" -> col("_changed"))
+    def settled(m: DataFrame, t: TallyHandle): Boolean = t.valueOr("n_changed")(m
+      .agg(coalesce(sum(col("_changed")), lit(0L))).first().getLong(0)) == 0L
+    val m = materialize(l2)
+    var labels = m.drop("_changed")
+    var converged = settled(m, t2)
+    while (!converged) {
+      // Hook: node u and node L(u) both take nmin(u), the smallest label
+      // across u's edges. Edges without a label have a null src, and a
+      // null nmin changes nothing. No filter may drop the null-label rows:
+      // the optimizer would turn the left join back into an inner one.
+      val nmin = edges.join(labels.as("l"), col("src") === col("l.id"), "left")
+        .groupBy(col("dst").as("u")).agg(min(col("l.label")).as("nmin"))
+      val hooks = nmin.join(labels.as("h"), col("u") === col("h.id"), "left")
+        .select(explode(array(col("h.id"), col("h.label"))).as("hid"), col("nmin"))
+        .groupBy(col("hid")).agg(min(col("nmin")).as("hmin"))
+      val hooked = labels.as("o").join(hooks, col("o.id") === col("hid"), "left")
+        .select(col("o.id").as("id"), col("o.label").as("_old"),
+          least(col("o.label"), col("hmin")).as("label"))
+      // Jump: label ← label(label). Every label is a node's id, so each
+      // node finds its label's row. Labels only ever decrease, so
+      // "changed" ≡ new label < the round's input label; the count is a
+      // TALLY the checkpoint pass runs, one driver action per round.
+      val (round, t) = Tally.of(hooked.as("a")
+        .join(hooked.as("b"), col("a.label") === col("b.id"), "left")
+        .select(col("a.id").as("id"), col("b.label").as("label"),
+          (col("b.label") < col("a._old")).cast("long").as("_changed")),
         "n_changed" -> col("_changed"))
       val updated = materialize(round)
       labels = updated.drop("_changed")
-      val changed = t.valueOr("n_changed")(updated
-        .agg(coalesce(sum(col("_changed")), lit(0L))).first().getLong(0))
-      converged = changed == 0
-      i += 1
+      converged = settled(updated, t)
     }
-    // Returning silently-unconverged labels would UNDER-MERGE: two docs in
-    // one duplicate cluster keep different labels, so both survive a
-    // min-id-survivor dedup — invisible in the output of a 100 TB run.
-    // Label propagation needs `graph diameter` rounds; near-dup clusters
-    // are shallow, so hitting maxIter means an adversarial chain (A≈B≈C≈…
-    // at the threshold) — fail loudly and let the caller raise maxIter.
-    if (!converged) throw new IllegalStateException(
-      s"resolveClusters: label propagation did not converge in $maxIter " +
-        "rounds (cluster-graph diameter exceeds maxIter; labels would " +
-        "under-merge). Raise maxIter.")
     labels
   }
 
   /** End-to-end near-duplicate REMOVAL: detect pairs (MinHash+LSH,
     * exact-verified), cluster them, and keep one survivor per cluster.
     * Everything the detection found goes; the rest of the corpus passes
-    * through untouched (left-anti on the loser ids).
+    * through untouched (left-anti on the loser ids). Clusters of any
+    * depth resolve: a page history whose revisions chain into one long
+    * path keeps its first revision.
     *
     * The default detector is [[Detector.Auto]]: toy/typical corpora run
     * the fixed-banding plan (identical pairs to [[Detector.Fixed]]),
@@ -2381,19 +2370,19 @@ object Dedup {
     * Spark's and SQL's shared desc-nulls-last default, i.e. "no
     * priority" = crawl-grade. */
   def removeNearDuplicates(df: DataFrame, textCol: String, idCol: String,
-      threshold: Double = 0.8, n: Int = 3, maxIter: Int = 20,
+      threshold: Double = 0.8, n: Int = 3,
       tok: Tok = Tok.Latin, detector: Detector = Detector.Auto,
       priorityCol: Option[String] = None): DataFrame =
     removeByPairs(df, idCol,
       nearDupPairsMinHash(df, textCol, idCol, threshold, n, detector, tok),
-      maxIter, priorityCol)
+      priorityCol)
 
   /** Shared removal tail of every detector family: cluster the verified
     * pairs ([[resolveClusters]]) and drop every member but each cluster's
     * survivor — its min id, or its top (`priorityCol` desc, id asc) row. */
   private def removeByPairs(df: DataFrame, idCol: String, pairs: DataFrame,
-      maxIter: Int, priorityCol: Option[String] = None): DataFrame = {
-    val labels = resolveClusters(pairs, maxIter)
+      priorityCol: Option[String] = None): DataFrame = {
+    val labels = resolveClusters(pairs)
     val losers = priorityCol match {
       case None => labels.where(col("label") =!= col("id"))
       case Some(p) =>
@@ -2416,7 +2405,7 @@ object Dedup {
     * swaps in the all-pairs ground truth ([[Similarity.cosinePairsExact]])
     * for test-side comparison — never for a corpus-scale run. */
   def removeNearDuplicatesByEmbedding(df: DataFrame, vecCol: String, idCol: String,
-      threshold: Double = 0.95, exact: Boolean = false, maxIter: Int = 20,
+      threshold: Double = 0.95, exact: Boolean = false,
       projectTo: Option[Int] = None): DataFrame = projectTo match {
     case Some(outDim) =>
       // ONE-FLAG projected-space detection: JL-project the embeddings
@@ -2438,14 +2427,13 @@ object Dedup {
             s"projectTo=$outDim exceeds the embedding dimension $d")
           Similarity.randomProjectDouble(df, vecCol, "_jl_vec", d, outDim)
             .transform(p => removeNearDuplicatesByEmbedding(
-              p, "_jl_vec", idCol, threshold, exact, maxIter, None))
+              p, "_jl_vec", idCol, threshold, exact, None))
             .drop("_jl_vec")
       }
     case None =>
       removeByPairs(df, idCol,
         if (exact) Similarity.cosinePairsExact(df, vecCol, idCol, threshold)
-        else Similarity.cosinePairs(df, vecCol, idCol, threshold),
-        maxIter)
+        else Similarity.cosinePairs(df, vecCol, idCol, threshold))
   }
 
   // ── Batch-vs-index probes: build the index once, probe each batch ───
@@ -2538,7 +2526,7 @@ object Dedup {
     * `incoming` rows. */
   private def incrementalSurvivors(caller: String, incoming: DataFrame,
       idCol: String, inIds: DataFrame, exIds: DataFrame,
-      checkDisjointIds: Boolean, maxIter: Int)(pairs: => DataFrame): DataFrame = {
+      checkDisjointIds: Boolean)(pairs: => DataFrame): DataFrame = {
     val (inId, exId) = (inIds.select(col("id")), exIds.select(col("id")))
     if (checkDisjointIds) {
       val overlap = inId.join(exId, Seq("id"), "left_semi")
@@ -2546,7 +2534,7 @@ object Dedup {
         s"$caller: incoming and existing share ids " +
           s"(e.g. ${overlap.limit(3).collect().mkString(",")}) — id spaces must be disjoint")
     }
-    val labels = resolveClusters(pairs, maxIter)
+    val labels = resolveClusters(pairs)
     val tainted = labels.join(exId, Seq("id"), "left_semi")
       .select(col("label"), lit(true).as("_tainted")).distinct()
     val losers = labels.join(inId, Seq("id"), "left_semi")
@@ -2576,7 +2564,7 @@ object Dedup {
   def removeNearDuplicatesIncremental(existing: DataFrame, incoming: DataFrame,
       textCol: String, idCol: String, threshold: Double = 0.8,
       n: Int = 3, k: Int = 128, checkDisjointIds: Boolean = true,
-      maxIter: Int = 20, tok: Tok = Tok.Latin): DataFrame = {
+      tok: Tok = Tok.Latin): DataFrame = {
     val (rr, b) = minHashBands(threshold, k)
     // The corpus count rides the shingle checkpoint (materializeCounted)
     // and is handed to the probe's guard as knownCorpusRows — the
@@ -2585,7 +2573,7 @@ object Dedup {
     val (shEx, nEx) = materializeCounted(
       shingleIndex(existing, textCol, idCol, n, tok))
     removeIncrementalFrom(minHashBandRows(shEx, k, rr, b), shEx, incoming,
-      textCol, idCol, threshold, n, k, checkDisjointIds, maxIter, tok = tok,
+      textCol, idCol, threshold, n, k, checkDisjointIds, tok = tok,
       knownCorpusRows = Some(nEx))
   }
 
@@ -2661,11 +2649,11 @@ object Dedup {
       existingShingles: DataFrame, incoming: DataFrame,
       textCol: String, idCol: String, threshold: Double = 0.8,
       n: Int = 3, k: Int = 128, checkDisjointIds: Boolean = true,
-      maxIter: Int = 20, existingSigHead: Option[DataFrame] = None,
+      existingSigHead: Option[DataFrame] = None,
       prefilterMinCandidates: Double = 4e6, tok: Tok = Tok.Latin,
       knownCorpusRows: Option[Long] = None): DataFrame =
     removeIncrementalFrom(existingBands, existingShingles, incoming,
-      textCol, idCol, threshold, n, k, checkDisjointIds, maxIter,
+      textCol, idCol, threshold, n, k, checkDisjointIds,
       existingSigHead, prefilterMinCandidates, tok,
       knownCorpusRows = knownCorpusRows)
 
@@ -2675,7 +2663,7 @@ object Dedup {
     * storage by [[removeNearDuplicatesIncrementalIndexed]]. */
   private[graft] def removeIncrementalFrom(exBands: DataFrame, shEx: DataFrame,
       incoming: DataFrame, textCol: String, idCol: String, threshold: Double,
-      n: Int, k: Int, checkDisjointIds: Boolean, maxIter: Int,
+      n: Int, k: Int, checkDisjointIds: Boolean,
       exSigHead: Option[DataFrame] = None,
       prefilterMinCandidates: Double = 4e6, tok: Tok = Tok.Latin,
       forceProbeGroups: Option[Int] = None,
@@ -2708,7 +2696,7 @@ object Dedup {
       "n_rows" -> lit(1L), "n_sh" -> size(col("sh")))
     val shIn = materialize(shInTallied)
     incrementalSurvivors("removeNearDuplicatesIncremental", incoming, idCol,
-        shIn, shEx, checkDisjointIds, maxIter) {
+        shIn, shEx, checkDisjointIds) {
       // materialized once: the bands feed BOTH join sides, and the
       // minhash signature is the CPU-heavy stage on the delta
       val newBands = materialize(minHashBandRows(shIn, k, rr, b))
@@ -3202,8 +3190,7 @@ object Dedup {
     * corpus). */
   def removeSemanticDuplicates(df: DataFrame, vecCol: String, idCol: String,
       centroids: Array[(Int, Array[Float])], threshold: Double,
-      assignKeep: Int = 1, maxIter: Int = 20,
-      maxClusterSize: Int = 20000,
+      assignKeep: Int = 1, maxClusterSize: Int = 20000,
       projectTo: Option[Int] = None): DataFrame = projectTo match {
     case Some(outDim) =>
       // SemDeDup in JL-projected space, one flag: vectors project through
@@ -3222,14 +3209,13 @@ object Dedup {
       Similarity.randomProjectDouble(df, vecCol, "_jl_vec", inDim, outDim)
         .transform(p => removeSemanticDuplicates(p, "_jl_vec", idCol,
           Similarity.projectCentroids(centroids, outDim), threshold,
-          assignKeep, maxIter, maxClusterSize, None))
+          assignKeep, maxClusterSize, None))
         .drop("_jl_vec")
     case None =>
       removeSemanticByLabels(df, vecCol, idCol, centroids,
         resolveClusters(
           semanticDupPairs(df, vecCol, idCol, centroids, threshold, assignKeep,
-            maxClusterSize),
-          maxIter))
+            maxClusterSize)))
   }
 
   /** [[removeSemanticDuplicates]]'s resolution tail over ALREADY-RESOLVED

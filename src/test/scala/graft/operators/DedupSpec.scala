@@ -626,19 +626,81 @@ class DedupSpec extends AnyFunSuite {
     assert(planUnchecked.select("doc_id").as[Long].collect().toSet == checked)
   }
 
-  test("resolveClusters: throws instead of silently under-merging when maxIter < cluster diameter") {
-    // A 30-node path graph: min-label propagation moves the label one hop
-    // per round, so maxIter=3 cannot converge — returning would leave the
-    // chain split into several phantom clusters.
+  test("resolveClusters: a 30-node path converges with no round cap") {
+    // A 30-node path graph: one-hop-per-round propagation would need 29
+    // rounds; a stopped loop would leave the chain split into phantom
+    // clusters.
     val chain = (1L to 29L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val e = intercept[IllegalStateException] {
-      Dedup.resolveClusters(chain, maxIter = 3)
+    val labels = Dedup.resolveClusters(chain).as[(Long, Long)].collect()
+    assert(labels.length == 30 && labels.forall(_._2 == 1L))
+  }
+
+  /** Rounds `resolveClusters(pairs)` runs: one labels checkpoint per
+    * round, each carrying the `n_changed` tally, the first of them the
+    * fused rounds 1+2. */
+  private def ccRounds(pairs: DataFrame): (Array[(Long, Long)], Int) = {
+    var labels: Array[(Long, Long)] = null
+    val executions = TestSparkSession.executionsDuring {
+      labels = Dedup.resolveClusters(pairs).as[(Long, Long)].collect()
     }
-    assert(e.getMessage.contains("did not converge"))
-    // and the same graph converges fine when maxIter covers the diameter
-    val labels = Dedup.resolveClusters(chain, maxIter = 40)
-      .as[(Long, Long)].collect()
-    assert(labels.forall(_._2 == 1L))
+    val checkpoints = executions.count(_.analyzed.exists {
+      case t: graft.functions.Tally => t.handle.names.contains("n_changed")
+      case _ => false
+    })
+    (labels, checkpoints + 1)
+  }
+
+  test("resolveClusters: a 1,000-node path with shuffled ids takes at most 24 rounds") {
+    val ids = new scala.util.Random(13).shuffle((1L to 1000L).toVector)
+    val (labels, rounds) = ccRounds(ids.sliding(2).map(p => (p(0), p(1))).toSeq
+      .toDF("id_a", "id_b"))
+    assert(labels.length == 1000 && labels.forall(_._2 == 1L))
+    assert(rounds <= 24, s"$rounds rounds")
+  }
+
+  test("resolveClusters: a shallow cluster converges in the fused first checkpoint") {
+    // a star whose base holds the min id: every near-dup group of the
+    // crawl corpus has this shape
+    val (labels, rounds) = ccRounds((2L to 9L).map(i => (1L, i)).toDF("id_a", "id_b"))
+    assert(labels.forall(_._2 == 1L) && rounds == 2, s"$rounds rounds")
+  }
+
+  test("removeNearDuplicates: a 48-revision page history keeps only its first revision") {
+    // Each revision is a 120-word window shifted 20 words from the last:
+    // neighbours share 100 words (3-shingle Jaccard 0.71), revisions two
+    // apart 80 (0.49), so the near-dup graph at 0.5 is a path of 48.
+    val rnd = new scala.util.Random(7)
+    val words = Vector.fill(120 + 47 * 20)(s"w${rnd.nextInt(1000000)}")
+    val history = (0 until 48).map(i =>
+      (i + 1L, words.slice(20 * i, 20 * i + 120).mkString(" "))).toDF("doc_id", "text")
+    val kept = Dedup.removeNearDuplicates(history, "text", "doc_id", 0.5, 3)
+      .select("doc_id").as[Long].collect()
+    assert(kept.toSeq == Seq(1L))
+  }
+
+  test("resolveClusters: identical calls plan and compile the same stages") {
+    // Pairs from a self-join, as every detector's are: their size
+    // estimate is the product of both sides', so no join of a round is
+    // broadcast before AQE sees the sizes at run time, and a join whose
+    // build side could go either way is planned by whichever input stage
+    // finishes first.
+    val base = spark.range(2000).toDF("x")
+    val star = base.as("a").join(base.as("b"),
+        $"b.x" === $"a.x" - $"a.x" % 10 && $"a.x" =!= $"b.x")
+      .select($"b.x".as("id_a"), $"a.x".as("id_b"))
+    val path = base.where($"x" < 1000).as("a").join(base.as("b"), $"a.x" + 1 === $"b.x")
+      .select($"a.x".as("id_a"), $"b.x".as("id_b"))
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    def plans(pairs: DataFrame, label: org.apache.spark.sql.Column) =
+      TestSparkSession.executionsDuring {
+        assert(Dedup.resolveClusters(pairs).where($"label" =!= label).count() == 0)
+      }.map(_.executedPlan.toString.replaceAll("\\d+", ""))
+    val first = plans(star, $"id" - $"id" % 10)
+    val c0 = compiles.getCount
+    (1 to 4).foreach(_ => assert(plans(star, $"id" - $"id" % 10) == first))
+    assert(compiles.getCount == c0, s"${compiles.getCount - c0} new compiles")
+    val root = org.apache.spark.sql.functions.lit(0L)
+    assert(plans(path, root) == plans(path, root))
   }
 
   test("contaminationHits matches brute-force shingle intersection; removeContaminated drops exactly those") {
@@ -1230,7 +1292,7 @@ class DedupSpec extends AnyFunSuite {
     def run(force: Option[Int], calib: Boolean = false) =
       Dedup.removeIncrementalFrom(
         exBands, exSh, incoming, "text", "doc_id", threshold = 0.5,
-        n = 3, k = 128, checkDisjointIds = false, maxIter = 20,
+        n = 3, k = 128, checkDisjointIds = false,
         forceProbeGroups = force, forceProbePilotCalib = calib)
         .select("doc_id").as[Long].collect().toSet
     val single = run(None)
